@@ -18,11 +18,7 @@ WORK and in I/O:
 - the rewritten views (doc-frequency table, verified pairs) are stored
   HASH-BUCKETED with copy-on-write versioning: an ingest rewrites only
   the buckets its keys touch and hard-links every untouched bucket's
-  files from the previous version (same inode, zero bytes copied) —
-  the same layout the CDC replica uses (streaming/cdc.py
-  ``ReplicaStore.write_merged``; on a distributed filesystem without
-  hard links the contract is 'reference the previous version's files
-  in the new manifest', Iceberg/Delta-style).
+  files from the previous version — the layout the CDC replica uses.
 
 The subtle part is dd4's doc-frequency cap (operators/dedup.py
 SHINGLE_DOC_FREQ_CAP): verification runs over shingle sets with
@@ -87,16 +83,12 @@ Storage layout (all under ``index_dir``)::
     hot/v<N>/_IDX_BUCKET=<b>/...       copy-on-write, b = hash(shingle)
     pairs/v<N>/_IDX_BUCKET=<b>/...     copy-on-write, b = hash(doc_a)
 
-The manifest flips LAST (atomic rename), so a crashed operation leaves
-the previous version fully readable. Log tables are SEGMENTED by the
-writing operation's version and reads are manifest-gated (only
-segments ``v <= manifest.version`` are visible), so a crashed
+The manifest commits LAST, so a crashed operation leaves the previous
+version fully readable. Log tables are SEGMENTED by the writing
+operation's version and reads are manifest-gated, so a crashed
 operation's orphan segment is invisible and a RETRY of the same batch
-overwrites it instead of double-appending — the idempotence the COW
-tables get from versioned overwrite extends to the logs. Within an
-operation, append reads additionally snapshot-pin the file list
-present at plan time (a bare directory read is lazy — a recompute
-after this ingest's appends would double-count the batch). Write
+overwrites it instead of double-appending. The commit, segment-read,
+copy-on-write and retention rules live in ``state.py``. Write
 parallelism is bounded by the bucket count (16 here for test-scale
 file counts); a cluster deployment raises ``n_buckets`` to thousands,
 exactly like the replica's ``_CDC_BUCKET`` layout. doc_ids must be
@@ -107,7 +99,6 @@ raises on a tombstoned doc_id).
 
 from __future__ import annotations
 
-import json
 import os
 import shutil
 import tempfile
@@ -115,6 +106,7 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from sfguide_getting_started_openflow_postgresql_cdc_spark import state
 from sfguide_getting_started_openflow_postgresql_cdc_spark.operators.dedup import (
     JACCARD_THRESHOLD,
     SHINGLE_DOC_FREQ_CAP,
@@ -130,30 +122,6 @@ from sfguide_getting_started_openflow_postgresql_cdc_spark.sources.loader import
 )
 
 IDX_BUCKET = "_IDX_BUCKET"
-
-
-def _run_concurrently(jobs) -> None:
-    """Run independent write jobs from driver threads so their Spark
-    jobs schedule concurrently (SparkSession is thread-safe; each job's
-    inputs are cached frames or snapshot-pinned file lists, so ordering
-    within the group is immaterial). Serial submission pays one per-job
-    scheduling floor per table — the dominant micro-batch ingest cost
-    on an otherwise idle cluster. Exceptions propagate (first raised
-    wins) but siblings are NOT cancelled — a failed operation may leave
-    any subset of its group's writes on disk. That partial state is
-    harmless by construction: COW versions and log segments both land
-    in not-yet-committed ``v{new}`` dirs that reads (manifest-gated)
-    cannot see, and a retry overwrites them — see ``_append``."""
-    if len(jobs) <= 1:
-        for j in jobs:
-            j()
-        return
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=len(jobs)) as ex:
-        futures = [ex.submit(j) for j in jobs]
-        for f in futures:
-            f.result()
 
 
 def _shingle_batch(docs: DataFrame) -> DataFrame:
@@ -198,23 +166,20 @@ class MinHashLshIndex:
     LAYOUT_VERSION = 2  # v2: log tables segmented by operation version
 
     def _manifest(self) -> dict:
-        p = os.path.join(self.dir, "manifest.json")
-        if os.path.exists(p):
-            man = json.load(open(p))
-            if (
-                man.get("version", 0) > 0
-                and man.get("layout", 1) != self.LAYOUT_VERSION
-            ):
-                # a flat-log (pre-segmentation) index would be SILENTLY
-                # read as having empty logs — refuse loudly instead
-                raise ValueError(
-                    f"index at {self.dir} uses storage layout "
-                    f"{man.get('layout', 1)}, this code reads layout "
-                    f"{self.LAYOUT_VERSION}; rebuild the index "
-                    "(re-ingest the corpus) to migrate"
-                )
-            return man
-        return {"version": 0, "n_docs": 0, "tables": {}}
+        man = state.read_json(
+            os.path.join(self.dir, "manifest.json"),
+            {"version": 0, "n_docs": 0, "tables": {}},
+        )
+        if man["version"] > 0 and man.get("layout", 1) != self.LAYOUT_VERSION:
+            # a flat-log (pre-segmentation) index would be SILENTLY
+            # read as having empty logs — refuse loudly instead
+            raise ValueError(
+                f"index at {self.dir} uses storage layout "
+                f"{man.get('layout', 1)}, this code reads layout "
+                f"{self.LAYOUT_VERSION}; rebuild the index "
+                "(re-ingest the corpus) to migrate"
+            )
+        return man
 
     _LOG_TABLES = ("shingles", "bands", "cands", "tombstones")
 
@@ -227,19 +192,13 @@ class MinHashLshIndex:
         the committing operation must own every segment at its
         version."""
         for name in self._LOG_TABLES:
-            if name in wrote:
-                continue
-            shutil.rmtree(
-                os.path.join(self.dir, name, f"v{version}"),
-                ignore_errors=True,
-            )
+            if name not in wrote:
+                state.remove_dir(state.version_dir(os.path.join(self.dir, name), version))
 
     def _commit(self, manifest: dict) -> None:
         manifest["n_buckets"] = self.n_buckets
         manifest["layout"] = self.LAYOUT_VERSION
-        tmp = os.path.join(self.dir, "manifest.json.tmp")
-        json.dump(manifest, open(tmp, "w"))
-        os.replace(tmp, os.path.join(self.dir, "manifest.json"))
+        state.commit_json(os.path.join(self.dir, "manifest.json"), manifest)
 
     # bucket exprs — the single source of truth for the disk layout
     def _doc_bucket(self, col: str = "doc_id"):
@@ -261,61 +220,21 @@ class MinHashLshIndex:
             r["b"] for r in df.select(expr.alias("b")).distinct().collect()
         )
 
-    @staticmethod
-    def _files_under(path: str, buckets: list[int] | None) -> list[str]:
-        """Snapshot-pinned parquet file list, optionally restricted to
-        the named bucket partition dirs. Pinning the list at plan time
-        is the isolation a transactional format's snapshot gives: a
-        recompute after this op's appends cannot see appended rows."""
-        if not os.path.isdir(path):
-            return []
-        out: list[str] = []
-        entries = sorted(os.listdir(path))
-        for name in entries:
-            sub = os.path.join(path, name)
-            if os.path.isdir(sub) and name.startswith(f"{IDX_BUCKET}="):
-                if buckets is not None and int(name.split("=", 1)[1]) not in buckets:
-                    continue
-                out += sorted(
-                    os.path.join(sub, f)
-                    for f in os.listdir(sub)
-                    if f.endswith(".parquet")
-                )
-            elif name.endswith(".parquet"):
-                if buckets is None:
-                    out.append(sub)
-        return out
-
     def _read_files(self, files: list[str], schema: str) -> DataFrame:
         if files:
             return self.spark.read.schema(schema).parquet(*files)
         return self.spark.createDataFrame([], schema)
 
-    def _append_versions(self, name: str, upto: int) -> list[int]:
-        """Committed log segments: version dirs ``v1..v{upto}`` present
-        on disk. Gating reads on the MANIFEST version (not the listing)
-        is what makes a crashed operation's orphan segment invisible —
-        it sits at ``v{upto+1}`` until the retry overwrites it and the
-        retry's commit makes it real."""
-        tdir = os.path.join(self.dir, name)
-        if not os.path.isdir(tdir):
-            return []
-        out = []
-        for d in os.listdir(tdir):
-            if d.startswith("v") and d[1:].isdigit() and int(d[1:]) <= upto:
-                out.append(int(d[1:]))
-        return sorted(out)
+    def _log_files(self, name: str, buckets: list[int] | None = None) -> list[str]:
+        return state.segment_files(
+            os.path.join(self.dir, name), self._manifest()["version"], IDX_BUCKET,
+            buckets,
+        )
 
     def _read_append(
         self, name: str, schema: str, buckets: list[int] | None = None
     ) -> DataFrame:
-        upto = self._manifest()["version"]
-        files: list[str] = []
-        for v in self._append_versions(name, upto):
-            files += self._files_under(
-                os.path.join(self.dir, name, f"v{v}"), buckets
-            )
-        return self._read_files(files, schema)
+        return self._read_files(self._log_files(name, buckets), schema)
 
     def _append(
         self, name: str, df: DataFrame, bucket_expr=None, *, version: int
@@ -324,8 +243,8 @@ class MinHashLshIndex:
         ``name/v{version}`` with mode=overwrite, so a retry of a crashed
         operation (same not-yet-committed version) REPLACES the orphan
         segment instead of appending duplicate rows next to it; reads
-        gate on the manifest version (:meth:`_append_versions`), so the
-        segment only becomes visible when the manifest flips.
+        gate on the manifest version (``state.segment_files``), so the
+        segment only becomes visible when the manifest commits.
         ``bucket_expr`` partitions the segment into hash-bucket dirs for
         pruned reads; one writer task per bucket (repartition on the
         bucket column), so file counts track buckets, not input
@@ -348,7 +267,7 @@ class MinHashLshIndex:
         return int(self._manifest().get("tables", {}).get(name, 0))
 
     def _cow_path(self, name: str, version: int) -> str:
-        return os.path.join(self.dir, name, f"v{version}")
+        return state.version_dir(os.path.join(self.dir, name), version)
 
     def _cow_read(
         self, name: str, schema: str, buckets: list[int] | None = None
@@ -357,7 +276,7 @@ class MinHashLshIndex:
         if v <= 0:
             return self.spark.createDataFrame([], schema)
         return self._read_files(
-            self._files_under(self._cow_path(name, v), buckets), schema
+            state.files_under(self._cow_path(name, v), IDX_BUCKET, buckets), schema
         )
 
     def _cow_write(
@@ -371,9 +290,8 @@ class MinHashLshIndex:
         """Write version ``new_version`` of a COW table: materialize
         ``rows`` (which must cover exactly the ``touched`` buckets) and
         hard-link every other bucket dir from the current version —
-        the streaming/cdc.py ``write_merged`` contract, keyed by the
-        index manifest instead of a per-table pointer so ALL tables
-        flip atomically with one manifest rename."""
+        keyed by the index manifest instead of a per-table pointer so
+        ALL tables flip with one manifest commit."""
         out = self._cow_path(name, new_version)
         (
             rows.withColumn(IDX_BUCKET, bucket_expr)
@@ -384,56 +302,16 @@ class MinHashLshIndex:
         )
         old_v = self._cow_version(name)
         if old_v > 0:
-            old = self._cow_path(name, old_v)
-            touched_set = set(touched)
-            for dname in os.listdir(old):
-                if not dname.startswith(f"{IDX_BUCKET}="):
-                    continue
-                if int(dname.split("=", 1)[1]) in touched_set:
-                    continue
-                src_dir, dst_dir = os.path.join(old, dname), os.path.join(out, dname)
-                os.makedirs(dst_dir, exist_ok=True)
-                for fname in os.listdir(src_dir):
-                    if not fname.endswith(".parquet"):
-                        continue
-                    try:
-                        os.link(
-                            os.path.join(src_dir, fname),
-                            os.path.join(dst_dir, fname),
-                        )  # zero-copy: same inode
-                    except OSError:
-                        shutil.copy2(
-                            os.path.join(src_dir, fname),
-                            os.path.join(dst_dir, fname),
-                        )
+            state.link_untouched(
+                self._cow_path(name, old_v), out, IDX_BUCKET, touched, ".parquet"
+            )
 
     def _retire_cow_versions(self) -> None:
-        """Retire COW versions relative to each table's MANIFEST-COMMITTED
-        version, never the directory listing: a crashed operation's
-        orphan dir can outrank the committed version, and a
-        listing-based "keep newest two" would retire the committed dir
-        while keeping orphans — ``_cow_read`` would then silently return
-        an empty view. Keep the committed dir plus the highest dir below
-        it (in-flight readers of the previous version); delete everything
-        else, INCLUDING orphans above the committed version — the COW
-        analog of ``_clear_orphan_segments`` (a crashed op's retry
-        rewrites its own version dir with mode=overwrite anyway). Hard
-        links keep inodes shared with the previous version alive."""
+        """Keep each COW table's committed version plus the one below it
+        (in-flight readers of the previous version) — ``state.retire``."""
+        tables = self._manifest().get("tables", {})
         for name in ("df", "hot", "pairs"):
-            tdir = os.path.join(self.dir, name)
-            if not os.path.isdir(tdir):
-                continue
-            committed = self._cow_version(name)
-            vs = sorted(
-                int(d[1:])
-                for d in os.listdir(tdir)
-                if d.startswith("v") and d[1:].isdigit()
-            )
-            below = [v for v in vs if v < committed]
-            keep = {committed, below[-1]} if below else {committed}
-            for v in vs:
-                if v not in keep:
-                    shutil.rmtree(self._cow_path(name, v), ignore_errors=True)
+            state.retire(os.path.join(self.dir, name), int(tables.get(name, 0)), keep=2)
 
     # -- shared read helpers --------------------------------------------
 
@@ -442,12 +320,7 @@ class MinHashLshIndex:
         (the common case — skipping the anti-join keeps ingest plans
         lean). Version-gated like every log read: a crashed retract's
         orphan tombstone segment is invisible until its retry commits."""
-        upto = self._manifest()["version"]
-        files: list[str] = []
-        for v in self._append_versions("tombstones", upto):
-            files += self._files_under(
-                os.path.join(self.dir, "tombstones", f"v{v}"), None
-            )
+        files = self._log_files("tombstones")
         if not files:
             return None
         return self.spark.read.schema("doc_id long").parquet(*files)
@@ -685,33 +558,24 @@ class MinHashLshIndex:
         # three depend only on the caches the `tagged` job materialized
         # (the probe additionally computes `merged`/`new_cands`, which
         # nothing else races on), and a v{new} log segment is invisible
-        # until the manifest flips, so appending before the probe
+        # until the manifest commits, so appending before the probe
         # resolves is crash-equivalent to appending after it — a retry
-        # overwrites the segment either way (see ``_append``). The
+        # overwrites the segment either way (see ``_append``); a failure
+        # of any of the three surfaces after all three finish. The
         # cands append stays in the FINAL wave: it reads `new_cands`,
         # which the probe is materializing — running them concurrently
         # would compute the candidate join twice (cache race).
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=3) as ex:
-            f_probe = ex.submit(_probe)
-            f_logs = [
-                ex.submit(
-                    lambda: self._append(
-                        "shingles", batch_sh, self._doc_bucket(),
-                        version=new_version,
-                    )
+        cross_and_vk = state.run_concurrently(
+            [
+                _probe,
+                lambda: self._append(
+                    "shingles", batch_sh, self._doc_bucket(), version=new_version
                 ),
-                ex.submit(
-                    lambda: self._append(
-                        "bands", batch_bands, self._band_bucket(),
-                        version=new_version,
-                    )
+                lambda: self._append(
+                    "bands", batch_bands, self._band_bucket(), version=new_version
                 ),
             ]
-            cross_and_vk = f_probe.result()
-            for f in f_logs:
-                f.result()
+        )[0]
         n_crossing = next(int(r["b"]) for r in cross_and_vk if r["t"] == "x")
 
         hot_old = self._cow_read("hot", "shingle string")
@@ -823,7 +687,7 @@ class MinHashLshIndex:
 
         # commit: write the new COW versions FIRST (their plans read the
         # snapshot-pinned stored state), then append the immutable logs,
-        # then flip the manifest (readers of the old version unaffected).
+        # then commit the manifest (readers of the old version unaffected).
         # WITHIN each group the writes are independent Spark jobs over
         # pinned inputs (every stored-state read enumerated its concrete
         # file list at plan time, and the batch frames are cached), so
@@ -874,7 +738,7 @@ class MinHashLshIndex:
         cow_jobs.append(
             lambda: self._append("cands", new_cands, version=new_version)
         )
-        _run_concurrently(cow_jobs)
+        state.run_concurrently(cow_jobs)
         self._clear_orphan_segments(
             new_version, wrote={"shingles", "bands", "cands"}
         )

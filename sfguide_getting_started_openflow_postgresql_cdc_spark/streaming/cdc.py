@@ -20,13 +20,13 @@ contract (SURVEY.md §2.I, §3 entry 2):
 
 Design for scale
 ----------------
-Plain parquet has no MERGE, so each replica is a versioned directory with
-an atomically-swapped pointer file (write-new-version, ``os.replace`` the
-pointer). Each version is PARTITIONED BY a PK hash bucket
-(``_CDC_BUCKET = pmod(xxhash64(pk), n_buckets)``): a merge rewrites only
-the buckets that contain changed keys and hard-links every untouched
-bucket's files from the previous version — copy-on-write at bucket
-granularity, NOT table granularity. At 100 TB with thousands of buckets
+Plain parquet has no MERGE, so each replica is a versioned directory
+published by a pointer commit. Each version is PARTITIONED BY a PK hash
+bucket (``_CDC_BUCKET = pmod(xxhash64(pk), n_buckets)``): a merge
+rewrites only the buckets that contain changed keys and hard-links every
+untouched bucket's files from the previous version — copy-on-write at
+bucket granularity, NOT table granularity (the commit, copy-on-write and
+retention rules live in ``state.py``). At 100 TB with thousands of buckets
 a 1-minute sync interval rewrites only the few GB its keys actually
 touch; the whole-table rewrite this replaces cannot ship 100 TB/minute.
 
@@ -62,7 +62,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
-from sfguide_getting_started_openflow_postgresql_cdc_spark import schemas
+from sfguide_getting_started_openflow_postgresql_cdc_spark import schemas, state
 
 # Raw JSONL change-event envelope: ``after`` is a string map so one
 # schema carries every table's events; per-table projection casts each
@@ -103,9 +103,8 @@ class ReplicaStore:
     half-written version; the watermark records the highest applied
     ``seq_no`` for idempotent replay. A merge writes ONLY the buckets
     containing changed keys into the new version and hard-links every
-    other bucket's files from the previous version (same inode, zero
-    bytes copied) — version retirement is safe because links keep the
-    shared inodes alive.
+    other bucket's files from the previous version. Commit, copy-on-write
+    and retention (``keep_versions``) follow ``state.py``.
     """
 
     def __init__(self, root: str, keep_versions: int = 2):
@@ -118,17 +117,22 @@ class ReplicaStore:
 
     # -- pointer ----------------------------------------------------------
     def _pointer_path(self, table: str) -> str:
-        return os.path.join(self.root, "tables", table, "_POINTER.json")
+        return os.path.join(self._table_dir(table), "_POINTER.json")
 
     def _pointer(self, table: str) -> dict:
-        try:
-            with open(self._pointer_path(table)) as f:
-                return json.load(f)
-        except FileNotFoundError:
-            return {"version": -1, "watermark": -1, "n_buckets": 0}
+        return state.read_json(
+            self._pointer_path(table), {"version": -1, "watermark": -1, "n_buckets": 0}
+        )
+
+    def _table_dir(self, table: str) -> str:
+        return os.path.join(self.root, "tables", table)
 
     def watermark(self, table: str) -> int:
         return int(self._pointer(table)["watermark"])
+
+    def version(self, table: str) -> int:
+        """The committed version (-1 before bootstrap)."""
+        return int(self._pointer(table)["version"])
 
     def n_buckets(self, table: str) -> int:
         return int(self._pointer(table).get("n_buckets", 0))
@@ -138,7 +142,7 @@ class ReplicaStore:
         if ptr["version"] < 0:
             raise FileNotFoundError(f"replica '{table}' not bootstrapped")
         v = ptr["version"] if version is None else version
-        path = os.path.join(self.root, "tables", table, f"v{v}")
+        path = state.version_dir(self._table_dir(table), v)
         if version is not None and not os.path.isdir(path):
             raise FileNotFoundError(
                 f"replica '{table}' version {version} retired or never written "
@@ -146,27 +150,18 @@ class ReplicaStore:
             )
         return path
 
-    def _write_version_meta(self, out: str, version: int, watermark: int) -> None:
-        with open(os.path.join(out, "_VERSION.json"), "w") as f:
-            json.dump({"version": version, "watermark": watermark}, f)
-
     def version_watermarks(self, table: str) -> dict[int, int]:
         """{version: watermark} for every RETAINED version — the map that
         lets readers time-travel by watermark instead of version number."""
-        out = {}
-        for v in self.versions(table):
-            meta = os.path.join(
-                self.root, "tables", table, f"v{v}", "_VERSION.json"
+        tdir = self._table_dir(table)
+        return {
+            v: int(
+                state.read_json(
+                    os.path.join(state.version_dir(tdir, v), "_VERSION.json")
+                )["watermark"]
             )
-            try:
-                with open(meta) as f:
-                    out[v] = int(json.load(f)["watermark"])
-            except FileNotFoundError:
-                # versions written before watermark stamping: only the
-                # current one has a known watermark (the pointer's)
-                if v == self._pointer(table)["version"]:
-                    out[v] = int(self._pointer(table)["watermark"])
-        return out
+            for v in self.versions(table)
+        }
 
     def version_at_watermark(self, table: str, max_watermark: int) -> int:
         """Newest retained version whose watermark <= max_watermark."""
@@ -182,13 +177,10 @@ class ReplicaStore:
         return max(candidates)
 
     def versions(self, table: str) -> list[int]:
-        """Retained version numbers, oldest first (time-travel targets)."""
-        tdir = os.path.join(self.root, "tables", table)
-        if not os.path.isdir(tdir):
-            return []
-        return sorted(
-            int(n[1:]) for n in os.listdir(tdir) if n.startswith("v") and n[1:].isdigit()
-        )
+        """Retained committed version numbers, oldest first (time-travel
+        targets); a crashed write's orphan above the pointer is not one."""
+        committed = self._pointer(table)["version"]
+        return [v for v in state.versions(self._table_dir(table)) if v <= committed]
 
     def _stored_schema(self, table: str) -> T.StructType | None:
         raw = self._pointer(table).get("schema")
@@ -239,19 +231,16 @@ class ReplicaStore:
             raw = self._pointer(table).get("schema")
         else:
             raw = json.dumps(schema.jsonValue())
-        tmp = self._pointer_path(table) + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(
-                {
-                    "version": version,
-                    "watermark": watermark,
-                    "n_buckets": n_buckets,
-                    "schema": raw,
-                    "written_at": time.time(),
-                },
-                f,
-            )
-        os.replace(tmp, self._pointer_path(table))  # atomic swap
+        state.commit_json(
+            self._pointer_path(table),
+            {
+                "version": version,
+                "watermark": watermark,
+                "n_buckets": n_buckets,
+                "schema": raw,
+                "written_at": time.time(),
+            },
+        )
 
     def update_schema(self, table: str, schema: T.StructType) -> None:
         """Re-point the stored read schema without touching data files
@@ -269,14 +258,22 @@ class ReplicaStore:
             schema=schema,
         )
 
-    def _retire_old_versions(self, tdir: str, new_version: int) -> None:
-        # retire versions beyond the keep_versions retention window
-        # (current + in-flight readers + time-travel targets); hard-linked
-        # files shared with newer versions keep their inode
-        horizon = new_version - (self.keep_versions - 1)
-        for name in os.listdir(tdir):
-            if name.startswith("v") and name[1:].isdigit() and int(name[1:]) < horizon:
-                shutil.rmtree(os.path.join(tdir, name), ignore_errors=True)
+    def _publish(
+        self,
+        table: str,
+        version: int,
+        watermark: int,
+        n_buckets: int,
+        schema: T.StructType | None = None,
+    ) -> None:
+        """Stamp the written version, flip the pointer to it, retire."""
+        tdir = self._table_dir(table)
+        state.commit_json(
+            os.path.join(state.version_dir(tdir, version), "_VERSION.json"),
+            {"version": version, "watermark": watermark},
+        )
+        self._swap_pointer(table, version, watermark, n_buckets, schema=schema)
+        state.retire(tdir, version, self.keep_versions)
 
     def write_full(
         self,
@@ -288,15 +285,10 @@ class ReplicaStore:
     ) -> None:
         """Write a complete new version (bootstrap / bucket-count change).
         ``df`` must carry the ``_CDC_BUCKET`` column."""
-        ptr = self._pointer(table)
-        new_version = ptr["version"] + 1
-        tdir = os.path.join(self.root, "tables", table)
-        os.makedirs(tdir, exist_ok=True)
-        out = os.path.join(tdir, f"v{new_version}")
+        new_version = self._pointer(table)["version"] + 1
+        out = state.version_dir(self._table_dir(table), new_version)
         df.write.mode("overwrite").partitionBy(CDC_BUCKET).parquet(out)
-        self._write_version_meta(out, new_version, watermark)
-        self._swap_pointer(table, new_version, watermark, n_buckets, schema=df.schema)
-        self._retire_old_versions(tdir, new_version)
+        self._publish(table, new_version, watermark, n_buckets, schema=df.schema)
 
     def write_merged(
         self,
@@ -309,40 +301,19 @@ class ReplicaStore:
         """Write a new version that materializes ``changed_df`` (which
         must cover exactly ``changed_buckets`` and carry ``_CDC_BUCKET``)
         and hard-links every other bucket directory from the current
-        version — the copy-on-write path a 1-minute sync interval takes.
-
-        On a distributed filesystem without hard links the same contract
-        is 'reference the previous version's files in the new manifest'
-        (Iceberg/Delta-style); link-or-copy is the local-FS expression."""
+        version — the copy-on-write path a 1-minute sync interval takes
+        (``state.link_untouched``)."""
         ptr = self._pointer(table)
         if ptr["version"] < 0:
             raise FileNotFoundError(f"replica '{table}' not bootstrapped")
-        n_buckets = int(ptr["n_buckets"])
-        tdir = os.path.join(self.root, "tables", table)
-        old = os.path.join(tdir, f"v{ptr['version']}")
+        tdir = self._table_dir(table)
         new_version = ptr["version"] + 1
-        out = os.path.join(tdir, f"v{new_version}")
+        out = state.version_dir(tdir, new_version)
         changed_df.write.mode("overwrite").partitionBy(CDC_BUCKET).parquet(out)
-        self._write_version_meta(out, new_version, watermark)
-        changed = set(changed_buckets)
-        for name in os.listdir(old):
-            if not name.startswith(f"{CDC_BUCKET}="):
-                continue
-            bucket = int(name.split("=", 1)[1])
-            if bucket in changed:
-                continue
-            src_dir = os.path.join(old, name)
-            dst_dir = os.path.join(out, name)
-            os.makedirs(dst_dir, exist_ok=True)
-            for fname in os.listdir(src_dir):
-                src = os.path.join(src_dir, fname)
-                dst = os.path.join(dst_dir, fname)
-                try:
-                    os.link(src, dst)  # zero-copy: same inode
-                except OSError:
-                    shutil.copy2(src, dst)  # cross-device fallback
-        self._swap_pointer(table, new_version, watermark, n_buckets)
-        self._retire_old_versions(tdir, new_version)
+        state.link_untouched(
+            state.version_dir(tdir, ptr["version"]), out, CDC_BUCKET, changed_buckets
+        )
+        self._publish(table, new_version, watermark, int(ptr["n_buckets"]))
 
     def journal_path(self, table: str) -> str:
         return os.path.join(self.root, "journal", table)

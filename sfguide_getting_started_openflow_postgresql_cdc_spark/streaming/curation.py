@@ -41,21 +41,22 @@ Per-dump cost envelope: shingling/fingerprinting/token counting run
 over the DUMP only; the benchmark gram set broadcasts (eval suites are
 tiny); the fingerprint-log read is bucket-pruned to the dump's
 fingerprint hash buckets; every stored aggregate (manifest, totals,
-stats) is group-cardinality, orders below the corpus. Writes land in
-tmp dirs and rename into place, meta last, so a crashed ingest leaves
-the previous state readable; a retry of the same dump is rejected by
-the doc_id watermark instead of double-counting.
+stats) is group-cardinality, orders below the corpus. Tables are
+version directories published by the meta commit (commit, segment-read
+and retention rules in ``state.py``), so a crashed ingest leaves the
+previous state readable and its retry overwrites the orphan versions; a
+replay of a committed dump is recognized by its recorded id range.
 """
 
 from __future__ import annotations
 
-import json
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
+
+from sfguide_getting_started_openflow_postgresql_cdc_spark import state
 
 FP_BUCKET = "_FP_BUCKET"
 
@@ -93,65 +94,35 @@ class IncrementalCurationManifest:
     # -- storage plumbing ---------------------------------------------------
 
     def _meta(self) -> dict:
-        p = os.path.join(self.path, "meta.json")
-        if os.path.exists(p):
-            return json.load(open(p))
-        return {
-            "initialized": False,
-            "max_doc_id": None,
-            "version": 0,
-            "tables": {},
-        }
+        return state.read_json(
+            os.path.join(self.path, "meta.json"),
+            {"initialized": False, "max_doc_id": None, "version": 0, "tables": {}},
+        )
 
     def _commit_meta(self, meta: dict) -> None:
         meta["n_buckets"] = self.n_buckets
-        tmp = os.path.join(self.path, "meta.json.tmp")
-        json.dump(meta, open(tmp, "w"))
-        os.replace(tmp, os.path.join(self.path, "meta.json"))
+        state.commit_json(os.path.join(self.path, "meta.json"), meta)
 
     def _write(self, name: str, df: DataFrame, version: int) -> None:
         """Write version ``version`` of a table; it becomes visible only
         when the meta's table map flips to it (commit-last, so a crash
         between table writes and the meta commit leaves the previous
         state readable and a RETRY's overwrite cannot double-merge)."""
-        dst = os.path.join(self.path, name, f"v{version}")
+        dst = state.version_dir(os.path.join(self.path, name), version)
         df.coalesce(1).write.mode("overwrite").parquet(dst)
 
     def _read(self, name: str, schema: str) -> DataFrame:
         v = int(self._meta().get("tables", {}).get(name, 0))
-        p = os.path.join(self.path, name, f"v{v}")
+        p = state.version_dir(os.path.join(self.path, name), v)
         if v > 0 and os.path.isdir(p):
             return self.spark.read.schema(schema).parquet(p)
         return self.spark.createDataFrame([], schema)
-
-    def _retire_versions(self, meta: dict) -> None:
-        """Keep each table's committed version plus the one below it
-        (in-flight readers of the previous state); drop everything else,
-        INCLUDING orphans above the committed version from crashed
-        ingests — retirement keys on the meta's table map, never the
-        directory listing (the dedup-index retirement rule)."""
-        for name, v in meta.get("tables", {}).items():
-            tdir = os.path.join(self.path, name)
-            if not os.path.isdir(tdir):
-                continue
-            vs = sorted(
-                int(d[1:])
-                for d in os.listdir(tdir)
-                if d.startswith("v") and d[1:].isdigit()
-            )
-            below = [x for x in vs if x < v]
-            keep = {v} | ({below[-1]} if below else set())
-            for x in vs:
-                if x not in keep:
-                    shutil.rmtree(
-                        os.path.join(tdir, f"v{x}"), ignore_errors=True
-                    )
 
     def _fp_bucket(self, col: str = "f"):
         return F.pmod(F.xxhash64(F.col(col)), F.lit(self.n_buckets))
 
     def _fp_segment_path(self, version: int) -> str:
-        return os.path.join(self.path, "fingerprints", f"v{version}")
+        return state.version_dir(os.path.join(self.path, "fingerprints"), version)
 
     def _append_fps(self, fps: DataFrame, version: int) -> None:
         (
@@ -165,23 +136,9 @@ class IncrementalCurationManifest:
     def _read_fps(self, buckets: list[int], upto: int) -> DataFrame:
         """Committed fingerprint-log rows, pruned to the named hash
         buckets — a dump's dup check never reads the whole log."""
-        files: list[str] = []
-        root = os.path.join(self.path, "fingerprints")
-        for v in range(1, upto + 1):
-            seg = self._fp_segment_path(v)
-            if not os.path.isdir(seg):
-                continue
-            for d in sorted(os.listdir(seg)):
-                if not d.startswith(f"{FP_BUCKET}="):
-                    continue
-                if int(d.split("=", 1)[1]) not in buckets:
-                    continue
-                sub = os.path.join(seg, d)
-                files += sorted(
-                    os.path.join(sub, f)
-                    for f in os.listdir(sub)
-                    if f.endswith(".parquet")
-                )
+        files = state.segment_files(
+            os.path.join(self.path, "fingerprints"), upto, FP_BUCKET, buckets
+        )
         if not files:
             return self.spark.createDataFrame([], "f string, doc_id long")
         return self.spark.read.schema("f string, doc_id long").parquet(*files)
@@ -700,13 +657,9 @@ class IncrementalCurationManifest:
             # dedicated count job is pure serial wall. Keep the race.
             if collect_metrics:
                 metrics["kept_docs"] = corpus.count()
-            from sfguide_getting_started_openflow_postgresql_cdc_spark.operators.dedup_index import (
-                _run_concurrently,
-            )
-
             stats_lang = _stat_merge("stats_lang", "lang")
             stats_source = _stat_merge("stats_source", "source")
-            _run_concurrently(
+            state.run_concurrently(
                 [
                     lambda: self._write("manifest", merged_manifest, new_version),
                     lambda: self._write("totals", merged_totals, new_version),
@@ -744,7 +697,8 @@ class IncrementalCurationManifest:
                 + [list(r) for r in new_ranges],
             }
             self._commit_meta(new_meta)
-            self._retire_versions(new_meta)
+            for name, v in tables.items():
+                state.retire(os.path.join(self.path, name), v, keep=2)
             return metrics
         finally:
             # ADVICE r9: release EVERY frame persisted this attempt even

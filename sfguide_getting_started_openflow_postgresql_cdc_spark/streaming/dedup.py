@@ -232,10 +232,10 @@ def neardup_filter_batch_indexed(
     collide and are always admitted) instead of re-ingesting, so the
     batch can neither collide with its own first attempt nor
     double-count document frequencies."""
-    import json
     import os
     import uuid
 
+    from sfguide_getting_started_openflow_postgresql_cdc_spark import state
     from sfguide_getting_started_openflow_postgresql_cdc_spark.operators.dedup_index import (
         _shingle_batch,
     )
@@ -244,9 +244,7 @@ def neardup_filter_batch_indexed(
         commit_key = (uuid.uuid4().hex[:12], 0)
     run_key, epoch_id = commit_key
     epochs_path = os.path.join(index.dir, "stream_epochs.json")
-    applied: dict = {}
-    if os.path.exists(epochs_path):
-        applied = json.load(open(epochs_path))
+    applied = state.read_json(epochs_path, {})
 
     batch = batch.persist()
     batch_sh = _shingle_batch(batch.select("doc_id", "text")).persist()
@@ -321,9 +319,7 @@ def neardup_filter_batch_indexed(
                 )
             sigs.unpersist()
         applied[run_key] = max(applied.get(run_key, -1), epoch_id)
-        tmp = epochs_path + ".tmp"
-        json.dump(applied, open(tmp, "w"))
-        os.replace(tmp, epochs_path)
+        state.commit_json(epochs_path, applied)
         return accepted
     finally:
         batch_sh.unpersist()

@@ -34,12 +34,13 @@ rules that sequence out by construction.
 
 from __future__ import annotations
 
-import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
+
+from sfguide_getting_started_openflow_postgresql_cdc_spark import state
 
 
 def _newly_deleted_keys(
@@ -82,9 +83,7 @@ def sync_soft_deletes(
     ``IvfIndex`` (remove; id column ``vec_id``) — dispatched on the
     retraction surface it exposes. Returns
     {"applied_watermark", "retracted"}."""
-    prev = -1
-    if os.path.exists(state_path):
-        prev = int(json.load(open(state_path)).get("applied_watermark", -1))
+    prev = int(state.read_json(state_path, {}).get("applied_watermark", -1))
     upto = engine.store.watermark(table)  # never run ahead of the replica
     if upto <= prev:
         return {"applied_watermark": prev, "retracted": 0}
@@ -105,7 +104,5 @@ def sync_soft_deletes(
         raise TypeError(f"no retraction surface on {type(index).__name__}")
 
     os.makedirs(os.path.dirname(state_path) or ".", exist_ok=True)
-    tmp = state_path + ".tmp"
-    json.dump({"applied_watermark": upto}, open(tmp, "w"))
-    os.replace(tmp, state_path)
+    state.commit_json(state_path, {"applied_watermark": upto})
     return {"applied_watermark": upto, "retracted": n}

@@ -24,19 +24,25 @@ Correctness under CDC semantics:
   ``_CDC_SEQ`` guard actually applied is exactly what is differenced;
 - groups whose count reaches zero are dropped from the store so the
   MV equals a fresh GROUP BY at every point.
+
+Storage: ``path/data/v<N>/`` published by ``path/data/_POINTER.json``
+(``{"version": N, "replica_version": R}``, the replica version the
+aggregate reflects), with the commit and retention rules of
+``state.py``. A merge whose replica commit landed but whose aggregate
+commit did not (a crash between the two) leaves the pointer's
+``replica_version`` behind the replica; the next merge sees that and
+recomputes the aggregate in full instead of applying a delta.
 """
 
 from __future__ import annotations
 
 import os
-import shutil
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from sfguide_getting_started_openflow_postgresql_cdc_spark import schemas
+from sfguide_getting_started_openflow_postgresql_cdc_spark import schemas, state
 from sfguide_getting_started_openflow_postgresql_cdc_spark.streaming.cdc import CdcEngine
 
 
@@ -68,19 +74,33 @@ class IncrementalGroupCount:
         self._grp_type = grp_fields[0].dataType
 
     # -- storage (group-cardinality data: tiny at any base-table scale) ----
-    def _data_path(self) -> str:
+    def _data_dir(self) -> str:
         return os.path.join(self.path, "data")
 
-    def read(self, spark: SparkSession) -> DataFrame:
-        return spark.read.parquet(self._data_path())
+    def _pointer(self) -> dict:
+        return state.read_json(
+            os.path.join(self._data_dir(), "_POINTER.json"),
+            {"version": 0, "replica_version": -1},
+        )
 
-    def _write(self, df: DataFrame) -> None:
-        tmp = os.path.join(self.path, f".tmp-{uuid.uuid4().hex[:8]}")
-        df.coalesce(1).write.mode("overwrite").parquet(tmp)
-        dst = self._data_path()
-        if os.path.exists(dst):
-            shutil.rmtree(dst)
-        os.replace(tmp, dst)
+    def read(self, spark: SparkSession) -> DataFrame:
+        v = self._pointer()["version"]
+        return spark.read.parquet(state.version_dir(self._data_dir(), v))
+
+    def _publish(self, df: DataFrame | None, replica_version: int) -> None:
+        """Write ``df`` (None: keep the current data) as the next version
+        and commit it as reflecting ``replica_version``."""
+        v = self._pointer()["version"]
+        if df is not None:
+            v += 1
+            df.coalesce(1).write.mode("overwrite").parquet(
+                state.version_dir(self._data_dir(), v)
+            )
+        state.commit_json(
+            os.path.join(self._data_dir(), "_POINTER.json"),
+            {"version": v, "replica_version": replica_version},
+        )
+        state.retire(self._data_dir(), v, keep=2)
 
     # -- full compute (bootstrap / repair) ---------------------------------
     def _full_aggregate(self, spark: SparkSession) -> DataFrame:
@@ -92,7 +112,8 @@ class IncrementalGroupCount:
         )
 
     def initialize(self, spark: SparkSession) -> None:
-        self._write(self._full_aggregate(spark))
+        version = self.engine.store.version(self.table)
+        self._publish(self._full_aggregate(spark), version)
 
     # -- measures ----------------------------------------------------------
     def _measures(self) -> list:
@@ -134,66 +155,81 @@ class IncrementalGroupCount:
         if "after" in events.columns:
             events = self.engine.project_after(events, self.table)
         events = events.filter(F.col(self.pk).isNotNull())
+        store = self.engine.store
+        ptr = self._pointer()
+        stale = ptr["replica_version"] != store.version(self.table)
         keys = events.select(self.pk).distinct().cache()
-        tmp_before = os.path.join(self.path, f".before-{uuid.uuid4().hex[:8]}")
+        before_dir = os.path.join(self.path, "before")
+        release: list = []
         try:
             # The before-state must be MATERIALIZED (written out) before the
             # merge rewrites the underlying buckets — a lazy DataFrame would
             # re-read post-merge files and difference the batch against
             # itself. The write is group-cardinality rows, not data-scale.
-            self._group_state_for_keys(spark, keys).write.mode(
-                "overwrite"
-            ).parquet(tmp_before)
+            if not stale:
+                self._group_state_for_keys(spark, keys).write.mode(
+                    "overwrite"
+                ).parquet(before_dir)
             self.engine.merge_batch(spark, self.table, events, sync_ts=sync_ts)
-            before = spark.read.parquet(tmp_before)
-            after = self._group_state_for_keys(spark, keys)
-            names = [name for name, _ in self._measures()]
-            # Cluster-side delta: union the negated before-contribution with
-            # the after-contribution and let groupBy fold them. groupBy treats
-            # NULL as an ordinary group, so NULL-group rows difference
-            # correctly (no driver-side dict, no collect of group state).
-            keep_any = None
-            delta = (
-                before.select(
-                    "grp", *[(-F.col(m)).alias(m) for m in names]
+            if stale:
+                new = self._full_aggregate(spark)
+            else:
+                new = self._merged(
+                    spark,
+                    spark.read.parquet(before_dir),
+                    self._group_state_for_keys(spark, keys),
+                    release,
                 )
-                .unionByName(after.select("grp", *names))
-                .groupBy("grp")
-                .agg(*[F.sum(m).alias(m) for m in names])
-            )
-            for m in names:
-                cond = F.col(m) != 0
-                keep_any = cond if keep_any is None else (keep_any | cond)
-            delta = delta.filter(keep_any).cache()
-            try:
-                if delta.isEmpty():
-                    return
-                mv = self.read(spark)
-                # eqNullSafe: a plain equi-join never matches NULL keys, which
-                # would leave two diverging NULL-group rows in the store.
-                merged = (
-                    mv.join(
-                        delta, mv["grp"].eqNullSafe(delta["grp"]), "full_outer"
-                    )
-                    .select(
-                        F.coalesce(mv["grp"], delta["grp"]).alias("grp"),
-                        *[
-                            (
-                                F.coalesce(mv[m], F.lit(0))
-                                + F.coalesce(delta[m], F.lit(0))
-                            ).alias(m)
-                            for m in names
-                        ],
-                    )
-                    .filter(F.col("n") != 0)
-                )
-                self._write(merged)
-            finally:
-                delta.unpersist()
+            version = store.version(self.table)
+            if new is not None or version != ptr["replica_version"]:
+                self._publish(new, version)
         finally:
+            for f in release:
+                f.unpersist()
             keys.unpersist()
-            if os.path.exists(tmp_before):
-                shutil.rmtree(tmp_before)
+            state.remove_dir(before_dir)
+
+    def _merged(
+        self, spark: SparkSession, before: DataFrame, after: DataFrame, release: list
+    ) -> DataFrame | None:
+        """The new aggregate from the batch keys' before/after group
+        contributions, or None when no group changed. Frames cached here
+        go into ``release`` (unpersisted after the write)."""
+        names = [name for name, _ in self._measures()]
+        # Cluster-side delta: union the negated before-contribution with
+        # the after-contribution and let groupBy fold them. groupBy treats
+        # NULL as an ordinary group, so NULL-group rows difference
+        # correctly (no driver-side dict, no collect of group state).
+        keep_any = None
+        delta = (
+            before.select("grp", *[(-F.col(m)).alias(m) for m in names])
+            .unionByName(after.select("grp", *names))
+            .groupBy("grp")
+            .agg(*[F.sum(m).alias(m) for m in names])
+        )
+        for m in names:
+            cond = F.col(m) != 0
+            keep_any = cond if keep_any is None else (keep_any | cond)
+        delta = delta.filter(keep_any).cache()
+        release.append(delta)
+        if delta.isEmpty():
+            return None
+        mv = self.read(spark)
+        # eqNullSafe: a plain equi-join never matches NULL keys, which
+        # would leave two diverging NULL-group rows in the store.
+        return (
+            mv.join(delta, mv["grp"].eqNullSafe(delta["grp"]), "full_outer")
+            .select(
+                F.coalesce(mv["grp"], delta["grp"]).alias("grp"),
+                *[
+                    (
+                        F.coalesce(mv[m], F.lit(0)) + F.coalesce(delta[m], F.lit(0))
+                    ).alias(m)
+                    for m in names
+                ],
+            )
+            .filter(F.col("n") != 0)
+        )
 
     # -- streaming wrapper ---------------------------------------------------
     def start_stream(
@@ -341,83 +377,57 @@ class IncrementalGroupMinMax(IncrementalGroupCount):
             ("mx", F.max(v)),
         ]
 
-    def merge_batch(
-        self,
-        spark: SparkSession,
-        events: DataFrame,
-        sync_ts: str | None = None,
-    ) -> None:
-        if "after" in events.columns:
-            events = self.engine.project_after(events, self.table)
-        events = events.filter(F.col(self.pk).isNotNull())
-        keys = events.select(self.pk).distinct().cache()
-        tmp_before = os.path.join(self.path, f".before-{uuid.uuid4().hex[:8]}")
-        try:
-            # before-state materialized pre-merge (see IncrementalGroupCount)
-            self._group_state_for_keys(spark, keys).write.mode(
-                "overwrite"
-            ).parquet(tmp_before)
-            self.engine.merge_batch(spark, self.table, events, sync_ts=sync_ts)
-            before = spark.read.parquet(tmp_before)
-            after = self._group_state_for_keys(spark, keys)
-
-            shrink = before.select("grp").distinct().cache()
-            grow = (
-                after.alias("a")
-                .join(
-                    shrink.alias("s"),
-                    F.col("a.grp").eqNullSafe(F.col("s.grp")),
-                    "left_anti",
-                )
-                .cache()
+    def _merged(
+        self, spark: SparkSession, before: DataFrame, after: DataFrame, release: list
+    ) -> DataFrame | None:
+        shrink = before.select("grp").distinct().cache()
+        grow = (
+            after.alias("a")
+            .join(
+                shrink.alias("s"),
+                F.col("a.grp").eqNullSafe(F.col("s.grp")),
+                "left_anti",
             )
-            try:
-                if shrink.isEmpty() and grow.isEmpty():
-                    return
-                mv = self.read(spark)
-                touched = shrink.unionByName(grow.select("grp")).distinct()
-                untouched = mv.alias("m").join(
-                    touched.alias("t"),
-                    F.col("m.grp").eqNullSafe(F.col("t.grp")),
-                    "left_anti",
-                )
-                # GROW: stored (if any) extended by the batch contribution
-                mv_grow = mv.alias("m").join(
-                    grow.select("grp").alias("g"),
-                    F.col("m.grp").eqNullSafe(F.col("g.grp")),
-                    "left_semi",
-                )
-                g, m = grow.alias("g"), mv_grow.alias("m")
-                grown = (
-                    g.join(m, F.col("g.grp").eqNullSafe(F.col("m.grp")), "left")
-                    .select(
-                        F.col("g.grp").alias("grp"),
-                        (
-                            F.coalesce(F.col("m.n"), F.lit(0)) + F.col("g.n")
-                        ).alias("n"),
-                        F.least(F.col("m.mn"), F.col("g.mn")).alias("mn"),
-                        F.greatest(F.col("m.mx"), F.col("g.mx")).alias("mx"),
-                    )
-                )
-                # SHRINK: recompute exactly those groups from live rows
-                live = self.engine.store.read(spark, self.table).filter(
-                    ~F.col(schemas.META_DELETED)
-                )
-                rec = (
-                    live.alias("l")
-                    .join(
-                        shrink.alias("s"),
-                        F.col(f"l.{self.group_col}").eqNullSafe(F.col("s.grp")),
-                        "left_semi",
-                    )
-                    .groupBy(F.col(f"l.{self.group_col}").alias("grp"))
-                    .agg(*[e.alias(nm) for nm, e in self._measures()])
-                )
-                self._write(untouched.unionByName(grown).unionByName(rec))
-            finally:
-                shrink.unpersist()
-                grow.unpersist()
-        finally:
-            keys.unpersist()
-            if os.path.exists(tmp_before):
-                shutil.rmtree(tmp_before)
+            .cache()
+        )
+        release += [shrink, grow]
+        if shrink.isEmpty() and grow.isEmpty():
+            return None
+        mv = self.read(spark)
+        touched = shrink.unionByName(grow.select("grp")).distinct()
+        untouched = mv.alias("m").join(
+            touched.alias("t"),
+            F.col("m.grp").eqNullSafe(F.col("t.grp")),
+            "left_anti",
+        )
+        # GROW: stored (if any) extended by the batch contribution
+        mv_grow = mv.alias("m").join(
+            grow.select("grp").alias("g"),
+            F.col("m.grp").eqNullSafe(F.col("g.grp")),
+            "left_semi",
+        )
+        g, m = grow.alias("g"), mv_grow.alias("m")
+        grown = (
+            g.join(m, F.col("g.grp").eqNullSafe(F.col("m.grp")), "left")
+            .select(
+                F.col("g.grp").alias("grp"),
+                (F.coalesce(F.col("m.n"), F.lit(0)) + F.col("g.n")).alias("n"),
+                F.least(F.col("m.mn"), F.col("g.mn")).alias("mn"),
+                F.greatest(F.col("m.mx"), F.col("g.mx")).alias("mx"),
+            )
+        )
+        # SHRINK: recompute exactly those groups from live rows
+        live = self.engine.store.read(spark, self.table).filter(
+            ~F.col(schemas.META_DELETED)
+        )
+        rec = (
+            live.alias("l")
+            .join(
+                shrink.alias("s"),
+                F.col(f"l.{self.group_col}").eqNullSafe(F.col("s.grp")),
+                "left_semi",
+            )
+            .groupBy(F.col(f"l.{self.group_col}").alias("grp"))
+            .agg(*[e.alias(nm) for nm, e in self._measures()])
+        )
+        return untouched.unionByName(grown).unionByName(rec)
