@@ -42,6 +42,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from sfguide_getting_started_openflow_postgresql_cdc_spark.cache import memo, release
 from sfguide_getting_started_openflow_postgresql_cdc_spark.operators.registry import (
     query,
 )
@@ -167,40 +168,7 @@ def _auto_setup(
     return geometry, planes
 
 
-# LRU registry of persisted augmented frames, keyed by the analyzed
-# plan's semantic hash per application (r12, VERDICT r11 item 5): a
-# long session calling knn_graph/embedding_dup_pairs over many distinct
-# corpora would otherwise accumulate one never-released cache entry per
-# (corpus, geometry). The cap keeps repeated calls over the SAME few
-# inputs warm (CacheManager dedups plan-identical persists, so bench
-# alternation between sim11 and dd16 stays cached) while evicting the
-# oldest frame once a fifth distinct input arrives. Evicting a frame a
-# caller still holds lazily is safe — the plan recomputes without the
-# cache. ``release_ann_cache()`` drops everything eagerly.
-_ANN_CACHE_MAX = 4
-_ANN_CACHE: dict = {}  # key -> DataFrame, insertion-ordered (py3.7+)
-
-
-def _ann_cache_key(df: DataFrame):
-    try:
-        return (
-            df.sparkSession.sparkContext.applicationId,
-            df._jdf.queryExecution().analyzed().semanticHash(),
-        )
-    except Exception:  # Connect or a future API change: fall back to id
-        return (id(df),)
-
-
-def release_ann_cache() -> None:
-    """Unpersist every augmented-embeddings frame this session cached —
-    the twin of ``IvfIndex.release_search_cache`` / ``clear_dedup_cache``
-    for the adaptive-ANN entry points."""
-    while _ANN_CACHE:
-        _, df = _ANN_CACHE.popitem()
-        try:
-            df.unpersist()
-        except Exception:
-            pass
+release_ann_cache = release  # the historical name of cache.release
 
 
 def _augmented(
@@ -222,9 +190,10 @@ def _augmented(
     same inputs — bit-identical. Every entry point routes through here
     (the inline-norm fallback in :func:`_verified_sims` is reachable
     only when a caller passes a frame that already carries the
-    augmented columns). Persisted frames register in the LRU-capped
-    ``_ANN_CACHE`` above so distinct corpora cannot accumulate
-    unreleased cache entries; ``release_ann_cache()`` drops them all."""
+    augmented columns). The frame is kept in the session memo registry
+    (``cache.py``) keyed by its analyzed plan's semantic hash, so repeated
+    calls over the same corpus share one cache entry and distinct corpora
+    cannot accumulate unreleased ones."""
     from sfguide_getting_started_openflow_postgresql_cdc_spark.operators.similarity import (
         arrow_band_buckets_param,
         arrow_norm,
@@ -240,21 +209,8 @@ def _augmented(
                 F.col(emb_col), planes, n_bands, band_bits
             ),
         )
-    key = _ann_cache_key(out)
-    if key in _ANN_CACHE:
-        _ANN_CACHE[key] = _ANN_CACHE.pop(key)  # refresh LRU position
-    else:
-        _ANN_CACHE[key] = out
-        while len(_ANN_CACHE) > _ANN_CACHE_MAX:
-            oldest = next(iter(_ANN_CACHE))
-            old = _ANN_CACHE.pop(oldest)
-            try:
-                old.unpersist()
-            except Exception:
-                pass
-    if not (out.storageLevel.useMemory or out.storageLevel.useDisk):
-        out.persist()
-    return out
+    key = out._jdf.queryExecution().analyzed().semanticHash()
+    return memo(out.sparkSession, "ann_augmented", key, lambda: out)
 
 
 def _banded(

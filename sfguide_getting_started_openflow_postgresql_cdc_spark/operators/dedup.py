@@ -33,6 +33,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from sfguide_getting_started_openflow_postgresql_cdc_spark.cache import memo, release
 from sfguide_getting_started_openflow_postgresql_cdc_spark.operators.registry import query
 from sfguide_getting_started_openflow_postgresql_cdc_spark.sources.loader import (
     load_table,
@@ -292,51 +293,36 @@ def _band_exprs() -> list[tuple[str, Column]]:
     return bands
 
 
-_DD4_CACHE: dict = {}
-
-
 def _dd4_shingle_cache(spark: SparkSession, sf_dir: str):
     """Memoized persisted (full, capped) shingle sets for dd4 and its
-    composers (dd7/px6). One persist per (session, sf_dir) — repeated
-    invocations reuse the SAME DataFrame objects, so no duplicate
-    CacheManager entries accumulate; ``clear_dedup_cache`` unpersists."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _DD4_CACHE.get(key)
-    if hit is not None:
-        lvl = hit[0].storageLevel
-        if lvl.useMemory or lvl.useDisk:
-            return hit
-        # someone ran spark.catalog.clearCache() behind our back (e.g.
-        # Warehouse.suspend) — the memo would hand out uncached frames
-        # forever; drop the stale entry and rebuild the persist below
-        _DD4_CACHE.pop(key, None)
-    sh = _doc_shingles(spark, sf_dir).persist()
-    # hot shingles are FEW by definition (df > CAP needs CAP+ docs each),
-    # so drop them via a broadcast anti-join — map-side, no extra shuffle
-    # (dd3 uses a window because its self-join reuses the shingle
-    # partitioning; dd4's verification joins are keyed by doc_id, so a
-    # shingle-partitioned exchange would buy nothing here)
-    hot = (
-        sh.groupBy("shingle")
-        .agg(F.count("*").alias("_df"))
-        .filter(F.col("_df") > SHINGLE_DOC_FREQ_CAP)
-        .select("shingle")
-    )
-    # each capped row carries its doc's capped-set SIZE (one window,
-    # persisted with the rows): the verify step of every consumer
-    # (dd4/dd10/px12) can then take min(n) inside its pair aggregate
-    # instead of joining a corpus-cardinality sizes frame — the r8
-    # verdict's scale-killer was broadcasting that frame
-    capped = (
-        sh.join(F.broadcast(hot), on="shingle", how="left_anti")
-        .withColumn("n", F.count("*").over(Window.partitionBy("doc_id")))
-        .persist()
-    )
-    _DD4_CACHE[key] = (sh, capped)
-    return sh, capped
+    composers (dd7/px6), one per (session, sf_dir) in the session memo
+    registry (``cache.py``)."""
 
+    def build():
+        sh = _doc_shingles(spark, sf_dir)
+        # hot shingles are FEW by definition (df > CAP needs CAP+ docs each),
+        # so drop them via a broadcast anti-join — map-side, no extra shuffle
+        # (dd3 uses a window because its self-join reuses the shingle
+        # partitioning; dd4's verification joins are keyed by doc_id, so a
+        # shingle-partitioned exchange would buy nothing here)
+        hot = (
+            sh.groupBy("shingle")
+            .agg(F.count("*").alias("_df"))
+            .filter(F.col("_df") > SHINGLE_DOC_FREQ_CAP)
+            .select("shingle")
+        )
+        # each capped row carries its doc's capped-set SIZE (one window,
+        # persisted with the rows): the verify step of every consumer
+        # (dd4/dd10/px12) can then take min(n) inside its pair aggregate
+        # instead of joining a corpus-cardinality sizes frame — the r8
+        # verdict's scale-killer was broadcasting that frame
+        capped = (
+            sh.join(F.broadcast(hot), on="shingle", how="left_anti")
+            .withColumn("n", F.count("*").over(Window.partitionBy("doc_id")))
+        )
+        return sh, capped  # persisted in this order: capped reads sh's cache
 
-_DD4_PAIRS_CACHE: dict = {}
+    return memo(spark, "dd4_shingles", sf_dir, build)
 
 
 def _dd4_pairs_cache(spark: SparkSession, sf_dir: str):
@@ -353,44 +339,18 @@ def _dd4_pairs_cache(spark: SparkSession, sf_dir: str):
     3-column plan would match a persisted full-output frame (measured:
     dd4's bench min silently became a 0.5 s cache hit). The 2-column
     project never occurs inside dd4's own plan, so only the composers
-    (which need exactly these columns) reuse it. Self-heals like the
-    shingle memo when something clearCache'd behind our back; released
-    by ``clear_dedup_cache`` (at cluster scale: checkpoint to
+    (which need exactly these columns) reuse it. Kept in the session
+    memo registry (``cache.py``; at cluster scale: checkpoint to
     storage)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _DD4_PAIRS_CACHE.get(key)
-    if hit is not None:
-        lvl = hit.storageLevel
-        if lvl.useMemory or lvl.useDisk:
-            return hit
-        _DD4_PAIRS_CACHE.pop(key, None)
-    pairs = (
-        dd4_minhash_lsh_pairs(spark, sf_dir)
-        .select("doc_a", "doc_b")
-        .persist()
-    )
-    _DD4_PAIRS_CACHE[key] = pairs
-    return pairs
-
-
-def clear_dedup_cache() -> None:
-    """Release every frame the dedup memos persisted this session —
-    including the dd15/px16 REPLAY memos (collected rows, not persisted
-    frames): `MinHashLshIndex.retract` calls this so no consumer can
-    serve pre-retraction state (r8 verdict task 7)."""
-    for sh, capped in _DD4_CACHE.values():
-        capped.unpersist()
-        sh.unpersist()
-    _DD4_CACHE.clear()
-    for pairs in _DD4_PAIRS_CACHE.values():
-        pairs.unpersist()
-    _DD4_PAIRS_CACHE.clear()
-    _PX16_MEMO.clear()
-    from sfguide_getting_started_openflow_postgresql_cdc_spark.operators import (
-        dedup_index as _di,
+    return memo(
+        spark,
+        "dd4_pairs",
+        sf_dir,
+        lambda: dd4_minhash_lsh_pairs(spark, sf_dir).select("doc_a", "doc_b"),
     )
 
-    _di._DD15_MEMO.clear()
+
+clear_dedup_cache = release  # the historical name of cache.release
 
 
 @query(
@@ -453,7 +413,7 @@ def dd4_minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The shingle set feeds the signature pass and both sides of the
     verification join; it is persisted ONCE per (session, sf_dir) via a
-    memo (``clear_dedup_cache`` releases it) so the explode+distinct
+    memo (``cache.py``; ``release`` frees it) so the explode+distinct
     shuffle runs once even when dd7/dd8/px6 re-invoke dd4 in the same
     session (at cluster scale: checkpoint to storage instead).
     """
@@ -1700,9 +1660,6 @@ def px11_training_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_PX16_MEMO: dict = {}
-
-
 def _manifest_replay(spark: SparkSession, sf_dir: str) -> dict:
     """Memoized 3-dump replay of the documents table through the
     MAINTAINED curation manifest (streaming/curation.py): freeze the
@@ -1711,7 +1668,8 @@ def _manifest_replay(spark: SparkSession, sf_dir: str) -> dict:
     maintained views (manifest + per-lang + per-source stats) before
     the temp state dir vanishes. One replay serves px16/px17/px18 —
     every view is group-cardinality, never corpus-proportional. The
-    memo is cleared by ``clear_dedup_cache`` (retraction guard)."""
+    collected views live in the session memo registry (``cache.py``),
+    which retraction releases."""
     import shutil as _shutil
     import tempfile as _tempfile
 
@@ -1719,36 +1677,34 @@ def _manifest_replay(spark: SparkSession, sf_dir: str) -> dict:
         IncrementalCurationManifest,
     )
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _PX16_MEMO.get(key)
-    if hit is not None:
-        return hit
-    docs = load_table(spark, sf_dir, "documents")
-    bench = docs.filter(F.col("doc_id") % 100 < 2)
-    train = docs.filter(F.col("doc_id") % 100 >= 2)
-    b = train.agg(F.min("doc_id").alias("lo"), F.max("doc_id").alias("hi")).first()
-    c1 = b["lo"] + (b["hi"] - b["lo"]) // 3
-    c2 = b["lo"] + 2 * (b["hi"] - b["lo"]) // 3
-    tmp = _tempfile.mkdtemp(prefix="px16_mf_")
-    try:
-        mf = IncrementalCurationManifest(spark, tmp)
-        mf.initialize(bench)
-        mf.ingest(train.filter(F.col("doc_id") <= c1))
-        mf.ingest(
-            train.filter((F.col("doc_id") > c1) & (F.col("doc_id") <= c2))
-        )
-        mf.ingest(train.filter(F.col("doc_id") > c2))
-        hit = {}
-        for name, view in (
-            ("manifest", mf.manifest()),
-            ("lang", mf.stats_by_lang()),
-            ("source", mf.stats_by_source()),
-        ):
-            hit[name] = (view.collect(), view.schema)
-        _PX16_MEMO[key] = hit
-        return hit
-    finally:
-        _shutil.rmtree(tmp, ignore_errors=True)
+    def replay() -> dict:
+        docs = load_table(spark, sf_dir, "documents")
+        bench = docs.filter(F.col("doc_id") % 100 < 2)
+        train = docs.filter(F.col("doc_id") % 100 >= 2)
+        b = train.agg(F.min("doc_id").alias("lo"), F.max("doc_id").alias("hi")).first()
+        c1 = b["lo"] + (b["hi"] - b["lo"]) // 3
+        c2 = b["lo"] + 2 * (b["hi"] - b["lo"]) // 3
+        tmp = _tempfile.mkdtemp(prefix="px16_mf_")
+        try:
+            mf = IncrementalCurationManifest(spark, tmp)
+            mf.initialize(bench)
+            mf.ingest(train.filter(F.col("doc_id") <= c1))
+            mf.ingest(
+                train.filter((F.col("doc_id") > c1) & (F.col("doc_id") <= c2))
+            )
+            mf.ingest(train.filter(F.col("doc_id") > c2))
+            return {
+                name: (view.collect(), view.schema)
+                for name, view in (
+                    ("manifest", mf.manifest()),
+                    ("lang", mf.stats_by_lang()),
+                    ("source", mf.stats_by_source()),
+                )
+            }
+        finally:
+            _shutil.rmtree(tmp, ignore_errors=True)
+
+    return memo(spark, "px16_replay", sf_dir, replay)
 
 
 @query("px16_incremental_manifest")

@@ -94,7 +94,7 @@ file counts); a cluster deployment raises ``n_buckets`` to thousands,
 exactly like the replica's ``_CDC_BUCKET`` layout. doc_ids must be
 unique across ingests and never re-ingested after retraction (upstream
 exact-dedup dd1 / CDC keys guarantee this in the pipeline; ingest
-raises on a tombstoned doc_id).
+raises on a tombstoned doc_id and on a doc_id repeated within a batch).
 """
 
 from __future__ import annotations
@@ -107,12 +107,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from sfguide_getting_started_openflow_postgresql_cdc_spark import state
+from sfguide_getting_started_openflow_postgresql_cdc_spark.cache import memo, release
 from sfguide_getting_started_openflow_postgresql_cdc_spark.operators.dedup import (
     JACCARD_THRESHOLD,
     SHINGLE_DOC_FREQ_CAP,
     _band_exprs,
     _minhash_sig_cols,
-    clear_dedup_cache,
 )
 from sfguide_getting_started_openflow_postgresql_cdc_spark.operators.registry import (
     query,
@@ -428,332 +428,347 @@ class MinHashLshIndex:
         new_version = man["version"] + 1
         tomb = self._tombstones()
 
-        batch_sh = _shingle_batch(docs.select("doc_id", "text")).persist()
-        if tomb is not None:
-            n_bad = docs.join(F.broadcast(tomb), "doc_id", "left_semi").count()
-            if n_bad:
-                raise ValueError(
-                    f"{n_bad} doc_ids were previously retracted; retracted ids "
-                    "must not be re-ingested (tombstones filter them out)"
+        batch_sh = batch_bands = new_cands = merged = None
+        invol_sh = reverify = verify_set = None
+        try:
+            batch_sh = _shingle_batch(docs.select("doc_id", "text")).persist()
+            if tomb is not None:
+                n_bad = docs.join(F.broadcast(tomb), "doc_id", "left_semi").count()
+                if n_bad:
+                    raise ValueError(
+                        f"{n_bad} doc_ids were previously retracted; retracted ids "
+                        "must not be re-ingested (tombstones filter them out)"
+                    )
+            sig = batch_sh.groupBy("doc_id").agg(*_minhash_sig_cols())
+            batch_bands = None
+            for name, expr in _band_exprs():
+                part = sig.select(
+                    "doc_id", F.lit(name).alias("band_id"), expr.alias("sig")
                 )
-        sig = batch_sh.groupBy("doc_id").agg(*_minhash_sig_cols())
-        batch_bands = None
-        for name, expr in _band_exprs():
-            part = sig.select(
-                "doc_id", F.lit(name).alias("band_id"), expr.alias("sig")
-            )
-            batch_bands = (
-                part if batch_bands is None else batch_bands.unionByName(part)
-            )
-        batch_bands = batch_bands.persist()
-
-        # stored-band read pruned to the batch's band-signature buckets.
-        # ONE job derives every batch-side bucket set (bands + df) AND
-        # the batch doc count (manifest bookkeeping — counting `docs`
-        # separately would re-run its whole input plan as its own job):
-        # the per-job scheduling floor dominates at micro-batch scale,
-        # so fusing the bounded collects matters more than row counts
-        tagged = (
-            batch_bands.select(
-                F.lit("band").alias("t"),
-                self._band_bucket().cast("long").alias("b"),
-            )
-            .unionByName(
-                batch_sh.select(
-                    F.lit("df").alias("t"),
-                    self._shingle_bucket().cast("long").alias("b"),
+                batch_bands = (
+                    part if batch_bands is None else batch_bands.unionByName(part)
                 )
-            )
-            .distinct()
-            .unionByName(
-                docs.agg(F.count("*").alias("b")).select(
-                    F.lit("ndocs").alias("t"), "b"
-                )
-            )
-            .collect()
-        )
-        n_batch_docs = next(int(r["b"]) for r in tagged if r["t"] == "ndocs")
-        band_buckets = sorted(int(r["b"]) for r in tagged if r["t"] == "band")
-        stored_bands = self._anti_docs(
-            self._read_append(
-                "bands", "doc_id long, band_id string, sig string", band_buckets
-            ),
-            tomb,
-        )
-        all_bands = stored_bands.unionByName(batch_bands)
+            batch_bands = batch_bands.persist()
 
-        # new candidates: every collision involving >=1 batch doc. Band
-        # signatures are immutable per doc, so this is append-only.
-        bb, ob = batch_bands.alias("bb"), all_bands.alias("ob")
-        new_cands = (
-            bb.join(
-                ob,
-                (F.col("bb.band_id") == F.col("ob.band_id"))
-                & (F.col("bb.sig") == F.col("ob.sig"))
-                & (F.col("bb.doc_id") != F.col("ob.doc_id")),
-            )
-            .select(
-                F.least("bb.doc_id", "ob.doc_id").alias("doc_a"),
-                F.greatest("bb.doc_id", "ob.doc_id").alias("doc_b"),
-            )
-            .distinct()
-            .persist()
-        )
-
-        # df merge + cap-crossing detection, bucket-pruned: every batch
-        # shingle hashes into a touched bucket, and crossing requires a
-        # batch arrival, so the pruned read sees every possible crossing
-        df_buckets = sorted(int(r["b"]) for r in tagged if r["t"] == "df")
-        old_df = self._cow_read("df", "shingle string, df long", df_buckets)
-        batch_df = batch_sh.groupBy("shingle").agg(F.count("*").alias("bdf"))
-        merged = (
-            old_df.join(batch_df, "shingle", "full_outer")
-            .select(
-                "shingle",
-                (
-                    F.coalesce(F.col("df"), F.lit(0))
-                    + F.coalesce(F.col("bdf"), F.lit(0))
-                ).alias("new_df"),
-                F.coalesce(F.col("df"), F.lit(0)).alias("old_df"),
-            )
-            .persist()
-        )
-        # ONE job resolves the crossing count AND the verify-side bucket
-        # sets for the no-crossing case (r11, the `tagged` fusion applied
-        # again — guide §1.2: the per-job scheduling floor dominates a
-        # micro-batch ingest, so bounded collects are fused wherever the
-        # dependency graph allows). The action also materializes the
-        # caches of `merged` (df write reuses it) and `new_cands` (the
-        # verify joins reuse it). In the COMMON no-crossing case the
-        # bucket rows are final; a crossing (rare by construction — each
-        # shingle crosses once, at its CAP+1-th arrival) pays one extra
-        # bucket job over the widened verify_set below.
-        crossing = merged.filter(
-            (F.col("old_df") <= self.cap) & (F.col("new_df") > self.cap)
-        ).select("shingle")
-
-        def _probe():
-            return (
-                crossing.agg(F.count("*").alias("b")).select(
-                    F.lit("x").alias("t"), F.col("b").cast("long")
+            # stored-band read pruned to the batch's band-signature buckets.
+            # ONE job derives every batch-side bucket set (bands + df) AND
+            # the batch doc and distinct-id counts (manifest bookkeeping and
+            # the unique-id check — counting `docs` separately would re-run
+            # its whole input plan as its own job): the per-job scheduling
+            # floor dominates at micro-batch scale, so fusing the bounded
+            # collects matters more than row counts. The distinct ids are a
+            # collect_set inside the same global aggregate: countDistinct
+            # would plan one more exchange, and AQE runs it as one more job
+            tagged = (
+                batch_bands.select(
+                    F.lit("band").alias("t"),
+                    self._band_bucket().cast("long").alias("b"),
                 )
                 .unionByName(
-                    new_cands.select(
-                        F.lit("a").alias("t"),
-                        self._doc_bucket("doc_a").alias("b"),
+                    batch_sh.select(
+                        F.lit("df").alias("t"),
+                        self._shingle_bucket().cast("long").alias("b"),
+                    )
+                )
+                .distinct()
+                .unionByName(
+                    docs.agg(
+                        F.count("*").alias("n"),
+                        F.size(F.collect_set("doc_id")).cast("long").alias("u"),
+                    ).selectExpr("stack(2, 'ndocs', n, 'ids', u) AS (t, b)")
+                )
+                .collect()
+            )
+            counts = {r["t"]: int(r["b"]) for r in tagged if r["t"] in ("ndocs", "ids")}
+            n_batch_docs = counts["ndocs"]
+            if counts["ids"] != n_batch_docs:
+                raise ValueError(
+                    f"{n_batch_docs - counts['ids']} rows repeat a doc_id of the "
+                    "same batch; doc_ids must be unique"
+                )
+            band_buckets = sorted(int(r["b"]) for r in tagged if r["t"] == "band")
+            stored_bands = self._anti_docs(
+                self._read_append(
+                    "bands", "doc_id long, band_id string, sig string", band_buckets
+                ),
+                tomb,
+            )
+            all_bands = stored_bands.unionByName(batch_bands)
+
+            # new candidates: every collision involving >=1 batch doc. Band
+            # signatures are immutable per doc, so this is append-only.
+            bb, ob = batch_bands.alias("bb"), all_bands.alias("ob")
+            new_cands = (
+                bb.join(
+                    ob,
+                    (F.col("bb.band_id") == F.col("ob.band_id"))
+                    & (F.col("bb.sig") == F.col("ob.sig"))
+                    & (F.col("bb.doc_id") != F.col("ob.doc_id")),
+                )
+                .select(
+                    F.least("bb.doc_id", "ob.doc_id").alias("doc_a"),
+                    F.greatest("bb.doc_id", "ob.doc_id").alias("doc_b"),
+                )
+                .distinct()
+                .persist()
+            )
+
+            # df merge + cap-crossing detection, bucket-pruned: every batch
+            # shingle hashes into a touched bucket, and crossing requires a
+            # batch arrival, so the pruned read sees every possible crossing
+            df_buckets = sorted(int(r["b"]) for r in tagged if r["t"] == "df")
+            old_df = self._cow_read("df", "shingle string, df long", df_buckets)
+            batch_df = batch_sh.groupBy("shingle").agg(F.count("*").alias("bdf"))
+            merged = (
+                old_df.join(batch_df, "shingle", "full_outer")
+                .select(
+                    "shingle",
+                    (
+                        F.coalesce(F.col("df"), F.lit(0))
+                        + F.coalesce(F.col("bdf"), F.lit(0))
+                    ).alias("new_df"),
+                    F.coalesce(F.col("df"), F.lit(0)).alias("old_df"),
+                )
+                .persist()
+            )
+            # ONE job resolves the crossing count AND the verify-side bucket
+            # sets for the no-crossing case (r11, the `tagged` fusion applied
+            # again — guide §1.2: the per-job scheduling floor dominates a
+            # micro-batch ingest, so bounded collects are fused wherever the
+            # dependency graph allows). The action also materializes the
+            # caches of `merged` (df write reuses it) and `new_cands` (the
+            # verify joins reuse it). In the COMMON no-crossing case the
+            # bucket rows are final; a crossing (rare by construction — each
+            # shingle crosses once, at its CAP+1-th arrival) pays one extra
+            # bucket job over the widened verify_set below.
+            crossing = merged.filter(
+                (F.col("old_df") <= self.cap) & (F.col("new_df") > self.cap)
+            ).select("shingle")
+
+            def _probe():
+                return (
+                    crossing.agg(F.count("*").alias("b")).select(
+                        F.lit("x").alias("t"), F.col("b").cast("long")
                     )
                     .unionByName(
                         new_cands.select(
+                            F.lit("a").alias("t"),
+                            self._doc_bucket("doc_a").alias("b"),
+                        )
+                        .unionByName(
+                            new_cands.select(
+                                F.lit("b").alias("t"),
+                                self._doc_bucket("doc_b").alias("b"),
+                            )
+                        )
+                        .distinct()
+                    )
+                    .collect()
+                )
+
+            # the probe job runs CONCURRENTLY with the shingles/bands log
+            # appends (r12, guide §2.6 — overlap independent jobs): all
+            # three depend only on the caches the `tagged` job materialized
+            # (the probe additionally computes `merged`/`new_cands`, which
+            # nothing else races on), and a v{new} log segment is invisible
+            # until the manifest commits, so appending before the probe
+            # resolves is crash-equivalent to appending after it — a retry
+            # overwrites the segment either way (see ``_append``); a failure
+            # of any of the three surfaces after all three finish. The
+            # cands append stays in the FINAL wave: it reads `new_cands`,
+            # which the probe is materializing — running them concurrently
+            # would compute the candidate join twice (cache race).
+            cross_and_vk = state.run_concurrently(
+                [
+                    _probe,
+                    lambda: self._append(
+                        "shingles", batch_sh, self._doc_bucket(), version=new_version
+                    ),
+                    lambda: self._append(
+                        "bands", batch_bands, self._band_bucket(), version=new_version
+                    ),
+                ]
+            )[0]
+            n_crossing = next(int(r["b"]) for r in cross_and_vk if r["t"] == "x")
+
+            hot_old = self._cow_read("hot", "shingle string")
+            hot_new = (
+                hot_old.unionByName(crossing).distinct() if n_crossing else hot_old
+            )
+
+            if n_crossing:
+                # RARE corpus-bounded step (module docstring): by-shingle
+                # lookup over the doc-bucketed shingle log to find stored
+                # docs whose capped sets changed
+                stored_sh_full = self._anti_docs(
+                    self._read_append("shingles", "doc_id long, shingle string"),
+                    tomb,
+                )
+                affected_old = (
+                    stored_sh_full.join(F.broadcast(crossing), "shingle")
+                    .select("doc_id")
+                    .distinct()
+                )
+                stored_cands = self._anti_docs(
+                    self._anti_docs(
+                        self._read_append("cands", "doc_a long, doc_b long"),
+                        tomb,
+                        "doc_a",
+                    ),
+                    tomb,
+                    "doc_b",
+                )
+                reverify = (
+                    stored_cands.join(
+                        F.broadcast(affected_old),
+                        stored_cands.doc_a == affected_old.doc_id,
+                        "left_semi",
+                    )
+                    .unionByName(
+                        stored_cands.join(
+                            F.broadcast(affected_old),
+                            stored_cands.doc_b == affected_old.doc_id,
+                            "left_semi",
+                        )
+                    )
+                    .distinct()
+                    .persist()
+                )
+                verify_set = new_cands.unionByName(reverify).distinct().persist()
+            else:
+                reverify = None
+                verify_set = new_cands  # already distinct + persisted
+
+            if n_crossing:
+                # rare path: re-derive the bucket sets over the WIDENED
+                # verify_set (new candidates + re-verifies) — its own job
+                vk = (
+                    verify_set.select(
+                        F.lit("a").alias("t"), self._doc_bucket("doc_a").alias("b")
+                    )
+                    .unionByName(
+                        verify_set.select(
                             F.lit("b").alias("t"),
                             self._doc_bucket("doc_b").alias("b"),
                         )
                     )
                     .distinct()
+                    .collect()
                 )
-                .collect()
+            else:
+                # common path: the fused job above already produced them
+                vk = [r for r in cross_and_vk if r["t"] != "x"]
+            pair_buckets = sorted(r["b"] for r in vk if r["t"] == "a")
+            invol_buckets = sorted({r["b"] for r in vk})
+
+            verified, invol_sh = self._verified_pairs(
+                verify_set,
+                hot_new,
+                extra_sh=batch_sh,
+                excluded=tomb,
+                invol_buckets=invol_buckets,
             )
 
-        # the probe job runs CONCURRENTLY with the shingles/bands log
-        # appends (r12, guide §2.6 — overlap independent jobs): all
-        # three depend only on the caches the `tagged` job materialized
-        # (the probe additionally computes `merged`/`new_cands`, which
-        # nothing else races on), and a v{new} log segment is invisible
-        # until the manifest commits, so appending before the probe
-        # resolves is crash-equivalent to appending after it — a retry
-        # overwrites the segment either way (see ``_append``); a failure
-        # of any of the three surfaces after all three finish. The
-        # cands append stays in the FINAL wave: it reads `new_cands`,
-        # which the probe is materializing — running them concurrently
-        # would compute the candidate join twice (cache race).
-        cross_and_vk = state.run_concurrently(
-            [
-                _probe,
-                lambda: self._append(
-                    "shingles", batch_sh, self._doc_bucket(), version=new_version
-                ),
-                lambda: self._append(
-                    "bands", batch_bands, self._band_bucket(), version=new_version
-                ),
-            ]
-        )[0]
-        n_crossing = next(int(r["b"]) for r in cross_and_vk if r["t"] == "x")
-
-        hot_old = self._cow_read("hot", "shingle string")
-        hot_new = (
-            hot_old.unionByName(crossing).distinct() if n_crossing else hot_old
-        )
-
-        if n_crossing:
-            # RARE corpus-bounded step (module docstring): by-shingle
-            # lookup over the doc-bucketed shingle log to find stored
-            # docs whose capped sets changed
-            stored_sh_full = self._anti_docs(
-                self._read_append("shingles", "doc_id long, shingle string"),
-                tomb,
+            # pairs view, bucket-COW: drop every re-examined key, add back
+            # the passers. With unique doc_ids, every NEW candidate touches
+            # a batch doc, so stored pairs can only collide with REVERIFY
+            # keys. Touched buckets come from the re-examined keys' doc_a.
+            old_pairs_t = self._cow_read(
+                "pairs", "doc_a long, doc_b long, jaccard double", pair_buckets
             )
-            affected_old = (
-                stored_sh_full.join(F.broadcast(crossing), "shingle")
-                .select("doc_id")
-                .distinct()
-            )
-            stored_cands = self._anti_docs(
-                self._anti_docs(
-                    self._read_append("cands", "doc_a long, doc_b long"),
-                    tomb,
-                    "doc_a",
-                ),
-                tomb,
-                "doc_b",
-            )
-            reverify = (
-                stored_cands.join(
-                    F.broadcast(affected_old),
-                    stored_cands.doc_a == affected_old.doc_id,
-                    "left_semi",
+            kept = (
+                old_pairs_t.join(
+                    F.broadcast(reverify), ["doc_a", "doc_b"], "left_anti"
                 )
-                .unionByName(
-                    stored_cands.join(
-                        F.broadcast(affected_old),
-                        stored_cands.doc_b == affected_old.doc_id,
-                        "left_semi",
-                    )
-                )
-                .distinct()
-                .persist()
-            )
-            verify_set = new_cands.unionByName(reverify).distinct().persist()
-        else:
-            reverify = None
-            verify_set = new_cands  # already distinct + persisted
-
-        if n_crossing:
-            # rare path: re-derive the bucket sets over the WIDENED
-            # verify_set (new candidates + re-verifies) — its own job
-            vk = (
-                verify_set.select(
-                    F.lit("a").alias("t"), self._doc_bucket("doc_a").alias("b")
-                )
-                .unionByName(
-                    verify_set.select(
-                        F.lit("b").alias("t"),
-                        self._doc_bucket("doc_b").alias("b"),
-                    )
-                )
-                .distinct()
-                .collect()
-            )
-        else:
-            # common path: the fused job above already produced them
-            vk = [r for r in cross_and_vk if r["t"] != "x"]
-        pair_buckets = sorted(r["b"] for r in vk if r["t"] == "a")
-        invol_buckets = sorted({r["b"] for r in vk})
-
-        verified, invol_sh = self._verified_pairs(
-            verify_set,
-            hot_new,
-            extra_sh=batch_sh,
-            excluded=tomb,
-            invol_buckets=invol_buckets,
-        )
-
-        # pairs view, bucket-COW: drop every re-examined key, add back
-        # the passers. With unique doc_ids, every NEW candidate touches
-        # a batch doc, so stored pairs can only collide with REVERIFY
-        # keys. Touched buckets come from the re-examined keys' doc_a.
-        old_pairs_t = self._cow_read(
-            "pairs", "doc_a long, doc_b long, jaccard double", pair_buckets
-        )
-        kept = (
-            old_pairs_t.join(
-                F.broadcast(reverify), ["doc_a", "doc_b"], "left_anti"
-            )
-            if reverify is not None
-            else old_pairs_t
-        )
-        new_pairs = kept.unionByName(verified)
-
-        # bookkeeping counts (candidate-bounded frames only; skippable —
-        # each is an extra job, and a bench-timed ingest wants the floor)
-        metrics = {"version": new_version, "batch_docs": n_batch_docs}
-        if collect_metrics:
-            metrics.update(
-                new_candidates=new_cands.count(),
-                reverified_candidates=reverify.count()
                 if reverify is not None
-                else 0,
-                touched_df_buckets=len(df_buckets),
-                touched_pair_buckets=len(pair_buckets),
+                else old_pairs_t
             )
+            new_pairs = kept.unionByName(verified)
 
-        # commit: write the new COW versions FIRST (their plans read the
-        # snapshot-pinned stored state), then append the immutable logs,
-        # then commit the manifest (readers of the old version unaffected).
-        # WITHIN each group the writes are independent Spark jobs over
-        # pinned inputs (every stored-state read enumerated its concrete
-        # file list at plan time, and the batch frames are cached), so
-        # they run CONCURRENTLY from driver threads — the serial version
-        # paid one per-job scheduling floor per table, the dominant cost
-        # of a micro-batch ingest on an otherwise idle cluster.
-        tables = dict(man.get("tables", {}))
-        cow_jobs = [
-            lambda: self._cow_write(
-                "df",
-                merged.select("shingle", F.col("new_df").alias("df")),
-                self._shingle_bucket(),
-                df_buckets,
-                new_version,
-            )
-        ]
-        tables["df"] = new_version
-        if n_crossing:
-            hot_buckets = self._bucket_set(crossing, self._shingle_bucket())
-            hot_rows = self._cow_read(
-                "hot", "shingle string", hot_buckets
-            ).unionByName(crossing).distinct()
-            cow_jobs.append(
+            # bookkeeping counts (candidate-bounded frames only; skippable —
+            # each is an extra job, and a bench-timed ingest wants the floor)
+            metrics = {"version": new_version, "batch_docs": n_batch_docs}
+            if collect_metrics:
+                metrics.update(
+                    new_candidates=new_cands.count(),
+                    reverified_candidates=reverify.count()
+                    if reverify is not None
+                    else 0,
+                    touched_df_buckets=len(df_buckets),
+                    touched_pair_buckets=len(pair_buckets),
+                )
+
+            # commit: write the new COW versions FIRST (their plans read the
+            # snapshot-pinned stored state), then append the immutable logs,
+            # then commit the manifest (readers of the old version unaffected).
+            # WITHIN each group the writes are independent Spark jobs over
+            # pinned inputs (every stored-state read enumerated its concrete
+            # file list at plan time, and the batch frames are cached), so
+            # they run CONCURRENTLY from driver threads — the serial version
+            # paid one per-job scheduling floor per table, the dominant cost
+            # of a micro-batch ingest on an otherwise idle cluster.
+            tables = dict(man.get("tables", {}))
+            cow_jobs = [
                 lambda: self._cow_write(
-                    "hot", hot_rows, self._shingle_bucket(), hot_buckets,
+                    "df",
+                    merged.select("shingle", F.col("new_df").alias("df")),
+                    self._shingle_bucket(),
+                    df_buckets,
                     new_version,
                 )
-            )
-            tables["hot"] = new_version
-        if pair_buckets or self._cow_version("pairs") == 0:
-            cow_jobs.append(
-                lambda: self._cow_write(
-                    "pairs", new_pairs, self._doc_bucket("doc_a"),
-                    pair_buckets, new_version,
+            ]
+            tables["df"] = new_version
+            if n_crossing:
+                hot_buckets = self._bucket_set(crossing, self._shingle_bucket())
+                hot_rows = self._cow_read(
+                    "hot", "shingle string", hot_buckets
+                ).unionByName(crossing).distinct()
+                cow_jobs.append(
+                    lambda: self._cow_write(
+                        "hot", hot_rows, self._shingle_bucket(), hot_buckets,
+                        new_version,
+                    )
                 )
+                tables["hot"] = new_version
+            if pair_buckets or self._cow_version("pairs") == 0:
+                cow_jobs.append(
+                    lambda: self._cow_write(
+                        "pairs", new_pairs, self._doc_bucket("doc_a"),
+                        pair_buckets, new_version,
+                    )
+                )
+                tables["pairs"] = new_version
+            # Concurrency shape (re-measured r12): the shingles/bands
+            # appends already ran overlapped with the probe job above, so
+            # the final wave is the two-to-three remaining writes — df,
+            # pairs (the critical path: its plan computes the whole
+            # verification subgraph), and the cands append (its input was
+            # cached by the probe). r11's negative result stands: a single
+            # 6-way wave oversubscribed the 32-core box (6.5-18.2 s/ingest
+            # vs a stable 6.7-7.5 s) and stays reverted; this 3-4-way wave
+            # measured faster than the r11 two-wave form. Snapshot-pinned
+            # reads make any order CORRECT; the split is a schedule choice.
+            cow_jobs.append(
+                lambda: self._append("cands", new_cands, version=new_version)
             )
-            tables["pairs"] = new_version
-        # Concurrency shape (re-measured r12): the shingles/bands
-        # appends already ran overlapped with the probe job above, so
-        # the final wave is the two-to-three remaining writes — df,
-        # pairs (the critical path: its plan computes the whole
-        # verification subgraph), and the cands append (its input was
-        # cached by the probe). r11's negative result stands: a single
-        # 6-way wave oversubscribed the 32-core box (6.5-18.2 s/ingest
-        # vs a stable 6.7-7.5 s) and stays reverted; this 3-4-way wave
-        # measured faster than the r11 two-wave form. Snapshot-pinned
-        # reads make any order CORRECT; the split is a schedule choice.
-        cow_jobs.append(
-            lambda: self._append("cands", new_cands, version=new_version)
-        )
-        state.run_concurrently(cow_jobs)
-        self._clear_orphan_segments(
-            new_version, wrote={"shingles", "bands", "cands"}
-        )
-        self._commit(
-            {
-                "version": new_version,
-                "n_docs": man["n_docs"] + metrics["batch_docs"],
-                "tables": tables,
-            }
-        )
-        to_release = [batch_sh, batch_bands, new_cands, merged, invol_sh]
-        if reverify is not None:
-            to_release += [reverify, verify_set]
-        for f in to_release:
-            f.unpersist()
+            state.run_concurrently(cow_jobs)
+            self._clear_orphan_segments(
+                new_version, wrote={"shingles", "bands", "cands"}
+            )
+            self._commit(
+                {
+                    "version": new_version,
+                    "n_docs": man["n_docs"] + metrics["batch_docs"],
+                    "tables": tables,
+                }
+            )
+        finally:
+            # release every frame persisted here on any exit — a failure
+            # before the commit must not leave them cached for the session
+            for f in (batch_sh, batch_bands, new_cands, merged, invol_sh,
+                      reverify, verify_set):
+                if f is not None:
+                    f.unpersist()
         self._retire_cow_versions()
         return metrics
 
@@ -769,199 +784,196 @@ class MinHashLshIndex:
         new_version = man["version"] + 1
         tomb = self._tombstones()
 
-        if isinstance(doc_ids, DataFrame):
-            req = doc_ids.select("doc_id").distinct()
-        else:
-            req = spark.createDataFrame(
-                [(int(i),) for i in doc_ids], "doc_id long"
-            )
-        r = self._anti_docs(req, tomb).persist()  # idempotent re-retract
-        n_retract = r.count()
-        metrics = {"version": new_version, "retracted_docs": n_retract}
-        if n_retract == 0:
-            r.unpersist()
-            metrics["version"] = man["version"]
-            return metrics
-        excluded = r if tomb is None else tomb.unionByName(r)
-
-        # retracted docs' shingles: doc-bucket-pruned log read
-        r_buckets = self._bucket_set(r, self._doc_bucket())
-        r_sh = (
-            self._read_append("shingles", "doc_id long, shingle string", r_buckets)
-            .join(F.broadcast(r), "doc_id", "left_semi")
-            .persist()
-        )
-        dec = r_sh.groupBy("shingle").agg(F.count("*").alias("ddf"))
-
-        # df decrement over the touched shingle buckets only
-        df_buckets = self._bucket_set(dec, self._shingle_bucket())
-        old_df = self._cow_read("df", "shingle string, df long", df_buckets)
-        merged = (
-            old_df.join(dec, "shingle", "left")
-            .select(
-                "shingle",
-                (F.col("df") - F.coalesce(F.col("ddf"), F.lit(0))).alias("new_df"),
-                F.col("df").alias("old_df"),
-            )
-            .persist()
-        )
-        down = merged.filter(
-            (F.col("old_df") > self.cap) & (F.col("new_df") <= self.cap)
-        )
-        # two DISTINCT uses of the down-crossing set: HOT REMOVAL must
-        # include vanished shingles (new_df == 0) — a hot shingle whose
-        # docs are all retracted in one call leaves the df table (the
-        # new_df > 0 write filter) but would otherwise stay in hot
-        # forever, wrongly excluded from capped sets when later ingests
-        # reintroduce it at df <= cap; the RE-VERIFY lookup keeps the
-        # new_df > 0 restriction (a vanished shingle touches no
-        # surviving doc's capped set, so nothing to re-verify)
-        hot_down = down.select("shingle")
-        crossing_down = down.filter(F.col("new_df") > 0).select("shingle")
-        n_hot_down = hot_down.count()
-        n_crossing = crossing_down.count()
-
-        hot_old = self._cow_read("hot", "shingle string")
-        hot_new = (
-            hot_old.join(F.broadcast(hot_down), "shingle", "left_anti")
-            if n_hot_down
-            else hot_old
-        )
-
-        if n_crossing:
-            # rare by-shingle lookup (same amortized shape as ingest's
-            # up-crossing path)
-            stored_sh_full = self._anti_docs(
-                self._read_append("shingles", "doc_id long, shingle string"),
-                excluded,
-            )
-            affected = (
-                stored_sh_full.join(F.broadcast(crossing_down), "shingle")
-                .select("doc_id")
-                .distinct()
-            )
-            stored_cands = self._anti_docs(
-                self._anti_docs(
-                    self._read_append("cands", "doc_a long, doc_b long"),
-                    excluded,
-                    "doc_a",
-                ),
-                excluded,
-                "doc_b",
-            )
-            reverify = (
-                stored_cands.join(
-                    F.broadcast(affected),
-                    stored_cands.doc_a == affected.doc_id,
-                    "left_semi",
+        r = r_sh = merged = dropped = reverify = invol_sh = None
+        try:
+            if isinstance(doc_ids, DataFrame):
+                req = doc_ids.select("doc_id").distinct()
+            else:
+                req = spark.createDataFrame(
+                    [(int(i),) for i in doc_ids], "doc_id long"
                 )
-                .unionByName(
+            r = self._anti_docs(req, tomb).persist()  # idempotent re-retract
+            n_retract = r.count()
+            metrics = {"version": new_version, "retracted_docs": n_retract}
+            if n_retract == 0:
+                metrics["version"] = man["version"]
+                return metrics
+            excluded = r if tomb is None else tomb.unionByName(r)
+
+            # retracted docs' shingles: doc-bucket-pruned log read
+            r_buckets = self._bucket_set(r, self._doc_bucket())
+            r_sh = (
+                self._read_append("shingles", "doc_id long, shingle string", r_buckets)
+                .join(F.broadcast(r), "doc_id", "left_semi")
+                .persist()
+            )
+            dec = r_sh.groupBy("shingle").agg(F.count("*").alias("ddf"))
+
+            # df decrement over the touched shingle buckets only
+            df_buckets = self._bucket_set(dec, self._shingle_bucket())
+            old_df = self._cow_read("df", "shingle string, df long", df_buckets)
+            merged = (
+                old_df.join(dec, "shingle", "left")
+                .select(
+                    "shingle",
+                    (F.col("df") - F.coalesce(F.col("ddf"), F.lit(0))).alias("new_df"),
+                    F.col("df").alias("old_df"),
+                )
+                .persist()
+            )
+            down = merged.filter(
+                (F.col("old_df") > self.cap) & (F.col("new_df") <= self.cap)
+            )
+            # two DISTINCT uses of the down-crossing set: HOT REMOVAL must
+            # include vanished shingles (new_df == 0) — a hot shingle whose
+            # docs are all retracted in one call leaves the df table (the
+            # new_df > 0 write filter) but would otherwise stay in hot
+            # forever, wrongly excluded from capped sets when later ingests
+            # reintroduce it at df <= cap; the RE-VERIFY lookup keeps the
+            # new_df > 0 restriction (a vanished shingle touches no
+            # surviving doc's capped set, so nothing to re-verify)
+            hot_down = down.select("shingle")
+            crossing_down = down.filter(F.col("new_df") > 0).select("shingle")
+            n_hot_down = hot_down.count()
+            n_crossing = crossing_down.count()
+
+            hot_old = self._cow_read("hot", "shingle string")
+            hot_new = (
+                hot_old.join(F.broadcast(hot_down), "shingle", "left_anti")
+                if n_hot_down
+                else hot_old
+            )
+
+            if n_crossing:
+                # rare by-shingle lookup (same amortized shape as ingest's
+                # up-crossing path)
+                stored_sh_full = self._anti_docs(
+                    self._read_append("shingles", "doc_id long, shingle string"),
+                    excluded,
+                )
+                affected = (
+                    stored_sh_full.join(F.broadcast(crossing_down), "shingle")
+                    .select("doc_id")
+                    .distinct()
+                )
+                stored_cands = self._anti_docs(
+                    self._anti_docs(
+                        self._read_append("cands", "doc_a long, doc_b long"),
+                        excluded,
+                        "doc_a",
+                    ),
+                    excluded,
+                    "doc_b",
+                )
+                reverify = (
                     stored_cands.join(
                         F.broadcast(affected),
-                        stored_cands.doc_b == affected.doc_id,
+                        stored_cands.doc_a == affected.doc_id,
                         "left_semi",
                     )
+                    .unionByName(
+                        stored_cands.join(
+                            F.broadcast(affected),
+                            stored_cands.doc_b == affected.doc_id,
+                            "left_semi",
+                        )
+                    )
+                    .distinct()
+                    .persist()
                 )
+                verified, invol_sh = self._verified_pairs(
+                    reverify, hot_new, extra_sh=None, excluded=excluded
+                )
+            else:
+                reverify, verified, invol_sh = None, None, None
+
+            # pairs: the view is output-sized, so locating rows that NAME a
+            # retracted doc reads it whole (doc_b's bucket is unknowable
+            # from doc_a's layout) — still orders below corpus I/O
+            all_pairs = self.pairs()
+            ra = r.withColumnRenamed("doc_id", "doc_a")
+            rb = r.withColumnRenamed("doc_id", "doc_b")
+            dropped = (
+                all_pairs.join(F.broadcast(ra), "doc_a", "left_semi")
+                .unionByName(all_pairs.join(F.broadcast(rb), "doc_b", "left_semi"))
                 .distinct()
                 .persist()
             )
-            verified, invol_sh = self._verified_pairs(
-                reverify, hot_new, extra_sh=None, excluded=excluded
-            )
-        else:
-            reverify, verified, invol_sh = None, None, None
-
-        # pairs: the view is output-sized, so locating rows that NAME a
-        # retracted doc reads it whole (doc_b's bucket is unknowable
-        # from doc_a's layout) — still orders below corpus I/O
-        all_pairs = self.pairs()
-        ra = r.withColumnRenamed("doc_id", "doc_a")
-        rb = r.withColumnRenamed("doc_id", "doc_b")
-        dropped = (
-            all_pairs.join(F.broadcast(ra), "doc_a", "left_semi")
-            .unionByName(all_pairs.join(F.broadcast(rb), "doc_b", "left_semi"))
-            .distinct()
-            .persist()
-        )
-        touched_keys = dropped.select("doc_a")
-        if reverify is not None:
-            touched_keys = touched_keys.unionByName(reverify.select("doc_a"))
-        pair_buckets = self._bucket_set(touched_keys, self._doc_bucket("doc_a"))
-
-        if collect_metrics:
-            metrics.update(
-                dropped_pairs=dropped.count(),
-                reverified_candidates=reverify.count()
-                if reverify is not None
-                else 0,
-                touched_df_buckets=len(df_buckets),
-                touched_pair_buckets=len(pair_buckets),
-            )
-
-        tables = dict(man.get("tables", {}))
-        self._cow_write(
-            "df",
-            merged.filter(F.col("new_df") > 0).select(
-                "shingle", F.col("new_df").alias("df")
-            ),
-            self._shingle_bucket(),
-            df_buckets,
-            new_version,
-        )
-        tables["df"] = new_version
-        if n_hot_down:
-            hot_buckets = self._bucket_set(hot_down, self._shingle_bucket())
-            hot_rows = self._cow_read("hot", "shingle string", hot_buckets).join(
-                F.broadcast(hot_down), "shingle", "left_anti"
-            )
-            self._cow_write(
-                "hot", hot_rows, self._shingle_bucket(), hot_buckets, new_version
-            )
-            tables["hot"] = new_version
-        if pair_buckets:
-            old_pairs_t = self._cow_read(
-                "pairs", "doc_a long, doc_b long, jaccard double", pair_buckets
-            )
-            kept = old_pairs_t.join(F.broadcast(ra), "doc_a", "left_anti").join(
-                F.broadcast(rb), "doc_b", "left_anti"
-            )
+            touched_keys = dropped.select("doc_a")
             if reverify is not None:
-                kept = kept.join(
-                    F.broadcast(reverify), ["doc_a", "doc_b"], "left_anti"
+                touched_keys = touched_keys.unionByName(reverify.select("doc_a"))
+            pair_buckets = self._bucket_set(touched_keys, self._doc_bucket("doc_a"))
+
+            if collect_metrics:
+                metrics.update(
+                    dropped_pairs=dropped.count(),
+                    reverified_candidates=reverify.count()
+                    if reverify is not None
+                    else 0,
+                    touched_df_buckets=len(df_buckets),
+                    touched_pair_buckets=len(pair_buckets),
                 )
-                kept = kept.unionByName(verified)
+
+            tables = dict(man.get("tables", {}))
             self._cow_write(
-                "pairs", kept, self._doc_bucket("doc_a"), pair_buckets, new_version
+                "df",
+                merged.filter(F.col("new_df") > 0).select(
+                    "shingle", F.col("new_df").alias("df")
+                ),
+                self._shingle_bucket(),
+                df_buckets,
+                new_version,
             )
-            tables["pairs"] = new_version
-        self._append("tombstones", r, version=new_version)
-        self._clear_orphan_segments(new_version, wrote={"tombstones"})
-        self._commit(
-            {
-                "version": new_version,
-                "n_docs": max(man["n_docs"] - n_retract, 0),
-                "tables": tables,
-            }
-        )
-        for f in (r, r_sh, merged, dropped):
-            f.unpersist()
-        for f in (reverify, invol_sh):
-            if f is not None:
-                f.unpersist()
+            tables["df"] = new_version
+            if n_hot_down:
+                hot_buckets = self._bucket_set(hot_down, self._shingle_bucket())
+                hot_rows = self._cow_read("hot", "shingle string", hot_buckets).join(
+                    F.broadcast(hot_down), "shingle", "left_anti"
+                )
+                self._cow_write(
+                    "hot", hot_rows, self._shingle_bucket(), hot_buckets, new_version
+                )
+                tables["hot"] = new_version
+            if pair_buckets:
+                old_pairs_t = self._cow_read(
+                    "pairs", "doc_a long, doc_b long, jaccard double", pair_buckets
+                )
+                kept = old_pairs_t.join(F.broadcast(ra), "doc_a", "left_anti").join(
+                    F.broadcast(rb), "doc_b", "left_anti"
+                )
+                if reverify is not None:
+                    kept = kept.join(
+                        F.broadcast(reverify), ["doc_a", "doc_b"], "left_anti"
+                    )
+                    kept = kept.unionByName(verified)
+                self._cow_write(
+                    "pairs", kept, self._doc_bucket("doc_a"), pair_buckets, new_version
+                )
+                tables["pairs"] = new_version
+            self._append("tombstones", r, version=new_version)
+            self._clear_orphan_segments(new_version, wrote={"tombstones"})
+            self._commit(
+                {
+                    "version": new_version,
+                    "n_docs": max(man["n_docs"] - n_retract, 0),
+                    "tables": tables,
+                }
+            )
+        finally:
+            for f in (r, r_sh, merged, dropped, reverify, invol_sh):
+                if f is not None:
+                    f.unpersist()
         self._retire_cow_versions()
-        # retraction invalidates the SESSION-LEVEL dedup memos (shared
-        # shingle sets, dd4 pairs, dd15/px16 replays — clear_dedup_cache
-        # clears them ALL): downstream consumers (dd7 groups, px6
+        # retraction invalidates the SESSION memos (shared shingle sets,
+        # dd4 pairs, dd15/px16 replays — ``release`` clears the whole
+        # registry, cache.py): downstream consumers (dd7 groups, px6
         # curation, px15 splits) recomputed after a CDC soft-delete sync
         # must see the surviving corpus, not a persisted pre-retraction
         # snapshot (r8 verdict task 7). The memos rebuild lazily on next
         # use; deletes are rare (takedowns), so the rebuild cost is the
         # correct trade.
-        clear_dedup_cache()
+        release()
         return metrics
-
-
-_DD15_MEMO: dict = {}
 
 
 @query("dd15_incremental_minhash_pairs")
@@ -976,24 +988,22 @@ def dd15_incremental_minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFram
     pipeline each time; pairs are dedup output, bounded, never
     corpus-proportional. bench.py times the INDEX itself via
     ``_bench_incremental_dedup``, not this replay wrapper."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _DD15_MEMO.get(key)
-    if hit is not None:
-        rows, schema = hit
-        return spark.createDataFrame(rows, schema)
-    docs = load_table(spark, sf_dir, "documents")
-    tmp = tempfile.mkdtemp(prefix="dd15_idx_")
-    try:
-        idx = MinHashLshIndex(spark, tmp)
-        for r in range(3):
-            idx.ingest(docs.filter(F.pmod(F.col("doc_id"), F.lit(3)) == r))
-        # materialize before the temp dir vanishes
-        out = idx.pairs()
-        rows = out.collect()
-        _DD15_MEMO[key] = (rows, out.schema)
-        return spark.createDataFrame(rows, out.schema)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+
+    def replay():
+        docs = load_table(spark, sf_dir, "documents")
+        tmp = tempfile.mkdtemp(prefix="dd15_idx_")
+        try:
+            idx = MinHashLshIndex(spark, tmp)
+            for r in range(3):
+                idx.ingest(docs.filter(F.pmod(F.col("doc_id"), F.lit(3)) == r))
+            # materialize before the temp dir vanishes
+            out = idx.pairs()
+            return out.collect(), out.schema
+        finally:
+            shutil.rmtree(tmp, ignore_errors=True)
+
+    rows, schema = memo(spark, "dd15_replay", sf_dir, replay)
+    return spark.createDataFrame(rows, schema)
 
 
 # dd15's oracle IS dd4's oracle — the maintained view contract.

@@ -26,6 +26,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from sfguide_getting_started_openflow_postgresql_cdc_spark.cache import memo
 from sfguide_getting_started_openflow_postgresql_cdc_spark.operators.registry import query
 from sfguide_getting_started_openflow_postgresql_cdc_spark.sources.loader import (
     load_table,
@@ -2352,12 +2353,11 @@ def mm9_image_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     runs ONCE (the class frame is persisted; bounded by distinct
     grids, not corpus size). Oracle verifies against the closed-form
     pixel definition with DuckDB's native hamming()."""
-    classes = (
+    classes = memo(spark, "mm9_classes", sf_dir, lambda: (
         _image_ahash_bits(spark, sf_dir)
         .groupBy("width", "height", "bits")
         .agg(F.min("doc_id").alias("can"), F.count("*").alias("n"))
-        .persist()
-    )
+    ))
     return _banded_hamming_pairs(classes, ["width", "height"], IMG_HAM_PCT_DEN)
 
 
@@ -2457,14 +2457,15 @@ def mm10_audio_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
                 )
             yield _pd.DataFrame(out)
 
-    docs = spread_small(load_table(spark, sf_dir, "documents"))
-    clips = synthesize_media_payloads(docs).filter(F.col("kind") == "wav")
-    fp = clips.select("doc_id", "payload").mapInPandas(
-        _sign_bits, schema="doc_id long, n_samples long, bits string"
-    )
-    classes = (
-        fp.groupBy("n_samples", "bits")
-        .agg(F.min("doc_id").alias("can"), F.count("*").alias("n"))
-        .persist()
-    )
+    def build():
+        docs = spread_small(load_table(spark, sf_dir, "documents"))
+        clips = synthesize_media_payloads(docs).filter(F.col("kind") == "wav")
+        fp = clips.select("doc_id", "payload").mapInPandas(
+            _sign_bits, schema="doc_id long, n_samples long, bits string"
+        )
+        return fp.groupBy("n_samples", "bits").agg(
+            F.min("doc_id").alias("can"), F.count("*").alias("n")
+        )
+
+    classes = memo(spark, "mm10_classes", sf_dir, build)
     return _banded_hamming_pairs(classes, ["n_samples"], IMG_HAM_PCT_DEN)

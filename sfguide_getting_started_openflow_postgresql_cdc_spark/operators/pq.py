@@ -40,6 +40,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from sfguide_getting_started_openflow_postgresql_cdc_spark.cache import memo
 from sfguide_getting_started_openflow_postgresql_cdc_spark.operators.registry import query
 from sfguide_getting_started_openflow_postgresql_cdc_spark.operators.similarity import (
     N_QUERIES,
@@ -227,15 +228,10 @@ def sim12_knn_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     cosine (the approximation only selects the shortlist)."""
     import math
 
-    # persist guarded by storageLevel (the ann_auto._resolve convention):
-    # the count, sample, encode, and rerank passes all read `emb`, and
-    # Spark's CacheManager dedups identical canonical plans, so repeated
-    # sim12 calls share ONE session-scoped cache entry rather than
-    # leaking one per call; a deployment evicts it with unpersist after
-    # materializing results (the _dd4_shingle_cache rationale).
-    emb = load_table(spark, sf_dir, "embeddings")
-    if not (emb.storageLevel.useMemory or emb.storageLevel.useDisk):
-        emb.persist()
+    # the count, sample, encode, and rerank passes all read `emb`: one
+    # persisted frame per (session, sf_dir) in the session memo registry
+    # (cache.py), freed by its one ``release``
+    emb = memo(spark, "sim12_emb", sf_dir, lambda: load_table(spark, sf_dir, "embeddings"))
     n_corpus = emb.count()  # one job; emb persisted for the later passes
     shortlist = max(PQ_SHORTLIST_MIN, math.ceil(n_corpus * PQ_SHORTLIST_FRAC))
     sample = [

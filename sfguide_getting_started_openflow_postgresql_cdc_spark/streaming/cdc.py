@@ -313,6 +313,8 @@ class ReplicaStore:
         state.link_untouched(
             state.version_dir(tdir, ptr["version"]), out, CDC_BUCKET, changed_buckets
         )
+        # never backwards: the version guard applies none of a late batch
+        watermark = max(int(ptr["watermark"]), watermark)
         self._publish(table, new_version, watermark, int(ptr["n_buckets"]))
 
     def journal_path(self, table: str) -> str:

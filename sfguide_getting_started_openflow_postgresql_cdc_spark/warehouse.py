@@ -27,6 +27,8 @@ from __future__ import annotations
 import time
 from dataclasses import dataclass, field
 
+from sfguide_getting_started_openflow_postgresql_cdc_spark.cache import release
+
 # size -> (shuffle partitions, files.maxPartitionBytes, broadcast threshold)
 # The 2x ladder mirrors warehouse size steps; MEDIUM matches the engine's
 # session defaults at local[32].
@@ -77,17 +79,9 @@ class Warehouse:
         return self.apply(spark)
 
     def suspend(self, spark) -> "Warehouse":
-        """Release compute-held session state (cached blocks).
-
-        Also drops the dedup shingle memo (operators/dedup.py), whose
-        entries hold references to persisted frames — clearCache alone
-        would unpersist the blocks while the memo kept serving the same
-        now-uncached DataFrames."""
-        from sfguide_getting_started_openflow_postgresql_cdc_spark.operators.dedup import (
-            clear_dedup_cache,
-        )
-
-        clear_dedup_cache()
+        """Release compute-held session state: the session memo registry
+        (``cache.release``) and every other cached block."""
+        release()
         spark.catalog.clearCache()
         self._suspended = True
         return self

@@ -180,24 +180,24 @@ def test_auto_registry_rows_registered():
 def test_ann_cache_bounded_across_distinct_corpora(spark):
     """r12 (VERDICT r11 item 5): repeated knn_graph/embedding_dup_pairs
     calls over DISTINCT corpora must not accumulate persisted augmented
-    frames — the LRU registry caps live entries and release_ann_cache
+    frames — the session memo registry caps live entries and its release
     drops them all. getRDDStorageInfo is the ground truth the verdict
     asked to watch."""
     import pyspark.sql.functions as F
 
-    from sfguide_getting_started_openflow_postgresql_cdc_spark.operators import (
-        ann_auto,
-    )
+    from sfguide_getting_started_openflow_postgresql_cdc_spark import cache
     from sfguide_getting_started_openflow_postgresql_cdc_spark.operators.ann_auto import (
         embedding_dup_pairs,
         knn_graph,
-        release_ann_cache,
     )
 
     def n_cached_rdds():
         return len(spark.sparkContext._jsc.sc().getRDDStorageInfo())
 
-    release_ann_cache()
+    def n_entries():
+        return sum(k[1] == "ann_augmented" for k in cache._ENTRIES)
+
+    cache.release()
     base = n_cached_rdds()
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     # 8 distinct corpora (offset vec_ids -> distinct plans/cache keys)
@@ -207,13 +207,13 @@ def test_ann_cache_bounded_across_distinct_corpora(spark):
             knn_graph(corpus, k=2).count()
         else:
             embedding_dup_pairs(corpus, threshold=0.5).count()
-    assert len(ann_auto._ANN_CACHE) <= ann_auto._ANN_CACHE_MAX
-    assert n_cached_rdds() - base <= ann_auto._ANN_CACHE_MAX
+    assert n_entries() <= cache.MAX_KEYS
+    assert n_cached_rdds() - base <= cache.MAX_KEYS
     # repeated calls over the SAME corpus reuse one entry (no growth)
-    before = len(ann_auto._ANN_CACHE)
+    before = n_entries()
     for _ in range(3):
         knn_graph(emb, k=2).count()
-    assert len(ann_auto._ANN_CACHE) <= max(before, 1) + 1
-    release_ann_cache()
-    assert len(ann_auto._ANN_CACHE) == 0
+    assert n_entries() <= max(before, 1) + 1
+    cache.release()
+    assert n_entries() == 0
     assert n_cached_rdds() <= base

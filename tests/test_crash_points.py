@@ -89,6 +89,10 @@ def _rows(df):
     return sorted(tuple(r) for r in df.collect())
 
 
+def _n_cached(spark):
+    return len(spark.sparkContext._jsc.sc().getRDDStorageInfo())
+
+
 # -- the operations ---------------------------------------------------------
 #
 # Each case: setup(spark, root) builds the starting state under root;
@@ -359,12 +363,15 @@ def test_every_crash_point_reads_old_or_new_state(spark, tmp_path, case):
     for k in range(1, len(log) + 1):
         root = str(tmp_path / f"k{k}")
         shutil.copytree(base, root)
+        cached_before = _n_cached(spark)
         with pytest.MonkeyPatch.context() as mp:
             crashed = Mutations(mp, crash_after=k)
             with pytest.raises(Crash):
                 case.run(spark, root)
-        spark.catalog.clearCache()  # a dead process holds no cache
         where = f"crash after mutation {k}/{len(log)} {log[k - 1]} (commit at {commit_at})"
+        # the failed operation released every frame it persisted
+        assert _n_cached(spark) <= cached_before, f"{where}: cached frames leaked"
+        spark.catalog.clearCache()  # a dead process holds no cache
         assert len(crashed.log) >= k, where
         got = case.snapshot(spark, root)
         if k < commit_at:

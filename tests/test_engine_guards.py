@@ -1,0 +1,64 @@
+"""Input guards of the maintained-state engines: the MinHash-LSH index
+refuses a batch that repeats a doc_id, and a late CDC batch never moves a
+replica's watermark backwards."""
+
+import os
+
+import pytest
+from pyspark.sql import types as T
+
+from sfguide_getting_started_openflow_postgresql_cdc_spark.operators.dedup_index import (
+    MinHashLshIndex,
+)
+from sfguide_getting_started_openflow_postgresql_cdc_spark.streaming.cdc import (
+    ENVELOPE,
+    CdcEngine,
+    ReplicaStore,
+)
+
+
+def test_index_ingest_rejects_a_repeated_doc_id(spark, tmp_path):
+    idx = MinHashLshIndex(spark, str(tmp_path / "idx"))
+    batch = spark.createDataFrame(
+        [
+            (1, "the quick brown fox jumps over the lazy dog"),
+            (2, "pack my box with five dozen liquor jugs"),
+            (1, "the quick brown fox jumps over the lazy dog"),
+        ],
+        "doc_id long, text string",
+    )
+    with pytest.raises(ValueError, match="repeat a doc_id"):
+        idx.ingest(batch)
+    assert idx._manifest()["version"] == 0  # nothing committed
+
+
+def test_late_batch_never_lowers_the_watermark(spark, tmp_path):
+    schema = T.StructType(
+        [
+            T.StructField("id", T.LongType(), False),
+            T.StructField("grp", T.StringType(), True),
+        ]
+    )
+    eng = CdcEngine(
+        ReplicaStore(os.path.join(tmp_path, "w")),
+        tables={"t": schema},
+        primary_keys={"t": "id"},
+        write_partitions=1,
+        n_buckets=2,
+    )
+    eng.bootstrap(
+        spark,
+        {"t": spark.createDataFrame([(1, "a"), (2, "b")], schema)},
+        "2024-01-01 00:00:00",
+        journal_snapshot=False,
+    )
+
+    def merge(seq, grp):
+        event = (seq, f"2024-01-01 00:0{seq}:00", "t", "U", {"id": "1", "grp": grp})
+        eng.merge_batch(spark, "t", spark.createDataFrame([event], ENVELOPE))
+
+    merge(5, "five")
+    merge(3, "three")  # late: lower seq than what the replica holds
+    assert eng.store.watermark("t") == 5
+    rows = {r["id"]: r["grp"] for r in eng.store.read(spark, "t").collect()}
+    assert rows == {1: "five", 2: "b"}

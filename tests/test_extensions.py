@@ -824,20 +824,23 @@ def test_ivf_hash_sample_beats_prefix_on_skew_ordered_corpus(spark):
 def test_dd4_shingle_cache_memoized_and_releasable(spark):
     """dd4 and its composers (dd7/px6) must share ONE persisted shingle
     set per (session, sf_dir) — no duplicate CacheManager entries — and
-    clear_dedup_cache must actually unpersist it."""
-    from sfguide_getting_started_openflow_postgresql_cdc_spark.operators import dedup
+    the registry's release must actually unpersist it."""
+    from sfguide_getting_started_openflow_postgresql_cdc_spark import cache
 
-    dedup.clear_dedup_cache()
+    def shingle_memos():
+        return [v for k, (v, _) in cache._ENTRIES.items() if k[1] == "dd4_shingles"]
+
+    cache.release()
     QUERIES["dd4_minhash_lsh_pairs"](spark, SF01).count()
-    assert len(dedup._DD4_CACHE) == 1
-    sh1, capped1 = next(iter(dedup._DD4_CACHE.values()))
+    assert len(shingle_memos()) == 1
+    sh1, capped1 = shingle_memos()[0]
     QUERIES["dd7_dedup_groups"](spark, SF01).count()  # re-invokes dd4
-    assert len(dedup._DD4_CACHE) == 1
-    sh2, capped2 = next(iter(dedup._DD4_CACHE.values()))
+    assert len(shingle_memos()) == 1
+    sh2, capped2 = shingle_memos()[0]
     assert sh1 is sh2 and capped1 is capped2
     assert sh1.storageLevel.useMemory or sh1.storageLevel.useDisk
-    dedup.clear_dedup_cache()
-    assert not dedup._DD4_CACHE
+    cache.release()
+    assert not shingle_memos()
     assert not (sh1.storageLevel.useMemory or sh1.storageLevel.useDisk)
 
 

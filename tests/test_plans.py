@@ -345,9 +345,10 @@ def test_dd4_standalone_plan_never_hits_pairs_memo(spark, sf_dir):
     dd4's own standalone run (and its bench timing) would silently
     become a cache lookup. The memo persists the 2-column projection,
     which dd4's 3-column plan does not contain."""
+    from sfguide_getting_started_openflow_postgresql_cdc_spark import cache
     from sfguide_getting_started_openflow_postgresql_cdc_spark.operators import dedup
 
-    dedup.clear_dedup_cache()
+    cache.release()
     try:
         dedup._dd4_pairs_cache(spark, sf_dir).count()  # memo warm
         plan = explain_str(QUERIES["dd4_minhash_lsh_pairs"](spark, sf_dir))
@@ -361,7 +362,7 @@ def test_dd4_standalone_plan_never_hits_pairs_memo(spark, sf_dir):
         # scan happens in intermediate jobs — its effect is covered by
         # the dd7/px6 timing drop and the oracle equality tests)
     finally:
-        dedup.clear_dedup_cache()
+        cache.release()
 
 
 def test_dedup_verify_is_sizes_join_free(spark, sf_dir):

@@ -59,6 +59,7 @@ def test_suspend_invalidates_dedup_memo(spark, restore_conf, sf_dir):
     """ADVICE r5: suspend() unpersists cached blocks — the dd4 shingle
     memo must not keep serving the now-uncached frames (either suspend
     clears it, or the memo self-heals on storageLevel); both hold."""
+    from sfguide_getting_started_openflow_postgresql_cdc_spark import cache
     from sfguide_getting_started_openflow_postgresql_cdc_spark.operators import dedup
 
     sh, capped = dedup._dd4_shingle_cache(spark, sf_dir)
@@ -70,8 +71,7 @@ def test_suspend_invalidates_dedup_memo(spark, restore_conf, sf_dir):
     wh.suspend(spark)
     assert not sh.storageLevel.useMemory
     assert not pairs.storageLevel.useMemory
-    assert not dedup._DD4_CACHE  # suspend released the memos themselves
-    assert not dedup._DD4_PAIRS_CACHE
+    assert not cache._ENTRIES  # suspend released the memos themselves
     wh.ensure_active(spark)
     sh2, capped2 = dedup._dd4_shingle_cache(spark, sf_dir)
     assert sh2.storageLevel.useMemory or sh2.storageLevel.useDisk
@@ -80,7 +80,7 @@ def test_suspend_invalidates_dedup_memo(spark, restore_conf, sf_dir):
     sh3, _ = dedup._dd4_shingle_cache(spark, sf_dir)
     assert sh3 is not sh2  # stale entry was detected and rebuilt
     assert sh3.storageLevel.useMemory or sh3.storageLevel.useDisk
-    dedup.clear_dedup_cache()
+    cache.release()
 
 
 def test_auto_resume_off_refuses(spark, restore_conf):

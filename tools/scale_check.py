@@ -126,13 +126,11 @@ def sf1_low_core_leg() -> None:
     """Time the expensive entries at sf1 only, on the session's core
     count (``local[$SPARK_GRAFT_CPUS]``) — callers run this twice (32
     and 8 cores) and compare. dd15's delta ingest rides along via the
-    bench helper; fresh dedup caches per query (CLAUDE.md rule)."""
+    bench helper; fresh session memos per query (CLAUDE.md rule)."""
     from sfguide_getting_started_openflow_postgresql_cdc_spark.operators import (
         QUERIES,
     )
-    from sfguide_getting_started_openflow_postgresql_cdc_spark.operators.dedup import (
-        clear_dedup_cache,
-    )
+    from sfguide_getting_started_openflow_postgresql_cdc_spark.cache import release
     from sfguide_getting_started_openflow_postgresql_cdc_spark.session import (
         get_spark,
     )
@@ -149,13 +147,13 @@ def sf1_low_core_leg() -> None:
     for name in LOW_CORE_NAMES:
         best = None
         for _ in range(2):
-            clear_dedup_cache()
+            release()
             t0 = time.perf_counter()
             QUERIES[name](spark, DST).count()
             el = time.perf_counter() - t0
             best = el if best is None else min(best, el)
         out[name] = round(best, 3)
-    clear_dedup_cache()
+    release()
     out["dd15_ingest_10pct_delta"] = round(
         bench._bench_incremental_dedup(spark, DST), 3
     )
@@ -181,9 +179,7 @@ def main() -> None:
     from sfguide_getting_started_openflow_postgresql_cdc_spark.operators import (
         QUERIES,
     )
-    from sfguide_getting_started_openflow_postgresql_cdc_spark.operators.dedup import (
-        clear_dedup_cache,
-    )
+    from sfguide_getting_started_openflow_postgresql_cdc_spark.cache import release
     from sfguide_getting_started_openflow_postgresql_cdc_spark.session import (
         get_spark,
     )
@@ -221,7 +217,7 @@ def main() -> None:
 
     result: dict[str, dict[str, float]] = {}
     for sf_tag, sf_dir in (("sf0.1", SRC), ("sf1", DST)):
-        clear_dedup_cache()  # each scale measures its own shingle pass
+        release()  # each scale measures its own shingle pass
         # warm-up on an unrelated query so JIT/codegen cost stays out
         QUERIES["tx4_fingerprint"](spark, sf_dir).collect()
         # r11 (VERDICT r10 task 3): record the DERIVED band geometry per
@@ -241,7 +237,7 @@ def main() -> None:
                 f"n={n_vec} bands={bands} bits={bits}"
             )
         for name in names:
-            clear_dedup_cache()
+            release()
             t0 = time.perf_counter()
             n = QUERIES[name](spark, sf_dir).count()
             result.setdefault(name, {})[sf_tag] = round(
@@ -254,7 +250,7 @@ def main() -> None:
         )
         # r8: maintained-index delta ingest at 10x corpus (fresh index +
         # fresh shingle pass per scale — CLAUDE.md cache rule)
-        clear_dedup_cache()
+        release()
         t_ing = bench._bench_incremental_dedup(spark, sf_dir)
         result.setdefault("dd15_ingest_10pct_delta", {})[sf_tag] = round(
             t_ing, 3
@@ -264,7 +260,7 @@ def main() -> None:
         # contract (at sf0.1 the per-job scheduling floor dominates the
         # delta side, exactly like dd15; the rescan grows with the
         # corpus while the delta ingest tracks the dump)
-        clear_dedup_cache()
+        release()
         t_mi, t_mr = bench._bench_incremental_manifest(spark, sf_dir)
         result.setdefault("manifest_ingest_10pct_delta", {})[sf_tag] = round(
             t_mi, 3
@@ -276,7 +272,7 @@ def main() -> None:
         # gap is per-commit overhead (corpus-independent), so the
         # batched ratio should track the serial one while staying ~2.5x
         # cheaper in absolute terms
-        clear_dedup_cache()
+        release()
         t_cs, t_cb = bench._bench_manifest_catchup(spark, sf_dir)
         result.setdefault("manifest_catchup_3dumps_serial", {})[sf_tag] = (
             round(t_cs, 3)
