@@ -172,9 +172,9 @@ def _bench_incremental_dedup(spark, sf_dir: str) -> float:
         idx_dir = tempfile.mkdtemp(prefix=f"dd15_bench_{i}_")
         try:
             idx = MinHashLshIndex(spark, idx_dir)
-            idx.ingest(base, collect_metrics=False)
+            idx.ingest(base)
             t0 = time.perf_counter()
-            idx.ingest(delta, collect_metrics=False)
+            idx.ingest(delta)
             elapsed.append(time.perf_counter() - t0)
         finally:
             shutil.rmtree(idx_dir, ignore_errors=True)
@@ -219,9 +219,9 @@ def _bench_incremental_manifest(spark, sf_dir: str) -> tuple[float, float]:
         try:
             mf = IncrementalCurationManifest(spark, state_dir)
             mf.initialize(bench_docs)
-            mf.ingest(base, collect_metrics=False)
+            mf.ingest(base)
             t0 = time.perf_counter()
-            mf.ingest(delta, collect_metrics=False)
+            mf.ingest(delta)
             ingest_s.append(time.perf_counter() - t0)
         finally:
             shutil.rmtree(state_dir, ignore_errors=True)
@@ -281,7 +281,7 @@ def _bench_manifest_catchup(
     try:
         mf = IncrementalCurationManifest(spark, setup_dir)
         mf.initialize(bench_docs)
-        mf.ingest(base, collect_metrics=False)
+        mf.ingest(base)
         serial_t, batched_t = [], []
         for _ in range(2):  # min-of-2 (fresh state each pass — mutates)
             dirs = (serial_dir, batched_dir) if include_serial else (batched_dir,)
@@ -292,11 +292,11 @@ def _bench_manifest_catchup(
                 t0 = time.perf_counter()
                 ms = IncrementalCurationManifest(spark, serial_dir)
                 for d in dumps:
-                    ms.ingest(d, collect_metrics=False)
+                    ms.ingest(d)
                 serial_t.append(time.perf_counter() - t0)
             t0 = time.perf_counter()
             mb = IncrementalCurationManifest(spark, batched_dir)
-            out = mb.ingest_many(dumps, collect_metrics=False)
+            out = mb.ingest_many(dumps)
             batched_t.append(time.perf_counter() - t0)
             assert out["n_dumps_applied"] == 3, out
             # cheap state-equality guard (full equality is property-tested)

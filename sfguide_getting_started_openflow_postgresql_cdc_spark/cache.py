@@ -1,7 +1,8 @@
 """Session memo registry: the one place intermediate results are kept in
 memory for reuse across the queries of a Spark session — the dd4 shingle
 sets and verified pairs, the dd15/px16 replay results, the adaptive-ANN
-augmented frame, sim12's embeddings and the mm9/mm10 class frames.
+augmented frame, sim12's embeddings, the mm9/mm10 class frames and the
+parquet footer schemas ``load_table`` reads.
 
 The rules, in one place:
 

@@ -94,7 +94,8 @@ file counts); a cluster deployment raises ``n_buckets`` to thousands,
 exactly like the replica's ``_CDC_BUCKET`` layout. doc_ids must be
 unique across ingests and never re-ingested after retraction (upstream
 exact-dedup dd1 / CDC keys guarantee this in the pipeline; ingest
-raises on a tombstoned doc_id and on a doc_id repeated within a batch).
+raises on a tombstoned doc_id, on a doc_id repeated within a batch and on
+a doc_id an earlier ingest already holds).
 """
 
 from __future__ import annotations
@@ -313,6 +314,16 @@ class MinHashLshIndex:
         for name in ("df", "hot", "pairs"):
             state.retire(os.path.join(self.dir, name), int(tables.get(name, 0)), keep=2)
 
+    def _bucket_rows(self, cands: DataFrame) -> DataFrame:
+        """One ("a", bucket of doc_a) and one ("b", bucket of doc_b) row
+        per candidate: grouped by (t, b), the buckets are the verify-side
+        bucket sets and the "a" row counts sum to the candidate count."""
+        return cands.select(
+            F.lit("a").alias("t"), self._doc_bucket("doc_a").alias("b")
+        ).unionByName(cands.select(
+            F.lit("b").alias("t"), self._doc_bucket("doc_b").alias("b")
+        ))
+
     # -- shared read helpers --------------------------------------------
 
     def _tombstones(self) -> DataFrame | None:
@@ -418,7 +429,7 @@ class MinHashLshIndex:
         every document ingested so far and not retracted."""
         return self._cow_read("pairs", "doc_a long, doc_b long, jaccard double")
 
-    def ingest(self, docs: DataFrame, collect_metrics: bool = True) -> dict:
+    def ingest(self, docs: DataFrame) -> dict:
         """Append a batch of (doc_id, text) documents; update bands, df
         counts, the hot set, the candidate log, and the verified pairs
         view. All reads and writes are delta- or bucket-bounded except
@@ -439,24 +450,26 @@ class MinHashLshIndex:
                         f"{n_bad} doc_ids were previously retracted; retracted ids "
                         "must not be re-ingested (tombstones filter them out)"
                     )
+            # one signature aggregate, its band rows generated per doc: a
+            # union of per-band selects would plan one aggregate (and one
+            # exchange) per band, since each band prunes the others' columns
             sig = batch_sh.groupBy("doc_id").agg(*_minhash_sig_cols())
-            batch_bands = None
-            for name, expr in _band_exprs():
-                part = sig.select(
-                    "doc_id", F.lit(name).alias("band_id"), expr.alias("sig")
-                )
-                batch_bands = (
-                    part if batch_bands is None else batch_bands.unionByName(part)
-                )
-            batch_bands = batch_bands.persist()
+            batch_bands = sig.select(
+                "doc_id",
+                F.inline(F.array(*[
+                    F.struct(F.lit(name).alias("band_id"), expr.alias("sig"))
+                    for name, expr in _band_exprs()
+                ])),
+            ).persist()
 
             # stored-band read pruned to the batch's band-signature buckets.
-            # ONE job derives every batch-side bucket set (bands + df) AND
-            # the batch doc and distinct-id counts (manifest bookkeeping and
-            # the unique-id check — counting `docs` separately would re-run
-            # its whole input plan as its own job): the per-job scheduling
-            # floor dominates at micro-batch scale, so fusing the bounded
-            # collects matters more than row counts. The distinct ids are a
+            # ONE job derives every batch-side bucket set (bands + df +
+            # docs) AND the batch doc and distinct-id counts (manifest
+            # bookkeeping and the unique-id check — counting `docs`
+            # separately would re-run its whole input plan as its own
+            # job): the per-job scheduling floor dominates at micro-batch
+            # scale, so fusing the bounded collects matters more than row
+            # counts. The distinct ids are a
             # collect_set inside the same global aggregate: countDistinct
             # would plan one more exchange, and AQE runs it as one more job
             tagged = (
@@ -468,6 +481,12 @@ class MinHashLshIndex:
                     batch_sh.select(
                         F.lit("df").alias("t"),
                         self._shingle_bucket().cast("long").alias("b"),
+                    )
+                )
+                .unionByName(
+                    batch_sh.select(
+                        F.lit("doc").alias("t"),
+                        self._doc_bucket().cast("long").alias("b"),
                     )
                 )
                 .distinct()
@@ -544,25 +563,36 @@ class MinHashLshIndex:
             crossing = merged.filter(
                 (F.col("old_df") <= self.cap) & (F.col("new_df") > self.cap)
             ).select("shingle")
+            # doc_ids an earlier ingest already holds: the batch's ids
+            # against the stored shingle log pruned to the batch's doc
+            # buckets, grouped by id inside the probe's one aggregate —
+            # only an id seen on both sides survives its filter, so the
+            # check collects nothing in the common case and adds no job
+            doc_buckets = sorted(int(r["b"]) for r in tagged if r["t"] == "doc")
+            held_ids = (
+                batch_sh.select(F.lit("id").alias("t"), F.col("doc_id").alias("b"),
+                                F.lit(0).alias("stored"))
+                .unionByName(
+                    self._read_append(
+                        "shingles", "doc_id long, shingle string", doc_buckets
+                    ).select(F.lit("id").alias("t"), F.col("doc_id").alias("b"),
+                             F.lit(1).alias("stored"))
+                )
+            )
 
             def _probe():
+                # one grouped job: the crossing count ("x"), the verify-side
+                # doc buckets of the new candidates ("a"/"b", each bucket's
+                # row count summing to the candidate count) and the held ids
                 return (
-                    crossing.agg(F.count("*").alias("b")).select(
-                        F.lit("x").alias("t"), F.col("b").cast("long")
-                    )
-                    .unionByName(
-                        new_cands.select(
-                            F.lit("a").alias("t"),
-                            self._doc_bucket("doc_a").alias("b"),
-                        )
-                        .unionByName(
-                            new_cands.select(
-                                F.lit("b").alias("t"),
-                                self._doc_bucket("doc_b").alias("b"),
-                            )
-                        )
-                        .distinct()
-                    )
+                    crossing.select(F.lit("x").alias("t"), F.lit(0).cast("long").alias("b"))
+                    .unionByName(self._bucket_rows(new_cands))
+                    .withColumn("stored", F.lit(0))
+                    .unionByName(held_ids)
+                    .groupBy("t", "b")
+                    .agg(F.count("*").alias("n"),
+                         (F.max("stored") > F.min("stored")).alias("both"))
+                    .filter((F.col("t") != "id") | F.col("both"))
                     .collect()
                 )
 
@@ -589,7 +619,13 @@ class MinHashLshIndex:
                     ),
                 ]
             )[0]
-            n_crossing = next(int(r["b"]) for r in cross_and_vk if r["t"] == "x")
+            held = sorted(int(r["b"]) for r in cross_and_vk if r["t"] == "id")
+            if held:
+                raise ValueError(
+                    f"{len(held)} doc_ids were already ingested by an earlier "
+                    f"batch (e.g. {held[:5]}); doc_ids must be unique across ingests"
+                )
+            n_crossing = sum(r["n"] for r in cross_and_vk if r["t"] == "x")
 
             hot_old = self._cow_read("hot", "shingle string")
             hot_new = (
@@ -639,27 +675,26 @@ class MinHashLshIndex:
                 reverify = None
                 verify_set = new_cands  # already distinct + persisted
 
+            n_new = sum(r["n"] for r in cross_and_vk if r["t"] == "a")
             if n_crossing:
                 # rare path: re-derive the bucket sets over the WIDENED
-                # verify_set (new candidates + re-verifies) — its own job
+                # verify_set (new candidates + re-verifies) — its own job,
+                # which also counts the re-verified candidates ("r")
                 vk = (
-                    verify_set.select(
-                        F.lit("a").alias("t"), self._doc_bucket("doc_a").alias("b")
-                    )
-                    .unionByName(
-                        verify_set.select(
-                            F.lit("b").alias("t"),
-                            self._doc_bucket("doc_b").alias("b"),
-                        )
-                    )
-                    .distinct()
+                    self._bucket_rows(verify_set)
+                    .unionByName(reverify.select(
+                        F.lit("r").alias("t"), F.lit(0).cast("long").alias("b")
+                    ))
+                    .groupBy("t", "b")
+                    .agg(F.count("*").alias("n"))
                     .collect()
                 )
             else:
                 # common path: the fused job above already produced them
-                vk = [r for r in cross_and_vk if r["t"] != "x"]
+                vk = cross_and_vk
+            n_reverify = sum(r["n"] for r in vk if r["t"] == "r")
             pair_buckets = sorted(r["b"] for r in vk if r["t"] == "a")
-            invol_buckets = sorted({r["b"] for r in vk})
+            invol_buckets = sorted({r["b"] for r in vk if r["t"] in ("a", "b")})
 
             verified, invol_sh = self._verified_pairs(
                 verify_set,
@@ -685,18 +720,15 @@ class MinHashLshIndex:
             )
             new_pairs = kept.unionByName(verified)
 
-            # bookkeeping counts (candidate-bounded frames only; skippable —
-            # each is an extra job, and a bench-timed ingest wants the floor)
-            metrics = {"version": new_version, "batch_docs": n_batch_docs}
-            if collect_metrics:
-                metrics.update(
-                    new_candidates=new_cands.count(),
-                    reverified_candidates=reverify.count()
-                    if reverify is not None
-                    else 0,
-                    touched_df_buckets=len(df_buckets),
-                    touched_pair_buckets=len(pair_buckets),
-                )
+            # bookkeeping counts, all read off the probe/bucket jobs above
+            metrics = {
+                "version": new_version,
+                "batch_docs": n_batch_docs,
+                "new_candidates": n_new,
+                "reverified_candidates": n_reverify,
+                "touched_df_buckets": len(df_buckets),
+                "touched_pair_buckets": len(pair_buckets),
+            }
 
             # commit: write the new COW versions FIRST (their plans read the
             # snapshot-pinned stored state), then append the immutable logs,
@@ -772,7 +804,7 @@ class MinHashLshIndex:
         self._retire_cow_versions()
         return metrics
 
-    def retract(self, doc_ids, collect_metrics: bool = True) -> dict:
+    def retract(self, doc_ids) -> dict:
         """Remove documents from the index: tombstone their ids, shrink
         their shingles' df, maintain the hot set across DOWN-crossings,
         drop their pairs, and re-verify exactly the stored candidates
@@ -899,20 +931,25 @@ class MinHashLshIndex:
                 .distinct()
                 .persist()
             )
-            touched_keys = dropped.select("doc_a")
+            # touched pair buckets and, per bucket, how many dropped ("d")
+            # and re-verified ("r") keys fall in it — one job for both
+            touched_keys = dropped.select(F.lit("d").alias("t"), "doc_a")
             if reverify is not None:
-                touched_keys = touched_keys.unionByName(reverify.select("doc_a"))
-            pair_buckets = self._bucket_set(touched_keys, self._doc_bucket("doc_a"))
-
-            if collect_metrics:
-                metrics.update(
-                    dropped_pairs=dropped.count(),
-                    reverified_candidates=reverify.count()
-                    if reverify is not None
-                    else 0,
-                    touched_df_buckets=len(df_buckets),
-                    touched_pair_buckets=len(pair_buckets),
+                touched_keys = touched_keys.unionByName(
+                    reverify.select(F.lit("r").alias("t"), "doc_a")
                 )
+            keys = (
+                touched_keys.groupBy("t", self._doc_bucket("doc_a").alias("b"))
+                .agg(F.count("*").alias("n"))
+                .collect()
+            )
+            pair_buckets = sorted({r["b"] for r in keys})
+            metrics.update(
+                dropped_pairs=sum(r["n"] for r in keys if r["t"] == "d"),
+                reverified_candidates=sum(r["n"] for r in keys if r["t"] == "r"),
+                touched_df_buckets=len(df_buckets),
+                touched_pair_buckets=len(pair_buckets),
+            )
 
             tables = dict(man.get("tables", {}))
             self._cow_write(

@@ -14,6 +14,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from sfguide_getting_started_openflow_postgresql_cdc_spark.cache import memo
 from sfguide_getting_started_openflow_postgresql_cdc_spark.schemas import TESTDATA_TABLES
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -36,6 +37,9 @@ def spread_small(df: DataFrame) -> DataFrame:
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Read one testdata table. Plain parquet read — schema comes from the
     file footer; filters/projections applied later push down into this scan.
+    Inferring that schema is a Spark job of its own, so it is memoised per
+    session (``cache.memo``), keyed by the path and the file's size and
+    mtime: a rewritten file is read afresh.
 
     ``events.ts`` is parquet TIMESTAMP(NANOS), which the vectorized Spark
     reader rejects; read it as raw nanos (legacy conf) and truncate to
@@ -50,7 +54,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     path = os.path.join(sf_dir, f"{name}.parquet")
     if name == "events":
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(path)
+        df = _read_parquet(spark, path)
         if dict(df.dtypes).get("ts") == "bigint":
             # -> timestamp_ntz: every other testdata timestamp reads as NTZ
             # (and the reference's warehouse type is TIMESTAMP_NTZ); NTZ
@@ -59,7 +63,18 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
                 "ts", F.timestamp_micros(F.expr("ts div 1000")).cast("timestamp_ntz")
             )
         return df
-    return spark.read.parquet(path)
+    return _read_parquet(spark, path)
+
+
+def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    st = os.stat(path)
+    # one artifact per path: the memo's per-artifact bound then counts
+    # versions of one file, and no table evicts another's schema
+    schema = memo(
+        spark, f"footer_schema:{path}", (st.st_size, st.st_mtime_ns),
+        lambda: spark.read.parquet(path).schema,
+    )
+    return spark.read.schema(schema).parquet(path)
 
 
 def load_jdbc_table(

@@ -52,7 +52,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
@@ -188,12 +188,7 @@ class IncrementalCurationManifest:
             }
         )
 
-    def ingest(
-        self,
-        docs: DataFrame,
-        collect_metrics: bool = True,
-        on_replay: str = "raise",
-    ) -> dict:
+    def ingest(self, docs: DataFrame, on_replay: str = "raise") -> dict:
         """Append one dump of (doc_id, text, lang, source, ...) rows.
         Dumps must arrive in doc_id order (min id strictly above every
         previously ingested id) — that is what keeps keep-first dedup
@@ -288,7 +283,6 @@ class IncrementalCurationManifest:
                 n_docs=int(bounds["n"]),
                 hi=int(bounds["hi"]),
                 new_ranges=[[int(bounds["lo"]), int(bounds["hi"])]],
-                collect_metrics=collect_metrics,
                 fpd=fpd,
                 fp_buckets=fp_buckets,
             )
@@ -298,12 +292,7 @@ class IncrementalCurationManifest:
             fpd.unpersist()
             dump.unpersist()
 
-    def ingest_many(
-        self,
-        dumps: list,
-        collect_metrics: bool = True,
-        on_replay: str = "raise",
-    ) -> dict:
+    def ingest_many(self, dumps: list, on_replay: str = "raise") -> dict:
         """Batched catch-up (r10, VERDICT r9 task 4): apply k
         consecutive dumps in ONE manifest version commit — one
         shard-packing continuation, one stats merge, one fingerprint
@@ -452,7 +441,6 @@ class IncrementalCurationManifest:
                 n_docs=sum(n for _, n, _ in infos),
                 hi=infos[-1][0][1],
                 new_ranges=[r for r, _, _ in infos],
-                collect_metrics=collect_metrics,
                 fpd=fpd_arg,
                 fp_buckets=buckets_arg,
             )
@@ -489,7 +477,6 @@ class IncrementalCurationManifest:
         n_docs: int,
         hi: int,
         new_ranges: list,
-        collect_metrics: bool,
         fpd: DataFrame | None = None,
         fp_buckets: list | None = None,
     ) -> dict:
@@ -596,77 +583,66 @@ class IncrementalCurationManifest:
                     F.expr(f"(_off + _rsum - n_tokens) DIV {self.budget}"),
                 )
             )
-            delta_manifest = sharded.groupBy("split", "lang", "shard_id").agg(
-                F.count("*").alias("n_docs"),
-                F.sum("n_tokens").cast("long").alias("shard_tokens"),
-            )
 
-            # 5. additive merges (the IncrementalGroupSum rule) + logs
-            manifest = self._read(
-                "manifest",
-                "split string, lang string, shard_id long, n_docs long, "
-                "shard_tokens long",
-            )
-            merged_manifest = (
-                manifest.unionByName(delta_manifest)
-                .groupBy("split", "lang", "shard_id")
-                .agg(
-                    F.sum("n_docs").cast("long").alias("n_docs"),
-                    F.sum("shard_tokens").cast("long").alias("shard_tokens"),
+            # 5. additive merges (the IncrementalGroupSum rule) + logs: the
+            # stored rows and the dump's rows (one doc each) union under
+            # ONE sum per group — summing a per-group delta first would
+            # cost each merge a second exchange
+            def _merge(stored: DataFrame, rows: DataFrame, keys: list,
+                       sums: dict) -> DataFrame:
+                """Group sums of ``stored`` plus the dump ``rows``;
+                ``sums`` maps each summed column to its value per row.
+                The dump's rows lead the union so the write runs in their
+                session: a streaming micro-batch brings its own, and an
+                ``Observation`` on them reports only to that session."""
+                delta = rows.select(
+                    *keys, *[v.cast("long").alias(k) for k, v in sums.items()]
                 )
-            )
-            delta_totals = corpus.groupBy("split", "lang").agg(
-                F.sum("n_tokens").cast("long").alias("cum_tokens")
-            )
-            merged_totals = (
-                totals.unionByName(delta_totals)
-                .groupBy("split", "lang")
-                .agg(F.sum("cum_tokens").cast("long").alias("cum_tokens"))
-            )
-
-            def _stat_merge(name: str, key: str) -> DataFrame:
-                stored_s = self._read(
-                    name, f"{key} string, n_docs long, n_tokens long"
-                )
-                delta = corpus.groupBy(key).agg(
-                    F.count("*").cast("long").alias("n_docs"),
-                    F.sum("n_tokens").cast("long").alias("n_tokens"),
-                )
-                return (
-                    stored_s.unionByName(delta)
-                    .groupBy(key)
-                    .agg(
-                        F.sum("n_docs").cast("long").alias("n_docs"),
-                        F.sum("n_tokens").cast("long").alias("n_tokens"),
-                    )
+                return delta.unionByName(stored).groupBy(*keys).agg(
+                    *[F.sum(k).cast("long").alias(k) for k in sums]
                 )
 
-            metrics = {
-                "version": new_version,
-                "ingested_docs": n_docs,
-                "touched_fp_buckets": len(buckets),
-            }
-            # NOTE (r12, tried and REVERTED): materializing the corpus
-            # cache with a count() before the write wave removes the
-            # cache race (concurrent jobs hitting an uncached partition
-            # each compute it — BlockManager stores one result but does
-            # not block the racers: the dedup->decontam->token pipeline
-            # runs up to 4x inside the wave). Measured at sf0.1 the wave
-            # dropped 1.21 -> 0.68 s but TOTAL rose 2.40 -> 2.73 s: the
-            # duplicated compute runs on otherwise-idle cores while the
-            # dedicated count job is pure serial wall. Keep the race.
-            if collect_metrics:
-                metrics["kept_docs"] = corpus.count()
-            stats_lang = _stat_merge("stats_lang", "lang")
-            stats_source = _stat_merge("stats_source", "source")
+            one = F.lit(1)
+            merged_manifest = _merge(
+                self._read(
+                    "manifest",
+                    "split string, lang string, shard_id long, n_docs long, "
+                    "shard_tokens long",
+                ),
+                sharded, ["split", "lang", "shard_id"],
+                {"n_docs": one, "shard_tokens": F.col("n_tokens")},
+            )
+            merged_totals = _merge(
+                totals, corpus, ["split", "lang"], {"cum_tokens": F.col("n_tokens")}
+            )
+
+            def _stat_merge(name: str, key: str, rows: DataFrame) -> DataFrame:
+                return _merge(
+                    self._read(name, f"{key} string, n_docs long, n_tokens long"),
+                    rows, [key], {"n_docs": one, "n_tokens": F.col("n_tokens")},
+                )
+
+            # Two write waves. The first's stats_lang write reads every
+            # corpus row once, so it materializes the corpus cache and
+            # observes the kept-doc count (no job of its own); the other
+            # three aggregate writes then read the cache. In one wave of
+            # all five, each concurrent write computes the uncached
+            # dedup->decontam->token pipeline itself (BlockManager stores
+            # one result but does not block the racers): 31 Spark jobs
+            # per ~150-document dump against 28, for a time inside the
+            # noise (2.0-2.2 s either way, 4 vCPUs). r12 measured the
+            # older alternative, a dedicated count() before one wave, at
+            # sf0.1: the wave fell 1.21 -> 0.68 s but the total rose
+            # 2.40 -> 2.73 s.
+            kept_docs = Observation("kept_docs")
+            stats_lang = _stat_merge(
+                "stats_lang", "lang",
+                corpus.observe(kept_docs, F.count(F.lit(1)).alias("n")),
+            )
+            stats_source = _stat_merge("stats_source", "source", corpus)
             state.run_concurrently(
                 [
-                    lambda: self._write("manifest", merged_manifest, new_version),
-                    lambda: self._write("totals", merged_totals, new_version),
                     lambda: self._write("stats_lang", stats_lang, new_version),
-                    lambda: self._write(
-                        "stats_source", stats_source, new_version
-                    ),
                     # fingerprints of every doc that survived FP-dedup
                     # (incl. contaminated ones: they still block later
                     # duplicates, exactly like px11's kept-first window
@@ -676,6 +652,21 @@ class IncrementalCurationManifest:
                     ),
                 ]
             )
+            state.run_concurrently(
+                [
+                    lambda: self._write("manifest", merged_manifest, new_version),
+                    lambda: self._write("totals", merged_totals, new_version),
+                    lambda: self._write(
+                        "stats_source", stats_source, new_version
+                    ),
+                ]
+            )
+            metrics = {
+                "version": new_version,
+                "ingested_docs": n_docs,
+                "touched_fp_buckets": len(buckets),
+                "kept_docs": kept_docs.get["n"],
+            }
             tables = dict(meta.get("tables", {}))
             tables.update(
                 manifest=new_version,
@@ -739,7 +730,7 @@ def ingest_or_skip(mf: IncrementalCurationManifest, dump: DataFrame) -> dict:
     ordering inverted by preserved timestamps or writer clock skew)
     RAISES loudly: silently skipping it would permanently lose its
     documents. Thin delegation — ``ingest`` owns the bounds logic."""
-    out = mf.ingest(dump, collect_metrics=False, on_replay="skip")
+    out = mf.ingest(dump, on_replay="skip")
     out.setdefault("skipped", False)
     return out
 
@@ -765,7 +756,7 @@ def ingest_batch_or_skip(
         batch.filter(F.col("_src_file") == f).drop("_src_file")
         for f in files
     ]
-    out = mf.ingest_many(dumps, collect_metrics=False, on_replay="skip")
+    out = mf.ingest_many(dumps, on_replay="skip")
     out.setdefault("skipped", False)
     return out
 

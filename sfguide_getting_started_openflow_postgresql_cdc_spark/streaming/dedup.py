@@ -314,9 +314,7 @@ def neardup_filter_batch_indexed(
             dropped = hit_store.unionByName(hit_batch).distinct()
             accepted = batch.join(dropped, "doc_id", "left_anti")
             if accepted.limit(1).count():
-                index.ingest(
-                    accepted.select("doc_id", "text"), collect_metrics=False
-                )
+                index.ingest(accepted.select("doc_id", "text"))
             sigs.unpersist()
         applied[run_key] = max(applied.get(run_key, -1), epoch_id)
         state.commit_json(epochs_path, applied)

@@ -14,7 +14,13 @@ os.environ.setdefault("SPARK_GRAFT_CPUS", "8")
 def spark():
     from sfguide_getting_started_openflow_postgresql_cdc_spark.session import get_spark
 
-    s = get_spark(app_name="tests", shuffle_partitions=8)
+    # call-site capture is off by default (session.py); on here so a
+    # failing test's error names the DataFrame call that built the plan
+    s = get_spark(
+        app_name="tests",
+        shuffle_partitions=8,
+        extra_conf={"spark.python.sql.dataFrameDebugging.enabled": "true"},
+    )
     yield s
 
 

@@ -1,6 +1,7 @@
 """Input guards of the maintained-state engines: the MinHash-LSH index
-refuses a batch that repeats a doc_id, and a late CDC batch never moves a
-replica's watermark backwards."""
+refuses a batch that repeats a doc_id or names one an earlier ingest
+already holds, and a late CDC batch never moves a replica's watermark
+backwards."""
 
 import os
 
@@ -30,6 +31,26 @@ def test_index_ingest_rejects_a_repeated_doc_id(spark, tmp_path):
     with pytest.raises(ValueError, match="repeat a doc_id"):
         idx.ingest(batch)
     assert idx._manifest()["version"] == 0  # nothing committed
+
+
+def test_index_ingest_rejects_a_doc_id_an_earlier_ingest_holds(spark, tmp_path):
+    idx = MinHashLshIndex(spark, str(tmp_path / "idx"))
+    text = "the quick brown fox jumps over the lazy dog"
+    idx.ingest(
+        spark.createDataFrame(
+            [(1, text), (2, text + " dup")], "doc_id long, text string"
+        )
+    )
+    again = spark.createDataFrame(
+        [(1, text), (3, "pack my box with five dozen liquor jugs")],
+        "doc_id long, text string",
+    )
+    with pytest.raises(ValueError, match=r"already ingested .*\[1\]"):
+        idx.ingest(again)
+    man = idx._manifest()
+    assert (man["version"], man["n_docs"]) == (1, 2)  # nothing committed
+    pairs = [tuple(r) for r in idx.pairs().select("doc_a", "doc_b").collect()]
+    assert pairs == [(1, 2)]
 
 
 def test_late_batch_never_lowers_the_watermark(spark, tmp_path):

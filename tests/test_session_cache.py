@@ -156,3 +156,33 @@ def test_no_memo_registry_outside_the_cache_module():
         and (names := _registries(path.read_text()))
     }
     assert not offenders, offenders
+
+
+def test_load_table_memoises_the_footer_schema(spark, tmp_path):
+    """Schema inference is a Spark job of its own: a second load_table of
+    the same file starts none, and a rewritten file is read afresh."""
+    from sfguide_getting_started_openflow_postgresql_cdc_spark.sources.loader import (
+        load_table,
+    )
+
+    sc = spark.sparkContext
+    path = str(tmp_path / "t.parquet")
+    spark.createDataFrame([(1, "a")], "k long, v string").coalesce(1).write.parquet(path)
+
+    def jobs(group):
+        sc.setJobGroup(group, group)
+        try:
+            df = load_table(spark, str(tmp_path), "t")
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return df, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    df, n_first = jobs("footer-1")
+    _, n_again = jobs("footer-2")
+    assert (n_first, n_again) == (1, 0)
+    assert df.collect() == [(1, "a")]
+    spark.createDataFrame([(2, "b", 3.0)], "k long, v string, w double").coalesce(
+        1
+    ).write.mode("overwrite").parquet(path)
+    df, _ = jobs("footer-3")
+    assert df.columns == ["k", "v", "w"]
