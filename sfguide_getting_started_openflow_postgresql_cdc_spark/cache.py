@@ -1,8 +1,9 @@
 """Session memo registry: the one place intermediate results are kept in
 memory for reuse across the queries of a Spark session — the dd4 shingle
 sets and verified pairs, the dd15/px16 replay results, the adaptive-ANN
-augmented frame, sim12's embeddings, the mm9/mm10 class frames and the
-parquet footer schemas ``load_table`` reads.
+augmented frame, sim12's embeddings, the mm9/mm10 class frames, the
+parquet footer schemas ``load_table`` reads and the replica frames of
+the ``Engine``'s query surface.
 
 The rules, in one place:
 
@@ -11,7 +12,10 @@ The rules, in one place:
 - **Persist.** On a miss every DataFrame in the returned value (a frame
   or a tuple) is persisted in the order returned, so a later frame built
   on an earlier one caches a plan that reads the earlier one's cache.
-  Any other value (collected rows) is kept as it is.
+  Any other value (collected rows) is kept as it is, and so are the
+  frames of a ``persist=False`` memo: plans whose building, not whose
+  data, is worth keeping (a committed replica version's read, whose file
+  listing never changes).
 - **Ownership.** The registry unpersists only the frames it persisted
   itself; a frame the caller had already cached is returned but never
   unpersisted.
@@ -51,7 +55,13 @@ def _unpersist(frames: list) -> None:
         df.unpersist()
 
 
-def memo(spark: SparkSession, artifact: str, key: Any, build: Callable[[], Any]) -> Any:
+def memo(
+    spark: SparkSession,
+    artifact: str,
+    key: Any,
+    build: Callable[[], Any],
+    persist: bool = True,
+) -> Any:
     """The value ``build()`` returns for ``key``, built once per session
     and kept until evicted or released (module docstring)."""
     k = (spark.sparkContext.applicationId, artifact, key)
@@ -65,7 +75,7 @@ def memo(spark: SparkSession, artifact: str, key: Any, build: Callable[[], Any])
     value = build()
     frames = value if isinstance(value, tuple) else (value,)
     owned = []
-    for df in frames:
+    for df in frames if persist else ():
         if isinstance(df, DataFrame) and not _cached(df):
             owned.append(df.persist())
     _ENTRIES[k] = (value, owned)

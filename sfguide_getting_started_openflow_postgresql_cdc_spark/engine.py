@@ -18,10 +18,13 @@ Reference workflow -> engine method map:
 from __future__ import annotations
 
 import datetime as dt
+from collections.abc import Mapping
+from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession
 
 from sfguide_getting_started_openflow_postgresql_cdc_spark import schemas
+from sfguide_getting_started_openflow_postgresql_cdc_spark.cache import memo
 from sfguide_getting_started_openflow_postgresql_cdc_spark.semantic.analytics import (
     ANALYTICS,
 )
@@ -101,23 +104,41 @@ class Engine:
         self.cdc.apply_envelope_batch(self.spark, batch)
 
     # -- query surfaces ------------------------------------------------------
-    def replicas(self, include_deleted: bool = False) -> dict[str, DataFrame]:
+    def replicas(self, include_deleted: bool = False) -> Mapping[str, DataFrame]:
         """Current replica DataFrames; by default the semantic-layer view
-        (soft-deleted rows hidden, internal columns stripped)."""
+        (soft-deleted rows hidden, internal columns stripped). Read-only
+        and lazy: a table is read on first access, so a query pays only
+        for the tables it uses, and a read is reused until the table's
+        next commit."""
         from pyspark.sql import functions as F
 
         from sfguide_getting_started_openflow_postgresql_cdc_spark.streaming.cdc import (
             CDC_SEQ,
         )
 
-        out = {}
-        for t in self.cdc.tables:
-            df = self.cdc.store.read(self.spark, t).drop(CDC_SEQ)
-            out[f"{t}_raw"] = df
-            out[t] = (
-                df if include_deleted else df.filter(~F.col(schemas.META_DELETED))
+        store = self.cdc.store
+
+        def raw(t: str) -> DataFrame:
+            # a committed version's files never change, so its read is
+            # reused until the table's next commit (cache.py)
+            return memo(
+                self.spark,
+                f"replica:{store.root}/{t}",
+                store.written_at(t),
+                lambda: store.read(self.spark, t).drop(CDC_SEQ),
+                persist=False,
             )
-        return out
+
+        def live(t: str) -> DataFrame:
+            df = frames[f"{t}_raw"]
+            return df if include_deleted else df.filter(~F.col(schemas.META_DELETED))
+
+        factories = {}
+        for t in self.cdc.tables:
+            factories[f"{t}_raw"] = partial(raw, t)
+            factories[t] = partial(live, t)
+        frames = LazyFrames(factories)
+        return frames
 
     def refresh_views(self) -> "Engine":
         self.cdc.register_views(self.spark)
@@ -142,12 +163,12 @@ class Engine:
         self._use_compute()
         return self.model.run_verified(name, self.spark, self._model_dfs())
 
-    def _model_dfs(self) -> dict:
+    def _model_dfs(self) -> Mapping:
         dfs = self.replicas(include_deleted=True)
         # verified queries / templates apply their own soft-delete filters
-        plain = {t: dfs[f"{t}_raw"] for t in self.cdc.tables}
-        plain["_as_of_date"] = healthcare.AS_OF.isoformat()
-        return plain
+        factories = {t: partial(dfs.__getitem__, f"{t}_raw") for t in self.cdc.tables}
+        factories["_as_of_date"] = healthcare.AS_OF.isoformat
+        return LazyFrames(factories)
 
     def ask(self, question: str) -> DataFrame:
         """Natural-language entry: the deterministic router — verified
@@ -295,6 +316,30 @@ class Engine:
             raw, expected_counts=expected_counts, snapshot_only=snapshot_only
         )
         return verification.report(self.spark, checks)
+
+
+class LazyFrames(Mapping):
+    """Read-only ``name -> value`` mapping that calls a name's factory on
+    its first access and keeps the result; iteration, ``len`` and ``in``
+    never build. Unknown names raise ``KeyError``."""
+
+    def __init__(self, factories: dict):
+        self._factories = factories
+        self._built: dict = {}
+
+    def __getitem__(self, name):
+        if name not in self._built:
+            self._built[name] = self._factories[name]()
+        return self._built[name]
+
+    def __contains__(self, name) -> bool:
+        return name in self._factories
+
+    def __iter__(self):
+        return iter(self._factories)
+
+    def __len__(self) -> int:
+        return len(self._factories)
 
 
 class RoleReader:

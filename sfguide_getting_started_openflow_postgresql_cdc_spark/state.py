@@ -37,7 +37,8 @@ an MV ``_POINTER.json``). The rules, in one place:
   the committed version left by crashed operations. Hard links keep the
   inodes shared with retained versions alive.
 - **Concurrency.** :func:`run_concurrently` runs independent writes from
-  driver threads, waits for all of them and surfaces every failure.
+  driver threads under the caller's Spark local properties, waits for all
+  of them and surfaces every failure.
 """
 
 from __future__ import annotations
@@ -45,6 +46,7 @@ from __future__ import annotations
 import json
 import os
 import shutil
+import warnings
 
 
 def read_json(path: str, default: dict | None = None) -> dict:
@@ -169,11 +171,16 @@ def run_concurrently(jobs) -> list:
     first failure in submission order with the others attached as notes
     — siblings are not cancelled, so a failed operation may leave any
     subset of its writes on disk, all in not-yet-committed version
-    directories a retry overwrites."""
+    directories a retry overwrites.
+
+    Each job runs with a copy of the caller's Spark local properties (job
+    group, scheduler pool, ...), so a streaming query's ``stop()`` can
+    cancel the jobs its ``foreachBatch`` started here."""
     if len(jobs) <= 1:
         return [j() for j in jobs]
     from concurrent.futures import ThreadPoolExecutor, wait
 
+    jobs = _inheriting_caller_properties(jobs)
     with ThreadPoolExecutor(max_workers=len(jobs)) as ex:
         futures = [ex.submit(j) for j in jobs]
         wait(futures)
@@ -183,3 +190,21 @@ def run_concurrently(jobs) -> list:
             errors[0].add_note(f"concurrent job also failed: {e!r}")
         raise errors[0]
     return [f.result() for f in futures]
+
+
+def _inheriting_caller_properties(jobs) -> list:
+    """``jobs`` wrapped by ``inheritable_thread_target`` when a Spark
+    context is active: one clone of the caller's local properties per job,
+    since each Spark SQL execution sets its own id in them."""
+    from pyspark import SparkContext
+    from pyspark.sql import SparkSession
+    from pyspark.util import inheritable_thread_target
+
+    if SparkContext._active_spark_context is None:
+        return jobs
+    session = SparkSession.getActiveSession()
+    if session is None:
+        with warnings.catch_warnings():  # only session tags need a session
+            warnings.simplefilter("ignore", UserWarning)
+            return [inheritable_thread_target(j) for j in jobs]
+    return [inheritable_thread_target(session)(j) for j in jobs]

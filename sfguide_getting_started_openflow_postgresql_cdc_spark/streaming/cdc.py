@@ -30,23 +30,29 @@ retention rules live in ``state.py``). At 100 TB with thousands of buckets
 a 1-minute sync interval rewrites only the few GB its keys actually
 touch; the whole-table rewrite this replaces cannot ship 100 TB/minute.
 
-The merge itself is pure DataFrame algebra:
+The merge itself is pure DataFrame algebra with ONE exchange:
 
-1. reduce the batch to the LATEST event per PK
-   (``row_number() over (partition by pk order by seq_no desc)``);
-2. guard every row with a stored per-row version (``_CDC_SEQ``): an
+1. union the changed buckets' stored rows (as a struct) with the batch's
+   events (as a struct, plus their ``seq_no``);
+2. ``repartition(_CDC_BUCKET)`` — the only shuffle. Hash partitioning
+   on the bucket already clusters rows by (bucket, pk), so the aggregate
+   below needs no second exchange, and each bucket lands in one task,
+   so the write makes one file per bucket. The rewritten buckets had to
+   be shuffled into their write tasks anyway; this shuffle carries those
+   rows and the events, nothing else;
+3. ``groupBy(_CDC_BUCKET, pk)`` keeps the stored row (``first``,
+   ignoring the event side's NULL) and the LATEST event
+   (``max_by(event, seq_no)``);
+4. guard every row with a stored per-row version (``_CDC_SEQ``): an
    event lands only if its ``seq_no`` beats the row's current version.
    This makes the merge idempotent under at-least-once ``foreachBatch``
    replay AND correct under out-of-order micro-batch delivery (global
-   file/offset ordering is not guaranteed in a distributed source);
-3. ``replica LEFT JOIN broadcast(latest)`` applies updates/soft-deletes
-   without shuffling the replica — at 100 TB the big side streams
-   map-side past a broadcast of the (small) per-interval change set;
-4. ``latest ANTI JOIN replica-keys`` yields brand-new rows to append.
+   file/offset ordering is not guaranteed in a distributed source). A
+   key with no stored row is an insert (a PK-only tombstone for a D).
 
-When a batch is genuinely huge (initial backfill), drop the broadcast
-hint via ``broadcast_threshold_rows``; Catalyst then plans a shuffle
-join, and a PK-bucketed replica layout keeps it co-located.
+The same plan serves a genuinely huge batch (initial backfill): there is
+no broadcast side to outgrow, and AQE sizes the shuffle's partitions
+from the data because the repartition fixes no count.
 """
 
 from __future__ import annotations
@@ -55,6 +61,7 @@ import json
 import os
 import shutil
 import time
+from functools import partial
 from typing import Iterable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -133,6 +140,11 @@ class ReplicaStore:
     def version(self, table: str) -> int:
         """The committed version (-1 before bootstrap)."""
         return int(self._pointer(table)["version"])
+
+    def written_at(self, table: str) -> float | None:
+        """Time of the table's last pointer commit (merge, bootstrap or
+        schema re-point); None before bootstrap."""
+        return self._pointer(table).get("written_at")
 
     def n_buckets(self, table: str) -> int:
         return int(self._pointer(table).get("n_buckets", 0))
@@ -367,7 +379,6 @@ class CdcEngine:
         store: ReplicaStore,
         tables: dict[str, T.StructType] | None = None,
         primary_keys: dict[str, str] | None = None,
-        broadcast_threshold_rows: int = 5_000_000,
         write_partitions: int | None = None,
         n_buckets: int = 16,
         auto_compact_max_files: int | None = None,
@@ -380,7 +391,6 @@ class CdcEngine:
         self.access = access
         self.tables = tables or schemas.HEALTHCARE_TABLES
         self.primary_keys = primary_keys or schemas.PRIMARY_KEYS
-        self.broadcast_threshold_rows = broadcast_threshold_rows
         # Output-file sizing: None lets AQE pick; small reference-scale
         # tables should pass 1 to avoid a spray of KB-sized files. At
         # cluster scale, size so files land ~128 MB-1 GB each.
@@ -639,80 +649,71 @@ class CdcEngine:
             else F.lit(stats["max_ts"]).cast("timestamp_ntz")
         )
 
-        # latest event per PK wins within the interval (SURVEY.md §3:
-        # row_number over seq_no desc).
-        w = Window.partitionBy(pk).orderBy(F.col("seq_no").desc())
-        latest = (
-            events.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
-            .drop("_rn")
-        )
-        # broadcast only the probe side of the left join (anti join below
-        # builds on the right side, where the hint would be unsupported)
-        latest_hinted = (
-            F.broadcast(latest)
-            if stats["n"] <= self.broadcast_threshold_rows
-            else latest
-        )
-
         # Partition-pruned read: only the changed buckets' files are
         # listed/scanned; untouched buckets never enter the plan.
         replica = self.store.read_buckets(spark, table, changed_buckets)
         src_fields = [f.name for f in self.tables[table].fields]
-        r, e = replica.alias("r"), latest_hinted.alias("e")
+        values = [c for c in src_fields if c != pk]
+        meta = [schemas.META_INSERTED_AT, schemas.META_UPDATED_AT,
+                schemas.META_DELETED, CDC_SEQ]
+        # The one exchange (module docstring): per key, the stored row if
+        # any and the latest event if any (max_by skips the stored side's
+        # NULL seq).
+        sides = replica.select(
+            pk, F.struct(*values, *meta).alias("_r")
+        ).unionByName(
+            events.select(
+                pk,
+                F.struct("seq_no", "op", *values).alias("_e"),
+                F.col("seq_no").alias("_seq"),
+            ),
+            allowMissingColumns=True,
+        )
+        keyed = (
+            sides.withColumn(CDC_BUCKET, self._bucket(pk))
+            .repartition(CDC_BUCKET)
+            .groupBy(CDC_BUCKET, pk)
+            .agg(
+                F.first("_r", ignorenulls=True).alias("r"),
+                F.max_by("_e", "_seq").alias("e"),
+            )
+        )
+        r, e = F.col("r"), F.col("e")
+        is_new = r.isNull()
         # Per-row version guard: an event lands only if its seq_no beats
         # the row's stored _CDC_SEQ. This makes the merge idempotent under
         # replay AND correct under out-of-order micro-batch delivery —
         # global ordering is not guaranteed once ingestion is distributed.
-        applies = F.col("e.op").isNotNull() & (
-            F.col("e.seq_no") > F.col(f"r.{CDC_SEQ}")
-        )
-        op = F.when(applies, F.col("e.op"))  # null unless the event lands
-
-        # existing rows: keep values on D (soft delete), take post-image on I/U
-        updated = r.join(e, F.col(f"r.{pk}") == F.col(f"e.{pk}"), "left").select(
+        # A key with no stored row takes its latest event whatever the op:
+        # a D for a never-seen key materializes a PK-only tombstone, so a
+        # late-arriving lower-seq INSERT for it is suppressed by the guard.
+        op = F.when(is_new | (e["seq_no"] > r[CDC_SEQ]), e["op"])
+        keep = op.isNull()  # no event lands: the stored row stays as it is
+        merged = keyed.select(
             *[
-                F.when(op.isNull() | (op == "D"), F.col(f"r.{c}"))
-                .otherwise(F.col(f"e.{c}"))
+                F.col(pk)
+                if c == pk
+                # existing rows keep their values on D (soft delete)
+                else F.when(keep | ((op == "D") & ~is_new), r[c])
+                .otherwise(e[c])
                 .alias(c)
                 for c in src_fields
             ],
-            F.col(f"r.{schemas.META_INSERTED_AT}").alias(schemas.META_INSERTED_AT),
-            F.when(op.isNull(), F.col(f"r.{schemas.META_UPDATED_AT}"))
+            F.when(is_new, sync_col)
+            .otherwise(r[schemas.META_INSERTED_AT])
+            .alias(schemas.META_INSERTED_AT),
+            F.when(keep, r[schemas.META_UPDATED_AT])
+            .when(is_new & (op == "I"), F.lit(None).cast("timestamp_ntz"))
             .otherwise(sync_col)
             .alias(schemas.META_UPDATED_AT),
-            F.when(op.isNull(), F.col(f"r.{schemas.META_DELETED}"))
+            F.when(keep, r[schemas.META_DELETED])
             .otherwise(op == "D")
             .alias(schemas.META_DELETED),
-            F.when(op.isNull(), F.col(f"r.{CDC_SEQ}"))
-            .otherwise(F.col("e.seq_no"))
-            .alias(CDC_SEQ),
-        )
-        # Brand-new keys: inserts. A D for a never-seen key materializes a
-        # PK-only tombstone so a late-arriving lower-seq INSERT for the
-        # same key is correctly suppressed by the version guard.
-        inserts = (
-            latest.join(replica.select(pk), on=pk, how="left_anti")
-            .select(
-                *[F.col(c) for c in src_fields],
-                sync_col.alias(schemas.META_INSERTED_AT),
-                F.when(F.col("op").isin("U", "D"), sync_col)
-                .otherwise(F.lit(None).cast("timestamp_ntz"))
-                .alias(schemas.META_UPDATED_AT),
-                (F.col("op") == "D").alias(schemas.META_DELETED),
-                F.col("seq_no").alias(CDC_SEQ),
-            )
-        )
-        merged = updated.unionByName(inserts.select(*updated.columns)).withColumn(
-            CDC_BUCKET, self._bucket(pk)
+            F.when(keep, r[CDC_SEQ]).otherwise(e["seq_no"]).alias(CDC_SEQ),
+            F.col(CDC_BUCKET),
         )
         if self.write_partitions:
             merged = merged.coalesce(self.write_partitions)
-        else:
-            # co-locate each bucket in one task: every task then writes
-            # one file per bucket it owns instead of every task writing a
-            # sliver of every bucket (32 tasks x 16 buckets = 512 files)
-            merged = merged.repartition(self.n_buckets, F.col(CDC_BUCKET))
         self.store.write_merged(
             spark,
             table,
@@ -743,26 +744,35 @@ class CdcEngine:
 
     # -- batch driver ------------------------------------------------------------
     def apply_envelope_batch(self, spark: SparkSession, batch: DataFrame) -> None:
-        """Process one micro-batch of mixed-table envelope rows: journal
-        first (append-only, replay-tolerant), then merge each table."""
+        """Process one micro-batch of mixed-table envelope rows. Each
+        table's journal append (append-only, replay-tolerant), merge and
+        journal compaction run as one job of a single
+        ``state.run_concurrently`` call, so the tables merge side by side.
+        Every merge is idempotent under the version guard, so a failed
+        micro-batch may have committed any subset of its tables; the
+        ``foreachBatch`` replay of the batch completes the rest."""
+
+        def apply_table(table: str) -> None:
+            typed = self.project_after(
+                batch.filter(F.col("table_name") == table), table
+            )
+            typed.persist()
+            try:
+                self.append_journal(table, typed)
+                self.merge_batch(spark, table, typed)
+            finally:
+                typed.unpersist()
+            self.maybe_compact_journal(spark, table)
+
         batch.persist()
         try:
             present = [
                 row["table_name"]
                 for row in batch.select("table_name").distinct().collect()
             ]
-            for table in present:
-                if table not in self.tables:
-                    continue
-                sub = batch.filter(F.col("table_name") == table)
-                typed = self.project_after(sub, table)
-                typed.persist()
-                try:
-                    self.append_journal(table, typed)
-                    self.merge_batch(spark, table, typed)
-                finally:
-                    typed.unpersist()
-                self.maybe_compact_journal(spark, table)
+            state.run_concurrently(
+                [partial(apply_table, t) for t in present if t in self.tables]
+            )
         finally:
             batch.unpersist()
 

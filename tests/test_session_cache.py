@@ -50,6 +50,14 @@ def test_hit_returns_the_same_object(spark):
     assert memo(spark, "t_rows", "k", lambda: []) is rows
 
 
+def test_unpersisted_memo_keeps_the_plan_only(spark):
+    first = memo(spark, "t_plan", "k", lambda: spark.range(1005), persist=False)
+    assert not _cached(first)
+    assert memo(spark, "t_plan", "k", lambda: pytest.fail("a hit")) is first
+    release()
+    assert _keys("t_plan") == []
+
+
 def test_caller_persisted_frame_survives_release(spark):
     mine = spark.range(1002).persist()
     try:

@@ -2,7 +2,8 @@
 on: durable JSON commit, ``v<N>`` listing, committed-segment file lists,
 copy-on-write links, retention keyed on the committed version, and the
 concurrency helper — plus a structure check that keeps those decisions
-in that one module. No Spark session: the whole file runs in seconds."""
+in that one module. Only the job-group test starts Spark jobs (two
+one-row counts); the whole file runs in seconds once a session exists."""
 
 import ast
 import json
@@ -158,6 +159,25 @@ def test_run_concurrently_waits_for_all_and_reports_every_failure():
     assert done.is_set(), "returned before the slow job finished"
     notes = getattr(info.value, "__notes__", [])
     assert len(notes) == 1 and "second" in notes[0]
+
+
+def test_run_concurrently_keeps_the_callers_job_group(spark):
+    """Pool threads run with the caller's Spark local properties, so a
+    job group set by the caller (a streaming query sets one per run, and
+    cancels it on ``stop()``) covers the jobs started under it."""
+    sc = spark.sparkContext
+    group = f"run-concurrently-{time.monotonic_ns()}"
+    sc.setJobGroup(group, "two jobs from pool threads")
+    try:
+        state.run_concurrently(
+            [lambda: sc.parallelize([1]).count(), lambda: sc.parallelize([2]).count()]
+        )
+    finally:
+        sc._jsc.clearJobGroup()
+    deadline = time.monotonic() + 10  # the status store is fed asynchronously
+    while len(sc.statusTracker().getJobIdsForGroup(group)) < 2:
+        assert time.monotonic() < deadline, "jobs ran outside the caller's group"
+        time.sleep(0.05)
 
 
 # -- structure check -------------------------------------------------------
