@@ -49,6 +49,7 @@ JACCARD_THRESHOLD = 0.3
 # shingles carry ~no near-dup signal (dd4's banding suppresses them the
 # same way); the oracle applies the identical cap so parity is exact.
 SHINGLE_DOC_FREQ_CAP = 50
+SHINGLE_N = 3  # dd3/dd4 shingles are word 3-grams
 SIMHASH_BITS = 60  # 15 hex digits of md5 -> fits a signed 64-bit int
 
 
@@ -69,14 +70,19 @@ def gram_rows(docs: DataFrame, n: int, out_col: str = "shingle") -> DataFrame:
     grams via the greatest(len-n+1, 0) slice length). Measured 1.4x on
     the sf0.1 corpus AND one Exchange+Sort fewer in every consumer's
     plan — at 100 TB that exchange was a full-corpus token shuffle."""
-    w = F.split(F.trim(F.col("text")), r"\s+")
-    d = docs.select("doc_id", w.alias("_w"))
+    d = docs.select("doc_id", words().alias("_w"))
     ln = F.greatest(F.size(F.col("_w")) - (n - 1), F.lit(0))
     z = F.arrays_zip(*[F.slice(F.col("_w"), i + 1, ln) for i in range(n)])
     return d.select("doc_id", F.explode(z).alias("_t")).select(
         "doc_id",
         F.concat_ws(" ", *[F.col(f"_t.{i}") for i in range(n)]).alias(out_col),
     )
+
+
+def words(text: str = "text"):
+    """The word array n-grams are built from: ``text`` trimmed and split
+    on whitespace runs."""
+    return F.split(F.trim(F.col(text)), r"\s+")
 
 
 def gram_rows_distinct(docs: DataFrame, n: int, out_col: str = "shingle") -> DataFrame:
@@ -92,8 +98,7 @@ def gram_rows_distinct(docs: DataFrame, n: int, out_col: str = "shingle") -> Dat
     ``transform`` lambda (interpreted per element, not codegen), which
     measures cheaper than shuffling the stream; the split still lives
     in its own projection so the regex runs once per document."""
-    w = F.split(F.trim(F.col("text")), r"\s+")
-    d = docs.select("doc_id", w.alias("_w"))
+    d = docs.select("doc_id", words().alias("_w"))
     ln = F.greatest(F.size(F.col("_w")) - (n - 1), F.lit(0))
     z = F.arrays_zip(*[F.slice(F.col("_w"), i + 1, ln) for i in range(n)])
     grams = F.transform(
@@ -115,7 +120,7 @@ def _doc_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
     # tokenization parallelizes. GUARDED: at 100 TB the source arrives
     # already split, and spread_small skips the exchange entirely.
     docs = spread_small(load_table(spark, sf_dir, "documents"))
-    return gram_rows_distinct(docs, 3)
+    return gram_rows_distinct(docs, SHINGLE_N)
 
 
 # SQL twin of _doc_shingles for the oracles (DuckDB)

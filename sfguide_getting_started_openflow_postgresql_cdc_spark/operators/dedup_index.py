@@ -89,13 +89,16 @@ operation's version and reads are manifest-gated, so a crashed
 operation's orphan segment is invisible and a RETRY of the same batch
 overwrites it instead of double-appending. The commit, segment-read,
 copy-on-write and retention rules live in ``state.py``. Write
-parallelism is bounded by the bucket count (16 here for test-scale
-file counts); a cluster deployment raises ``n_buckets`` to thousands,
-exactly like the replica's ``_CDC_BUCKET`` layout. doc_ids must be
-unique across ingests and never re-ingested after retraction (upstream
-exact-dedup dd1 / CDC keys guarantee this in the pipeline; ingest
-raises on a tombstoned doc_id, on a doc_id repeated within a batch and on
-a doc_id an earlier ingest already holds).
+parallelism is bounded by the bucket count, which also sets the files
+per write (one per touched bucket): one by default, since an index
+starts empty and a small dump touches every bucket; a cluster deployment
+passes thousands, exactly like the replica's ``_CDC_BUCKET`` layout.
+doc_ids must be unique across ingests and never re-ingested after
+retraction (upstream exact-dedup dd1 / CDC keys guarantee this in the
+pipeline; ingest raises on a tombstoned doc_id, on a doc_id repeated
+within a batch and on a doc_id an earlier ingest already holds — a
+document with no 3-word shingle is held in the shingle log as one row
+with a NULL shingle, which no shingle join matches).
 """
 
 from __future__ import annotations
@@ -112,8 +115,10 @@ from sfguide_getting_started_openflow_postgresql_cdc_spark.cache import memo, re
 from sfguide_getting_started_openflow_postgresql_cdc_spark.operators.dedup import (
     JACCARD_THRESHOLD,
     SHINGLE_DOC_FREQ_CAP,
+    SHINGLE_N,
     _band_exprs,
     _minhash_sig_cols,
+    words,
 )
 from sfguide_getting_started_openflow_postgresql_cdc_spark.operators.registry import (
     query,
@@ -136,7 +141,15 @@ def _shingle_batch(docs: DataFrame) -> DataFrame:
         gram_rows_distinct,
     )
 
-    return gram_rows_distinct(docs.select("doc_id", "text"), 3)
+    return gram_rows_distinct(docs.select("doc_id", "text"), SHINGLE_N)
+
+
+def _unshingled(docs: DataFrame) -> DataFrame:
+    """(doc_id, NULL shingle) for the batch's documents with fewer than
+    SHINGLE_N words — the shingle log's record that such a document is held."""
+    return docs.filter(F.coalesce(F.size(words()), F.lit(0)) < SHINGLE_N).select(
+        "doc_id", F.lit(None).cast("string").alias("shingle")
+    )
 
 
 class MinHashLshIndex:
@@ -150,7 +163,7 @@ class MinHashLshIndex:
         index_dir: str,
         cap: int = SHINGLE_DOC_FREQ_CAP,
         threshold: float = JACCARD_THRESHOLD,
-        n_buckets: int = 16,
+        n_buckets: int = 1,
     ) -> None:
         self.spark = spark
         self.dir = index_dir
@@ -159,7 +172,9 @@ class MinHashLshIndex:
         os.makedirs(index_dir, exist_ok=True)
         man = self._manifest()
         # bucket count is pinned at creation — the hash layout on disk
-        # must match the exprs used to prune reads forever after
+        # must match the exprs used to prune reads forever after. An index
+        # starts empty, and every dump touches every bucket at a small
+        # fan-out, so the default is one (state.bucket_count of 0 bytes)
         self.n_buckets = int(man.get("n_buckets", n_buckets))
 
     # -- manifest / storage plumbing ------------------------------------
@@ -224,7 +239,7 @@ class MinHashLshIndex:
     def _read_files(self, files: list[str], schema: str) -> DataFrame:
         if files:
             return self.spark.read.schema(schema).parquet(*files)
-        return self.spark.createDataFrame([], schema)
+        return state.empty_frame(self.spark, schema)
 
     def _log_files(self, name: str, buckets: list[int] | None = None) -> list[str]:
         return state.segment_files(
@@ -275,7 +290,7 @@ class MinHashLshIndex:
     ) -> DataFrame:
         v = self._cow_version(name)
         if v <= 0:
-            return self.spark.createDataFrame([], schema)
+            return state.empty_frame(self.spark, schema)
         return self._read_files(
             state.files_under(self._cow_path(name, v), IDX_BUCKET, buckets), schema
         )
@@ -484,7 +499,7 @@ class MinHashLshIndex:
                     )
                 )
                 .unionByName(
-                    batch_sh.select(
+                    docs.select(
                         F.lit("doc").alias("t"),
                         self._doc_bucket().cast("long").alias("b"),
                     )
@@ -564,14 +579,16 @@ class MinHashLshIndex:
                 (F.col("old_df") <= self.cap) & (F.col("new_df") > self.cap)
             ).select("shingle")
             # doc_ids an earlier ingest already holds: the batch's ids
-            # against the stored shingle log pruned to the batch's doc
-            # buckets, grouped by id inside the probe's one aggregate —
-            # only an id seen on both sides survives its filter, so the
-            # check collects nothing in the common case and adds no job
+            # against the stored shingle log (which holds every ingested
+            # doc, a shingle-less one as a NULL-shingle row) pruned to the
+            # batch's doc buckets, grouped by id inside the probe's one
+            # aggregate — only an id seen on both sides survives its
+            # filter, so the check collects nothing in the common case
+            # and adds no job
             doc_buckets = sorted(int(r["b"]) for r in tagged if r["t"] == "doc")
             held_ids = (
-                batch_sh.select(F.lit("id").alias("t"), F.col("doc_id").alias("b"),
-                                F.lit(0).alias("stored"))
+                docs.select(F.lit("id").alias("t"), F.col("doc_id").alias("b"),
+                            F.lit(0).alias("stored"))
                 .unionByName(
                     self._read_append(
                         "shingles", "doc_id long, shingle string", doc_buckets
@@ -612,7 +629,10 @@ class MinHashLshIndex:
                 [
                     _probe,
                     lambda: self._append(
-                        "shingles", batch_sh, self._doc_bucket(), version=new_version
+                        "shingles",
+                        batch_sh.unionByName(_unshingled(docs)),
+                        self._doc_bucket(),
+                        version=new_version,
                     ),
                     lambda: self._append(
                         "bands", batch_bands, self._band_bucket(), version=new_version
@@ -837,6 +857,7 @@ class MinHashLshIndex:
             r_sh = (
                 self._read_append("shingles", "doc_id long, shingle string", r_buckets)
                 .join(F.broadcast(r), "doc_id", "left_semi")
+                .filter(F.col("shingle").isNotNull())
                 .persist()
             )
             dec = r_sh.groupBy("shingle").agg(F.count("*").alias("ddf"))

@@ -36,6 +36,12 @@ an MV ``_POINTER.json``). The rules, in one place:
   versions below it, delete everything else — including orphans ABOVE
   the committed version left by crashed operations. Hard links keep the
   inodes shared with retained versions alive.
+- **Bucket sizing.** A hash-bucketed table's bucket count is pinned when
+  the table is first written. :func:`bucket_count` sizes it to the data:
+  the smallest power of two that keeps one bucket under
+  ``BUCKET_TARGET_BYTES``, so a small table is one bucket — one file per
+  write. Without a size estimate (a JDBC source, local Python rows) it is
+  ``UNSIZED_BUCKETS``. The count does not follow later growth.
 - **Concurrency.** :func:`run_concurrently` runs independent writes from
   driver threads under the caller's Spark local properties, waits for all
   of them and surfaces every failure.
@@ -147,6 +153,60 @@ def link_untouched(
         for fname in os.listdir(src_dir):
             if fname.endswith(suffix):
                 link_file(os.path.join(src_dir, fname), os.path.join(dst_dir, fname))
+
+
+# A merge pays per file it writes (~8 ms each when one task writes a
+# small table's buckets in turn) and per stored row of each bucket its
+# batch touches: few buckets favour a batch that touches every bucket,
+# many a batch that touches a few keys. With the clinic benchmark's
+# tables (4 vCPUs, local disk), 256 KiB is the largest target at which
+# 3-event syncs into a snapshot 1000x the reference seed (2.6-3 MB of
+# parquet a table) are no slower than at 16 buckets (512 KiB was 5-14%
+# slower there, 2 MiB 50-60%); at 256 KiB, 300-event syncs into the
+# 100x snapshot ran 13% faster than at 16 buckets.
+BUCKET_TARGET_BYTES = 256 << 10
+UNSIZED_BUCKETS = 16
+
+
+def bucket_count(size_bytes: int | None) -> int:
+    """The smallest power of two that keeps a bucket of ``size_bytes``
+    under ``BUCKET_TARGET_BYTES``; ``UNSIZED_BUCKETS`` when the size is
+    unknown."""
+    if size_bytes is None:
+        return UNSIZED_BUCKETS
+    n = 1
+    while size_bytes >= n * BUCKET_TARGET_BYTES:
+        n *= 2
+    return n
+
+
+def size_estimate(df) -> int | None:
+    """Catalyst's size estimate of ``df`` in bytes (file sizes for a file
+    scan), or None when any leaf of the plan has none and Spark falls
+    back to ``spark.sql.defaultSizeInBytes`` — a projection above such a
+    leaf scales that placeholder into a finite-looking figure. Optimizes
+    the plan on the driver; starts no Spark job."""
+    jdf = df._jdf  # noqa: SLF001
+    plan = jdf.queryExecution().optimizedPlan()
+    unknown = jdf.sparkSession().sessionState().conf().defaultSizeInBytes()
+    leaves = plan.collectLeaves()
+    for i in range(leaves.size()):
+        if int(leaves.apply(i).stats().sizeInBytes()) >= unknown:
+            return None
+    return int(plan.stats().sizeInBytes())
+
+
+def empty_frame(spark, ddl: str):
+    """An empty frame of the DDL schema ``ddl`` as a local relation: the
+    optimizer sees it is empty, prunes the joins and unions it feeds, and
+    never plans a scan of it. (``createDataFrame([], ddl)`` is an opaque
+    RDD scan with no size estimate.)"""
+    from pyspark.sql import DataFrame
+
+    jvm = spark._jvm  # noqa: SLF001
+    schema = jvm.org.apache.spark.sql.types.StructType.fromDDL(ddl)
+    empty = spark._jsparkSession.createDataFrame(jvm.java.util.ArrayList(), schema)  # noqa: SLF001
+    return DataFrame(empty, spark)
 
 
 def remove_dir(path: str) -> None:

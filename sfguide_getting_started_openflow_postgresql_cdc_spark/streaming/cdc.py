@@ -380,7 +380,7 @@ class CdcEngine:
         tables: dict[str, T.StructType] | None = None,
         primary_keys: dict[str, str] | None = None,
         write_partitions: int | None = None,
-        n_buckets: int = 16,
+        n_buckets: int | None = None,
         auto_compact_max_files: int | None = None,
         journal_retain_seqs: int = 10_000,
         access=None,
@@ -396,9 +396,12 @@ class CdcEngine:
         # cluster scale, size so files land ~128 MB-1 GB each.
         self.write_partitions = write_partitions
         # Replica layout granularity: a merge rewrites only buckets whose
-        # keys changed. Size so one bucket ~ a few GB at the target scale
-        # (100 TB -> tens of thousands of buckets); 16 keeps the tiny
-        # test fixtures from spraying directories.
+        # keys changed, one file per bucket. None sizes each table at
+        # bootstrap from its snapshot (state.bucket_count: one bucket per
+        # 256 KiB, so a small table is one bucket) and pins the count in
+        # the table's pointer; a given count is used for every table
+        # and a replica bucketed otherwise is refused. A cluster whose
+        # files cost more than a local disk's passes its own count.
         self.n_buckets = n_buckets
         # Journal hygiene under streaming: each micro-batch appends
         # files, so a 1-minute sync leaves ~1440 files/table/day. When
@@ -409,8 +412,13 @@ class CdcEngine:
         self.auto_compact_max_files = auto_compact_max_files
         self.journal_retain_seqs = journal_retain_seqs
 
-    def _bucket(self, pk: str):
-        return F.pmod(F.xxhash64(F.col(pk)), F.lit(self.n_buckets)).cast("int")
+    @staticmethod
+    def _bucket(pk: str, n_buckets: int):
+        return F.pmod(F.xxhash64(F.col(pk)), F.lit(n_buckets)).cast("int")
+
+    def bucket(self, table: str):
+        """``table``'s bucket expression at the count pinned in its pointer."""
+        return self._bucket(self.primary_keys[table], self.store.n_buckets(table))
 
     # -- I1: snapshot bootstrap --------------------------------------------
     def bootstrap(
@@ -444,6 +452,7 @@ class CdcEngine:
             for table, src in source.items()
         }
         for table, df in source.items():
+            n_buckets = self.n_buckets or state.bucket_count(state.size_estimate(df))
             replica = (
                 df.withColumn(
                     schemas.META_INSERTED_AT, F.lit(load_ts).cast("timestamp_ntz")
@@ -453,14 +462,16 @@ class CdcEngine:
                 )
                 .withColumn(schemas.META_DELETED, F.lit(False))
                 .withColumn(CDC_SEQ, F.lit(-1).cast("long"))
-                .withColumn(CDC_BUCKET, self._bucket(self.primary_keys[table]))
+                .withColumn(
+                    CDC_BUCKET, self._bucket(self.primary_keys[table], n_buckets)
+                )
             )
             if self.write_partitions:
                 replica = replica.coalesce(self.write_partitions)
             else:
-                replica = replica.repartition(self.n_buckets, F.col(CDC_BUCKET))
+                replica = replica.repartition(n_buckets, F.col(CDC_BUCKET))
             self.store.write_full(
-                spark, table, replica, watermark=-1, n_buckets=self.n_buckets
+                spark, table, replica, watermark=-1, n_buckets=n_buckets
             )
             if journal_snapshot:
                 snap_events = df.select(
@@ -620,12 +631,22 @@ class CdcEngine:
         events = events.filter(
             F.col(pk).isNotNull() & F.col("op").isin("I", "U", "D")
         )
+        n_buckets = self.store.n_buckets(table)
+        if n_buckets == 0:
+            raise FileNotFoundError(f"replica '{table}' not bootstrapped")
+        if self.n_buckets not in (None, n_buckets):
+            raise ValueError(
+                f"replica '{table}' is bucketed {n_buckets}-way but the "
+                f"engine is configured for {self.n_buckets}; re-bootstrap to "
+                "change bucket counts"
+            )
+        bucket = self._bucket(pk, n_buckets)
 
         stats = events.agg(
             F.count("*").alias("n"),
             F.max("seq_no").alias("max_seq"),
             F.max("event_ts").alias("max_ts"),
-            F.collect_set(self._bucket(pk)).alias("buckets"),
+            F.collect_set(bucket).alias("buckets"),
         ).collect()[0]
         if stats["n"] == 0:
             return
@@ -633,13 +654,6 @@ class CdcEngine:
         # replica this merge reads or rewrites (bounded by n_buckets, so
         # the driver-side list stays tiny at any scale).
         changed_buckets = sorted(stats["buckets"])
-        stored_buckets = self.store.n_buckets(table)
-        if stored_buckets != self.n_buckets:
-            raise ValueError(
-                f"replica '{table}' is bucketed {stored_buckets}-way but the "
-                f"engine is configured for {self.n_buckets}; re-bootstrap to "
-                "change bucket counts"
-            )
         # Deterministic sync timestamp: the batch's newest commit ts
         # (reference stamps rows with the sync time; using event time keeps
         # replays byte-identical).
@@ -670,7 +684,7 @@ class CdcEngine:
             allowMissingColumns=True,
         )
         keyed = (
-            sides.withColumn(CDC_BUCKET, self._bucket(pk))
+            sides.withColumn(CDC_BUCKET, bucket)
             .repartition(CDC_BUCKET)
             .groupBy(CDC_BUCKET, pk)
             .agg(
@@ -737,7 +751,8 @@ class CdcEngine:
         fact instead of silently dropped — the operational complement
         of the merge-side guard."""
         pk = self.primary_keys[table]
-        j = self.store.read_journal(spark, table)
+        # deduplicated: a foreachBatch replay appends its events again
+        j = self.store.read_journal(spark, table, dedup=True, pk=pk)
         return j.filter(
             F.col(pk).isNull() | ~F.col("op").isin("I", "U", "D")
         )
@@ -898,6 +913,12 @@ class CdcEngine:
         j = self.store.read_journal(spark, table, dedup=True, pk=pk)
         j = j.filter(F.col(pk).isNotNull() & F.col("op").isin("I", "U", "D"))
         src_fields = [f.name for f in self.tables[table].fields]
+        # the replica's pinned count; a lost replica is sized from its journal
+        n_buckets = (
+            self.n_buckets
+            or self.store.n_buckets(table)
+            or state.bucket_count(state.size_estimate(j))
+        )
 
         w = Window.partitionBy(pk).orderBy(F.col("seq_no").desc())
         last = (
@@ -940,15 +961,15 @@ class CdcEngine:
                 .cast("long")
                 .alias(CDC_SEQ),
             )
-            .withColumn(CDC_BUCKET, self._bucket(pk))
+            .withColumn(CDC_BUCKET, self._bucket(pk, n_buckets))
         )
         if self.write_partitions:
             rebuilt = rebuilt.coalesce(self.write_partitions)
         else:
-            rebuilt = rebuilt.repartition(self.n_buckets, F.col(CDC_BUCKET))
+            rebuilt = rebuilt.repartition(n_buckets, F.col(CDC_BUCKET))
         watermark = self.store.watermark(table)
         store.write_full(
-            spark, table, rebuilt, watermark=watermark, n_buckets=self.n_buckets
+            spark, table, rebuilt, watermark=watermark, n_buckets=n_buckets
         )
 
     # -- SCD2 history over the journal --------------------------------------------

@@ -72,7 +72,7 @@ class IncrementalCurationManifest:
         path: str,
         token_budget: int | None = None,
         contam_threshold: float | None = None,
-        n_buckets: int = 16,
+        n_buckets: int = 1,
     ) -> None:
         from sfguide_getting_started_openflow_postgresql_cdc_spark.operators.analytics_ext import (
             SHARD_TOKEN_BUDGET,
@@ -89,6 +89,9 @@ class IncrementalCurationManifest:
         )
         os.makedirs(path, exist_ok=True)
         meta = self._meta()
+        # pinned at creation; the fingerprint log starts empty and every
+        # dump touches every bucket at a small fan-out, so the default is
+        # one (state.bucket_count of 0 bytes)
         self.n_buckets = int(meta.get("n_buckets", n_buckets))
 
     # -- storage plumbing ---------------------------------------------------
@@ -116,7 +119,7 @@ class IncrementalCurationManifest:
         p = state.version_dir(os.path.join(self.path, name), v)
         if v > 0 and os.path.isdir(p):
             return self.spark.read.schema(schema).parquet(p)
-        return self.spark.createDataFrame([], schema)
+        return state.empty_frame(self.spark, schema)
 
     def _fp_bucket(self, col: str = "f"):
         return F.pmod(F.xxhash64(F.col(col)), F.lit(self.n_buckets))
@@ -140,7 +143,7 @@ class IncrementalCurationManifest:
             os.path.join(self.path, "fingerprints"), upto, FP_BUCKET, buckets
         )
         if not files:
-            return self.spark.createDataFrame([], "f string, doc_id long")
+            return state.empty_frame(self.spark, "f string, doc_id long")
         return self.spark.read.schema("f string, doc_id long").parquet(*files)
 
     # -- shared expressions (the exact px11 definitions) --------------------

@@ -228,17 +228,13 @@ def neardup_filter_batch_indexed(
     (manifest flips last), so a replayed epoch is detected either by
     the recorded epoch watermark or by its doc_ids already being
     stored; the replay then RE-DERIVES the accepted set (batch ids
-    present in the index, plus shingle-less docs — which can never
-    collide and are always admitted) instead of re-ingesting, so the
-    batch can neither collide with its own first attempt nor
-    double-count document frequencies."""
+    present in the index — the shingle log holds a shingle-less doc
+    too) instead of re-ingesting, so the batch can neither collide with
+    its own first attempt nor double-count document frequencies."""
     import os
     import uuid
 
     from sfguide_getting_started_openflow_postgresql_cdc_spark import state
-    from sfguide_getting_started_openflow_postgresql_cdc_spark.operators.dedup_index import (
-        _shingle_batch,
-    )
 
     if commit_key is None:
         commit_key = (uuid.uuid4().hex[:12], 0)
@@ -247,16 +243,7 @@ def neardup_filter_batch_indexed(
     applied = state.read_json(epochs_path, {})
 
     batch = batch.persist()
-    batch_sh = _shingle_batch(batch.select("doc_id", "text")).persist()
     try:
-        shingled_ids = batch_sh.select("doc_id").distinct()
-        # shingle-less docs (under 3 tokens) produce no bands: they can
-        # never collide, are always admitted, and leave no stored trace
-        # to re-derive from on replay — hence the explicit union below
-        bandless = batch.select("doc_id").join(
-            shingled_ids, "doc_id", "left_anti"
-        )
-
         doc_buckets = index._bucket_set(
             batch.select("doc_id"), index._doc_bucket()
         )
@@ -277,9 +264,7 @@ def neardup_filter_batch_indexed(
             stored_ids.limit(1).count()
         )
         if is_replay:
-            accepted_ids = index._anti_docs(
-                stored_ids.unionByName(bandless), index._tombstones()
-            )
+            accepted_ids = index._anti_docs(stored_ids, index._tombstones())
             accepted = batch.join(accepted_ids, "doc_id", "left_semi")
         else:
             sigs = _batch_band_signatures(batch).persist()
@@ -320,7 +305,6 @@ def neardup_filter_batch_indexed(
         state.commit_json(epochs_path, applied)
         return accepted
     finally:
-        batch_sh.unpersist()
         batch.unpersist()
 
 

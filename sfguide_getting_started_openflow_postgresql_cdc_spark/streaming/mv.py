@@ -130,7 +130,7 @@ class IncrementalGroupCount:
         always-false filter of the current table."""
         buckets = [
             r["b"]
-            for r in keys.select(self.engine._bucket(self.pk).alias("b"))
+            for r in keys.select(self.engine.bucket(self.table).alias("b"))
             .distinct()
             .collect()
         ]

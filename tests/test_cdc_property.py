@@ -58,21 +58,23 @@ def _scenario(draw):
     return events, batches, order
 
 
-@pytest.mark.parametrize("seed_round", [0])  # single hypothesis run
+# one hypothesis run per bucket count: one bucket is the sizing rule's
+# count for small data, where every merge rewrites the whole table
+@pytest.mark.parametrize("n_buckets", [1, 4])
 @settings(
     max_examples=12,
     deadline=None,
     suppress_health_check=list(HealthCheck),
 )
 @given(scenario=_scenario())
-def test_merge_invariants_hold_for_any_batching(spark, seed_round, scenario):
+def test_merge_invariants_hold_for_any_batching(spark, n_buckets, scenario):
     events, batches, order = scenario
     eng = CdcEngine(
         ReplicaStore(tempfile.mkdtemp(prefix="cdc_prop_")),
         tables={"t": SCHEMA},
         primary_keys={"t": "id"},
         write_partitions=1,
-        n_buckets=4,
+        n_buckets=n_buckets,
     )
     eng.bootstrap(
         spark,
@@ -116,7 +118,7 @@ def test_merge_invariants_hold_for_any_batching(spark, seed_round, scenario):
             assert row["v"] == val
 
 
-@pytest.mark.parametrize("seed_round", [0])
+@pytest.mark.parametrize("n_buckets", [1, 4])
 @settings(
     max_examples=8,
     deadline=None,
@@ -124,7 +126,7 @@ def test_merge_invariants_hold_for_any_batching(spark, seed_round, scenario):
 )
 @given(scenario=_scenario())
 def test_incremental_mv_equals_full_recompute_for_any_batching(
-    spark, seed_round, scenario
+    spark, n_buckets, scenario
 ):
     """The incrementally-maintained grouped count must equal a fresh
     GROUP BY over live rows after ANY event sequence, batch partition,
@@ -141,7 +143,7 @@ def test_incremental_mv_equals_full_recompute_for_any_batching(
         tables={"t": SCHEMA},
         primary_keys={"t": "id"},
         write_partitions=1,
-        n_buckets=4,
+        n_buckets=n_buckets,
     )
     eng.bootstrap(
         spark,

@@ -95,7 +95,10 @@ def _n_cached(spark):
 
 # -- the operations ---------------------------------------------------------
 #
-# Each case: setup(spark, root) builds the starting state under root;
+# Each case is built with the bucket count of the state it writes (the
+# default of the engines' sizing rule for small data is one bucket, so
+# every case also runs at one); setup(spark, root) builds the starting
+# state under root;
 # run(spark, root) performs the operation through fresh handles;
 # snapshot(spark, root) reads the state through fresh handles, as
 # (state, extra): ``state`` is compared before the commit, both parts
@@ -137,12 +140,25 @@ def _bootstrap(spark, eng, rows):
     )
 
 
-def _replica(spark, root, n_buckets):
-    store = _engine(root, n_buckets).store
+def _replica(spark, root):
+    store = ReplicaStore(os.path.join(root, "w"))
     return _rows(store.read(spark, "t")), store.watermark("t")
 
 
-class CdcMerge:
+class Case:
+    """An operation on state hash-bucketed ``buckets`` ways. With more
+    than one bucket an operation can leave some untouched, which it
+    hard-links; at one bucket it rewrites everything and links nothing."""
+
+    kinds: set[str]
+
+    def __init__(self, buckets: int):
+        self.buckets = buckets
+        if buckets == 1:
+            self.kinds = self.kinds - {"link"}
+
+
+class CdcMerge(Case):
     """CdcEngine.merge_batch -> ReplicaStore.write_merged: Spark write,
     hard links of the untouched buckets, version stamp, pointer commit,
     retirement of the version beyond keep_versions."""
@@ -150,24 +166,22 @@ class CdcMerge:
     commit = staticmethod(lambda root: os.path.join(root, "w", "tables", "t", "_POINTER.json"))
     kinds = {"write", "link", "commit", "remove"}
 
-    @staticmethod
-    def setup(spark, root):
-        eng = _engine(root, 4)
+    def setup(self, spark, root):
+        eng = _engine(root, self.buckets)
         _bootstrap(spark, eng, [(i, f"g{i % 3}") for i in range(1, 9)])
         eng.merge_batch(spark, "t", _events(spark, [(1, "U", 1, "g9")]))
 
-    @staticmethod
-    def run(spark, root):
-        _engine(root, 4).merge_batch(
+    def run(self, spark, root):
+        _engine(root, self.buckets).merge_batch(
             spark, "t", _events(spark, [(2, "U", 2, "g7"), (3, "I", 20, "g1")])
         )
 
     @staticmethod
     def snapshot(spark, root):
-        return _replica(spark, root, 4), None
+        return _replica(spark, root), None
 
 
-class MvMerge:
+class MvMerge(Case):
     """IncrementalGroupCount.merge_batch: the before-state write, the
     whole replica merge (its own pointer commit included), the new
     aggregate version and the MV pointer commit — the commit point."""
@@ -175,27 +189,25 @@ class MvMerge:
     commit = staticmethod(lambda root: os.path.join(root, "mv", "data", "_POINTER.json"))
     kinds = {"write", "commit", "remove"}
 
-    @staticmethod
-    def _mv(root):
-        return IncrementalGroupCount(_engine(root, 2), "t", "grp", os.path.join(root, "mv"))
+    def _mv(self, root):
+        return IncrementalGroupCount(
+            _engine(root, self.buckets), "t", "grp", os.path.join(root, "mv")
+        )
 
-    @staticmethod
-    def setup(spark, root):
-        eng = _engine(root, 2)
+    def setup(self, spark, root):
+        eng = _engine(root, self.buckets)
         _bootstrap(spark, eng, [(i, f"g{i % 2}") for i in range(1, 7)])
         mv = IncrementalGroupCount(eng, "t", "grp", os.path.join(root, "mv"))
         mv.initialize(spark)
         mv.merge_batch(spark, _events(spark, [(1, "U", 1, "g2")]))
 
-    @staticmethod
-    def run(spark, root):
-        MvMerge._mv(root).merge_batch(
+    def run(self, spark, root):
+        self._mv(root).merge_batch(
             spark, _events(spark, [(2, "D", 2, None), (3, "I", 30, "g3")])
         )
 
-    @staticmethod
-    def snapshot(spark, root):
-        return _rows(MvMerge._mv(root).read(spark)), _replica(spark, root, 2)
+    def snapshot(self, spark, root):
+        return _rows(self._mv(root).read(spark)), _replica(spark, root)
 
 
 def _docs(spark, rows):
@@ -209,8 +221,12 @@ def _mk(i):
     return f"{_BASE} u{i} t1 t2 t3"
 
 
-def _index(spark, root):
-    return MinHashLshIndex(spark, os.path.join(root, "idx"), cap=3, threshold=0.2, n_buckets=4)
+def _index(spark, root, buckets=None):
+    """The index under ``root``: created with ``buckets``, or reopened
+    at the count pinned in its manifest."""
+    return MinHashLshIndex(
+        spark, os.path.join(root, "idx"), cap=3, threshold=0.2, n_buckets=buckets or 1
+    )
 
 
 def _index_snapshot(spark, root):
@@ -229,7 +245,7 @@ def _index_snapshot(spark, root):
     ), None
 
 
-class IndexIngest:
+class IndexIngest(Case):
     """MinHashLshIndex.ingest with a cap crossing (hot-set write and
     re-verification): log segments, copy-on-write tables, manifest."""
 
@@ -237,16 +253,17 @@ class IndexIngest:
     snapshot = staticmethod(_index_snapshot)
     kinds = {"write", "link", "commit"}
 
-    @staticmethod
-    def setup(spark, root):
-        _index(spark, root).ingest(_docs(spark, [(1, _mk(1)), (2, _mk(2)), (7, "z1 z2 z3 z4")]))
+    def setup(self, spark, root):
+        _index(spark, root, self.buckets).ingest(
+            _docs(spark, [(1, _mk(1)), (2, _mk(2)), (7, "z1 z2 z3 z4")])
+        )
 
     @staticmethod
     def run(spark, root):
         _index(spark, root).ingest(_docs(spark, [(3, _mk(3)), (4, _mk(4))]))
 
 
-class IndexRetract:
+class IndexRetract(Case):
     """MinHashLshIndex.retract with a down-crossing: tombstones, df/hot/
     pairs copy-on-write, orphan-segment clearing, manifest."""
 
@@ -254,10 +271,10 @@ class IndexRetract:
     snapshot = staticmethod(_index_snapshot)
     kinds = {"write", "link", "commit", "remove"}
 
-    @staticmethod
-    def setup(spark, root):
-        IndexIngest.setup(spark, root)
-        IndexIngest.run(spark, root)
+    def setup(self, spark, root):
+        ingest = IndexIngest(self.buckets)
+        ingest.setup(spark, root)
+        ingest.run(spark, root)
 
     @staticmethod
     def run(spark, root):
@@ -268,20 +285,23 @@ def _doc(i, text, lang="en", source="web"):
     return (i, text, lang, source, len(text))
 
 
-def _manifest(spark, root):
-    return IncrementalCurationManifest(spark, os.path.join(root, "mf"), n_buckets=4)
+def _manifest(spark, root, buckets=None):
+    """The manifest under ``root``: created with ``buckets``, or
+    reopened at the count pinned in its meta."""
+    return IncrementalCurationManifest(
+        spark, os.path.join(root, "mf"), n_buckets=buckets or 1
+    )
 
 
-class ManifestIngest:
+class ManifestIngest(Case):
     """IncrementalCurationManifest.ingest: four versioned tables and a
     fingerprint segment written concurrently, the meta commit, retirement."""
 
     commit = staticmethod(lambda root: os.path.join(root, "mf", "meta.json"))
     kinds = {"write", "commit", "remove"}
 
-    @staticmethod
-    def setup(spark, root):
-        mf = _manifest(spark, root)
+    def setup(self, spark, root):
+        mf = _manifest(spark, root, self.buckets)
         mf.initialize(
             spark.createDataFrame(
                 [_doc(0, "alpha beta gamma delta epsilon zeta eta theta")], DOCUMENTS
@@ -326,18 +346,25 @@ class ManifestIngest:
             _rows(mf.stats_by_lang()),
             _rows(mf.stats_by_source()),
             _rows(mf._read("totals", "split string, lang string, cum_tokens long")),
-            _rows(mf._read_fps(list(range(4)), meta["version"])),
+            _rows(mf._read_fps(list(range(mf.n_buckets)), meta["version"])),
         ), None
 
 
 @pytest.mark.parametrize(
     "case",
     [
-        pytest.param(CdcMerge, id="cdc_merge"),
-        pytest.param(MvMerge, id="mv_merge"),
-        pytest.param(IndexIngest, id="index_ingest", marks=pytest.mark.slow),
-        pytest.param(IndexRetract, id="index_retract", marks=pytest.mark.slow),
-        pytest.param(ManifestIngest, id="manifest_ingest", marks=pytest.mark.slow),
+        pytest.param(CdcMerge(4), id="cdc_merge"),
+        pytest.param(CdcMerge(1), id="cdc_merge_1bucket"),
+        pytest.param(MvMerge(2), id="mv_merge"),
+        pytest.param(MvMerge(1), id="mv_merge_1bucket"),
+        pytest.param(IndexIngest(4), id="index_ingest", marks=pytest.mark.slow),
+        pytest.param(IndexIngest(1), id="index_ingest_1bucket", marks=pytest.mark.slow),
+        pytest.param(IndexRetract(4), id="index_retract", marks=pytest.mark.slow),
+        pytest.param(IndexRetract(1), id="index_retract_1bucket", marks=pytest.mark.slow),
+        pytest.param(ManifestIngest(4), id="manifest_ingest", marks=pytest.mark.slow),
+        pytest.param(
+            ManifestIngest(1), id="manifest_ingest_1bucket", marks=pytest.mark.slow
+        ),
     ],
 )
 def test_every_crash_point_reads_old_or_new_state(spark, tmp_path, case):

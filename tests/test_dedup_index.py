@@ -140,7 +140,7 @@ def test_ingest_rewrites_only_touched_df_buckets(spark, tmp_path):
     docs = load_table(spark, "/root/testdata/sf0.001", "documents").select(
         "doc_id", "text"
     )
-    idx = MinHashLshIndex(spark, str(tmp_path / "idx"))
+    idx = MinHashLshIndex(spark, str(tmp_path / "idx"), n_buckets=16)
     idx.ingest(docs.filter(F.col("doc_id") < 400))
     before = _df_bucket_files(idx)
     assert len(before) > 4, "base ingest should populate many buckets"

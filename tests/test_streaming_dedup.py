@@ -264,7 +264,8 @@ def test_indexed_replay_after_retraction_drops_tombstoned_docs(spark, tmp_path):
         return Row(doc_id=i, text=text, lang="en", source="s", n_chars=len(text))
 
     idx = MinHashLshIndex(spark, str(tmp_path / "idx"))
-    # doc 3 is bandless (under 3 tokens): admitted without a stored trace
+    # doc 3 is bandless (under 3 tokens): admitted, and held in the
+    # shingle log as one NULL-shingle row
     batch = spark.createDataFrame(
         [doc(1, uniq), doc(2, other), doc(3, "a b")], DOCUMENTS
     )
@@ -286,4 +287,4 @@ def test_indexed_replay_after_retraction_drops_tombstoned_docs(spark, tmp_path):
     # still a replay: the index version must not move (no re-ingest)
     assert idx._read_append(
         "shingles", "doc_id long, shingle string"
-    ).select("doc_id").distinct().count() == 2  # logs keep 1 and 2
+    ).select("doc_id").distinct().count() == 3  # logs keep 1, 2 and 3

@@ -9,10 +9,14 @@ transfer), min-of-N, with the job labelled in the UI.
 Usage::
 
     python tools/perf_probe.py [--queries a,b,c | --top] \
-        [--suffix before|after] [--passes 3] [--no-explain] [--ui]
+        [--suffix before|after] [--passes 3] [--no-explain] [--ui] [--threads]
 
 Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1), SPARK_GRAFT_CPUS.
-Prints one JSON line: {"noop_sec": {name: s}, "sf_dir": ...}.
+Prints one JSON line: {"noop_sec": {name: s}, "sf_dir": ...}. With
+``--threads`` the line also carries ``jvm_thread_cpu_s``: per query, the
+JVM's CPU-seconds over its timed passes split into JIT compiler threads,
+executor task threads, GC (and VM safepoint) threads and everything else
+(py4j and the driver), read from ``/proc/<jvm pid>/task/*/stat`` (Linux).
 """
 
 from __future__ import annotations
@@ -23,6 +27,7 @@ import io
 import json
 import os
 import sys
+import threading
 import time
 
 # the dozen most expensive recorded entries (BENCH_r10 / BASELINE r11)
@@ -43,6 +48,80 @@ TOP = [
 ]
 
 
+def parse_task_stat(line: str) -> tuple[tuple[int, int], str, int]:
+    """((thread id, start time), thread name, user + system CPU ticks) of
+    one ``/proc/<pid>/task/<tid>/stat`` line. The name sits in
+    parentheses and may itself hold spaces or parentheses, so the fields
+    are counted from the last ``)``; start time keeps a reused thread id
+    apart from the thread that held it before."""
+    head, _, rest = line.rpartition(")")
+    tid, _, name = head.partition(" (")
+    f = rest.split()  # f[0] is stat field 3 (state)
+    return (int(tid), int(f[19])), name, int(f[11]) + int(f[12])
+
+
+def thread_kind(name: str) -> str:
+    """The CPU share a JVM thread's (15-character) name belongs to."""
+    if "CompilerThre" in name:  # "C1 CompilerThre", "C2 CompilerThre"
+        return "jit"
+    if name.startswith("Executor task"):
+        return "tasks"
+    if name.startswith(("GC Thread", "G1 ", "VM Thread")):
+        return "gc"
+    return "driver"  # py4j connections, the DAG scheduler, listeners, ...
+
+
+def cpu_by_kind(first: dict, last: dict, ticks_per_s: float) -> dict[str, float]:
+    """CPU-seconds per thread kind between two samples (key -> (name,
+    ticks)); a thread absent from ``first`` started inside the window."""
+    out = dict.fromkeys(("jit", "tasks", "gc", "driver"), 0.0)
+    for key, (name, ticks) in last.items():
+        out[thread_kind(name)] += (ticks - first.get(key, (name, 0))[1]) / ticks_per_s
+    return {k: round(v, 3) for k, v in out.items()}
+
+
+class ThreadCpu:
+    """CPU of one process's threads over a ``with`` block, by kind.
+    Samples every ``interval`` seconds and keeps each thread's last
+    reading, so a thread that exits inside the window still counts up to
+    its last sample (a start/end difference keyed by name loses it)."""
+
+    def __init__(self, pid: int, interval: float = 0.05):
+        self.dir = f"/proc/{pid}/task"
+        self.interval = interval
+        self._stop = threading.Event()
+
+    def _sample(self) -> dict:
+        out = {}
+        for tid in os.listdir(self.dir):
+            try:
+                with open(os.path.join(self.dir, tid, "stat")) as fh:
+                    key, name, ticks = parse_task_stat(fh.read())
+            except (FileNotFoundError, ProcessLookupError):
+                continue  # exited between the listing and the read
+            out[key] = (name, ticks)
+        return out
+
+    def _run(self) -> None:
+        while not self._stop.wait(self.interval):
+            self.last.update(self._sample())
+
+    def __enter__(self) -> "ThreadCpu":
+        self.first = self._sample()
+        self.last = dict(self.first)
+        self._thread = threading.Thread(target=self._run, daemon=True)
+        self._thread.start()
+        return self
+
+    def __exit__(self, *exc) -> None:
+        self._stop.set()
+        self._thread.join()
+        self.last.update(self._sample())
+
+    def seconds(self) -> dict[str, float]:
+        return cpu_by_kind(self.first, self.last, os.sysconf("SC_CLK_TCK"))
+
+
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--queries", default="")
@@ -52,6 +131,7 @@ def main() -> None:
     ap.add_argument("--no-explain", action="store_true")
     ap.add_argument("--plans-dir", default="plans/r11")
     ap.add_argument("--ui", action="store_true")
+    ap.add_argument("--threads", action="store_true")
     args = ap.parse_args()
 
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -83,6 +163,9 @@ def main() -> None:
     QUERIES["c5_join_derived_table"](spark, sf_dir).collect()
 
     timings: dict[str, float] = {}
+    thread_cpu: dict[str, dict[str, float]] = {}
+    if args.threads:
+        jvm_pid = spark._jvm.java.lang.ProcessHandle.current().pid()  # noqa: SLF001
     for name in names:
         df = QUERIES[name](spark, sf_dir)
         if not args.no_explain:
@@ -98,22 +181,29 @@ def main() -> None:
             print(f"  {name}: plan captured", file=sys.stderr)
             continue
         best = None
-        for i in range(args.passes):
-            sc.setJobDescription(f"{name} noop pass {i}")
-            # fresh builder per pass INSIDE the timed region (bench.py
-            # parity: operators like dd7 run driver-coordinated jobs at
-            # build time); memoized upstreams (dedup shingle memo etc.)
-            # stay warm exactly as in bench.py's min-of-3
-            t0 = time.perf_counter()
-            d = QUERIES[name](spark, sf_dir)
-            d.write.format("noop").mode("overwrite").save()
-            el = time.perf_counter() - t0
-            best = el if best is None else min(best, el)
+        window = ThreadCpu(jvm_pid) if args.threads else contextlib.nullcontext()
+        with window:
+            for i in range(args.passes):
+                sc.setJobDescription(f"{name} noop pass {i}")
+                # fresh builder per pass INSIDE the timed region (bench.py
+                # parity: operators like dd7 run driver-coordinated jobs at
+                # build time); memoized upstreams (dedup shingle memo etc.)
+                # stay warm exactly as in bench.py's min-of-3
+                t0 = time.perf_counter()
+                d = QUERIES[name](spark, sf_dir)
+                d.write.format("noop").mode("overwrite").save()
+                el = time.perf_counter() - t0
+                best = el if best is None else min(best, el)
         sc.setJobDescription(None)
+        if args.threads:
+            thread_cpu[name] = window.seconds()
         timings[name] = round(best, 3)
         print(f"  {name}: {timings[name]} s", file=sys.stderr)
 
-    print(json.dumps({"noop_sec": timings, "sf_dir": sf_dir}))
+    out = {"noop_sec": timings, "sf_dir": sf_dir}
+    if args.threads:
+        out["jvm_thread_cpu_s"] = thread_cpu
+    print(json.dumps(out))
 
 
 if __name__ == "__main__":
