@@ -72,7 +72,7 @@ Per-operation cost envelope (the delta contract, honest about I/O):
 
 Storage layout (all under ``index_dir``)::
 
-    manifest.json                  {"version", "n_docs", "n_buckets",
+    manifest.json                  {"version", "n_docs", "n_buckets", "layout",
                                     "tables": {"df": v, "hot": v, "pairs": v}}
     shingles/v<N>/_IDX_BUCKET=<b>/...  log segments, b = hash(doc_id)
     bands/v<N>/_IDX_BUCKET=<b>/...     log segments, b = hash(band_id, sig)
@@ -83,12 +83,12 @@ Storage layout (all under ``index_dir``)::
     hot/v<N>/_IDX_BUCKET=<b>/...       copy-on-write, b = hash(shingle)
     pairs/v<N>/_IDX_BUCKET=<b>/...     copy-on-write, b = hash(doc_a)
 
-The manifest commits LAST, so a crashed operation leaves the previous
-version fully readable. Log tables are SEGMENTED by the writing
-operation's version and reads are manifest-gated, so a crashed
-operation's orphan segment is invisible and a RETRY of the same batch
-overwrites it instead of double-appending. The commit, segment-read,
-copy-on-write and retention rules live in ``state.py``. Write
+The seven tables are one ``state.TableSet`` and the manifest commits
+LAST, so a crashed operation leaves the previous version fully
+readable. Log tables are SEGMENTED by the writing operation's version
+and reads are manifest-gated, so a crashed operation's orphan segment
+is invisible and a RETRY of the same batch overwrites it instead of
+double-appending. Write
 parallelism is bounded by the bucket count, which also sets the files
 per write (one per touched bucket): one by default, since an index
 starts empty and a small dump touches every bucket; a cluster deployment
@@ -128,6 +128,13 @@ from sfguide_getting_started_openflow_postgresql_cdc_spark.sources.loader import
 )
 
 IDX_BUCKET = "_IDX_BUCKET"
+# stored table schemas
+SHINGLES = "doc_id long, shingle string"
+BANDS = "doc_id long, band_id string, sig string"
+CANDS = "doc_a long, doc_b long"
+DF = "shingle string, df long"
+HOT = "shingle string"
+PAIRS = "doc_a long, doc_b long, jaccard double"
 
 
 def _shingle_batch(docs: DataFrame) -> DataFrame:
@@ -170,51 +177,31 @@ class MinHashLshIndex:
         self.cap = cap
         self.threshold = threshold
         os.makedirs(index_dir, exist_ok=True)
-        man = self._manifest()
         # bucket count is pinned at creation — the hash layout on disk
         # must match the exprs used to prune reads forever after. An index
         # starts empty, and every dump touches every bucket at a small
         # fan-out, so the default is one (state.bucket_count of 0 bytes)
-        self.n_buckets = int(man.get("n_buckets", n_buckets))
+        self.n_buckets = int(self.tables().doc.get("n_buckets", n_buckets))
 
-    # -- manifest / storage plumbing ------------------------------------
+    # -- storage ---------------------------------------------------------
 
     LAYOUT_VERSION = 2  # v2: log tables segmented by operation version
+    _TABLES = {
+        **dict.fromkeys(("shingles", "bands", "cands", "tombstones"), state.TableSet.LOG),
+        **dict.fromkeys(("df", "hot", "pairs"), state.TableSet.COW),
+    }
 
-    def _manifest(self) -> dict:
-        man = state.read_json(
-            os.path.join(self.dir, "manifest.json"),
-            {"version": 0, "n_docs": 0, "tables": {}},
+    def tables(self) -> state.TableSet:
+        """The index's tables at the committed ``manifest.json``: one
+        operation's reads, writes and commit."""
+        return state.TableSet(
+            self.dir,
+            "manifest.json",
+            self._TABLES,
+            bucket_col=IDX_BUCKET,
+            layout=self.LAYOUT_VERSION,
+            empty={"n_docs": 0},
         )
-        if man["version"] > 0 and man.get("layout", 1) != self.LAYOUT_VERSION:
-            # a flat-log (pre-segmentation) index would be SILENTLY
-            # read as having empty logs — refuse loudly instead
-            raise ValueError(
-                f"index at {self.dir} uses storage layout "
-                f"{man.get('layout', 1)}, this code reads layout "
-                f"{self.LAYOUT_VERSION}; rebuild the index "
-                "(re-ingest the corpus) to migrate"
-            )
-        return man
-
-    _LOG_TABLES = ("shingles", "bands", "cands", "tombstones")
-
-    def _clear_orphan_segments(self, version: int, wrote: set[str]) -> None:
-        """Remove v{version} segments of log tables THIS operation did
-        not write. Without this, a crashed ingest's orphan bands/v2
-        would be resurrected when a later RETRACT (which only writes
-        tombstones) commits version 2 — the `v <= manifest.version`
-        read gate cannot tell which OPERATION produced a segment, so
-        the committing operation must own every segment at its
-        version."""
-        for name in self._LOG_TABLES:
-            if name not in wrote:
-                state.remove_dir(state.version_dir(os.path.join(self.dir, name), version))
-
-    def _commit(self, manifest: dict) -> None:
-        manifest["n_buckets"] = self.n_buckets
-        manifest["layout"] = self.LAYOUT_VERSION
-        state.commit_json(os.path.join(self.dir, "manifest.json"), manifest)
 
     # bucket exprs — the single source of truth for the disk layout
     def _doc_bucket(self, col: str = "doc_id"):
@@ -236,99 +223,6 @@ class MinHashLshIndex:
             r["b"] for r in df.select(expr.alias("b")).distinct().collect()
         )
 
-    def _read_files(self, files: list[str], schema: str) -> DataFrame:
-        if files:
-            return self.spark.read.schema(schema).parquet(*files)
-        return state.empty_frame(self.spark, schema)
-
-    def _log_files(self, name: str, buckets: list[int] | None = None) -> list[str]:
-        return state.segment_files(
-            os.path.join(self.dir, name), self._manifest()["version"], IDX_BUCKET,
-            buckets,
-        )
-
-    def _read_append(
-        self, name: str, schema: str, buckets: list[int] | None = None
-    ) -> DataFrame:
-        return self._read_files(self._log_files(name, buckets), schema)
-
-    def _append(
-        self, name: str, df: DataFrame, bucket_expr=None, *, version: int
-    ) -> None:
-        """Write one log SEGMENT — the batch's rows land in
-        ``name/v{version}`` with mode=overwrite, so a retry of a crashed
-        operation (same not-yet-committed version) REPLACES the orphan
-        segment instead of appending duplicate rows next to it; reads
-        gate on the manifest version (``state.segment_files``), so the
-        segment only becomes visible when the manifest commits.
-        ``bucket_expr`` partitions the segment into hash-bucket dirs for
-        pruned reads; one writer task per bucket (repartition on the
-        bucket column), so file counts track buckets, not input
-        partitioning."""
-        path = os.path.join(self.dir, name, f"v{version}")
-        if bucket_expr is None:
-            df.write.mode("overwrite").parquet(path)
-        else:
-            (
-                df.withColumn(IDX_BUCKET, bucket_expr)
-                .repartition(F.col(IDX_BUCKET))
-                .write.mode("overwrite")
-                .partitionBy(IDX_BUCKET)
-                .parquet(path)
-            )
-
-    # -- copy-on-write versioned tables ---------------------------------
-
-    def _cow_version(self, name: str) -> int:
-        return int(self._manifest().get("tables", {}).get(name, 0))
-
-    def _cow_path(self, name: str, version: int) -> str:
-        return state.version_dir(os.path.join(self.dir, name), version)
-
-    def _cow_read(
-        self, name: str, schema: str, buckets: list[int] | None = None
-    ) -> DataFrame:
-        v = self._cow_version(name)
-        if v <= 0:
-            return state.empty_frame(self.spark, schema)
-        return self._read_files(
-            state.files_under(self._cow_path(name, v), IDX_BUCKET, buckets), schema
-        )
-
-    def _cow_write(
-        self,
-        name: str,
-        rows: DataFrame,
-        bucket_expr,
-        touched: list[int],
-        new_version: int,
-    ) -> None:
-        """Write version ``new_version`` of a COW table: materialize
-        ``rows`` (which must cover exactly the ``touched`` buckets) and
-        hard-link every other bucket dir from the current version —
-        keyed by the index manifest instead of a per-table pointer so
-        ALL tables flip with one manifest commit."""
-        out = self._cow_path(name, new_version)
-        (
-            rows.withColumn(IDX_BUCKET, bucket_expr)
-            .repartition(F.col(IDX_BUCKET))
-            .write.mode("overwrite")
-            .partitionBy(IDX_BUCKET)
-            .parquet(out)
-        )
-        old_v = self._cow_version(name)
-        if old_v > 0:
-            state.link_untouched(
-                self._cow_path(name, old_v), out, IDX_BUCKET, touched, ".parquet"
-            )
-
-    def _retire_cow_versions(self) -> None:
-        """Keep each COW table's committed version plus the one below it
-        (in-flight readers of the previous version) — ``state.retire``."""
-        tables = self._manifest().get("tables", {})
-        for name in ("df", "hot", "pairs"):
-            state.retire(os.path.join(self.dir, name), int(tables.get(name, 0)), keep=2)
-
     def _bucket_rows(self, cands: DataFrame) -> DataFrame:
         """One ("a", bucket of doc_a) and one ("b", bucket of doc_b) row
         per candidate: grouped by (t, b), the buckets are the verify-side
@@ -341,15 +235,14 @@ class MinHashLshIndex:
 
     # -- shared read helpers --------------------------------------------
 
-    def _tombstones(self) -> DataFrame | None:
+    def _tombstones(self, ts: state.TableSet) -> DataFrame | None:
         """Retracted doc_ids, or None when no retraction ever happened
         (the common case — skipping the anti-join keeps ingest plans
         lean). Version-gated like every log read: a crashed retract's
         orphan tombstone segment is invisible until its retry commits."""
-        files = self._log_files("tombstones")
-        if not files:
+        if not ts.files("tombstones"):
             return None
-        return self.spark.read.schema("doc_id long").parquet(*files)
+        return ts.read(self.spark, "tombstones", "doc_id long")
 
     @staticmethod
     def _anti_docs(df: DataFrame, excluded: DataFrame | None, col: str = "doc_id"):
@@ -359,8 +252,38 @@ class MinHashLshIndex:
             F.broadcast(excluded.withColumnRenamed("doc_id", col)), col, "left_anti"
         )
 
+    def _reverify_set(
+        self, ts: state.TableSet, crossing: DataFrame, excluded: DataFrame | None
+    ) -> DataFrame:
+        """The stored candidates (persisted) touching a surviving doc that
+        holds a ``crossing`` shingle — the RARE corpus-bounded step
+        (module docstring): a by-shingle lookup over the doc-bucketed
+        shingle log finds the docs whose capped sets changed."""
+        affected = (
+            self._anti_docs(ts.read(self.spark, "shingles", SHINGLES), excluded)
+            .join(F.broadcast(crossing), "shingle")
+            .select("doc_id")
+            .distinct()
+        )
+        cands = self._anti_docs(
+            self._anti_docs(ts.read(self.spark, "cands", CANDS), excluded, "doc_a"),
+            excluded,
+            "doc_b",
+        )
+        return (
+            cands.join(F.broadcast(affected), cands.doc_a == affected.doc_id, "left_semi")
+            .unionByName(
+                cands.join(
+                    F.broadcast(affected), cands.doc_b == affected.doc_id, "left_semi"
+                )
+            )
+            .distinct()
+            .persist()
+        )
+
     def _verified_pairs(
         self,
+        ts: state.TableSet,
         verify_set: DataFrame,
         hot: DataFrame,
         extra_sh: DataFrame | None,
@@ -382,10 +305,7 @@ class MinHashLshIndex:
         if invol_buckets is None:
             invol_buckets = self._bucket_set(involved, self._doc_bucket())
         stored_sh = self._anti_docs(
-            self._read_append(
-                "shingles", "doc_id long, shingle string", invol_buckets
-            ),
-            excluded,
+            ts.read(self.spark, "shingles", SHINGLES, invol_buckets), excluded
         )
         all_sh = (
             stored_sh.unionByName(extra_sh) if extra_sh is not None else stored_sh
@@ -442,17 +362,15 @@ class MinHashLshIndex:
     def pairs(self) -> DataFrame:
         """Current verified near-dup pairs view — equal to fresh dd4 on
         every document ingested so far and not retracted."""
-        return self._cow_read("pairs", "doc_a long, doc_b long, jaccard double")
+        return self.tables().read(self.spark, "pairs", PAIRS)
 
     def ingest(self, docs: DataFrame) -> dict:
         """Append a batch of (doc_id, text) documents; update bands, df
         counts, the hot set, the candidate log, and the verified pairs
         view. All reads and writes are delta- or bucket-bounded except
         the rare cap-crossing re-verify (module docstring)."""
-        spark = self.spark
-        man = self._manifest()
-        new_version = man["version"] + 1
-        tomb = self._tombstones()
+        ts = self.tables()
+        tomb = self._tombstones(ts)
 
         batch_sh = batch_bands = new_cands = merged = None
         invol_sh = reverify = verify_set = None
@@ -522,10 +440,7 @@ class MinHashLshIndex:
                 )
             band_buckets = sorted(int(r["b"]) for r in tagged if r["t"] == "band")
             stored_bands = self._anti_docs(
-                self._read_append(
-                    "bands", "doc_id long, band_id string, sig string", band_buckets
-                ),
-                tomb,
+                ts.read(self.spark, "bands", BANDS, band_buckets), tomb
             )
             all_bands = stored_bands.unionByName(batch_bands)
 
@@ -551,7 +466,7 @@ class MinHashLshIndex:
             # shingle hashes into a touched bucket, and crossing requires a
             # batch arrival, so the pruned read sees every possible crossing
             df_buckets = sorted(int(r["b"]) for r in tagged if r["t"] == "df")
-            old_df = self._cow_read("df", "shingle string, df long", df_buckets)
+            old_df = ts.read(self.spark, "df", DF, df_buckets)
             batch_df = batch_sh.groupBy("shingle").agg(F.count("*").alias("bdf"))
             merged = (
                 old_df.join(batch_df, "shingle", "full_outer")
@@ -590,10 +505,10 @@ class MinHashLshIndex:
                 docs.select(F.lit("id").alias("t"), F.col("doc_id").alias("b"),
                             F.lit(0).alias("stored"))
                 .unionByName(
-                    self._read_append(
-                        "shingles", "doc_id long, shingle string", doc_buckets
-                    ).select(F.lit("id").alias("t"), F.col("doc_id").alias("b"),
-                             F.lit(1).alias("stored"))
+                    ts.read(self.spark, "shingles", SHINGLES, doc_buckets).select(
+                        F.lit("id").alias("t"), F.col("doc_id").alias("b"),
+                        F.lit(1).alias("stored"),
+                    )
                 )
             )
 
@@ -620,7 +535,7 @@ class MinHashLshIndex:
             # nothing else races on), and a v{new} log segment is invisible
             # until the manifest commits, so appending before the probe
             # resolves is crash-equivalent to appending after it — a retry
-            # overwrites the segment either way (see ``_append``); a failure
+            # overwrites the segment either way (``state.TableSet``); a failure
             # of any of the three surfaces after all three finish. The
             # cands append stays in the FINAL wave: it reads `new_cands`,
             # which the probe is materializing — running them concurrently
@@ -628,15 +543,12 @@ class MinHashLshIndex:
             cross_and_vk = state.run_concurrently(
                 [
                     _probe,
-                    lambda: self._append(
+                    lambda: ts.write(
                         "shingles",
                         batch_sh.unionByName(_unshingled(docs)),
                         self._doc_bucket(),
-                        version=new_version,
                     ),
-                    lambda: self._append(
-                        "bands", batch_bands, self._band_bucket(), version=new_version
-                    ),
+                    lambda: ts.write("bands", batch_bands, self._band_bucket()),
                 ]
             )[0]
             held = sorted(int(r["b"]) for r in cross_and_vk if r["t"] == "id")
@@ -647,49 +559,13 @@ class MinHashLshIndex:
                 )
             n_crossing = sum(r["n"] for r in cross_and_vk if r["t"] == "x")
 
-            hot_old = self._cow_read("hot", "shingle string")
+            hot_old = ts.read(self.spark, "hot", HOT)
             hot_new = (
                 hot_old.unionByName(crossing).distinct() if n_crossing else hot_old
             )
 
             if n_crossing:
-                # RARE corpus-bounded step (module docstring): by-shingle
-                # lookup over the doc-bucketed shingle log to find stored
-                # docs whose capped sets changed
-                stored_sh_full = self._anti_docs(
-                    self._read_append("shingles", "doc_id long, shingle string"),
-                    tomb,
-                )
-                affected_old = (
-                    stored_sh_full.join(F.broadcast(crossing), "shingle")
-                    .select("doc_id")
-                    .distinct()
-                )
-                stored_cands = self._anti_docs(
-                    self._anti_docs(
-                        self._read_append("cands", "doc_a long, doc_b long"),
-                        tomb,
-                        "doc_a",
-                    ),
-                    tomb,
-                    "doc_b",
-                )
-                reverify = (
-                    stored_cands.join(
-                        F.broadcast(affected_old),
-                        stored_cands.doc_a == affected_old.doc_id,
-                        "left_semi",
-                    )
-                    .unionByName(
-                        stored_cands.join(
-                            F.broadcast(affected_old),
-                            stored_cands.doc_b == affected_old.doc_id,
-                            "left_semi",
-                        )
-                    )
-                    .distinct()
-                    .persist()
-                )
+                reverify = self._reverify_set(ts, crossing, tomb)
                 verify_set = new_cands.unionByName(reverify).distinct().persist()
             else:
                 reverify = None
@@ -717,6 +593,7 @@ class MinHashLshIndex:
             invol_buckets = sorted({r["b"] for r in vk if r["t"] in ("a", "b")})
 
             verified, invol_sh = self._verified_pairs(
+                ts,
                 verify_set,
                 hot_new,
                 extra_sh=batch_sh,
@@ -728,9 +605,7 @@ class MinHashLshIndex:
             # the passers. With unique doc_ids, every NEW candidate touches
             # a batch doc, so stored pairs can only collide with REVERIFY
             # keys. Touched buckets come from the re-examined keys' doc_a.
-            old_pairs_t = self._cow_read(
-                "pairs", "doc_a long, doc_b long, jaccard double", pair_buckets
-            )
+            old_pairs_t = ts.read(self.spark, "pairs", PAIRS, pair_buckets)
             kept = (
                 old_pairs_t.join(
                     F.broadcast(reverify), ["doc_a", "doc_b"], "left_anti"
@@ -742,7 +617,7 @@ class MinHashLshIndex:
 
             # bookkeeping counts, all read off the probe/bucket jobs above
             metrics = {
-                "version": new_version,
+                "version": ts.version + 1,
                 "batch_docs": n_batch_docs,
                 "new_candidates": n_new,
                 "reverified_candidates": n_reverify,
@@ -750,46 +625,36 @@ class MinHashLshIndex:
                 "touched_pair_buckets": len(pair_buckets),
             }
 
-            # commit: write the new COW versions FIRST (their plans read the
-            # snapshot-pinned stored state), then append the immutable logs,
-            # then commit the manifest (readers of the old version unaffected).
-            # WITHIN each group the writes are independent Spark jobs over
-            # pinned inputs (every stored-state read enumerated its concrete
-            # file list at plan time, and the batch frames are cached), so
-            # they run CONCURRENTLY from driver threads — the serial version
-            # paid one per-job scheduling floor per table, the dominant cost
-            # of a micro-batch ingest on an otherwise idle cluster.
-            tables = dict(man.get("tables", {}))
+            # commit: write the new table versions, then commit the manifest
+            # (readers of the old version unaffected). The writes are
+            # independent Spark jobs over pinned inputs (every stored-state
+            # read enumerated its concrete file list at plan time, and the
+            # batch frames are cached), so they run CONCURRENTLY from driver
+            # threads — the serial version paid one per-job scheduling floor
+            # per table, the dominant cost of a micro-batch ingest on an
+            # otherwise idle cluster.
             cow_jobs = [
-                lambda: self._cow_write(
+                lambda: ts.write(
                     "df",
                     merged.select("shingle", F.col("new_df").alias("df")),
                     self._shingle_bucket(),
                     df_buckets,
-                    new_version,
                 )
             ]
-            tables["df"] = new_version
             if n_crossing:
                 hot_buckets = self._bucket_set(crossing, self._shingle_bucket())
-                hot_rows = self._cow_read(
-                    "hot", "shingle string", hot_buckets
-                ).unionByName(crossing).distinct()
+                hot_rows = ts.read(self.spark, "hot", HOT, hot_buckets).unionByName(
+                    crossing
+                ).distinct()
                 cow_jobs.append(
-                    lambda: self._cow_write(
-                        "hot", hot_rows, self._shingle_bucket(), hot_buckets,
-                        new_version,
+                    lambda: ts.write("hot", hot_rows, self._shingle_bucket(), hot_buckets)
+                )
+            if pair_buckets or ts.committed("pairs") is None:
+                cow_jobs.append(
+                    lambda: ts.write(
+                        "pairs", new_pairs, self._doc_bucket("doc_a"), pair_buckets
                     )
                 )
-                tables["hot"] = new_version
-            if pair_buckets or self._cow_version("pairs") == 0:
-                cow_jobs.append(
-                    lambda: self._cow_write(
-                        "pairs", new_pairs, self._doc_bucket("doc_a"),
-                        pair_buckets, new_version,
-                    )
-                )
-                tables["pairs"] = new_version
             # Concurrency shape (re-measured r12): the shingles/bands
             # appends already ran overlapped with the probe job above, so
             # the final wave is the two-to-three remaining writes — df,
@@ -800,18 +665,12 @@ class MinHashLshIndex:
             # vs a stable 6.7-7.5 s) and stays reverted; this 3-4-way wave
             # measured faster than the r11 two-wave form. Snapshot-pinned
             # reads make any order CORRECT; the split is a schedule choice.
-            cow_jobs.append(
-                lambda: self._append("cands", new_cands, version=new_version)
-            )
+            cow_jobs.append(lambda: ts.write("cands", new_cands))
             state.run_concurrently(cow_jobs)
-            self._clear_orphan_segments(
-                new_version, wrote={"shingles", "bands", "cands"}
-            )
-            self._commit(
+            ts.commit(
                 {
-                    "version": new_version,
-                    "n_docs": man["n_docs"] + metrics["batch_docs"],
-                    "tables": tables,
+                    "n_docs": ts.doc["n_docs"] + metrics["batch_docs"],
+                    "n_buckets": self.n_buckets,
                 }
             )
         finally:
@@ -821,7 +680,6 @@ class MinHashLshIndex:
                       reverify, verify_set):
                 if f is not None:
                     f.unpersist()
-        self._retire_cow_versions()
         return metrics
 
     def retract(self, doc_ids) -> dict:
@@ -832,9 +690,8 @@ class MinHashLshIndex:
         afterwards equals a fresh build on the surviving docs (property
         test). ``doc_ids``: list[int] or a (doc_id) DataFrame."""
         spark = self.spark
-        man = self._manifest()
-        new_version = man["version"] + 1
-        tomb = self._tombstones()
+        ts = self.tables()
+        tomb = self._tombstones(ts)
 
         r = r_sh = merged = dropped = reverify = invol_sh = None
         try:
@@ -846,16 +703,16 @@ class MinHashLshIndex:
                 )
             r = self._anti_docs(req, tomb).persist()  # idempotent re-retract
             n_retract = r.count()
-            metrics = {"version": new_version, "retracted_docs": n_retract}
+            metrics = {"version": ts.version + 1, "retracted_docs": n_retract}
             if n_retract == 0:
-                metrics["version"] = man["version"]
+                metrics["version"] = ts.version
                 return metrics
             excluded = r if tomb is None else tomb.unionByName(r)
 
             # retracted docs' shingles: doc-bucket-pruned log read
             r_buckets = self._bucket_set(r, self._doc_bucket())
             r_sh = (
-                self._read_append("shingles", "doc_id long, shingle string", r_buckets)
+                ts.read(spark, "shingles", SHINGLES, r_buckets)
                 .join(F.broadcast(r), "doc_id", "left_semi")
                 .filter(F.col("shingle").isNotNull())
                 .persist()
@@ -864,7 +721,7 @@ class MinHashLshIndex:
 
             # df decrement over the touched shingle buckets only
             df_buckets = self._bucket_set(dec, self._shingle_bucket())
-            old_df = self._cow_read("df", "shingle string, df long", df_buckets)
+            old_df = ts.read(spark, "df", DF, df_buckets)
             merged = (
                 old_df.join(dec, "shingle", "left")
                 .select(
@@ -890,7 +747,7 @@ class MinHashLshIndex:
             n_hot_down = hot_down.count()
             n_crossing = crossing_down.count()
 
-            hot_old = self._cow_read("hot", "shingle string")
+            hot_old = ts.read(spark, "hot", HOT)
             hot_new = (
                 hot_old.join(F.broadcast(hot_down), "shingle", "left_anti")
                 if n_hot_down
@@ -898,44 +755,9 @@ class MinHashLshIndex:
             )
 
             if n_crossing:
-                # rare by-shingle lookup (same amortized shape as ingest's
-                # up-crossing path)
-                stored_sh_full = self._anti_docs(
-                    self._read_append("shingles", "doc_id long, shingle string"),
-                    excluded,
-                )
-                affected = (
-                    stored_sh_full.join(F.broadcast(crossing_down), "shingle")
-                    .select("doc_id")
-                    .distinct()
-                )
-                stored_cands = self._anti_docs(
-                    self._anti_docs(
-                        self._read_append("cands", "doc_a long, doc_b long"),
-                        excluded,
-                        "doc_a",
-                    ),
-                    excluded,
-                    "doc_b",
-                )
-                reverify = (
-                    stored_cands.join(
-                        F.broadcast(affected),
-                        stored_cands.doc_a == affected.doc_id,
-                        "left_semi",
-                    )
-                    .unionByName(
-                        stored_cands.join(
-                            F.broadcast(affected),
-                            stored_cands.doc_b == affected.doc_id,
-                            "left_semi",
-                        )
-                    )
-                    .distinct()
-                    .persist()
-                )
+                reverify = self._reverify_set(ts, crossing_down, excluded)
                 verified, invol_sh = self._verified_pairs(
-                    reverify, hot_new, extra_sh=None, excluded=excluded
+                    ts, reverify, hot_new, extra_sh=None, excluded=excluded
                 )
             else:
                 reverify, verified, invol_sh = None, None, None
@@ -972,30 +794,22 @@ class MinHashLshIndex:
                 touched_pair_buckets=len(pair_buckets),
             )
 
-            tables = dict(man.get("tables", {}))
-            self._cow_write(
+            ts.write(
                 "df",
                 merged.filter(F.col("new_df") > 0).select(
                     "shingle", F.col("new_df").alias("df")
                 ),
                 self._shingle_bucket(),
                 df_buckets,
-                new_version,
             )
-            tables["df"] = new_version
             if n_hot_down:
                 hot_buckets = self._bucket_set(hot_down, self._shingle_bucket())
-                hot_rows = self._cow_read("hot", "shingle string", hot_buckets).join(
+                hot_rows = ts.read(spark, "hot", HOT, hot_buckets).join(
                     F.broadcast(hot_down), "shingle", "left_anti"
                 )
-                self._cow_write(
-                    "hot", hot_rows, self._shingle_bucket(), hot_buckets, new_version
-                )
-                tables["hot"] = new_version
+                ts.write("hot", hot_rows, self._shingle_bucket(), hot_buckets)
             if pair_buckets:
-                old_pairs_t = self._cow_read(
-                    "pairs", "doc_a long, doc_b long, jaccard double", pair_buckets
-                )
+                old_pairs_t = ts.read(spark, "pairs", PAIRS, pair_buckets)
                 kept = old_pairs_t.join(F.broadcast(ra), "doc_a", "left_anti").join(
                     F.broadcast(rb), "doc_b", "left_anti"
                 )
@@ -1004,24 +818,18 @@ class MinHashLshIndex:
                         F.broadcast(reverify), ["doc_a", "doc_b"], "left_anti"
                     )
                     kept = kept.unionByName(verified)
-                self._cow_write(
-                    "pairs", kept, self._doc_bucket("doc_a"), pair_buckets, new_version
-                )
-                tables["pairs"] = new_version
-            self._append("tombstones", r, version=new_version)
-            self._clear_orphan_segments(new_version, wrote={"tombstones"})
-            self._commit(
+                ts.write("pairs", kept, self._doc_bucket("doc_a"), pair_buckets)
+            ts.write("tombstones", r)
+            ts.commit(
                 {
-                    "version": new_version,
-                    "n_docs": max(man["n_docs"] - n_retract, 0),
-                    "tables": tables,
+                    "n_docs": max(ts.doc["n_docs"] - n_retract, 0),
+                    "n_buckets": self.n_buckets,
                 }
             )
         finally:
             for f in (r, r_sh, merged, dropped, reverify, invol_sh):
                 if f is not None:
                     f.unpersist()
-        self._retire_cow_versions()
         # retraction invalidates the SESSION memos (shared shingle sets,
         # dd4 pairs, dd15/px16 replays — ``release`` clears the whole
         # registry, cache.py): downstream consumers (dd7 groups, px6

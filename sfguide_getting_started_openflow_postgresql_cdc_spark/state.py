@@ -4,10 +4,15 @@ replica store (streaming/cdc.py), the MinHash-LSH index
 the incremental MVs (streaming/mv.py) and the small streaming state files
 (streaming/index_sync.py, streaming/dedup.py).
 
-Each engine keeps its tables as version directories ``<table>/v<N>/``
-and publishes a version by committing ONE small JSON document (a replica
-``_POINTER.json``, an index ``manifest.json``, a manifest ``meta.json``,
-an MV ``_POINTER.json``). The rules, in one place:
+Each engine keeps its state as one :class:`TableSet`: named tables under
+a root directory, published together by ONE small JSON commit document
+(a replica's ``_POINTER.json``, the index's ``manifest.json``, the
+manifest's ``meta.json``, an MV's ``_POINTER.json``). A table is either
+copy-on-write by hash bucket (every version a complete snapshot) or an
+append-only segment log (one segment per writing operation). An
+operation opens the set, which pins the committed document; it reads
+every table at that version, writes the next one, and publishes it with
+one :meth:`TableSet.commit`. The rules, in one place:
 
 - **Commit.** :func:`commit_json` writes ``<path>.tmp``, flushes and
   fsyncs it, ``os.replace``-s it over ``<path>`` and fsyncs the
@@ -18,30 +23,34 @@ an MV ``_POINTER.json``). The rules, in one place:
   Spark-written parquet files are NOT fsynced here (Spark's committer
   owns them); durability of data files across a power loss is out of
   scope — this module makes the commit atomic and the commit document
-  durable.
+  durable. A document of another storage layout is refused at open.
 - **Version listing.** :func:`versions` is the only parser of ``v<N>``
   directory names.
-- **Log segments.** Append-only logs store one segment per writing
+- **Log segments.** A log table stores one segment per writing
   operation at ``<log>/v<N>/`` (written with overwrite, so a retry of a
-  crashed operation replaces its orphan segment). :func:`segment_files`
-  returns the parquet files of the COMMITTED segments ``v <= upto`` —
-  gating on the committed version, never the listing, keeps orphans
-  invisible — optionally pruned to named hash-bucket partitions.
+  crashed operation replaces its orphan segment). Reads take the
+  COMMITTED segments ``v <= version`` (:func:`segment_files`) — gating on
+  the committed version, never the listing, keeps orphans invisible. A
+  commit removes the segments at its version of the logs the committing
+  operation did not write: the gate cannot tell which operation wrote a
+  segment, so the committing one must own them all.
 - **Copy-on-write.** :func:`link_untouched` hard-links (or copies, across
   devices) every untouched hash-bucket directory of the previous version
   into the new one, so a version is a complete snapshot while a write
   materializes only the buckets its keys touch.
+- **Pruned reads.** A read names the files of the buckets it needs
+  (:func:`files_under`), never a directory Spark must list and filter.
 - **Retention.** :func:`retire` keys on the COMMITTED version, never the
   listing: keep the committed version and the ``keep - 1`` highest
   versions below it, delete everything else — including orphans ABOVE
   the committed version left by crashed operations. Hard links keep the
   inodes shared with retained versions alive.
-- **Bucket sizing.** A hash-bucketed table's bucket count is pinned when
-  the table is first written. :func:`bucket_count` sizes it to the data:
-  the smallest power of two that keeps one bucket under
-  ``BUCKET_TARGET_BYTES``, so a small table is one bucket — one file per
-  write. Without a size estimate (a JDBC source, local Python rows) it is
-  ``UNSIZED_BUCKETS``. The count does not follow later growth.
+- **Bucket sizing.** A hash-bucketed table's bucket count is pinned in
+  the commit document when the table is first written. :func:`bucket_count`
+  sizes it to the data: the smallest power of two that keeps one bucket
+  under ``BUCKET_TARGET_BYTES``, so a small table is one bucket — one
+  file per write. Without a size estimate (a JDBC source, local Python
+  rows) it is ``UNSIZED_BUCKETS``. The count does not follow later growth.
 - **Concurrency.** :func:`run_concurrently` runs independent writes from
   driver threads under the caller's Spark local properties, waits for all
   of them and surfaces every failure.
@@ -196,15 +205,20 @@ def size_estimate(df) -> int | None:
     return int(plan.stats().sizeInBytes())
 
 
-def empty_frame(spark, ddl: str):
-    """An empty frame of the DDL schema ``ddl`` as a local relation: the
-    optimizer sees it is empty, prunes the joins and unions it feeds, and
-    never plans a scan of it. (``createDataFrame([], ddl)`` is an opaque
-    RDD scan with no size estimate.)"""
+def empty_frame(spark, schema):
+    """An empty frame of ``schema`` (a DDL string or a StructType) as a
+    local relation: the optimizer sees it is empty, prunes the joins and
+    unions it feeds, and never plans a scan of it.
+    (``createDataFrame([], ddl)`` is an opaque RDD scan with no size
+    estimate.)"""
     from pyspark.sql import DataFrame
 
     jvm = spark._jvm  # noqa: SLF001
-    schema = jvm.org.apache.spark.sql.types.StructType.fromDDL(ddl)
+    types = jvm.org.apache.spark.sql.types
+    if isinstance(schema, str):
+        schema = types.StructType.fromDDL(schema)
+    else:
+        schema = types.DataType.fromJson(schema.json())
     empty = spark._jsparkSession.createDataFrame(jvm.java.util.ArrayList(), schema)  # noqa: SLF001
     return DataFrame(empty, spark)
 
@@ -222,6 +236,133 @@ def retire(root: str, committed: int, keep: int = 2) -> None:
     for v in listed:
         if v not in kept:
             remove_dir(version_dir(root, v))
+
+
+class TableSet:
+    """Named tables under ``root`` published together by the JSON commit
+    document ``root/<doc>`` (module docstring). ``tables`` maps each name
+    to its kind, ``COW`` or ``LOG``; a table's directory is ``root/<name>``
+    (the name ``"."`` is the root itself). Hash-bucketed tables partition
+    by ``bucket_col``.
+
+    Opening pins the committed document (``doc``, its ``version``), or
+    ``{"version": 0, **empty}`` before the first commit; a document of
+    another ``layout`` is refused. Reads see the pinned version; writes go
+    to the next one, which :meth:`commit` publishes. Open one set per
+    operation: it records the tables the operation wrote."""
+
+    COW, LOG = "cow", "log"
+
+    def __init__(
+        self,
+        root: str,
+        doc: str,
+        tables: dict[str, str],
+        *,
+        bucket_col: str = "",
+        layout: int = 1,
+        keep: int = 2,
+        empty: dict | None = None,
+    ):
+        self.root = root
+        self.doc_path = os.path.join(root, doc)
+        self.kinds = tables
+        self.bucket_col = bucket_col
+        self.layout = layout
+        self.keep = keep
+        self.doc = {
+            "tables": {},
+            **read_json(self.doc_path, {"version": 0, **(empty or {}), "layout": layout}),
+        }
+        found = self.doc.get("layout", 1)
+        if found != layout:
+            # an older layout would be misread (empty logs, missing
+            # versions) — refuse it loudly instead
+            raise ValueError(
+                f"{self.doc_path} uses storage layout {found}, this code "
+                f"reads layout {layout}; rebuild the state to migrate"
+            )
+        self.version = int(self.doc["version"])
+        self._wrote: set[str] = set()
+
+    def dir(self, name: str) -> str:
+        return os.path.normpath(os.path.join(self.root, name))
+
+    def committed(self, name: str) -> int | None:
+        """The committed version of copy-on-write table ``name`` (None
+        before its first write)."""
+        return self.doc["tables"].get(name)
+
+    def path(self, name: str, version: int | None = None) -> str:
+        """The directory of copy-on-write table ``name`` at ``version``
+        (default: its committed version)."""
+        return version_dir(self.dir(name), self.committed(name) if version is None else version)
+
+    def files(
+        self, name: str, buckets: list[int] | None = None, version: int | None = None
+    ) -> list[str]:
+        """Parquet files of table ``name`` at the pinned version (a
+        copy-on-write table also at an older retained ``version``),
+        optionally pruned to the named hash buckets."""
+        if self.kinds[name] == self.LOG:
+            return segment_files(self.dir(name), self.version, self.bucket_col, buckets)
+        if version is None and self.committed(name) is None:
+            return []
+        return files_under(self.path(name, version), self.bucket_col, buckets)
+
+    def read(
+        self,
+        spark,
+        name: str,
+        schema=None,
+        buckets: list[int] | None = None,
+        version: int | None = None,
+    ):
+        """Table ``name`` as a frame of ``schema`` (None: the files'
+        own), read by file list — a pruned read opens only its buckets."""
+        files = self.files(name, buckets, version)
+        if files:
+            reader = spark.read if schema is None else spark.read.schema(schema)
+            return reader.parquet(*files)
+        if schema is None:
+            raise FileNotFoundError(f"no committed files of {self.dir(name)}")
+        return empty_frame(spark, schema)
+
+    def write(self, name: str, df, bucket=None, touched: list[int] | None = None) -> None:
+        """Write table ``name`` at the next version, partitioned by
+        ``bucket_col`` when ``df`` carries it. ``bucket``: an expression
+        that adds that column, one writer task per bucket. ``touched``:
+        the buckets ``df`` covers in a copy-on-write table; every other
+        bucket is linked from the committed version."""
+        out = version_dir(self.dir(name), self.version + 1)
+        if bucket is not None:
+            df = df.withColumn(self.bucket_col, bucket).repartition(self.bucket_col)
+        writer = df.write.mode("overwrite")
+        if self.bucket_col in df.columns:
+            writer = writer.partitionBy(self.bucket_col)
+        writer.parquet(out)
+        if touched is not None and self.committed(name) is not None:
+            link_untouched(self.path(name), out, self.bucket_col, touched, ".parquet")
+        self._wrote.add(name)
+
+    def commit(self, doc: dict) -> None:
+        """Publish ``doc`` plus the version bookkeeping: the next version
+        if this operation wrote a table (else the pinned one), with the
+        written copy-on-write tables at it. Clears that version's orphan
+        log segments first and retires copy-on-write versions after."""
+        version = self.version + 1 if self._wrote else self.version
+        tables = dict(self.doc["tables"])
+        for name, kind in self.kinds.items():
+            if kind == self.COW and name in self._wrote:
+                tables[name] = version
+            elif kind == self.LOG and self._wrote and name not in self._wrote:
+                remove_dir(version_dir(self.dir(name), version))
+        self.doc = {**doc, "version": version, "tables": tables, "layout": self.layout}
+        commit_json(self.doc_path, self.doc)
+        self.version, self._wrote = version, set()
+        for name, kind in self.kinds.items():
+            if kind == self.COW:
+                retire(self.dir(name), tables.get(name, -1), self.keep)
 
 
 def run_concurrently(jobs) -> list:

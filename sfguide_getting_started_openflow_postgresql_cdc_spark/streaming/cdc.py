@@ -96,14 +96,15 @@ ENVELOPE = T.StructType(
 
 
 class ReplicaStore:
-    """Versioned, PK-hash-bucketed parquet replica tables with an atomic
-    pointer swap.
+    """Versioned, PK-hash-bucketed parquet replica tables, each a
+    one-table ``state.TableSet`` published by its pointer commit.
 
     Layout::
 
         root/tables/<table>/v<N>/_CDC_BUCKET=<i>/*.parquet
         root/tables/<table>/_POINTER.json
-            {"version": N, "watermark": seq, "n_buckets": B}
+            {"version": N, "watermark": seq, "n_buckets": B, "schema",
+             "written_at", "watermarks": {retained version: watermark}}
         root/journal/<table>/*.parquet      (append-only event log)
 
     Readers resolve the pointer, so a crash mid-write never exposes a
@@ -114,6 +115,10 @@ class ReplicaStore:
     and retention (``keep_versions``) follow ``state.py``.
     """
 
+    # 2: retained versions' watermarks in the pointer (1: a _VERSION.json
+    # stamp in each version directory)
+    LAYOUT = 2
+
     def __init__(self, root: str, keep_versions: int = 2):
         if keep_versions < 2:
             raise ValueError("keep_versions >= 2 (current + 1 for in-flight readers)")
@@ -123,16 +128,31 @@ class ReplicaStore:
         os.makedirs(os.path.join(root, "journal"), exist_ok=True)
 
     # -- pointer ----------------------------------------------------------
-    def _pointer_path(self, table: str) -> str:
-        return os.path.join(self._table_dir(table), "_POINTER.json")
-
-    def _pointer(self, table: str) -> dict:
-        return state.read_json(
-            self._pointer_path(table), {"version": -1, "watermark": -1, "n_buckets": 0}
+    def _tables(self, table: str) -> state.TableSet:
+        return state.TableSet(
+            os.path.join(self.root, "tables", table),
+            "_POINTER.json",
+            {".": state.TableSet.COW},
+            bucket_col=CDC_BUCKET,
+            layout=self.LAYOUT,
+            keep=self.keep_versions,
+            empty={"version": -1, "watermark": -1, "n_buckets": 0},
         )
 
-    def _table_dir(self, table: str) -> str:
-        return os.path.join(self.root, "tables", table)
+    def _open(self, table: str, version: int | None = None) -> state.TableSet:
+        """The bootstrapped table's set; ``version`` must be retained."""
+        ts = self._tables(table)
+        if ts.version < 0:
+            raise FileNotFoundError(f"replica '{table}' not bootstrapped")
+        if version is not None and str(version) not in ts.doc["watermarks"]:
+            raise FileNotFoundError(
+                f"replica '{table}' version {version} retired or never written "
+                f"(retained: {self.versions(table)})"
+            )
+        return ts
+
+    def _pointer(self, table: str) -> dict:
+        return self._tables(table).doc
 
     def watermark(self, table: str) -> int:
         return int(self._pointer(table)["watermark"])
@@ -150,30 +170,13 @@ class ReplicaStore:
         return int(self._pointer(table).get("n_buckets", 0))
 
     def table_path(self, table: str, version: int | None = None) -> str:
-        ptr = self._pointer(table)
-        if ptr["version"] < 0:
-            raise FileNotFoundError(f"replica '{table}' not bootstrapped")
-        v = ptr["version"] if version is None else version
-        path = state.version_dir(self._table_dir(table), v)
-        if version is not None and not os.path.isdir(path):
-            raise FileNotFoundError(
-                f"replica '{table}' version {version} retired or never written "
-                f"(retained: {self.versions(table)})"
-            )
-        return path
+        return self._open(table, version).path(".", version)
 
     def version_watermarks(self, table: str) -> dict[int, int]:
         """{version: watermark} for every RETAINED version — the map that
         lets readers time-travel by watermark instead of version number."""
-        tdir = self._table_dir(table)
-        return {
-            v: int(
-                state.read_json(
-                    os.path.join(state.version_dir(tdir, v), "_VERSION.json")
-                )["watermark"]
-            )
-            for v in self.versions(table)
-        }
+        marks = self._pointer(table).get("watermarks", {})
+        return {int(v): int(wm) for v, wm in marks.items()}
 
     def version_at_watermark(self, table: str, max_watermark: int) -> int:
         """Newest retained version whose watermark <= max_watermark."""
@@ -191,22 +194,14 @@ class ReplicaStore:
     def versions(self, table: str) -> list[int]:
         """Retained committed version numbers, oldest first (time-travel
         targets); a crashed write's orphan above the pointer is not one."""
-        committed = self._pointer(table)["version"]
-        return [v for v in state.versions(self._table_dir(table)) if v <= committed]
+        return sorted(self.version_watermarks(table))
 
-    def _stored_schema(self, table: str) -> T.StructType | None:
-        raw = self._pointer(table).get("schema")
+    @staticmethod
+    def _schema(doc: dict) -> T.StructType | None:
+        raw = doc.get("schema")
         return T.StructType.fromJson(json.loads(raw)) if raw else None
 
     # -- io ----------------------------------------------------------------
-    def _reader(self, spark: SparkSession, table: str):
-        # Explicit schema from the pointer: no footer-based inference
-        # (listing footers of a 100 TB replica just to learn the schema
-        # is wasted I/O) and empty replicas — a bootstrapped table with
-        # zero rows writes no data files — stay readable.
-        schema = self._stored_schema(table)
-        return spark.read.schema(schema) if schema is not None else spark.read
-
     def read(
         self, spark: SparkSession, table: str, version: int | None = None
     ) -> DataFrame:
@@ -215,77 +210,53 @@ class ReplicaStore:
         snapshot (unchanged buckets are hard-linked, not omitted), so an
         old version reads exactly like the current one. Retention is
         ``keep_versions`` (AS OF by version number; map sync timestamps
-        to versions via the pointer's ``written_at`` if needed)."""
-        return (
-            self._reader(spark, table)
-            .parquet(self.table_path(table, version))
-            .drop(CDC_BUCKET)
+        to versions via the pointer's ``written_at`` if needed).
+
+        The read schema comes from the pointer: no footer-based inference
+        (listing footers of a 100 TB replica just to learn the schema is
+        wasted I/O), and a table with zero rows, which has no data files,
+        stays readable."""
+        ts = self._open(table, version)
+        return ts.read(spark, ".", self._schema(ts.doc), version=version).drop(
+            CDC_BUCKET
         )
 
     def read_buckets(
         self, spark: SparkSession, table: str, buckets: list[int]
     ) -> DataFrame:
-        """Only the named buckets — the filter prunes whole partition
-        directories at the source listing, so a merge never scans the
-        untouched part of the replica."""
-        df = self._reader(spark, table).parquet(self.table_path(table))
-        return df.filter(F.col(CDC_BUCKET).isin(buckets)).drop(CDC_BUCKET)
-
-    def _swap_pointer(
-        self,
-        table: str,
-        version: int,
-        watermark: int,
-        n_buckets: int,
-        schema: T.StructType | None = None,
-    ) -> None:
-        if schema is None:  # merges keep the bootstrap-recorded schema
-            raw = self._pointer(table).get("schema")
-        else:
-            raw = json.dumps(schema.jsonValue())
-        state.commit_json(
-            self._pointer_path(table),
-            {
-                "version": version,
-                "watermark": watermark,
-                "n_buckets": n_buckets,
-                "schema": raw,
-                "written_at": time.time(),
-            },
-        )
+        """Only the named buckets, read by their files: a merge never
+        lists or scans the untouched part of the replica."""
+        ts = self._open(table)
+        return ts.read(spark, ".", self._schema(ts.doc), buckets).drop(CDC_BUCKET)
 
     def update_schema(self, table: str, schema: T.StructType) -> None:
         """Re-point the stored read schema without touching data files
         (ADD COLUMN evolution: files written before the change simply
         lack the column, and an explicit-schema parquet read yields NULL
         for it — a metadata-only operation at any data scale)."""
-        ptr = self._pointer(table)
-        if ptr["version"] < 0:
-            raise FileNotFoundError(f"replica '{table}' not bootstrapped")
-        self._swap_pointer(
-            table,
-            ptr["version"],
-            ptr["watermark"],
-            ptr["n_buckets"],
-            schema=schema,
+        ts = self._open(table)
+        ts.commit(
+            {**ts.doc, "schema": json.dumps(schema.jsonValue()), "written_at": time.time()}
         )
 
     def _publish(
-        self,
-        table: str,
-        version: int,
-        watermark: int,
-        n_buckets: int,
-        schema: T.StructType | None = None,
+        self, ts: state.TableSet, watermark: int, n_buckets: int, schema: str | None
     ) -> None:
-        """Stamp the written version, flip the pointer to it, retire."""
-        tdir = self._table_dir(table)
-        state.commit_json(
-            os.path.join(state.version_dir(tdir, version), "_VERSION.json"),
-            {"version": version, "watermark": watermark},
+        """Commit the version ``ts`` wrote at ``watermark``; the pointer
+        keeps the watermarks of the versions retention keeps."""
+        marks = sorted(ts.doc.get("watermarks", {}).items(), key=lambda m: int(m[0]))
+        ts.commit(
+            {
+                "watermark": watermark,
+                "n_buckets": n_buckets,
+                "schema": schema,
+                "written_at": time.time(),
+                "watermarks": {
+                    **dict(marks[1 - self.keep_versions:]),
+                    str(ts.version + 1): watermark,
+                },
+            }
         )
-        self._swap_pointer(table, version, watermark, n_buckets, schema=schema)
-        state.retire(tdir, version, self.keep_versions)
 
     def write_full(
         self,
@@ -297,10 +268,9 @@ class ReplicaStore:
     ) -> None:
         """Write a complete new version (bootstrap / bucket-count change).
         ``df`` must carry the ``_CDC_BUCKET`` column."""
-        new_version = self._pointer(table)["version"] + 1
-        out = state.version_dir(self._table_dir(table), new_version)
-        df.write.mode("overwrite").partitionBy(CDC_BUCKET).parquet(out)
-        self._publish(table, new_version, watermark, n_buckets, schema=df.schema)
+        ts = self._tables(table)
+        ts.write(".", df)
+        self._publish(ts, watermark, n_buckets, json.dumps(df.schema.jsonValue()))
 
     def write_merged(
         self,
@@ -313,21 +283,12 @@ class ReplicaStore:
         """Write a new version that materializes ``changed_df`` (which
         must cover exactly ``changed_buckets`` and carry ``_CDC_BUCKET``)
         and hard-links every other bucket directory from the current
-        version — the copy-on-write path a 1-minute sync interval takes
-        (``state.link_untouched``)."""
-        ptr = self._pointer(table)
-        if ptr["version"] < 0:
-            raise FileNotFoundError(f"replica '{table}' not bootstrapped")
-        tdir = self._table_dir(table)
-        new_version = ptr["version"] + 1
-        out = state.version_dir(tdir, new_version)
-        changed_df.write.mode("overwrite").partitionBy(CDC_BUCKET).parquet(out)
-        state.link_untouched(
-            state.version_dir(tdir, ptr["version"]), out, CDC_BUCKET, changed_buckets
-        )
+        version — the copy-on-write path a 1-minute sync interval takes."""
+        ts = self._open(table)
+        ts.write(".", changed_df, touched=changed_buckets)
         # never backwards: the version guard applies none of a late batch
-        watermark = max(int(ptr["watermark"]), watermark)
-        self._publish(table, new_version, watermark, int(ptr["n_buckets"]))
+        watermark = max(int(ts.doc["watermark"]), watermark)
+        self._publish(ts, watermark, int(ts.doc["n_buckets"]), ts.doc["schema"])
 
     def journal_path(self, table: str) -> str:
         return os.path.join(self.root, "journal", table)
@@ -566,7 +527,7 @@ class CdcEngine:
         self.tables[table] = new_schema
         if not added and not widened:
             return
-        stored = self.store._stored_schema(table)
+        stored = self.store._schema(self.store._pointer(table))
         if stored is not None:
             widened_by_name = {f.name: f.dataType for f in widened}
             internal = {CDC_SEQ, CDC_BUCKET}

@@ -41,11 +41,11 @@ Per-dump cost envelope: shingling/fingerprinting/token counting run
 over the DUMP only; the benchmark gram set broadcasts (eval suites are
 tiny); the fingerprint-log read is bucket-pruned to the dump's
 fingerprint hash buckets; every stored aggregate (manifest, totals,
-stats) is group-cardinality, orders below the corpus. Tables are
-version directories published by the meta commit (commit, segment-read
-and retention rules in ``state.py``), so a crashed ingest leaves the
-previous state readable and its retry overwrites the orphan versions; a
-replay of a committed dump is recognized by its recorded id range.
+stats) is group-cardinality, orders below the corpus. The tables are
+one ``state.TableSet`` published by the meta commit, so a crashed ingest
+leaves the previous state readable and its retry overwrites the orphan
+versions; a replay of a committed dump is recognized by its recorded id
+range.
 """
 
 from __future__ import annotations
@@ -88,63 +88,31 @@ class IncrementalCurationManifest:
             contam_threshold if contam_threshold is not None else DECONTAM_OVERLAP
         )
         os.makedirs(path, exist_ok=True)
-        meta = self._meta()
         # pinned at creation; the fingerprint log starts empty and every
         # dump touches every bucket at a small fan-out, so the default is
         # one (state.bucket_count of 0 bytes)
-        self.n_buckets = int(meta.get("n_buckets", n_buckets))
+        self.n_buckets = int(self.tables().doc.get("n_buckets", n_buckets))
 
-    # -- storage plumbing ---------------------------------------------------
+    # -- storage -------------------------------------------------------------
 
-    def _meta(self) -> dict:
-        return state.read_json(
-            os.path.join(self.path, "meta.json"),
-            {"initialized": False, "max_doc_id": None, "version": 0, "tables": {}},
+    _TABLES = {
+        **dict.fromkeys(("bench_grams", "manifest", "totals"), state.TableSet.COW),
+        **dict.fromkeys(("stats_lang", "stats_source"), state.TableSet.COW),
+        "fingerprints": state.TableSet.LOG,  # hash-bucketed by fingerprint
+    }
+
+    def tables(self) -> state.TableSet:
+        """The manifest's tables at the committed ``meta.json``."""
+        return state.TableSet(
+            self.path,
+            "meta.json",
+            self._TABLES,
+            bucket_col=FP_BUCKET,
+            empty={"initialized": False, "max_doc_id": None},
         )
-
-    def _commit_meta(self, meta: dict) -> None:
-        meta["n_buckets"] = self.n_buckets
-        state.commit_json(os.path.join(self.path, "meta.json"), meta)
-
-    def _write(self, name: str, df: DataFrame, version: int) -> None:
-        """Write version ``version`` of a table; it becomes visible only
-        when the meta's table map flips to it (commit-last, so a crash
-        between table writes and the meta commit leaves the previous
-        state readable and a RETRY's overwrite cannot double-merge)."""
-        dst = state.version_dir(os.path.join(self.path, name), version)
-        df.coalesce(1).write.mode("overwrite").parquet(dst)
-
-    def _read(self, name: str, schema: str) -> DataFrame:
-        v = int(self._meta().get("tables", {}).get(name, 0))
-        p = state.version_dir(os.path.join(self.path, name), v)
-        if v > 0 and os.path.isdir(p):
-            return self.spark.read.schema(schema).parquet(p)
-        return state.empty_frame(self.spark, schema)
 
     def _fp_bucket(self, col: str = "f"):
         return F.pmod(F.xxhash64(F.col(col)), F.lit(self.n_buckets))
-
-    def _fp_segment_path(self, version: int) -> str:
-        return state.version_dir(os.path.join(self.path, "fingerprints"), version)
-
-    def _append_fps(self, fps: DataFrame, version: int) -> None:
-        (
-            fps.withColumn(FP_BUCKET, self._fp_bucket())
-            .repartition(F.col(FP_BUCKET))
-            .write.mode("overwrite")  # retry of a crashed dump overwrites
-            .partitionBy(FP_BUCKET)
-            .parquet(self._fp_segment_path(version))
-        )
-
-    def _read_fps(self, buckets: list[int], upto: int) -> DataFrame:
-        """Committed fingerprint-log rows, pruned to the named hash
-        buckets — a dump's dup check never reads the whole log."""
-        files = state.segment_files(
-            os.path.join(self.path, "fingerprints"), upto, FP_BUCKET, buckets
-        )
-        if not files:
-            return state.empty_frame(self.spark, "f string, doc_id long")
-        return self.spark.read.schema("f string, doc_id long").parquet(*files)
 
     # -- shared expressions (the exact px11 definitions) --------------------
 
@@ -170,26 +138,18 @@ class IncrementalCurationManifest:
         """Freeze the eval benchmark: store its distinct n-grams (the
         decontamination side) and its fingerprints (benchmark dup copies
         in later dumps must die, keep-first rule)."""
-        meta = self._meta()
-        if meta["initialized"]:
+        ts = self.tables()
+        if ts.doc["initialized"]:
             raise ValueError(f"manifest at {self.path} already initialized")
-        self._write(
+        ts.write(
             "bench_grams",
-            self._shingles(benchmark_docs).select("shingle").distinct(),
-            version=1,
+            self._shingles(benchmark_docs).select("shingle").distinct().coalesce(1),
         )
         bench_fps = benchmark_docs.select(
             self._fingerprint(), F.col("doc_id")
         ).groupBy("f").agg(F.min("doc_id").alias("doc_id"))
-        self._append_fps(bench_fps, version=1)
-        self._commit_meta(
-            {
-                "initialized": True,
-                "max_doc_id": None,
-                "version": 1,
-                "tables": {"bench_grams": 1},
-            }
-        )
+        ts.write("fingerprints", bench_fps, bucket=self._fp_bucket())
+        ts.commit({"initialized": True, "max_doc_id": None, "n_buckets": self.n_buckets})
 
     def ingest(self, docs: DataFrame, on_replay: str = "raise") -> dict:
         """Append one dump of (doc_id, text, lang, source, ...) rows.
@@ -212,11 +172,10 @@ class IncrementalCurationManifest:
         per-job scheduling floors at toy scale, not data."""
         if on_replay not in ("raise", "skip"):
             raise ValueError(f"on_replay must be 'raise' or 'skip', got {on_replay!r}")
-        spark = self.spark
-        meta = self._meta()
+        ts = self.tables()
+        meta = ts.doc
         if not meta["initialized"]:
             raise ValueError("initialize(benchmark_docs) must run first")
-        new_version = meta["version"] + 1
 
         dump = docs.select("doc_id", "text", "lang", "source").persist()
         try:
@@ -281,8 +240,7 @@ class IncrementalCurationManifest:
 
             return self._apply(
                 dump,
-                meta,
-                new_version,
+                ts,
                 n_docs=int(bounds["n"]),
                 hi=int(bounds["hi"]),
                 new_ranges=[[int(bounds["lo"]), int(bounds["hi"])]],
@@ -323,7 +281,8 @@ class IncrementalCurationManifest:
             raise ValueError(
                 f"on_replay must be 'raise' or 'skip', got {on_replay!r}"
             )
-        meta = self._meta()
+        ts = self.tables()
+        meta = ts.doc
         if not meta["initialized"]:
             raise ValueError("initialize(benchmark_docs) must run first")
         persisted = [
@@ -439,8 +398,7 @@ class IncrementalCurationManifest:
                 fpd_arg, buckets_arg = None, None
             out = self._apply(
                 union,
-                meta,
-                meta["version"] + 1,
+                ts,
                 n_docs=sum(n for _, n, _ in infos),
                 hi=infos[-1][0][1],
                 new_ranges=[r for r, _, _ in infos],
@@ -475,8 +433,7 @@ class IncrementalCurationManifest:
     def _apply(
         self,
         dump: DataFrame,
-        meta: dict,
-        new_version: int,
+        ts: state.TableSet,
         n_docs: int,
         hi: int,
         new_ranges: list,
@@ -509,7 +466,7 @@ class IncrementalCurationManifest:
                 )
             buckets = fp_buckets
             stored = (
-                self._read_fps(buckets, meta["version"])
+                ts.read(self.spark, "fingerprints", "f string, doc_id long", buckets)
                 .groupBy("f")
                 .agg(F.min("doc_id").alias("_stored_id"))
             )
@@ -525,7 +482,7 @@ class IncrementalCurationManifest:
 
             # 2. decontamination against the FROZEN benchmark grams
             grams = self._shingles(kept)
-            bench = self._read("bench_grams", "shingle string")
+            bench = ts.read(self.spark, "bench_grams", "shingle string")
             contam = (
                 grams.join(
                     F.broadcast(bench.withColumn("_hit", F.lit(1))),
@@ -569,8 +526,8 @@ class IncrementalCurationManifest:
             # totals: exclusive running sum within the dump + the
             # per-(split, lang) offset — identical to the fresh global
             # window because dumps are doc_id-ordered
-            totals = self._read(
-                "totals", "split string, lang string, cum_tokens long"
+            totals = ts.read(
+                self.spark, "totals", "split string, lang string, cum_tokens long"
             )
             rw = (
                 Window.partitionBy("split", "lang")
@@ -607,8 +564,8 @@ class IncrementalCurationManifest:
 
             one = F.lit(1)
             merged_manifest = _merge(
-                self._read(
-                    "manifest",
+                ts.read(
+                    self.spark, "manifest",
                     "split string, lang string, shard_id long, n_docs long, "
                     "shard_tokens long",
                 ),
@@ -621,7 +578,7 @@ class IncrementalCurationManifest:
 
             def _stat_merge(name: str, key: str, rows: DataFrame) -> DataFrame:
                 return _merge(
-                    self._read(name, f"{key} string, n_docs long, n_tokens long"),
+                    ts.read(self.spark, name, f"{key} string, n_docs long, n_tokens long"),
                     rows, [key], {"n_docs": one, "n_tokens": F.col("n_tokens")},
                 )
 
@@ -645,54 +602,43 @@ class IncrementalCurationManifest:
             stats_source = _stat_merge("stats_source", "source", corpus)
             state.run_concurrently(
                 [
-                    lambda: self._write("stats_lang", stats_lang, new_version),
+                    lambda: ts.write("stats_lang", stats_lang.coalesce(1)),
                     # fingerprints of every doc that survived FP-dedup
                     # (incl. contaminated ones: they still block later
                     # duplicates, exactly like px11's kept-first window
                     # over ALL docs)
-                    lambda: self._append_fps(
-                        kept.select("f", "doc_id"), new_version
+                    lambda: ts.write(
+                        "fingerprints", kept.select("f", "doc_id"), self._fp_bucket()
                     ),
                 ]
             )
             state.run_concurrently(
                 [
-                    lambda: self._write("manifest", merged_manifest, new_version),
-                    lambda: self._write("totals", merged_totals, new_version),
-                    lambda: self._write(
-                        "stats_source", stats_source, new_version
-                    ),
+                    lambda: ts.write("manifest", merged_manifest.coalesce(1)),
+                    lambda: ts.write("totals", merged_totals.coalesce(1)),
+                    lambda: ts.write("stats_source", stats_source.coalesce(1)),
                 ]
             )
             metrics = {
-                "version": new_version,
+                "version": ts.version + 1,
                 "ingested_docs": n_docs,
                 "touched_fp_buckets": len(buckets),
                 "kept_docs": kept_docs.get["n"],
             }
-            tables = dict(meta.get("tables", {}))
-            tables.update(
-                manifest=new_version,
-                totals=new_version,
-                stats_lang=new_version,
-                stats_source=new_version,
+            ts.commit(
+                {
+                    "initialized": True,
+                    "max_doc_id": hi,
+                    # one (lo, hi) per committed SOURCE DUMP (k entries for
+                    # an ingest_many batch): the replay-vs-out-of-order
+                    # discriminator (doc_ids are unique, so an exact range
+                    # match identifies the dump); grows one tiny entry per
+                    # dump
+                    "applied_ranges": ts.doc.get("applied_ranges", [])
+                    + [list(r) for r in new_ranges],
+                    "n_buckets": self.n_buckets,
+                }
             )
-            new_meta = {
-                "initialized": True,
-                "max_doc_id": hi,
-                "version": new_version,
-                "tables": tables,
-                # one (lo, hi) per committed SOURCE DUMP (k entries for
-                # an ingest_many batch): the replay-vs-out-of-order
-                # discriminator (doc_ids are unique, so an exact range
-                # match identifies the dump); grows one tiny entry per
-                # dump
-                "applied_ranges": meta.get("applied_ranges", [])
-                + [list(r) for r in new_ranges],
-            }
-            self._commit_meta(new_meta)
-            for name, v in tables.items():
-                state.retire(os.path.join(self.path, name), v, keep=2)
             return metrics
         finally:
             # ADVICE r9: release EVERY frame persisted this attempt even
@@ -706,20 +652,22 @@ class IncrementalCurationManifest:
     def manifest(self) -> DataFrame:
         """(split, lang, shard_id, n_docs, shard_tokens) — equals fresh
         ``px11_training_manifest`` over benchmark ∪ ingested dumps."""
-        return self._read(
-            "manifest",
+        return self.tables().read(
+            self.spark, "manifest",
             "split string, lang string, shard_id long, n_docs long, "
             "shard_tokens long",
         )
 
     def stats_by_lang(self) -> DataFrame:
         """Per-language curated-corpus statistics (px7's input)."""
-        return self._read("stats_lang", "lang string, n_docs long, n_tokens long")
+        return self.tables().read(
+            self.spark, "stats_lang", "lang string, n_docs long, n_tokens long"
+        )
 
     def stats_by_source(self) -> DataFrame:
         """Per-source curated-corpus statistics (px10's input)."""
-        return self._read(
-            "stats_source", "source string, n_docs long, n_tokens long"
+        return self.tables().read(
+            self.spark, "stats_source", "source string, n_docs long, n_tokens long"
         )
 
 
@@ -795,7 +743,7 @@ def start_streaming_manifest(
     )
 
     mf = IncrementalCurationManifest(spark, manifest_dir, **manifest_kwargs)
-    if not mf._meta()["initialized"]:
+    if not mf.tables().doc["initialized"]:
         if benchmark_docs is None:
             raise ValueError(
                 "first start needs benchmark_docs to freeze the eval set"

@@ -235,6 +235,10 @@ def neardup_filter_batch_indexed(
     import uuid
 
     from sfguide_getting_started_openflow_postgresql_cdc_spark import state
+    from sfguide_getting_started_openflow_postgresql_cdc_spark.operators.dedup_index import (
+        BANDS,
+        SHINGLES,
+    )
 
     if commit_key is None:
         commit_key = (uuid.uuid4().hex[:12], 0)
@@ -243,14 +247,13 @@ def neardup_filter_batch_indexed(
     applied = state.read_json(epochs_path, {})
 
     batch = batch.persist()
+    ts = index.tables()
     try:
         doc_buckets = index._bucket_set(
             batch.select("doc_id"), index._doc_bucket()
         )
         stored_ids = (
-            index._read_append(
-                "shingles", "doc_id long, shingle string", doc_buckets
-            )
+            ts.read(index.spark, "shingles", SHINGLES, doc_buckets)
             .select("doc_id")
             .join(batch.select("doc_id"), "doc_id", "left_semi")
             .distinct()
@@ -264,18 +267,14 @@ def neardup_filter_batch_indexed(
             stored_ids.limit(1).count()
         )
         if is_replay:
-            accepted_ids = index._anti_docs(stored_ids, index._tombstones())
+            accepted_ids = index._anti_docs(stored_ids, index._tombstones(ts))
             accepted = batch.join(accepted_ids, "doc_id", "left_semi")
         else:
             sigs = _batch_band_signatures(batch).persist()
             band_buckets = index._bucket_set(sigs, index._band_bucket())
             stored = index._anti_docs(
-                index._read_append(
-                    "bands",
-                    "doc_id long, band_id string, sig string",
-                    band_buckets,
-                ),
-                index._tombstones(),
+                ts.read(index.spark, "bands", BANDS, band_buckets),
+                index._tombstones(ts),
             ).select("band_id", F.col("sig").alias("s_sig"))
             hit_store = (
                 sigs.join(

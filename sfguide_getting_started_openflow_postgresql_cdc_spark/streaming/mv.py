@@ -25,13 +25,13 @@ Correctness under CDC semantics:
 - groups whose count reaches zero are dropped from the store so the
   MV equals a fresh GROUP BY at every point.
 
-Storage: ``path/data/v<N>/`` published by ``path/data/_POINTER.json``
-(``{"version": N, "replica_version": R}``, the replica version the
-aggregate reflects), with the commit and retention rules of
-``state.py``. A merge whose replica commit landed but whose aggregate
-commit did not (a crash between the two) leaves the pointer's
-``replica_version`` behind the replica; the next merge sees that and
-recomputes the aggregate in full instead of applying a delta.
+Storage: a one-table ``state.TableSet``, ``path/data/v<N>/`` published
+by ``path/data/_POINTER.json``, which also records ``replica_version``,
+the replica version the aggregate reflects. A merge whose replica commit
+landed but whose aggregate commit did not (a crash between the two)
+leaves the pointer's ``replica_version`` behind the replica; the next
+merge sees that and recomputes the aggregate in full instead of applying
+a delta.
 """
 
 from __future__ import annotations
@@ -74,33 +74,25 @@ class IncrementalGroupCount:
         self._grp_type = grp_fields[0].dataType
 
     # -- storage (group-cardinality data: tiny at any base-table scale) ----
-    def _data_dir(self) -> str:
-        return os.path.join(self.path, "data")
-
-    def _pointer(self) -> dict:
-        return state.read_json(
-            os.path.join(self._data_dir(), "_POINTER.json"),
-            {"version": 0, "replica_version": -1},
+    def _tables(self) -> state.TableSet:
+        return state.TableSet(
+            os.path.join(self.path, "data"),
+            "_POINTER.json",
+            {".": state.TableSet.COW},
+            layout=2,  # 1: the pointer named the data version alone
+            empty={"replica_version": -1},
         )
 
     def read(self, spark: SparkSession) -> DataFrame:
-        v = self._pointer()["version"]
-        return spark.read.parquet(state.version_dir(self._data_dir(), v))
+        return self._tables().read(spark, ".")
 
     def _publish(self, df: DataFrame | None, replica_version: int) -> None:
         """Write ``df`` (None: keep the current data) as the next version
         and commit it as reflecting ``replica_version``."""
-        v = self._pointer()["version"]
+        ts = self._tables()
         if df is not None:
-            v += 1
-            df.coalesce(1).write.mode("overwrite").parquet(
-                state.version_dir(self._data_dir(), v)
-            )
-        state.commit_json(
-            os.path.join(self._data_dir(), "_POINTER.json"),
-            {"version": v, "replica_version": replica_version},
-        )
-        state.retire(self._data_dir(), v, keep=2)
+            ts.write(".", df.coalesce(1))
+        ts.commit({"replica_version": replica_version})
 
     # -- full compute (bootstrap / repair) ---------------------------------
     def _full_aggregate(self, spark: SparkSession) -> DataFrame:
@@ -156,7 +148,7 @@ class IncrementalGroupCount:
             events = self.engine.project_after(events, self.table)
         events = events.filter(F.col(self.pk).isNotNull())
         store = self.engine.store
-        ptr = self._pointer()
+        ptr = self._tables().doc
         stale = ptr["replica_version"] != store.version(self.table)
         keys = events.select(self.pk).distinct().cache()
         before_dir = os.path.join(self.path, "before")

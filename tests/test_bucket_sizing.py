@@ -171,8 +171,8 @@ def test_explicit_16_bucket_index_ingests_like_the_default(spark, tmp_path):
         one.ingest(docs)
         sixteen.ingest(docs)
     assert _pairs(one) == _pairs(sixteen) == [(1, 2), (1, 4), (2, 4), (3, 5)]
-    assert one._manifest()["n_buckets"] == 1
-    assert sixteen._manifest()["n_buckets"] == 16
+    assert one.tables().doc["n_buckets"] == 1
+    assert sixteen.tables().doc["n_buckets"] == 16
     # the default writes one file per table per dump
     for table in ("shingles", "bands", "df"):
         v2 = os.path.join(one.dir, table, "v2")
@@ -195,6 +195,6 @@ def test_index_verification_plan_scans_no_rdd_when_hot_is_empty(spark, tmp_path,
 
     monkeypatch.setattr(MinHashLshIndex, "_verified_pairs", capture)
     idx.ingest(_docs(spark, tmp_path, "d1", DOCS1))
-    assert idx._manifest()["tables"].get("hot", 0) == 0  # hot is empty
+    assert idx.tables().committed("hot") is None  # hot is empty
     assert len(plans) == 1
     assert "ExistingRDD" not in plans[0] and "LogicalRDD" not in plans[0], plans[0]

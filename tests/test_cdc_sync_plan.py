@@ -2,6 +2,7 @@
 exchange (hash partitioning on the replica bucket), and the Engine's
 replica mapping reads only the tables a query touches, once per commit."""
 
+import os
 import re
 
 import pytest
@@ -115,3 +116,37 @@ def test_replicas_read_only_the_tables_a_query_uses(spark, tmp_path, monkeypatch
     )
     eng.analytics("current_day_status")
     assert reads == ["appointments", "doctors", "appointments"]
+
+
+def test_a_pruned_replica_read_opens_only_its_buckets(spark, tmp_path):
+    """A merge's read of 3 of 64 buckets names their files: Spark lists no
+    bucket directory (past 32 paths a listing is a job of its own), so the
+    count runs its own 2 jobs and nothing else."""
+    import time
+
+    from pyspark.sql import functions as F
+
+    eng = CdcEngine(
+        ReplicaStore(str(tmp_path / "wh")),
+        tables={"t": spark.createDataFrame([], "id long, v string").schema},
+        primary_keys={"t": "id"},
+        n_buckets=64,
+    )
+    snap = spark.range(5000).select("id", F.col("id").cast("string").alias("v"))
+    eng.bootstrap(spark, {"t": snap}, LOAD_TS, journal_snapshot=False)
+    assert len(os.listdir(eng.store.table_path("t"))) >= 64
+
+    sc = spark.sparkContext
+    group = f"pruned-read-{time.monotonic_ns()}"
+    sc.setJobGroup(group, "a 3-bucket replica read")
+    try:
+        n = eng.store.read_buckets(spark, "t", [0, 1, 2]).count()
+    finally:
+        sc._jsc.clearJobGroup()
+    assert 0 < n < 5000
+    deadline = time.monotonic() + 10  # the status store is fed asynchronously
+    while len(sc.statusTracker().getJobIdsForGroup(group)) < 2:
+        assert time.monotonic() < deadline, "the count's jobs never showed up"
+        time.sleep(0.05)
+    time.sleep(0.5)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 2

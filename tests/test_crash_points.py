@@ -230,18 +230,22 @@ def _index(spark, root, buckets=None):
 
 
 def _index_snapshot(spark, root):
-    idx = _index(spark, root)
-    tomb = idx._tombstones()
+    ts = _index(spark, root).tables()
     return (
-        idx._manifest()["version"],
-        idx._manifest()["n_docs"],
-        _rows(idx.pairs()),
-        _rows(idx._cow_read("df", "shingle string, df long")),
-        _rows(idx._cow_read("hot", "shingle string")),
-        _rows(idx._read_append("shingles", "doc_id long, shingle string")),
-        _rows(idx._read_append("bands", "doc_id long, band_id string, sig string")),
-        _rows(idx._read_append("cands", "doc_a long, doc_b long")),
-        _rows(tomb) if tomb is not None else [],
+        ts.version,
+        ts.doc["n_docs"],
+        *(
+            _rows(ts.read(spark, name, schema))
+            for name, schema in (
+                ("pairs", "doc_a long, doc_b long, jaccard double"),
+                ("df", "shingle string, df long"),
+                ("hot", "shingle string"),
+                ("shingles", "doc_id long, shingle string"),
+                ("bands", "doc_id long, band_id string, sig string"),
+                ("cands", "doc_a long, doc_b long"),
+                ("tombstones", "doc_id long"),
+            )
+        ),
     ), None
 
 
@@ -339,14 +343,14 @@ class ManifestIngest(Case):
     @staticmethod
     def snapshot(spark, root):
         mf = _manifest(spark, root)
-        meta = mf._meta()
+        ts = mf.tables()
         return (
-            {k: meta[k] for k in ("version", "max_doc_id", "applied_ranges")},
+            {k: ts.doc[k] for k in ("version", "max_doc_id", "applied_ranges")},
             _rows(mf.manifest()),
             _rows(mf.stats_by_lang()),
             _rows(mf.stats_by_source()),
-            _rows(mf._read("totals", "split string, lang string, cum_tokens long")),
-            _rows(mf._read_fps(list(range(mf.n_buckets)), meta["version"])),
+            _rows(ts.read(spark, "totals", "split string, lang string, cum_tokens long")),
+            _rows(ts.read(spark, "fingerprints", "f string, doc_id long")),
         ), None
 
 
@@ -407,4 +411,108 @@ def test_every_crash_point_reads_old_or_new_state(spark, tmp_path, case):
             assert case.snapshot(spark, root) == new, f"{where}: the retry diverged"
         else:
             assert got == new, f"{where}: the committed state is not readable"
+        shutil.rmtree(root, ignore_errors=True)
+
+
+# -- a whole micro-batch ----------------------------------------------------
+#
+# CdcEngine.apply_envelope_batch merges its tables side by side, each
+# with its own journal append and pointer commit, so a crash can leave
+# any subset of them applied. The contract is the foreachBatch one: a
+# replay of the batch completes it.
+
+TABLES = ("t", "u")
+# (seq_no, table, op, id, grp): I/U/D on both tables and one event whose
+# key fails its cast, which the journal keeps and the merge quarantines
+FIRST_BATCH = [(1, "t", "U", "1", "g9"), (2, "u", "U", "2", "g9")]
+BATCH = [
+    (3, "t", "I", "20", "g1"),
+    (4, "u", "U", "3", "g7"),
+    (5, "t", "U", "2", "g5"),
+    (6, "u", "D", "4", None),
+    (7, "t", "D", "5", None),
+    (8, "u", "I", "30", "g3"),
+    (9, "t", "U", "x", "g4"),
+]
+
+
+def _batch_engine(root, n_buckets):
+    return CdcEngine(
+        ReplicaStore(os.path.join(root, "w")),
+        tables=dict.fromkeys(TABLES, SCHEMA),
+        primary_keys=dict.fromkeys(TABLES, "id"),
+        write_partitions=1,
+        n_buckets=n_buckets,
+    )
+
+
+def _envelopes(spark, rows):
+    return spark.createDataFrame(
+        [
+            (seq, f"2024-01-01 00:{seq:02d}:00", t, op, {"id": i, "grp": g})
+            for seq, t, op, i, g in rows
+        ],
+        ENVELOPE,
+    )
+
+
+def _batch_state(spark, root, n_buckets):
+    """Per table: replica rows, watermark, deduplicated journal and
+    quarantine, read through fresh handles."""
+    eng = _batch_engine(root, n_buckets)
+    return {
+        t: (
+            _rows(eng.store.read(spark, t)),
+            eng.store.watermark(t),
+            _rows(eng.store.read_journal(spark, t, dedup=True, pk="id")),
+            _rows(eng.quarantine(spark, t)),
+        )
+        for t in TABLES
+    }
+
+
+@pytest.mark.parametrize(
+    "buckets", [1, pytest.param(4, marks=pytest.mark.slow)], ids=lambda b: f"{b}bucket"
+)
+def test_every_crash_point_of_a_micro_batch_replays_to_the_clean_state(
+    spark, tmp_path, buckets
+):
+    """Crash a two-table ``apply_envelope_batch`` after each of its
+    mutations (journal appends, merge writes, links, pointer commits,
+    retirements), then replay the batch as ``foreachBatch`` would: every
+    table's replica, watermark, journal and quarantine equal a run that
+    never crashed."""
+    base = str(tmp_path / "base")
+    eng = _batch_engine(base, buckets)
+    snapshot = spark.createDataFrame([(i, f"g{i % 3}") for i in range(1, 9)], SCHEMA)
+    eng.bootstrap(spark, dict.fromkeys(TABLES, snapshot), "2024-01-01 00:00:00")
+    eng.apply_envelope_batch(spark, _envelopes(spark, FIRST_BATCH))
+    old = _batch_state(spark, base, buckets)
+
+    clean = str(tmp_path / "clean")
+    shutil.copytree(base, clean)
+    with pytest.MonkeyPatch.context() as mp:
+        counter = Mutations(mp)
+        _batch_engine(clean, buckets).apply_envelope_batch(spark, _envelopes(spark, BATCH))
+    new = _batch_state(spark, clean, buckets)
+    assert new != old, "the batch changed nothing: the enumeration is vacuous"
+    kinds = {"write", "commit", "remove"} | ({"link"} if buckets > 1 else set())
+    assert {kind for kind, _ in counter.log} == kinds, counter.log
+    assert sum(kind == "commit" for kind, _ in counter.log) == len(TABLES), counter.log
+
+    for k in range(1, len(counter.log) + 1):
+        root = str(tmp_path / f"k{k}")
+        shutil.copytree(base, root)
+        cached_before = _n_cached(spark)
+        with pytest.MonkeyPatch.context() as mp:
+            Mutations(mp, crash_after=k)
+            with pytest.raises(Crash):
+                _batch_engine(root, buckets).apply_envelope_batch(
+                    spark, _envelopes(spark, BATCH)
+                )
+        where = f"crash after mutation {k}/{len(counter.log)}"
+        assert _n_cached(spark) <= cached_before, f"{where}: cached frames leaked"
+        spark.catalog.clearCache()  # a dead process holds no cache
+        _batch_engine(root, buckets).apply_envelope_batch(spark, _envelopes(spark, BATCH))
+        assert _batch_state(spark, root, buckets) == new, f"{where}: the replay diverged"
         shutil.rmtree(root, ignore_errors=True)

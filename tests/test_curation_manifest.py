@@ -12,6 +12,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+from sfguide_getting_started_openflow_postgresql_cdc_spark import state
 from sfguide_getting_started_openflow_postgresql_cdc_spark.operators.dedup import (
     px11_training_manifest,
 )
@@ -173,11 +174,13 @@ def test_crashed_ingest_retry_does_not_double_merge(spark, tmp_path):
     mf.initialize(spark.createDataFrame(bench, DOCUMENTS))
     mf.ingest(spark.createDataFrame(dump1, DOCUMENTS))
     state_before = _rows(mf.manifest())
-    real = mf._commit_meta
-    mf._commit_meta = lambda m: (_ for _ in ()).throw(RuntimeError("boom"))
-    with pytest.raises(RuntimeError):
-        mf.ingest(spark.createDataFrame(dump2, DOCUMENTS))
-    mf._commit_meta = real
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(
+            state.TableSet, "commit",
+            lambda self, doc: (_ for _ in ()).throw(RuntimeError("boom")),
+        )
+        with pytest.raises(RuntimeError):
+            mf.ingest(spark.createDataFrame(dump2, DOCUMENTS))
     # crash left the previous state visible
     assert _rows(mf.manifest()) == state_before
     # retry applies the dump exactly once
@@ -323,10 +326,10 @@ def test_ingest_many_batched_equals_serial_and_fresh(spark, tmp_path):
     assert _rows(batched.stats_by_lang()) == _rows(serial.stats_by_lang())
     assert _rows(batched.stats_by_source()) == _rows(serial.stats_by_source())
     # one commit for the whole batch vs three serial commits
-    assert batched._meta()["version"] == 2
-    assert serial._meta()["version"] == 4
+    assert batched.tables().doc["version"] == 2
+    assert serial.tables().doc["version"] == 4
     # per-dump ranges recorded, so any constituent dump replays cleanly
-    assert batched._meta()["applied_ranges"] == serial._meta()["applied_ranges"]
+    assert batched.tables().doc["applied_ranges"] == serial.tables().doc["applied_ranges"]
     replay = batched.ingest_many(
         [spark.createDataFrame(dump2, DOCUMENTS)], on_replay="skip"
     )
@@ -429,6 +432,6 @@ def test_streaming_manifest_batched_catchup(spark, tmp_path):
     assert _rows(mf.manifest()) == _rows(ref.manifest())
     assert _rows(mf.stats_by_lang()) == _rows(ref.stats_by_lang())
     # the whole backlog landed in ONE version bump (2 = init + batch)
-    assert mf._meta()["version"] == 2
+    assert mf.tables().doc["version"] == 2
     # and per-dump ranges were recorded for future replay discrimination
-    assert mf._meta()["applied_ranges"] == ref._meta()["applied_ranges"]
+    assert mf.tables().doc["applied_ranges"] == ref.tables().doc["applied_ranges"]

@@ -10,6 +10,7 @@ import tempfile
 import pytest
 from pyspark.sql import functions as F
 
+from sfguide_getting_started_openflow_postgresql_cdc_spark import state
 from sfguide_getting_started_openflow_postgresql_cdc_spark.operators.dedup_index import (
     MinHashLshIndex,
 )
@@ -24,6 +25,19 @@ pytestmark = pytest.mark.slow
 
 def _pairs_dict(idx):
     return {(r.doc_a, r.doc_b): r.jaccard for r in idx.pairs().collect()}
+
+
+def _read(spark, idx, table, schema):
+    """Table ``table`` of the index at its committed manifest."""
+    return idx.tables().read(spark, table, schema)
+
+
+def _crashing_commit(mp):
+    """Make every table-set commit fail before it publishes."""
+    def boom(self, doc):
+        raise RuntimeError("simulated crash before manifest flip")
+
+    mp.setattr(state.TableSet, "commit", boom)
 
 
 def _fresh(spark, docs, tmpdir, **kw):
@@ -115,8 +129,7 @@ def _df_bucket_files(idx, table="df"):
     """{bucket: {fname: inode}} for the CURRENT version of a COW table."""
     import os
 
-    v = idx._cow_version(table)
-    root = idx._cow_path(table, v)
+    root = idx.tables().path(table)
     out = {}
     for name in os.listdir(root):
         if not name.startswith("_IDX_BUCKET="):
@@ -286,21 +299,18 @@ def test_crashed_ingest_retry_does_not_double_append(spark, tmp_path):
     idx.ingest(_mk_docs(spark, [(1, mk(1)), (2, mk(2))]))
 
     batch = [(3, mk(3)), (4, mk(4))]
-    real_commit = idx._commit
-    idx._commit = lambda manifest: (_ for _ in ()).throw(
-        RuntimeError("simulated crash before manifest flip")
-    )
-    with pytest.raises(RuntimeError, match="simulated crash"):
-        idx.ingest(_mk_docs(spark, batch))
-    idx._commit = real_commit
+    with pytest.MonkeyPatch.context() as mp:
+        _crashing_commit(mp)
+        with pytest.raises(RuntimeError, match="simulated crash"):
+            idx.ingest(_mk_docs(spark, batch))
 
     # the orphan v2 segments exist on disk but no read can see them
     import os
 
     assert os.path.isdir(str(tmp_path / "idx" / "bands" / "v2"))
-    assert idx._manifest()["version"] == 1
-    assert idx._read_append(
-        "bands", "doc_id long, band_id string, sig string"
+    assert idx.tables().version == 1
+    assert _read(
+        spark, idx, "bands", "doc_id long, band_id string, sig string"
     ).filter(F.col("doc_id") >= 3).count() == 0
 
     # retry the same batch: segments overwritten, view == fresh build
@@ -312,7 +322,7 @@ def test_crashed_ingest_retry_does_not_double_append(spark, tmp_path):
         **kw,
     )
     assert _pairs_dict(idx) == fresh
-    stored = idx._read_append("shingles", "doc_id long, shingle string")
+    stored = _read(spark, idx, "shingles", "doc_id long, shingle string")
     dup = (
         stored.groupBy("doc_id", "shingle")
         .count()
@@ -333,20 +343,15 @@ def test_crashed_op_segments_not_resurrected_by_other_op(spark, tmp_path):
     base = "c1 c2 c3 c4"
     mk = lambda i: f"{base} u{i} t1 t2 t3"  # noqa: E731
 
-    def crash(idx):
-        real = idx._commit
-        idx._commit = lambda m: (_ for _ in ()).throw(RuntimeError("boom"))
-        return real
-
     # (a) crashed ingest, then retract commits the same version
     idx = MinHashLshIndex(spark, str(tmp_path / "a"), **kw)
     idx.ingest(_mk_docs(spark, [(1, mk(1)), (2, mk(2)), (9, mk(9))]))
-    real = crash(idx)
-    with pytest.raises(RuntimeError):
-        idx.ingest(_mk_docs(spark, [(3, mk(3))]))  # orphan v2 logs
-    idx._commit = real
+    with pytest.MonkeyPatch.context() as mp:
+        _crashing_commit(mp)
+        with pytest.raises(RuntimeError):
+            idx.ingest(_mk_docs(spark, [(3, mk(3))]))  # orphan v2 logs
     idx.retract([9])  # commits version 2 without touching bands/v2
-    stored = idx._read_append("bands", "doc_id long, band_id string, sig string")
+    stored = _read(spark, idx, "bands", "doc_id long, band_id string, sig string")
     assert stored.filter(F.col("doc_id") == 3).count() == 0, (
         "crashed ingest's band segment resurrected by the retract commit"
     )
@@ -358,12 +363,12 @@ def test_crashed_op_segments_not_resurrected_by_other_op(spark, tmp_path):
     # (b) crashed retract, then ingest commits the same version
     idx2 = MinHashLshIndex(spark, str(tmp_path / "b"), **kw)
     idx2.ingest(_mk_docs(spark, [(1, mk(1)), (2, mk(2))]))
-    real2 = crash(idx2)
-    with pytest.raises(RuntimeError):
-        idx2.retract([1])  # orphan tombstones/v2
-    idx2._commit = real2
+    with pytest.MonkeyPatch.context() as mp:
+        _crashing_commit(mp)
+        with pytest.raises(RuntimeError):
+            idx2.retract([1])  # orphan tombstones/v2
     idx2.ingest(_mk_docs(spark, [(3, mk(3))]))  # commits version 2
-    assert idx2._tombstones() is None, (
+    assert idx2._tombstones(idx2.tables()) is None, (
         "crashed retract's tombstones resurrected by the ingest commit"
     )
     fresh2 = _fresh(
@@ -388,11 +393,11 @@ def test_retract_all_docs_of_hot_shingle_clears_hot(spark, tmp_path):
     idx.ingest(_mk_docs(spark, [(1, mk(1)), (2, mk(2))]))
     idx.ingest(_mk_docs(spark, [(3, mk(3)), (4, mk(4))]))
     # the shared c-run is hot (df=4 > cap=2)
-    assert idx._cow_read("hot", "shingle string").count() > 0
+    assert _read(spark, idx, "hot", "shingle string").count() > 0
 
     # retract ALL four docs at once: every c-run shingle's new_df == 0
     idx.retract([1, 2, 3, 4])
-    assert idx._cow_read("hot", "shingle string").count() == 0, (
+    assert _read(spark, idx, "hot", "shingle string").count() == 0, (
         "hot shingles whose docs all vanished must leave the hot table"
     )
 
@@ -427,14 +432,13 @@ def test_orphan_cow_dirs_never_outrank_committed(spark, tmp_path):
     idx = MinHashLshIndex(spark, str(tmp_path / "idx"), **kw)
     idx.ingest(_mk_docs(spark, [(1, mk(1)), (2, mk(2)), (7, z7), (17, z17)]))
     assert (1, 2) in _pairs_dict(idx)
-    pairs_v = idx._cow_version("pairs")
+    pairs_v = idx.tables().committed("pairs")
 
     def crash_ingest(batch):
-        real = idx._commit
-        idx._commit = lambda m: (_ for _ in ()).throw(RuntimeError("boom"))
-        with pytest.raises(RuntimeError):
-            idx.ingest(_mk_docs(spark, batch))
-        idx._commit = real
+        with pytest.MonkeyPatch.context() as mp:
+            _crashing_commit(mp)
+            with pytest.raises(RuntimeError):
+                idx.ingest(_mk_docs(spark, batch))
 
     # two crash/commit rounds: each crashed ingest writes orphan COW
     # pairs dirs above v1; each retract commits the version WITHOUT
@@ -444,8 +448,8 @@ def test_orphan_cow_dirs_never_outrank_committed(spark, tmp_path):
     crash_ingest([(10, mk(10)), (11, mk(11))])
     idx.retract([17])
 
-    assert idx._cow_version("pairs") == pairs_v
-    assert os.path.isdir(idx._cow_path("pairs", pairs_v)), (
+    assert idx.tables().committed("pairs") == pairs_v
+    assert os.path.isdir(idx.tables().path("pairs", pairs_v)), (
         "retirement deleted the committed pairs version"
     )
     got = _pairs_dict(idx)

@@ -31,7 +31,7 @@ def test_index_ingest_rejects_a_repeated_doc_id(spark, tmp_path):
     )
     with pytest.raises(ValueError, match="repeat a doc_id"):
         idx.ingest(batch)
-    assert idx._manifest()["version"] == 0  # nothing committed
+    assert idx.tables().doc["version"] == 0  # nothing committed
 
 
 def test_index_ingest_rejects_a_doc_id_an_earlier_ingest_holds(spark, tmp_path):
@@ -48,7 +48,7 @@ def test_index_ingest_rejects_a_doc_id_an_earlier_ingest_holds(spark, tmp_path):
     )
     with pytest.raises(ValueError, match=r"already ingested .*\[1\]"):
         idx.ingest(again)
-    man = idx._manifest()
+    man = idx.tables().doc
     assert (man["version"], man["n_docs"]) == (1, 2)  # nothing committed
     pairs = [tuple(r) for r in idx.pairs().select("doc_a", "doc_b").collect()]
     assert pairs == [(1, 2)]
@@ -60,7 +60,7 @@ def test_index_ingest_rejects_a_held_doc_with_no_shingle(spark, tmp_path):
     idx.ingest(spark.createDataFrame([(1, "hello world"), (2, "the quick brown fox")], docs))
     with pytest.raises(ValueError, match=r"already ingested .*\[1\]"):
         idx.ingest(spark.createDataFrame([(1, "hello world")], docs))
-    assert idx._manifest()["n_docs"] == 2
+    assert idx.tables().doc["n_docs"] == 2
 
 
 def test_quarantine_lists_a_replayed_malformed_event_once(spark, tmp_path):

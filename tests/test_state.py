@@ -191,6 +191,13 @@ ALLOWED = {
     ("operators/ann_index.py", None),
 }
 FORBIDDEN_CALLS = {"replace", "link", "rename"}
+# The versioned-table primitives: only state.TableSet calls them.
+TABLE_PRIMITIVES = {"commit_json", "link_untouched", "segment_files", "retire"}
+# The two small state files that are not tables commit their own JSON.
+ALLOWED_COMMITS = {
+    ("streaming/index_sync.py", "sync_soft_deletes"),  # applied_watermark
+    ("streaming/dedup.py", "neardup_filter_batch_indexed"),  # stream epochs
+}
 
 
 def _violations(path: str, rel: str) -> list[str]:
@@ -204,6 +211,13 @@ def _violations(path: str, rel: str) -> list[str]:
             f = node.func
             what = None
             if (
+                isinstance(f.value, ast.Name)
+                and f.value.id == "state"
+                and f.attr in TABLE_PRIMITIVES
+                and not (f.attr == "commit_json" and (rel, func) in ALLOWED_COMMITS)
+            ):
+                found.append(f"{rel}:{node.lineno} in {func}: state.{f.attr} outside TableSet")
+            elif (
                 isinstance(f.value, ast.Name)
                 and f.value.id == "os"
                 and f.attr in FORBIDDEN_CALLS
@@ -226,8 +240,10 @@ def _violations(path: str, rel: str) -> list[str]:
 
 def test_versioned_state_decisions_live_only_in_state_module():
     """Commit (os.replace), copy-on-write (os.link), directory swaps
-    (os.rename) and v<N> listings appear nowhere in the package outside
-    state.py, except the named exceptions."""
+    (os.rename), v<N> listings and the versioned-table primitives
+    (state.commit_json, link_untouched, segment_files, retire) appear
+    nowhere in the package outside state.py, except the named
+    exceptions."""
     bad = []
     for root, _dirs, files in os.walk(PKG):
         for name in files:
@@ -255,7 +271,44 @@ def test_structure_check_sees_a_violation(tmp_path):
         "    return [n for n in names if n[1:].isdigit()]\n"
         "def compact_journal(a, b):\n"
         "    os.rename(a, b)\n"
+        "def sync_soft_deletes(p):\n"
+        "    state.commit_json(p, {})\n"
     )
-    assert len(_violations(str(src), "streaming/other.py")) == 4
-    assert len(_violations(str(src), "streaming/cdc.py")) == 3
-    assert _violations(str(src), "operators/ann_index.py") == []
+    assert len(_violations(str(src), "streaming/other.py")) == 5
+    assert len(_violations(str(src), "streaming/cdc.py")) == 4
+    assert len(_violations(str(src), "operators/ann_index.py")) == 1
+    assert len(_violations(str(src), "streaming/index_sync.py")) == 4
+
+
+# -- the table set -----------------------------------------------------------
+
+
+def test_table_set_refuses_a_document_of_another_layout(tmp_path):
+    """A commit document records its storage layout; one written by an
+    older layout is refused at open, never misread."""
+    root = str(tmp_path / "t")
+    os.makedirs(root)
+    state.commit_json(os.path.join(root, "_POINTER.json"), {"version": 3})
+    with pytest.raises(ValueError, match="layout 1, this code reads layout 2"):
+        state.TableSet(root, "_POINTER.json", {".": state.TableSet.COW}, layout=2)
+    ts = state.TableSet(root, "_POINTER.json", {".": state.TableSet.COW})
+    assert ts.version == 3 and ts.committed(".") is None
+    # never committed: the engine's empty document at version 0
+    ts = state.TableSet(str(tmp_path / "new"), "meta.json", {}, empty={"n_docs": 0})
+    assert ts.doc == {"version": 0, "n_docs": 0, "layout": 1, "tables": {}}
+
+
+def test_a_replica_of_the_stamp_layout_is_refused_at_open(tmp_path):
+    """A replica table written with a _VERSION.json stamp per version has
+    no watermark map in its pointer: time travel would misread it."""
+    from sfguide_getting_started_openflow_postgresql_cdc_spark.streaming.cdc import (
+        ReplicaStore,
+    )
+
+    store = ReplicaStore(str(tmp_path / "w"))
+    tdir = tmp_path / "w" / "tables" / "t"
+    (tdir / "v0").mkdir(parents=True)
+    (tdir / "v0" / "_VERSION.json").write_text('{"version": 0, "watermark": 3}')
+    (tdir / "_POINTER.json").write_text('{"version": 0, "watermark": 3, "n_buckets": 1}')
+    with pytest.raises(ValueError, match="storage layout 1"):
+        store.watermark("t")

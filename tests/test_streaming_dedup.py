@@ -170,7 +170,7 @@ def test_indexed_streaming_filter_unifies_state(spark, tmp_path):
     fresh.ingest(b2.filter(F.col("doc_id").isin(5)).select("doc_id", "text"))
     stored = lambda i: {  # noqa: E731
         r["doc_id"]
-        for r in i._read_append("shingles", "doc_id long, shingle string")
+        for r in i.tables().read(spark, "shingles", "doc_id long, shingle string")
         .select("doc_id")
         .distinct()
         .collect()
@@ -183,7 +183,7 @@ def test_indexed_streaming_filter_unifies_state(spark, tmp_path):
 
     # (c) at-least-once replay of epoch 1: same accepted set, index
     # version untouched (no re-ingest, no df double-count)
-    v_before = idx._manifest()["version"]
+    v_before = idx.tables().doc["version"]
     replay = {
         r["doc_id"]
         for r in neardup_filter_batch_indexed(
@@ -191,7 +191,7 @@ def test_indexed_streaming_filter_unifies_state(spark, tmp_path):
         ).collect()
     }
     assert replay == got2
-    assert idx._manifest()["version"] == v_before
+    assert idx.tables().doc["version"] == v_before
 
     # (d) retraction reaches streaming admission: retract doc 1, and a
     # near-dup of it is now admitted
@@ -238,7 +238,7 @@ def test_indexed_streaming_e2e_query(spark, tmp_path):
     got = {r["doc_id"] for r in spark.read.parquet(str(out)).collect()}
     assert got == {1, 3}
     idx = MinHashLshIndex(spark, str(idx_dir))
-    assert idx._manifest()["n_docs"] == 2
+    assert idx.tables().doc["n_docs"] == 2
 
 
 def test_indexed_replay_after_retraction_drops_tombstoned_docs(spark, tmp_path):
@@ -285,6 +285,6 @@ def test_indexed_replay_after_retraction_drops_tombstoned_docs(spark, tmp_path):
     }
     assert replay == {2}, "replay re-emitted retracted docs as accepted"
     # still a replay: the index version must not move (no re-ingest)
-    assert idx._read_append(
-        "shingles", "doc_id long, shingle string"
+    assert idx.tables().read(
+        spark, "shingles", "doc_id long, shingle string"
     ).select("doc_id").distinct().count() == 3  # logs keep 1, 2 and 3
