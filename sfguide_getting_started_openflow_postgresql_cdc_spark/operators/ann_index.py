@@ -2,16 +2,23 @@
 
 sim4 (operators/similarity.py) demonstrates IVF search but re-trains
 and re-assigns on every call. A production corpus builds the index
-ONCE and searches it many times; this module persists the two
-artifacts that make that work:
+ONCE and searches it many times; this module persists it as one
+``state.TableSet`` under the index path, published by ``manifest.json``:
 
-- ``centroids.json`` — the coarse quantizer (k x dim doubles, driver
-  math; k is small by construction);
-- ``index/cell=<i>/*.parquet`` — the corpus PARTITIONED BY nearest
-  cell. Partitioning is the entire point: a search probing p of k
-  cells reads only those partition directories — at 100 TB with
-  k=65k cells and p=64 probes, a query touches ~0.1% of the corpus,
-  and the pruning happens at file listing, not per row.
+- the coarse quantizer (k x dim doubles, driver math; k is small by
+  construction) and, for IVF-PQ, the codebooks live in the commit
+  document itself, so one commit publishes them with the rows assigned
+  under them;
+- ``cells`` — the corpus, copy-on-write by nearest cell
+  (``cells/v<N>/_CELL=<i>/*.parquet``; each row also keeps its ``cell``).
+  Bucketing is the entire point: a search probing p of k cells reads
+  only those cells' files — at 100 TB with k=65k cells and p=64 probes,
+  a query touches ~0.1% of the corpus, and the pruning happens at file
+  listing, not per row. ``add`` links every cell's files into the new
+  version and writes the new rows beside them; ``compact`` rewrites only
+  the cells that lost rows;
+- ``tombstones`` — removed vec_ids, a segment log every read anti-joins,
+  cleared by ``compact`` and ``build``.
 
 Search semantics match sim4: probe the ``n_probe`` nearest cells per
 query, exact cosine within them, top-k with a total order. The dot/
@@ -23,12 +30,13 @@ candidate both paths consider.
 from __future__ import annotations
 
 import json
-import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
+from sfguide_getting_started_openflow_postgresql_cdc_spark import state
 from sfguide_getting_started_openflow_postgresql_cdc_spark.operators.similarity import (
     arrow_dot,
     arrow_norm,
@@ -40,6 +48,9 @@ from sfguide_getting_started_openflow_postgresql_cdc_spark.operators.similarity 
 # verdict task 5). The EXACT search path has no such limit: its probe
 # assignment is a distributed pandas UDF.
 MAX_ADC_QUERIES = 4096
+# Bucket directories of the cells table; the rows keep their ``cell``
+# column, which a read by file list returns.
+CELL_DIR = "_CELL"
 
 
 class IvfIndex:
@@ -55,11 +66,12 @@ class IvfIndex:
     100 TB a query reads the probed cells' code bytes (~32x smaller
     than the vectors) plus a few hundred raw rows.
 
-    ``pq_m`` semantics: an explicit int enables PQ with that many
-    subspaces; ``None`` (default) INFERS PQ-ness from the on-disk
-    codebooks, so reopened handles preserve the index's format; ``0``
-    explicitly opts out — "rebuild this path as a plain IVF index"
-    (build() removes the stale codebooks)."""
+    ``pq_m`` semantics: an explicit int makes :meth:`build` train PQ
+    with that many subspaces; ``None`` (default) INFERS PQ-ness from the
+    committed codebooks, so reopened handles preserve the index's
+    format; ``0`` explicitly opts out — "rebuild this path as a plain
+    IVF index". :meth:`add` always encodes under the committed
+    codebooks, if any."""
 
     def __init__(
         self,
@@ -71,55 +83,53 @@ class IvfIndex:
         self.path = path
         self.n_cells = n_cells
         self.n_probe = n_probe
-        self._centroids = None  # lazily loaded normalized np matrix
-        self._pq_books = None  # lazily loaded (m, k, dim/m) codebooks
         self._search_probes = None  # last exact-path probes frame (persisted)
-        if pq_m is None and os.path.exists(
-            os.path.join(path, "pq_codebooks.json")
-        ):
-            # PQ-ness is a property of the on-disk index, not of whoever
-            # constructed this handle: a reopened IvfIndex(path) MUST
-            # keep encoding add() rows (and keep PQ through a drift
-            # rebuild), or appended rows silently lack codes and every
-            # later ADC search crashes on nulls. pq_m=0 is the explicit
-            # opt-out: "rebuild this as a plain IVF index" (build()
-            # removes the stale codebooks).
-            import numpy as np
-
-            with open(os.path.join(path, "pq_codebooks.json")) as f:
-                self._pq_books = np.array(json.load(f), dtype=np.float64)
-            pq_m = int(self._pq_books.shape[0])
+        if pq_m is None:
+            # PQ-ness is a property of the committed index, not of whoever
+            # constructed this handle: a reopened IvfIndex(path) keeps PQ
+            # through a drift rebuild
+            books = self.tables().doc.get("pq_codebooks")
+            pq_m = len(books) if books else None
         self.pq_m = pq_m or None  # 0 -> None: explicitly non-PQ
 
     # -- artifacts ----------------------------------------------------------
-    def _centroids_path(self) -> str:
-        return os.path.join(self.path, "centroids.json")
+    def tables(self) -> state.TableSet:
+        """The index's table set (the committed document holds the
+        quantizer, the codebooks and the rows' schema)."""
+        return state.TableSet(
+            self.path,
+            "manifest.json",
+            {"cells": state.TableSet.COW, "tombstones": state.TableSet.LOG},
+            bucket_col=CELL_DIR,
+        )
 
-    def _pq_books_path(self) -> str:
-        return os.path.join(self.path, "pq_codebooks.json")
+    def _quantizer(self, ts: state.TableSet | None = None):
+        """(centroids, PQ codebooks or None) of the committed index, as
+        float64 matrices."""
+        import numpy as np
 
-    def _index_path(self) -> str:
-        return os.path.join(self.path, "index")
+        doc = (ts or self.tables()).doc
+        if "centroids" not in doc:
+            raise ValueError("index not built; call build() first")
+        books = doc.get("pq_codebooks")
+        return (
+            np.array(doc["centroids"], dtype=np.float64),
+            None if books is None else np.array(books, dtype=np.float64),
+        )
 
-    def _load_centroids(self):
-        if self._centroids is None:
-            import numpy as np
+    def _load_centroids(self, ts: state.TableSet | None = None):
+        return self._quantizer(ts)[0]
 
-            with open(self._centroids_path()) as f:
-                self._centroids = np.array(json.load(f), dtype=np.float64)
-        return self._centroids
+    def _load_pq_books(self, ts: state.TableSet | None = None):
+        books = self._quantizer(ts)[1]
+        if books is None:
+            raise ValueError("index was built without PQ codes; rebuild with pq_m set")
+        return books
 
-    def _load_pq_books(self):
-        if self._pq_books is None:
-            import numpy as np
-
-            if not os.path.exists(self._pq_books_path()):
-                raise ValueError(
-                    "index was built without PQ codes; rebuild with pq_m set"
-                )
-            with open(self._pq_books_path()) as f:
-                self._pq_books = np.array(json.load(f), dtype=np.float64)
-        return self._pq_books
+    def _read(self, spark: SparkSession, ts: state.TableSet, cells=None) -> DataFrame:
+        """The committed rows (only ``cells``' files when given)."""
+        schema = T.StructType.fromJson(json.loads(ts.doc["schema"]))
+        return ts.read(spark, "cells", schema, cells)
 
     # -- build --------------------------------------------------------------
     def build(
@@ -132,11 +142,17 @@ class IvfIndex:
     ) -> None:
         """Train the quantizer (spherical k-means over a deterministic
         sample — ``similarity.train_ivf_centroids``, driver-side math on
-        a k x dim matrix) and write the corpus partitioned by nearest
-        cell. Deterministic end-to-end: same data -> same index. Pass
-        ``quantizer`` (k x dim matrix) and/or ``pq_codebooks`` (m x k x
-        dim/m) to skip training and build under known artifacts — the
-        reference arm of the add()==rebuild equivalence tests."""
+        a k x dim matrix) and write the corpus bucketed by nearest cell
+        as the next version, which replaces every row and tombstone and
+        is published with its quantizer by one commit. Deterministic
+        end-to-end: same data -> same index. Pass ``quantizer`` (k x dim
+        matrix) and/or ``pq_codebooks`` (m x k x dim/m) to skip training
+        and build under known artifacts — the reference arm of the
+        add()==rebuild equivalence tests. Reads of the committed version
+        keep working while the next one is written, so ``emb`` may be
+        this index's own rows."""
+        import numpy as np
+
         from sfguide_getting_started_openflow_postgresql_cdc_spark.operators.similarity import (
             train_ivf_centroids,
         )
@@ -154,20 +170,12 @@ class IvfIndex:
                 .collect()
             ]
         if quantizer is not None:
-            import numpy as np
-
-            centroids_n = np.asarray(quantizer, dtype=np.float64)
+            centroids = np.asarray(quantizer, dtype=np.float64)
         else:
-            centroids_n = train_ivf_centroids(sample, self.n_cells)
-
-        os.makedirs(self.path, exist_ok=True)
-        with open(self._centroids_path(), "w") as f:
-            json.dump(centroids_n.tolist(), f)
-        self._centroids = centroids_n
+            centroids = train_ivf_centroids(sample, self.n_cells)
+        books = None
         if self.pq_m:
             if pq_codebooks is not None:
-                import numpy as np
-
                 books = np.asarray(pq_codebooks, dtype=np.float64)
             else:
                 from sfguide_getting_started_openflow_postgresql_cdc_spark.operators.pq import (
@@ -175,31 +183,28 @@ class IvfIndex:
                 )
 
                 books = train_pq_codebooks(sample, m=self.pq_m)
-            with open(self._pq_books_path(), "w") as f:
-                json.dump(books.tolist(), f)
-            self._pq_books = books
-        elif os.path.exists(self._pq_books_path()):
-            # non-PQ rebuild over a previously-PQ path: stale codebooks
-            # must not survive, or reopened handles would encode add()
-            # rows against books the stored rows no longer carry
-            os.remove(self._pq_books_path())
-            self._pq_books = None
 
-        (
-            self._maybe_with_codes(self._with_cell(emb))
-            .repartition(F.col("cell"))  # one writer per cell, not tasks*cells files
-            .write.mode("overwrite")
-            .partitionBy("cell")
-            .parquet(self._index_path())
+        ts = self.tables()
+        rows = self._assign(emb, centroids, books)
+        ts.write("cells", rows, bucket=F.col("cell"))  # one writer per cell
+        ts.rewrite("tombstones")
+        ts.commit(
+            {
+                "centroids": centroids.tolist(),
+                "pq_codebooks": None if books is None else books.tolist(),
+                "schema": json.dumps(rows.schema.jsonValue()),
+            }
         )
 
-    def _with_cell(self, emb: DataFrame) -> DataFrame:
-        """Tag each row with its nearest cell under the CURRENT
-        quantizer. Plain function of the row + the k x dim matrix
-        (closed over as literals — no package refs ship to workers), so
-        an appended row lands in exactly the partition a full rewrite
-        with the same quantizer would put it in."""
-        cn = self._load_centroids().tolist()
+    @staticmethod
+    def _assign(emb: DataFrame, centroids, books) -> DataFrame:
+        """Tag each row with its nearest ``cell`` under ``centroids``
+        and, with PQ ``books``, its ``codes``. Both are plain functions of
+        the row and the matrices (closed over as literals — no package
+        refs ship to workers), so an added row lands in exactly the cell,
+        with exactly the codes, a full rewrite under the same quantizer
+        would give it."""
+        cn = centroids.tolist()
 
         @F.pandas_udf("int")
         def nearest_cell(col):
@@ -211,61 +216,41 @@ class IvfIndex:
             m = m / _np.maximum(_np.linalg.norm(m, axis=1, keepdims=True), 1e-12)
             return _pd.Series((m @ c.T).argmax(axis=1).astype("int32"))
 
-        return emb.withColumn("cell", nearest_cell(F.col("embedding")))
-
-    def _maybe_with_codes(self, df: DataFrame) -> DataFrame:
-        """Append the PQ ``codes`` column when this index carries PQ
-        state — encoding is a pure function of the stored codebooks
-        (like cell assignment), so add() rows get byte-identical codes
-        to a full rebuild under the same codebooks. PQ-ness is
-        self-describing on disk — ``__init__`` infers ``pq_m`` from
-        pq_codebooks.json for reopened handles, so this check covers
-        them too."""
-        if not self.pq_m:
-            return df
+        out = emb.withColumn("cell", nearest_cell(F.col("embedding")))
+        if books is None:
+            return out
         from sfguide_getting_started_openflow_postgresql_cdc_spark.operators.pq import (
             pq_code_column,
         )
 
-        return df.withColumn(
-            "codes", pq_code_column(self._load_pq_books())(F.col("embedding"))
-        )
+        return out.withColumn("codes", pq_code_column(books)(F.col("embedding")))
 
     # -- incremental maintenance -------------------------------------------
     def add(self, spark: SparkSession, new_emb: DataFrame) -> None:
-        """Assign new vectors to EXISTING cells and append to their
-        partition directories — per-dump maintenance without retraining
-        (cell assignment is a pure function of the quantizer, so the
-        index after ``add`` is byte-equivalent in content to a full
-        rewrite of base+new under the same quantizer; the search path
-        cannot tell them apart). The quantizer itself drifts as the
+        """Assign new vectors to EXISTING cells and write them beside
+        every cell's linked files — per-dump maintenance without
+        retraining (cell assignment is a pure function of the quantizer,
+        so the index after ``add`` is byte-equivalent in content to a
+        full rewrite of base+new under the same quantizer; the search
+        path cannot tell them apart). The quantizer itself drifts as the
         corpus distribution moves — that is what :meth:`recall_probe`
         + :meth:`add_with_drift_guard` watch."""
-        if not os.path.exists(self._centroids_path()):
+        ts = self.tables()
+        if "centroids" not in ts.doc:
             raise ValueError("add() requires a built index; call build() first")
-        (
-            self._maybe_with_codes(self._with_cell(new_emb))
-            .repartition(F.col("cell"))
-            .write.mode("append")
-            .partitionBy("cell")
-            .parquet(self._index_path())
-        )
+        rows = self._assign(new_emb, *self._quantizer(ts))
+        ts.write("cells", rows, bucket=F.col("cell"), touched=[])
+        ts.commit(ts.doc)
 
-    def _tombstones_path(self) -> str:
-        return os.path.join(self.path, "tombstones")
-
-    def _tombstones(self, spark: SparkSession) -> DataFrame | None:
-        """Removed vec_ids, or None when nothing was ever removed (the
-        common case — no extra join in the search plan)."""
-        p = self._tombstones_path()
-        if not os.path.isdir(p) or not any(
-            f.endswith(".parquet") for f in os.listdir(p)
-        ):
+    def _tombstones(self, spark: SparkSession, ts: state.TableSet) -> DataFrame | None:
+        """Removed vec_ids, or None when none are committed (the common
+        case — no extra join in the search plan)."""
+        if not ts.files("tombstones"):
             return None
-        return spark.read.schema("vec_id long").parquet(p)
+        return ts.read(spark, "tombstones", "vec_id long")
 
-    def _live(self, spark: SparkSession, index: DataFrame) -> DataFrame:
-        t = self._tombstones(spark)
+    def _live(self, spark: SparkSession, ts: state.TableSet, index: DataFrame) -> DataFrame:
+        t = self._tombstones(spark, ts)
         if t is None:
             return index
         return index.join(F.broadcast(t), "vec_id", "left_anti")
@@ -273,66 +258,43 @@ class IvfIndex:
     def remove(self, spark: SparkSession, vec_ids) -> None:
         """Retract vectors from the index — the delete path a takedown /
         CDC soft-delete reaches (the MinHashLshIndex.retract twin).
-        O(delta) metadata: appends the ids to a tombstone log that every
-        read path (search, recall probe, drift-guard rebuild) anti-joins
-        — the removed vector's CELL need not be known, so no scan
-        happens at remove time. Physical reclamation is
+        O(delta) metadata: writes the ids as a tombstone segment that
+        every read path (search, recall probe, drift-guard rebuild)
+        anti-joins — the removed vector's CELL need not be known, so no
+        scan happens at remove time. Physical reclamation is
         :meth:`compact`'s job (amortized, touched cells only).
         ``vec_ids``: list[int] or a (vec_id) DataFrame."""
         if isinstance(vec_ids, DataFrame):
             df = vec_ids.select("vec_id").distinct()
         else:
             df = spark.createDataFrame([(int(i),) for i in vec_ids], "vec_id long")
-        df.coalesce(1).write.mode("append").parquet(self._tombstones_path())
+        ts = self.tables()
+        ts.write("tombstones", df.coalesce(1))
+        ts.commit(ts.doc)
 
     def compact(self, spark: SparkSession) -> dict:
         """Physically drop tombstoned rows and clear the tombstone log.
         Locates the affected cells (one scan of the cell/vec_id columns
-        — column-pruned, run amortized, not per remove), rewrites ONLY
-        those cell partitions via dynamic partition overwrite, and
-        removes cell dirs left with zero survivors."""
-        import shutil
-
-        t = self._tombstones(spark)
+        — column-pruned, run amortized, not per remove) and writes ONLY
+        those cells' surviving rows into the next version; every other
+        cell is linked, and a cell left with no survivor is gone."""
+        ts = self.tables()
+        t = self._tombstones(spark, ts)
         if t is None:
             return {"compacted_cells": 0, "removed_rows": 0}
-        index = spark.read.parquet(self._index_path())
-        hits = index.join(F.broadcast(t), "vec_id", "left_semi")
-        affected = sorted(
-            r["cell"] for r in hits.select("cell").distinct().collect()
-        )
-        n_removed = hits.count()
+        hits = self._read(spark, ts).join(F.broadcast(t), "vec_id", "left_semi")
+        found = hits.agg(
+            F.count("*").alias("n"), F.collect_set("cell").alias("cells")
+        ).collect()[0]
+        affected = sorted(found["cells"])
         if affected:
-            survivors = (
-                index.filter(F.col("cell").isin(affected))
-                .join(F.broadcast(t), "vec_id", "left_anti")
-                .persist()
+            survivors = self._read(spark, ts, affected).join(
+                F.broadcast(t), "vec_id", "left_anti"
             )
-            live_cells = {
-                r["cell"] for r in survivors.select("cell").distinct().collect()
-            }
-            conf = spark.conf
-            prev = conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-            conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-            try:
-                (
-                    survivors.repartition(F.col("cell"))
-                    .write.mode("overwrite")
-                    .partitionBy("cell")
-                    .parquet(self._index_path())
-                )
-            finally:
-                conf.set("spark.sql.sources.partitionOverwriteMode", prev)
-            survivors.unpersist()
-            # dynamic overwrite only touches cells it writes: an affected
-            # cell whose every row was tombstoned must be dropped by hand
-            for cell in set(affected) - live_cells:
-                shutil.rmtree(
-                    os.path.join(self._index_path(), f"cell={cell}"),
-                    ignore_errors=True,
-                )
-        shutil.rmtree(self._tombstones_path(), ignore_errors=True)
-        return {"compacted_cells": len(affected), "removed_rows": n_removed}
+            ts.write("cells", survivors, bucket=F.col("cell"), touched=affected)
+        ts.rewrite("tombstones")
+        ts.commit(ts.doc)
+        return {"compacted_cells": len(affected), "removed_rows": int(found["n"])}
 
     def recall_probe(
         self,
@@ -352,7 +314,8 @@ class IvfIndex:
                 spark, queries, top_k=top_k, adc_shortlist=adc_shortlist
             ).collect()
         }
-        index = self._live(spark, spark.read.parquet(self._index_path()))
+        ts = self.tables()
+        index = self._live(spark, ts, self._read(spark, ts))
         q = queries.select(
             "query_id",
             F.col("embedding").alias("qv"),
@@ -390,7 +353,7 @@ class IvfIndex:
         top_k: int = 10,
         sample_size: int = 512,
     ) -> dict:
-        """``add`` + recall probe + retrain-below-gate: append the new
+        """``add`` + recall probe + retrain-below-gate: add the new
         vectors, measure recall on the held-out probe; if assignment-only
         maintenance has degraded below ``recall_gate``, rebuild the whole
         index (retraining the quantizer over the accumulated corpus).
@@ -399,23 +362,12 @@ class IvfIndex:
         recall = self.recall_probe(spark, probe_queries, top_k=top_k)
         out = {"recall": recall, "retrained": False}
         if recall < recall_gate:
-            # stage the corpus OUT of the index path first: build()
-            # overwrites the directory its input would otherwise still
-            # be lazily reading from (Spark deletes the target before
-            # the job runs — self-overwrite reads nothing)
-            import shutil
-
-            staging = os.path.join(self.path, "rebuild_staging")
             # live rows only: a rebuild must not resurrect removed vectors
-            self._live(spark, spark.read.parquet(self._index_path())).drop(
+            ts = self.tables()
+            corpus = self._live(spark, ts, self._read(spark, ts)).drop(
                 "cell", "codes"  # both re-derived by build(); drop ignores absent
-            ).write.mode("overwrite").parquet(staging)
-            corpus = spark.read.parquet(staging)
-            self._centroids = None  # retrain from scratch
+            )
             self.build(spark, corpus, sample_size=sample_size)
-            shutil.rmtree(staging, ignore_errors=True)
-            # the rebuild excluded tombstoned rows physically
-            shutil.rmtree(self._tombstones_path(), ignore_errors=True)
             out["retrained"] = True
             out["recall_after_retrain"] = self.recall_probe(
                 spark, probe_queries, top_k=top_k
@@ -452,13 +404,13 @@ class IvfIndex:
             out.append([int(i) for i in order[: self.n_probe]])
         return out
 
-    def _probe_cells_udf(self):
+    def _probe_cells_udf(self, ts: state.TableSet | None = None):
         """Arrow-batched twin of :meth:`probe_cells`: an
         ``array<int>``-returning pandas UDF shipping the k x dim
         quantizer by value (plain nested lists — no package refs reach
         the workers). Tested equal to the driver math per query; both
         use a STABLE descending sort so exact-tie probe order agrees."""
-        cn = self._load_centroids().tolist()
+        cn = self._load_centroids(ts).tolist()
         n_probe = self.n_probe
 
         @F.pandas_udf("array<int>")
@@ -501,8 +453,7 @@ class IvfIndex:
         adc_shortlist: int | None = None,
     ) -> DataFrame:
         """Top-k cosine neighbors for ``queries`` (query_id, embedding).
-        Reads ONLY probed cells' partitions (partition pruning on the
-        ``cell`` directory column); exact cosine within them.
+        Reads ONLY the probed cells' files; exact cosine within them.
 
         ``adc_shortlist`` (PQ indexes only) switches the in-cell scan to
         IVF-PQ: approximate ADC scores over the ``codes`` column alone
@@ -526,9 +477,10 @@ class IvfIndex:
         # so release the previous exact-path probes frame first; the ADC
         # branch below unpersists its own probes before returning
         self.release_search_cache()
+        ts = self.tables()
         probes = queries.select(
             "query_id",
-            F.explode(self._probe_cells_udf()(F.col("embedding"))).alias(
+            F.explode(self._probe_cells_udf(ts)(F.col("embedding"))).alias(
                 "cell"
             ),
         ).persist()  # executed twice: distinct-cell pruning + the
@@ -540,12 +492,8 @@ class IvfIndex:
         all_cells = sorted(
             r["cell"] for r in probes.select("cell").distinct().collect()
         )
-        index = self._live(
-            spark,
-            spark.read.parquet(self._index_path()).filter(
-                F.col("cell").isin(all_cells)  # prunes partition dirs at listing
-            ),
-        )
+        # only the probed cells' files
+        index = self._live(spark, ts, self._read(spark, ts, all_cells))
         if adc_shortlist:
             from sfguide_getting_started_openflow_postgresql_cdc_spark.operators.pq import (
                 adc_score,
@@ -569,7 +517,7 @@ class IvfIndex:
                 )
             scored = adc_score(
                 index,
-                self._load_pq_books(),
+                self._load_pq_books(ts),
                 [(int(r["query_id"]), r["embedding"]) for r in q_rows],
                 with_cell=True,
             )

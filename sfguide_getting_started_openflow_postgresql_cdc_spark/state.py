@@ -1,13 +1,16 @@
 """Versioned on-disk state shared by every maintained engine: the CDC
-replica store (streaming/cdc.py), the MinHash-LSH index
-(operators/dedup_index.py), the curation manifest (streaming/curation.py),
-the incremental MVs (streaming/mv.py) and the small streaming state files
+replica store and its journals (streaming/cdc.py), the MinHash-LSH index
+(operators/dedup_index.py), the IVF index (operators/ann_index.py), the
+curation manifest (streaming/curation.py), the incremental MVs
+(streaming/mv.py) and the small streaming state files
 (streaming/index_sync.py, streaming/dedup.py).
 
 Each engine keeps its state as one :class:`TableSet`: named tables under
 a root directory, published together by ONE small JSON commit document
-(a replica's ``_POINTER.json``, the index's ``manifest.json``, the
-manifest's ``meta.json``, an MV's ``_POINTER.json``). A table is either
+(a replica's ``_POINTER.json``, each index's ``manifest.json``, the
+manifest's ``meta.json``, an MV's ``_POINTER.json``). No engine writes
+live state any other way: no Spark append, no in-place or dynamic
+partition overwrite, no directory swap. A table is either
 copy-on-write by hash bucket (every version a complete snapshot) or an
 append-only segment log (one segment per writing operation). An
 operation opens the set, which pins the committed document; it reads
@@ -29,11 +32,15 @@ one :meth:`TableSet.commit`. The rules, in one place:
 - **Log segments.** A log table stores one segment per writing
   operation at ``<log>/v<N>/`` (written with overwrite, so a retry of a
   crashed operation replaces its orphan segment). Reads take the
-  COMMITTED segments ``v <= version`` (:func:`segment_files`) — gating on
-  the committed version, never the listing, keeps orphans invisible. A
-  commit removes the segments at its version of the logs the committing
-  operation did not write: the gate cannot tell which operation wrote a
-  segment, so the committing one must own them all.
+  COMMITTED segments ``base <= v <= version`` (:func:`segment_files`) —
+  gating on the committed version, never the listing, keeps orphans
+  invisible. A commit removes the segments at its version of the logs
+  the committing operation did not write: the gate cannot tell which
+  operation wrote a segment, so the committing one must own them all.
+- **Log rewrite.** An operation may rewrite a log as one segment (or
+  none) that replaces all earlier ones (:meth:`TableSet.rewrite`): the
+  commit records its version as the log's base, so readers skip the
+  replaced segments at once, and then removes them.
 - **Copy-on-write.** :func:`link_untouched` hard-links (or copies, across
   devices) every untouched hash-bucket directory of the previous version
   into the new one, so a version is a complete snapshot while a write
@@ -126,12 +133,12 @@ def files_under(path: str, bucket_col: str, buckets: list[int] | None = None) ->
 
 
 def segment_files(
-    root: str, upto: int, bucket_col: str, buckets: list[int] | None = None
+    root: str, upto: int, bucket_col: str, buckets: list[int] | None = None, base: int = 0
 ) -> list[str]:
-    """Parquet files of the committed log segments ``v1..v{upto}``."""
+    """Parquet files of the committed log segments ``v{base}..v{upto}``."""
     out: list[str] = []
     for v in versions(root):
-        if v <= upto:
+        if base <= v <= upto:
             out += files_under(version_dir(root, v), bucket_col, buckets)
     return out
 
@@ -243,7 +250,8 @@ class TableSet:
     document ``root/<doc>`` (module docstring). ``tables`` maps each name
     to its kind, ``COW`` or ``LOG``; a table's directory is ``root/<name>``
     (the name ``"."`` is the root itself). Hash-bucketed tables partition
-    by ``bucket_col``.
+    by ``bucket_col``. The document's ``tables`` map holds each written
+    copy-on-write table's version and each rewritten log's base version.
 
     Opening pins the committed document (``doc``, its ``version``), or
     ``{"version": 0, **empty}`` before the first commit; a document of
@@ -284,6 +292,7 @@ class TableSet:
             )
         self.version = int(self.doc["version"])
         self._wrote: set[str] = set()
+        self._rebased: set[str] = set()
 
     def dir(self, name: str) -> str:
         return os.path.normpath(os.path.join(self.root, name))
@@ -305,7 +314,8 @@ class TableSet:
         copy-on-write table also at an older retained ``version``),
         optionally pruned to the named hash buckets."""
         if self.kinds[name] == self.LOG:
-            return segment_files(self.dir(name), self.version, self.bucket_col, buckets)
+            base = self.doc["tables"].get(name, 0)
+            return segment_files(self.dir(name), self.version, self.bucket_col, buckets, base)
         if version is None and self.committed(name) is None:
             return []
         return files_under(self.path(name, version), self.bucket_col, buckets)
@@ -345,24 +355,42 @@ class TableSet:
             link_untouched(self.path(name), out, self.bucket_col, touched, ".parquet")
         self._wrote.add(name)
 
+    def rewrite(self, name: str, df=None, bucket=None) -> None:
+        """Replace every committed segment of log table ``name`` by one
+        segment of ``df`` at the next version (None: by no segment); the
+        commit makes that version the log's base and removes the
+        replaced segments."""
+        if df is not None:
+            self.write(name, df, bucket)
+        self._rebased.add(name)
+
     def commit(self, doc: dict) -> None:
         """Publish ``doc`` plus the version bookkeeping: the next version
-        if this operation wrote a table (else the pinned one), with the
-        written copy-on-write tables at it. Clears that version's orphan
-        log segments first and retires copy-on-write versions after."""
-        version = self.version + 1 if self._wrote else self.version
+        if this operation wrote or rewrote a table (else the pinned one),
+        with the written copy-on-write tables and the rewritten logs'
+        bases at it. Clears that version's orphan log segments first;
+        retires copy-on-write versions and replaced segments after."""
+        changed = self._wrote | self._rebased
+        version = self.version + 1 if changed else self.version
         tables = dict(self.doc["tables"])
         for name, kind in self.kinds.items():
             if kind == self.COW and name in self._wrote:
                 tables[name] = version
-            elif kind == self.LOG and self._wrote and name not in self._wrote:
+            elif kind == self.LOG and changed and name not in self._wrote:
                 remove_dir(version_dir(self.dir(name), version))
+            if name in self._rebased:
+                tables[name] = version
         self.doc = {**doc, "version": version, "tables": tables, "layout": self.layout}
         commit_json(self.doc_path, self.doc)
-        self.version, self._wrote = version, set()
+        rebased, self._wrote, self._rebased = self._rebased, set(), set()
+        self.version = version
         for name, kind in self.kinds.items():
             if kind == self.COW:
                 retire(self.dir(name), tables.get(name, -1), self.keep)
+            elif name in rebased:
+                for v in versions(self.dir(name)):
+                    if v < version:
+                        remove_dir(version_dir(self.dir(name), v))
 
 
 def run_concurrently(jobs) -> list:

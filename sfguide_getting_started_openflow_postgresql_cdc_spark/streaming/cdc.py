@@ -1,5 +1,5 @@
 """CDC core: snapshot bootstrap, keyed upsert merge with soft deletes,
-append-only journal, Structured Streaming wrapper.
+change journal, Structured Streaming wrapper.
 
 This is the engine's re-expression of the reference's OpenFlow connector
 contract (SURVEY.md §2.I, §3 entry 2):
@@ -15,7 +15,8 @@ contract (SURVEY.md §2.I, §3 entry 2):
                    (sql/3.live_appointments.sql:18,413).
 - I5  cadence   -> micro-batch per sync interval
                    (sql/3.live_appointments.sql:48-49).
-- I6  journal   -> every raw event appended to a queryable per-table log
+- I6  journal   -> every typed event kept in a queryable per-table log,
+                   written as a segment of the merge's own commit
                    (sql/3.live_appointments.sql:414).
 
 Design for scale
@@ -59,7 +60,6 @@ from __future__ import annotations
 
 import json
 import os
-import shutil
 import time
 from functools import partial
 from typing import Iterable
@@ -96,28 +96,35 @@ ENVELOPE = T.StructType(
 
 
 class ReplicaStore:
-    """Versioned, PK-hash-bucketed parquet replica tables, each a
-    one-table ``state.TableSet`` published by its pointer commit.
+    """Versioned, PK-hash-bucketed parquet replica tables with their change
+    journals: per table one ``state.TableSet`` holding the replica
+    (copy-on-write, ``"."``) and its journal (a segment log,
+    ``"journal"``), published together by the table's pointer commit.
 
     Layout::
 
         root/tables/<table>/v<N>/_CDC_BUCKET=<i>/*.parquet
+        root/tables/<table>/journal/v<N>/*.parquet   (one segment per merge)
         root/tables/<table>/_POINTER.json
-            {"version": N, "watermark": seq, "n_buckets": B, "schema",
-             "written_at", "watermarks": {retained version: watermark}}
-        root/journal/<table>/*.parquet      (append-only event log)
+            {"version": N, "tables": {".": replica version, "journal": base},
+             "watermark": seq, "n_buckets": B, "schema", "written_at",
+             "watermarks": {retained replica version: watermark}}
 
     Readers resolve the pointer, so a crash mid-write never exposes a
-    half-written version; the watermark records the highest applied
-    ``seq_no`` for idempotent replay. A merge writes ONLY the buckets
-    containing changed keys into the new version and hard-links every
-    other bucket's files from the previous version. Commit, copy-on-write
-    and retention (``keep_versions``) follow ``state.py``.
+    half-written version or journal segment; the watermark records the
+    highest applied ``seq_no`` for idempotent replay. A merge writes ONLY
+    the buckets containing changed keys into the new version, hard-links
+    every other bucket's files from the previous version, and writes its
+    batch's events as the journal segment of the same commit. A commit
+    that wrote only the journal (a batch of malformed events, a
+    compaction) adds no replica version: :meth:`version`,
+    :meth:`versions` and time travel skip it. Commit, copy-on-write,
+    segments and retention (``keep_versions``) follow ``state.py``.
     """
 
-    # 2: retained versions' watermarks in the pointer (1: a _VERSION.json
-    # stamp in each version directory)
-    LAYOUT = 2
+    # 3: the journal's segments in the table's set (2: a plain-append
+    # root/journal/<table>; 1: a _VERSION.json stamp in each version)
+    LAYOUT = 3
 
     def __init__(self, root: str, keep_versions: int = 2):
         if keep_versions < 2:
@@ -125,24 +132,24 @@ class ReplicaStore:
         self.root = root
         self.keep_versions = keep_versions
         os.makedirs(os.path.join(root, "tables"), exist_ok=True)
-        os.makedirs(os.path.join(root, "journal"), exist_ok=True)
 
     # -- pointer ----------------------------------------------------------
-    def _tables(self, table: str) -> state.TableSet:
+    def tables(self, table: str) -> state.TableSet:
+        """The table's set, bootstrapped or not."""
         return state.TableSet(
             os.path.join(self.root, "tables", table),
             "_POINTER.json",
-            {".": state.TableSet.COW},
+            {".": state.TableSet.COW, "journal": state.TableSet.LOG},
             bucket_col=CDC_BUCKET,
             layout=self.LAYOUT,
             keep=self.keep_versions,
             empty={"version": -1, "watermark": -1, "n_buckets": 0},
         )
 
-    def _open(self, table: str, version: int | None = None) -> state.TableSet:
+    def open(self, table: str, version: int | None = None) -> state.TableSet:
         """The bootstrapped table's set; ``version`` must be retained."""
-        ts = self._tables(table)
-        if ts.version < 0:
+        ts = self.tables(table)
+        if ts.committed(".") is None:
             raise FileNotFoundError(f"replica '{table}' not bootstrapped")
         if version is not None and str(version) not in ts.doc["watermarks"]:
             raise FileNotFoundError(
@@ -152,14 +159,14 @@ class ReplicaStore:
         return ts
 
     def _pointer(self, table: str) -> dict:
-        return self._tables(table).doc
+        return self.tables(table).doc
 
     def watermark(self, table: str) -> int:
         return int(self._pointer(table)["watermark"])
 
     def version(self, table: str) -> int:
-        """The committed version (-1 before bootstrap)."""
-        return int(self._pointer(table)["version"])
+        """The committed replica version (-1 before bootstrap)."""
+        return int(self._pointer(table)["tables"].get(".", -1))
 
     def written_at(self, table: str) -> float | None:
         """Time of the table's last pointer commit (merge, bootstrap or
@@ -170,7 +177,7 @@ class ReplicaStore:
         return int(self._pointer(table).get("n_buckets", 0))
 
     def table_path(self, table: str, version: int | None = None) -> str:
-        return self._open(table, version).path(".", version)
+        return self.open(table, version).path(".", version)
 
     def version_watermarks(self, table: str) -> dict[int, int]:
         """{version: watermark} for every RETAINED version — the map that
@@ -216,7 +223,7 @@ class ReplicaStore:
         (listing footers of a 100 TB replica just to learn the schema is
         wasted I/O), and a table with zero rows, which has no data files,
         stays readable."""
-        ts = self._open(table, version)
+        ts = self.open(table, version)
         return ts.read(spark, ".", self._schema(ts.doc), version=version).drop(
             CDC_BUCKET
         )
@@ -226,7 +233,7 @@ class ReplicaStore:
     ) -> DataFrame:
         """Only the named buckets, read by their files: a merge never
         lists or scans the untouched part of the replica."""
-        ts = self._open(table)
+        ts = self.open(table)
         return ts.read(spark, ".", self._schema(ts.doc), buckets).drop(CDC_BUCKET)
 
     def update_schema(self, table: str, schema: T.StructType) -> None:
@@ -234,29 +241,21 @@ class ReplicaStore:
         (ADD COLUMN evolution: files written before the change simply
         lack the column, and an explicit-schema parquet read yields NULL
         for it — a metadata-only operation at any data scale)."""
-        ts = self._open(table)
-        ts.commit(
-            {**ts.doc, "schema": json.dumps(schema.jsonValue()), "written_at": time.time()}
-        )
+        self.publish(self.open(table), schema=json.dumps(schema.jsonValue()))
 
-    def _publish(
-        self, ts: state.TableSet, watermark: int, n_buckets: int, schema: str | None
-    ) -> None:
-        """Commit the version ``ts`` wrote at ``watermark``; the pointer
-        keeps the watermarks of the versions retention keeps."""
-        marks = sorted(ts.doc.get("watermarks", {}).items(), key=lambda m: int(m[0]))
-        ts.commit(
-            {
-                "watermark": watermark,
-                "n_buckets": n_buckets,
-                "schema": schema,
-                "written_at": time.time(),
-                "watermarks": {
-                    **dict(marks[1 - self.keep_versions:]),
-                    str(ts.version + 1): watermark,
-                },
+    def publish(self, ts: state.TableSet, watermark: int | None = None, **fields) -> None:
+        """Commit what ``ts`` wrote, with the pointer ``fields`` updated:
+        a replica version at ``watermark``, or (None) the journal alone.
+        The pointer keeps the watermarks of the versions retention keeps."""
+        doc = {**ts.doc, **fields, "written_at": time.time()}
+        if watermark is not None:
+            marks = sorted(ts.doc.get("watermarks", {}).items(), key=lambda m: int(m[0]))
+            doc["watermark"] = watermark
+            doc["watermarks"] = {
+                **dict(marks[1 - self.keep_versions:]),
+                str(ts.version + 1): watermark,
             }
-        )
+        ts.commit(doc)
 
     def write_full(
         self,
@@ -265,12 +264,16 @@ class ReplicaStore:
         df: DataFrame,
         watermark: int,
         n_buckets: int,
+        ts: state.TableSet | None = None,
     ) -> None:
-        """Write a complete new version (bootstrap / bucket-count change).
-        ``df`` must carry the ``_CDC_BUCKET`` column."""
-        ts = self._tables(table)
+        """Write a complete new version (bootstrap / bucket-count change)
+        into ``ts`` (default: the table's set) and commit it. ``df`` must
+        carry the ``_CDC_BUCKET`` column."""
+        ts = ts or self.tables(table)
         ts.write(".", df)
-        self._publish(ts, watermark, n_buckets, json.dumps(df.schema.jsonValue()))
+        self.publish(
+            ts, watermark, n_buckets=n_buckets, schema=json.dumps(df.schema.jsonValue())
+        )
 
     def write_merged(
         self,
@@ -279,45 +282,32 @@ class ReplicaStore:
         changed_df: DataFrame,
         changed_buckets: list[int],
         watermark: int,
+        ts: state.TableSet | None = None,
     ) -> None:
-        """Write a new version that materializes ``changed_df`` (which
-        must cover exactly ``changed_buckets`` and carry ``_CDC_BUCKET``)
-        and hard-links every other bucket directory from the current
-        version — the copy-on-write path a 1-minute sync interval takes."""
-        ts = self._open(table)
+        """Write a new version into ``ts`` (default: the table's set) that
+        materializes ``changed_df`` (which must cover exactly
+        ``changed_buckets`` and carry ``_CDC_BUCKET``) and hard-links
+        every other bucket directory from the current version — the
+        copy-on-write path a 1-minute sync interval takes — and commit it."""
+        ts = ts or self.open(table)
         ts.write(".", changed_df, touched=changed_buckets)
         # never backwards: the version guard applies none of a late batch
-        watermark = max(int(ts.doc["watermark"]), watermark)
-        self._publish(ts, watermark, int(ts.doc["n_buckets"]), ts.doc["schema"])
+        self.publish(ts, max(int(ts.doc["watermark"]), watermark))
 
-    def journal_path(self, table: str) -> str:
-        return os.path.join(self.root, "journal", table)
+    def journal_files(self, table: str) -> list[str]:
+        """The parquet files of the table's committed journal segments."""
+        return self.open(table).files("journal")
 
     def read_journal(
-        self,
-        spark: SparkSession,
-        table: str,
-        dedup: bool = False,
-        pk: str | None = None,
+        self, spark: SparkSession, table: str, pk: str | None = None
     ) -> DataFrame:
-        """Raw append-only event log. ``dedup=True`` drops the duplicate
-        events an at-least-once foreachBatch retry can append (exact
-        replays share seq_no) — use it for counts/SCD2-style reads.
-
-        Pass ``pk`` to dedup on ``[seq_no, pk]`` — required for journals
-        written with ``bootstrap(journal_snapshot=True)``, where every
-        snapshot row shares ``seq_no=0`` and a seq-only dedup would
-        collapse the whole snapshot to one row. Without ``pk``, seq-0
-        snapshot rows are exempted from the seq-only dedup for the same
-        reason (live change events always carry seq_no > 0)."""
-        df = spark.read.parquet(self.journal_path(table))
-        if not dedup:
-            return df
-        if pk is not None:
-            return df.dropDuplicates(["seq_no", pk])
-        snapshot_rows = df.filter(F.col("seq_no") == 0)
-        live = df.filter(F.col("seq_no") != 0).dropDuplicates(["seq_no"])
-        return snapshot_rows.unionByName(live)
+        """The committed event log, malformed events included. With
+        ``pk``, duplicates on ``(seq_no, pk)`` are dropped: a replay of a
+        micro-batch writes a second segment for a table the failed run
+        had already committed. The key is part of the dedup because
+        bootstrap's snapshot events all carry ``seq_no=0``."""
+        j = self.open(table).read(spark, "journal")
+        return j if pk is None else j.dropDuplicates(["seq_no", pk])
 
 
 class ConsistentSnapshot(dict):
@@ -431,9 +421,7 @@ class CdcEngine:
                 replica = replica.coalesce(self.write_partitions)
             else:
                 replica = replica.repartition(n_buckets, F.col(CDC_BUCKET))
-            self.store.write_full(
-                spark, table, replica, watermark=-1, n_buckets=n_buckets
-            )
+            ts = self.store.tables(table)
             if journal_snapshot:
                 snap_events = df.select(
                     F.lit(0).cast("long").alias("seq_no"),
@@ -443,9 +431,10 @@ class CdcEngine:
                 )
                 if self.write_partitions:
                     snap_events = snap_events.coalesce(self.write_partitions)
-                snap_events.write.mode("append").parquet(
-                    self.store.journal_path(table)
-                )
+                self.append_journal(ts, snap_events)
+            self.store.write_full(
+                spark, table, replica, watermark=-1, n_buckets=n_buckets, ts=ts
+            )
 
     # -- schema evolution ----------------------------------------------------
     @staticmethod
@@ -582,19 +571,8 @@ class CdcEngine:
         if "after" in events.columns:
             events = self.project_after(events, table)
         pk = self.primary_keys[table]
-        # A malformed payload whose PK fails try_cast lands as NULL; a
-        # NULL key never matches the anti join against replica keys and
-        # would be re-appended as a garbage row on every batch. Drop such
-        # events from the merge — the raw journal (appended before the
-        # merge) retains them for quarantine/inspection.
-        # Unknown ops are likewise quarantined-not-applied: treating a
-        # corrupt op byte as an upsert would materialize garbage state.
-        events = events.filter(
-            F.col(pk).isNotNull() & F.col("op").isin("I", "U", "D")
-        )
-        n_buckets = self.store.n_buckets(table)
-        if n_buckets == 0:
-            raise FileNotFoundError(f"replica '{table}' not bootstrapped")
+        ts = self.store.open(table)
+        n_buckets = int(ts.doc["n_buckets"])
         if self.n_buckets not in (None, n_buckets):
             raise ValueError(
                 f"replica '{table}' is bucketed {n_buckets}-way but the "
@@ -602,15 +580,28 @@ class CdcEngine:
                 "change bucket counts"
             )
         bucket = self._bucket(pk, n_buckets)
-
+        # A malformed payload whose PK fails try_cast lands as NULL; a
+        # NULL key never matches the anti join against replica keys and
+        # would be re-appended as a garbage row on every batch. The merge
+        # applies only well-formed events; the journal segment keeps them
+        # all for quarantine/inspection. Unknown ops are likewise
+        # quarantined-not-applied: treating a corrupt op byte as an
+        # upsert would materialize garbage state.
+        good = F.col(pk).isNotNull() & F.col("op").isin("I", "U", "D")
         stats = events.agg(
             F.count("*").alias("n"),
-            F.max("seq_no").alias("max_seq"),
-            F.max("event_ts").alias("max_ts"),
-            F.collect_set(bucket).alias("buckets"),
+            F.count(F.when(good, 1)).alias("n_good"),
+            F.max(F.when(good, F.col("seq_no"))).alias("max_seq"),
+            F.max(F.when(good, F.col("event_ts"))).alias("max_ts"),
+            F.collect_set(F.when(good, bucket)).alias("buckets"),
         ).collect()[0]
         if stats["n"] == 0:
             return
+        self.append_journal(ts, events)
+        if stats["n_good"] == 0:
+            self.store.publish(ts)  # the journal segment alone
+            return
+        events = events.filter(good)
         # Buckets whose keys appear in this batch — the ONLY part of the
         # replica this merge reads or rewrites (bounded by n_buckets, so
         # the driver-side list stays tiny at any scale).
@@ -695,25 +686,25 @@ class CdcEngine:
             merged,
             changed_buckets=changed_buckets,
             watermark=int(stats["max_seq"]),
+            ts=ts,
         )
 
     # -- I6: journal -----------------------------------------------------------
-    def append_journal(self, table: str, events: DataFrame) -> None:
-        """Append the interval's raw (typed) events to the per-table log."""
-        if "after" in events.columns:
-            events = self.project_after(events, table)
-        events.write.mode("append").parquet(self.store.journal_path(table))
+    def append_journal(self, ts: state.TableSet, events: DataFrame) -> None:
+        """Write typed events as the journal segment of the version ``ts``
+        writes; the operation's commit publishes it."""
+        ts.write("journal", events)
 
     def quarantine(self, spark: SparkSession, table: str) -> DataFrame:
         """Malformed events the merge refused: journal rows whose PK
         failed the typed cast (NULL key) or whose op is not I/U/D. The
-        journal keeps them verbatim (append happens BEFORE the merge's
-        null-PK filter), so a producer bug is inspectable after the
-        fact instead of silently dropped — the operational complement
+        journal segment holds a batch's events before the merge's
+        well-formedness filter, so a producer bug is inspectable after
+        the fact instead of silently dropped — the operational complement
         of the merge-side guard."""
         pk = self.primary_keys[table]
-        # deduplicated: a foreachBatch replay appends its events again
-        j = self.store.read_journal(spark, table, dedup=True, pk=pk)
+        # deduplicated: a foreachBatch replay can journal its events again
+        j = self.store.read_journal(spark, table, pk=pk)
         return j.filter(
             F.col(pk).isNull() | ~F.col("op").isin("I", "U", "D")
         )
@@ -721,7 +712,7 @@ class CdcEngine:
     # -- batch driver ------------------------------------------------------------
     def apply_envelope_batch(self, spark: SparkSession, batch: DataFrame) -> None:
         """Process one micro-batch of mixed-table envelope rows. Each
-        table's journal append (append-only, replay-tolerant), merge and
+        table's merge (replica and journal segment, one commit) and
         journal compaction run as one job of a single
         ``state.run_concurrently`` call, so the tables merge side by side.
         Every merge is idempotent under the version guard, so a failed
@@ -734,7 +725,6 @@ class CdcEngine:
             )
             typed.persist()
             try:
-                self.append_journal(table, typed)
                 self.merge_batch(spark, table, typed)
             finally:
                 typed.unpersist()
@@ -760,12 +750,7 @@ class CdcEngine:
         directory listing — O(files), no data read."""
         if self.auto_compact_max_files is None:
             return False
-        jdir = self.store.journal_path(table)
-        try:
-            n_files = sum(1 for f in os.listdir(jdir) if f.endswith(".parquet"))
-        except FileNotFoundError:
-            return False
-        if n_files <= self.auto_compact_max_files:
+        if len(self.store.journal_files(table)) <= self.auto_compact_max_files:
             return False
         horizon = self.store.watermark(table) - self.journal_retain_seqs
         if horizon <= 0:
@@ -871,7 +856,7 @@ class CdcEngine:
         the PK — the same key layout as every other per-key operator."""
         store = into or self.store
         pk = self.primary_keys[table]
-        j = self.store.read_journal(spark, table, dedup=True, pk=pk)
+        j = self.store.read_journal(spark, table, pk=pk)
         j = j.filter(F.col(pk).isNotNull() & F.col("op").isin("I", "U", "D"))
         src_fields = [f.name for f in self.tables[table].fields]
         # the replica's pinned count; a lost replica is sized from its journal
@@ -948,7 +933,7 @@ class CdcEngine:
         version and materializes a tombstone version (``is_deleted``).
         """
         pk = self.primary_keys[table]
-        j = self.store.read_journal(spark, table, dedup=True, pk=pk)
+        j = self.store.read_journal(spark, table, pk=pk)
         w = Window.partitionBy(pk).orderBy("seq_no")
         return (
             j.withColumn("valid_from", F.col("event_ts"))
@@ -983,34 +968,19 @@ class CdcEngine:
         the pre-horizon slice (shuffles on the PK, the same key layout as
         every other per-key operator).
 
-        Local-FS swap is write-tmp -> rename-old-aside -> rename-tmp-in
-        -> delete-old: both full datasets exist on disk until the new
-        journal is in place, so a crash at any step loses nothing. The
-        next run FIRST recovers from the one window where the live dir
-        is missing (crashed between rename-aside and rename-in: ``__old``
-        is then the only complete journal and is renamed back) and only
-        after that deletes leftover ``__compacting``/``__old`` debris; a
-        distributed deployment would swap a file manifest instead, as
-        the replica pointer does.
+        The compacted journal is one segment that replaces every earlier
+        one (``state.TableSet.rewrite``), published by the table's pointer
+        commit: a crash before the commit leaves the old segments
+        committed and the new one an orphan the next write replaces; a
+        crash after it leaves replaced segments no reader sees.
 
         Returns ``{"before": n, "after": n, "horizon": seq}``.
         """
-        jdir = self.store.journal_path(table)
-        tmp = jdir + "__compacting"
-        old = jdir + "__old"
-        # Crash recovery must precede debris cleanup: if a prior run died
-        # between os.rename(jdir, old) and os.rename(tmp, jdir), `old` is
-        # the ONLY complete journal on disk — restore it before anything
-        # is deleted. (`tmp` at that point may be a complete compacted
-        # copy, but `old` is always complete pre-compaction, so it wins.)
-        if not os.path.exists(jdir) and os.path.exists(old):
-            os.rename(old, jdir)
-        for stale in (tmp, old):  # now genuinely-redundant debris
-            if os.path.exists(stale):
-                shutil.rmtree(stale)
-
         pk = self.primary_keys[table]
-        j = self.store.read_journal(spark, table, dedup=True, pk=pk)
+        ts = self.store.open(table)
+        j = ts.read(spark, "journal")
+        before = j.count()
+        j = j.dropDuplicates(["seq_no", pk])
         well_formed = F.col(pk).isNotNull() & F.col("op").isin("I", "U", "D")
         quarantined = j.filter(~well_formed)  # kept verbatim, any age
         good = j.filter(well_formed)
@@ -1026,12 +996,9 @@ class CdcEngine:
         if self.write_partitions:
             compacted = compacted.coalesce(self.write_partitions)
 
-        before = spark.read.parquet(jdir).count()
-        compacted.write.mode("overwrite").parquet(tmp)  # materialize first
-        os.rename(jdir, old)
-        os.rename(tmp, jdir)
-        shutil.rmtree(old)
-        after = spark.read.parquet(jdir).count()
+        ts.rewrite("journal", compacted)
+        self.store.publish(ts)
+        after = self.store.read_journal(spark, table).count()
         return {"before": before, "after": after, "horizon": retain_after_seq}
 
     # -- views -------------------------------------------------------------------

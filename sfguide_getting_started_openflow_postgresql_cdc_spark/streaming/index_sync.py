@@ -54,7 +54,7 @@ def _newly_deleted_keys(
     """Keys whose latest journal event in (after_seq, upto_seq] is a
     delete. Reading the journal deduped on (seq_no, pk) tolerates
     at-least-once foreachBatch replays."""
-    j = engine.store.read_journal(spark, table, dedup=True, pk=pk).filter(
+    j = engine.store.read_journal(spark, table, pk=pk).filter(
         F.col("seq_no") <= upto_seq
     )
     w = Window.partitionBy(pk).orderBy(F.col("seq_no").desc())

@@ -146,11 +146,10 @@ class IncrementalGroupCount:
         """Apply one micro-batch to the replica AND the aggregate."""
         if "after" in events.columns:
             events = self.engine.project_after(events, self.table)
-        events = events.filter(F.col(self.pk).isNotNull())
         store = self.engine.store
         ptr = self._tables().doc
         stale = ptr["replica_version"] != store.version(self.table)
-        keys = events.select(self.pk).distinct().cache()
+        keys = events.filter(F.col(self.pk).isNotNull()).select(self.pk).distinct().cache()
         before_dir = os.path.join(self.path, "before")
         release: list = []
         try:
@@ -248,9 +247,7 @@ class IncrementalGroupCount:
         )
 
         def _apply(df, _epoch):
-            mine = df.filter(F.col("table_name") == self.table)
-            self.engine.append_journal(self.table, mine)
-            self.merge_batch(df.sparkSession, mine)
+            self.merge_batch(df.sparkSession, df.filter(F.col("table_name") == self.table))
 
         writer = reader.writeStream.foreachBatch(_apply).option(
             "checkpointLocation", checkpoint_dir

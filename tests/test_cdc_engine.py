@@ -108,7 +108,6 @@ def _run_scenario_batches(spark, engine, batches):
             from sfguide_getting_started_openflow_postgresql_cdc_spark.streaming.cdc import ENVELOPE
 
             df = spark.createDataFrame(rows, ENVELOPE)
-            engine.append_journal(table, df)
             engine.merge_batch(spark, table, df)
 
 
@@ -348,17 +347,15 @@ def test_streaming_end_to_end(spark, tmp_path, snapshot_rows):
 
 
 def test_journal_dedup_preserves_snapshot_rows(spark, after_scenario, snapshot_rows):
-    """read_journal(dedup=True) must NOT collapse the seq-0 snapshot
-    events (they all share seq_no=0); live events still dedup by seq_no."""
+    """read_journal(pk=...) must NOT collapse the seq-0 snapshot events
+    (they all share seq_no=0), and still drops the events a replayed
+    batch journaled a second time."""
     store = after_scenario.store
     n_snapshot = len(snapshot_rows["appointments"])
-    deduped = store.read_journal(spark, "appointments", dedup=True)
+    deduped = store.read_journal(spark, "appointments", pk="appointment_id")
     assert deduped.filter(F.col("seq_no") == 0).count() == n_snapshot
-    # pk-aware dedup gives the same answer and is safe for seq collisions
-    by_pk = store.read_journal(
-        spark, "appointments", dedup=True, pk="appointment_id"
-    )
-    assert by_pk.count() == deduped.count()
+    raw = store.read_journal(spark, "appointments")
+    assert deduped.count() == raw.dropDuplicates().count()
 
 
 def test_merge_drops_null_pk_events(spark, tmp_path):
@@ -381,7 +378,6 @@ def test_merge_drops_null_pk_events(spark, tmp_path):
         ENVELOPE,
     )
     for _ in range(3):  # repeated batches must not accumulate garbage
-        engine.append_journal("doctors", bad)
         engine.merge_batch(spark, "doctors", bad)
     replica = engine.store.read(spark, "doctors")
     assert replica.filter(F.col("doctor_id").isNull()).count() == 0
@@ -457,8 +453,7 @@ def test_journal_compaction(spark, tmp_path, snapshot_rows):
     batches = healthcare.generate_scenario(snapshot_rows)
     _run_scenario_batches(spark, engine, batches)
 
-    j_before = engine.store.read_journal(spark, "appointments", dedup=True,
-                                         pk="appointment_id")
+    j_before = engine.store.read_journal(spark, "appointments", pk="appointment_id")
     seqs = sorted(r["seq_no"] for r in j_before.select("seq_no").distinct().collect())
     horizon = seqs[len(seqs) // 2]  # mid-scenario
 
@@ -561,7 +556,7 @@ def test_rebuild_after_compaction_contract(spark, tmp_path, snapshot_rows):
         for r in engine.store.read(spark, table).collect()
     }
 
-    j = engine.store.read_journal(spark, table, dedup=True, pk=pk)
+    j = engine.store.read_journal(spark, table, pk=pk)
     seqs = sorted(r["seq_no"] for r in j.select("seq_no").distinct().collect())
     horizon = seqs[len(seqs) // 2]
     scd2_before = engine.scd2_history(spark, table)

@@ -16,7 +16,7 @@ Then, on fresh handles:
 
 This generalises the hand-picked crash tests in test_dedup_index.py,
 test_curation_manifest.py and test_mv_timetravel.py to every crash
-point. Inputs are tiny; the index and manifest cases are ``slow``.
+point. Inputs are tiny; the costlier cases are ``slow``.
 """
 
 import os
@@ -28,6 +28,9 @@ from pyspark.sql import types as T
 from pyspark.sql.readwriter import DataFrameWriter
 
 from sfguide_getting_started_openflow_postgresql_cdc_spark import state
+from sfguide_getting_started_openflow_postgresql_cdc_spark.operators.ann_index import (
+    IvfIndex,
+)
 from sfguide_getting_started_openflow_postgresql_cdc_spark.operators.dedup_index import (
     MinHashLshIndex,
 )
@@ -140,9 +143,15 @@ def _bootstrap(spark, eng, rows):
     )
 
 
-def _replica(spark, root):
+def _replica(spark, root, journal_pk=None):
+    """Replica rows, watermark and journal (deduplicated on
+    ``journal_pk`` when given) through a fresh store."""
     store = ReplicaStore(os.path.join(root, "w"))
-    return _rows(store.read(spark, "t")), store.watermark("t")
+    return (
+        _rows(store.read(spark, "t")),
+        store.watermark("t"),
+        _rows(store.read_journal(spark, "t", journal_pk)),
+    )
 
 
 class Case:
@@ -157,11 +166,15 @@ class Case:
         if buckets == 1:
             self.kinds = self.kinds - {"link"}
 
+    def check(self, new) -> None:
+        """Case-specific assertions on the no-crash state."""
+
 
 class CdcMerge(Case):
-    """CdcEngine.merge_batch -> ReplicaStore.write_merged: Spark write,
-    hard links of the untouched buckets, version stamp, pointer commit,
-    retirement of the version beyond keep_versions."""
+    """CdcEngine.merge_batch -> ReplicaStore.write_merged: Spark writes of
+    the journal segment and the changed buckets, hard links of the
+    untouched buckets, the pointer commit that publishes both, retirement
+    of the version beyond keep_versions."""
 
     commit = staticmethod(lambda root: os.path.join(root, "w", "tables", "t", "_POINTER.json"))
     kinds = {"write", "link", "commit", "remove"}
@@ -207,7 +220,44 @@ class MvMerge(Case):
         )
 
     def snapshot(self, spark, root):
-        return _rows(self._mv(root).read(spark)), _replica(spark, root)
+        # a retry after the replica's commit journals the batch again
+        return _rows(self._mv(root).read(spark)), _replica(spark, root, "id")
+
+
+class JournalCompaction(Case):
+    """CdcEngine.compact_journal: the compacted segment, the pointer
+    commit that makes it the journal's base, removal of the replaced
+    segments."""
+
+    commit = CdcMerge.commit
+    kinds = {"write", "commit", "remove"}
+
+    def setup(self, spark, root):
+        eng = _engine(root, self.buckets)
+        _bootstrap(spark, eng, [(1, "a"), (2, "b")])
+        eng.merge_batch(spark, "t", _events(spark, [(1, "U", 1, "a1"), (2, "U", 1, "a2")]))
+        eng.apply_envelope_batch(
+            spark,
+            _events(
+                spark,
+                [(3, "U", 2, "b1"), (4, "U", 1, "a3"), (5, "U", 2, "b2"), (6, "U", 1, "a4")],
+            ),
+        )
+
+    def run(self, spark, root):
+        _engine(root, self.buckets).compact_journal(spark, "t", retain_after_seq=4)
+
+    @staticmethod
+    def snapshot(spark, root):
+        return _replica(spark, root), None
+
+    def check(self, new):
+        # horizon 4 over ids {1, 2}: seqs 5 and 6 verbatim; pre-horizon
+        # history collapses to the latest event per key (4 for id 1, 3
+        # for id 2); the bootstrap wrote no snapshot rows
+        seqs = [row[0] for row in new[0][2]]
+        assert sorted(s for s in seqs if s > 4) == [5, 6]
+        assert sorted(s for s in seqs if s <= 4) == [3, 4]
 
 
 def _docs(spark, rows):
@@ -354,6 +404,96 @@ class ManifestIngest(Case):
         ), None
 
 
+def _vectors(spark, ids):
+    return spark.createDataFrame(
+        [(i, [float((i + 1) * (j + 3) * 37 % 17 - 8) for j in range(8)]) for i in ids],
+        "vec_id long, embedding array<float>",
+    )
+
+
+def _ivf(root):
+    return IvfIndex(os.path.join(root, "ivf"), n_cells=4, n_probe=2)
+
+
+def _ivf_search(spark, idx):
+    queries = _vectors(spark, [0, 5, 9]).withColumnRenamed("vec_id", "query_id")
+    out = _rows(idx.search(spark, queries, top_k=3).select("query_id", "neighbor_id", "rank"))
+    idx.release_search_cache()
+    return out
+
+
+def _ivf_snapshot(spark, root):
+    """Quantizer, rows by cell, tombstones and a search, through a fresh
+    handle."""
+    idx = _ivf(root)
+    ts = idx.tables()
+    return (
+        ts.doc["centroids"],
+        _rows(ts.read(spark, "cells").select("vec_id", "cell")),
+        _rows(ts.read(spark, "tombstones", "vec_id long")),
+        _ivf_search(spark, idx),
+    ), None
+
+
+class IvfCase(Case):
+    commit = staticmethod(lambda root: os.path.join(root, "ivf", "manifest.json"))
+    snapshot = staticmethod(_ivf_snapshot)
+
+    def setup(self, spark, root):
+        _ivf(root).build(spark, _vectors(spark, range(40)))
+
+
+class IvfBuild(IvfCase):
+    """IvfIndex.build over a built index with tombstones: the rows under
+    the new quantizer, the commit publishing both, removal of the cleared
+    tombstone segment."""
+
+    kinds = {"write", "commit", "remove"}
+
+    def setup(self, spark, root):
+        super().setup(spark, root)
+        _ivf(root).remove(spark, [1, 2])
+
+    @staticmethod
+    def run(spark, root):
+        _ivf(root).build(spark, _vectors(spark, range(20, 60)))
+
+
+class IvfAdd(IvfCase):
+    """IvfIndex.add: the new rows, links of every cell's files, the commit."""
+
+    kinds = {"write", "link", "commit"}
+
+    @staticmethod
+    def run(spark, root):
+        _ivf(root).add(spark, _vectors(spark, range(40, 52)))
+
+
+class IvfRemove(IvfCase):
+    """IvfIndex.remove: a tombstone segment and the commit."""
+
+    kinds = {"write", "commit"}
+
+    @staticmethod
+    def run(spark, root):
+        _ivf(root).remove(spark, [3, 4, 5])
+
+
+class IvfCompact(IvfCase):
+    """IvfIndex.compact: the affected cells' survivors, links of the other
+    cells, the commit clearing the tombstones, removal of their segment."""
+
+    kinds = {"write", "link", "commit", "remove"}
+
+    def setup(self, spark, root):
+        super().setup(spark, root)
+        _ivf(root).remove(spark, [3, 4, 5])
+
+    @staticmethod
+    def run(spark, root):
+        _ivf(root).compact(spark)
+
+
 @pytest.mark.parametrize(
     "case",
     [
@@ -369,6 +509,12 @@ class ManifestIngest(Case):
         pytest.param(
             ManifestIngest(1), id="manifest_ingest_1bucket", marks=pytest.mark.slow
         ),
+        pytest.param(JournalCompaction(1), id="journal_compaction_1bucket"),
+        pytest.param(JournalCompaction(4), id="journal_compaction", marks=pytest.mark.slow),
+        pytest.param(IvfRemove(4), id="ivf_remove"),
+        pytest.param(IvfBuild(4), id="ivf_build", marks=pytest.mark.slow),
+        pytest.param(IvfAdd(4), id="ivf_add", marks=pytest.mark.slow),
+        pytest.param(IvfCompact(4), id="ivf_compact", marks=pytest.mark.slow),
     ],
 )
 def test_every_crash_point_reads_old_or_new_state(spark, tmp_path, case):
@@ -384,6 +530,7 @@ def test_every_crash_point_reads_old_or_new_state(spark, tmp_path, case):
         case.run(spark, clean)
     new = case.snapshot(spark, clean)
     assert new != old, "the operation changed nothing: the enumeration is vacuous"
+    case.check(new)
     log = [(kind, os.path.relpath(p, clean)) for kind, p in counter.log]
     commits = [i for i, (kind, p) in enumerate(log, 1) if kind == "commit"
                and p == os.path.relpath(case.commit(clean), clean)]
@@ -414,11 +561,36 @@ def test_every_crash_point_reads_old_or_new_state(spark, tmp_path, case):
         shutil.rmtree(root, ignore_errors=True)
 
 
+def test_a_build_that_fails_in_its_write_keeps_the_old_index(spark, tmp_path):
+    """A rebuild under a new quantizer whose Spark write fails part-way
+    leaves the committed index as it was: its quantizer and its search
+    results, read through a fresh handle."""
+    from pyspark.sql import functions as F
+
+    root = str(tmp_path)
+    _ivf(root).build(spark, _vectors(spark, range(40)))
+    centroids = _ivf(root)._load_centroids()
+    before = _ivf_search(spark, _ivf(root))
+
+    @F.udf("array<float>")
+    def poisoned(v, i):
+        if i == 50:
+            raise ValueError("a row the write cannot produce")
+        return v
+
+    bad = _vectors(spark, range(20, 60))
+    bad = bad.withColumn("embedding", poisoned("embedding", "vec_id"))
+    with pytest.raises(Exception, match="a row the write cannot produce"):
+        _ivf(root).build(spark, bad, quantizer=centroids[::-1])
+    assert (_ivf(root)._load_centroids() == centroids).all()
+    assert _ivf_search(spark, _ivf(root)) == before
+
+
 # -- a whole micro-batch ----------------------------------------------------
 #
 # CdcEngine.apply_envelope_batch merges its tables side by side, each
-# with its own journal append and pointer commit, so a crash can leave
-# any subset of them applied. The contract is the foreachBatch one: a
+# with its own pointer commit (replica and journal segment), so a crash
+# can leave any subset of them applied. The contract is the foreachBatch one: a
 # replay of the batch completes it.
 
 TABLES = ("t", "u")
@@ -464,7 +636,7 @@ def _batch_state(spark, root, n_buckets):
         t: (
             _rows(eng.store.read(spark, t)),
             eng.store.watermark(t),
-            _rows(eng.store.read_journal(spark, t, dedup=True, pk="id")),
+            _rows(eng.store.read_journal(spark, t, pk="id")),
             _rows(eng.quarantine(spark, t)),
         )
         for t in TABLES
@@ -478,10 +650,11 @@ def test_every_crash_point_of_a_micro_batch_replays_to_the_clean_state(
     spark, tmp_path, buckets
 ):
     """Crash a two-table ``apply_envelope_batch`` after each of its
-    mutations (journal appends, merge writes, links, pointer commits,
-    retirements), then replay the batch as ``foreachBatch`` would: every
-    table's replica, watermark, journal and quarantine equal a run that
-    never crashed."""
+    mutations (journal segment and merge writes, links, pointer commits,
+    retirements): each table reads as before the batch until its commit,
+    journal included. Then replay the batch as ``foreachBatch`` would:
+    every table's replica, watermark, journal and quarantine equal a run
+    that never crashed."""
     base = str(tmp_path / "base")
     eng = _batch_engine(base, buckets)
     snapshot = spark.createDataFrame([(i, f"g{i % 3}") for i in range(1, 9)], SCHEMA)
@@ -505,7 +678,7 @@ def test_every_crash_point_of_a_micro_batch_replays_to_the_clean_state(
         shutil.copytree(base, root)
         cached_before = _n_cached(spark)
         with pytest.MonkeyPatch.context() as mp:
-            Mutations(mp, crash_after=k)
+            crashed = Mutations(mp, crash_after=k)
             with pytest.raises(Crash):
                 _batch_engine(root, buckets).apply_envelope_batch(
                     spark, _envelopes(spark, BATCH)
@@ -513,6 +686,15 @@ def test_every_crash_point_of_a_micro_batch_replays_to_the_clean_state(
         where = f"crash after mutation {k}/{len(counter.log)}"
         assert _n_cached(spark) <= cached_before, f"{where}: cached frames leaked"
         spark.catalog.clearCache()  # a dead process holds no cache
+        # a table reads as before the batch until its commit — journal
+        # and quarantine included — and as after it from then on
+        committed = {
+            os.path.basename(os.path.dirname(p)) for kind, p in crashed.log if kind == "commit"
+        }
+        crashed_state = _batch_state(spark, root, buckets)
+        for t in TABLES:
+            want = new[t] if t in committed else old[t]
+            assert crashed_state[t] == want, f"{where}: table {t} (committed: {sorted(committed)})"
         _batch_engine(root, buckets).apply_envelope_batch(spark, _envelopes(spark, BATCH))
         assert _batch_state(spark, root, buckets) == new, f"{where}: the replay diverged"
         shutil.rmtree(root, ignore_errors=True)

@@ -72,7 +72,6 @@ def test_cdc_soft_delete_reaches_dedup_index(spark, tmp_path):
 
     # source DELETE for doc 2 -> journal + replica soft delete
     ev = _d_events(spark, [2])
-    eng.append_journal("documents", ev)
     eng.merge_batch(spark, "documents", ev, sync_ts="2024-01-02 00:00:00")
     deleted_flag = (
         eng.store.read(spark, "documents")
@@ -122,7 +121,6 @@ def test_resurrected_key_is_not_forwarded(spark, tmp_path):
         ],
         "seq_no long, event_ts string, op string, doc_id long, text string",
     ).withColumn("event_ts", F.col("event_ts").cast("timestamp_ntz"))
-    eng.append_journal("documents", ev)
     eng.merge_batch(spark, "documents", ev)
 
     out = sync_soft_deletes(
@@ -163,14 +161,12 @@ def test_ivf_remove_matches_fresh_build_and_compacts(spark, tmp_path):
 
     # physical reclamation: compact rewrites only affected cells and
     # clears the tombstone log; search is unchanged
-    import os
-
     out = idx.compact(spark)
     assert out["removed_rows"] == len(removed)
-    assert not os.path.isdir(idx._tombstones_path())
+    assert idx.tables().files("tombstones") == []
     assert _search_set(idx, spark, queries) == got
     live_ids = {
-        r["vec_id"] for r in spark.read.parquet(idx._index_path()).select("vec_id").collect()
+        r["vec_id"] for r in idx.tables().read(spark, "cells").select("vec_id").collect()
     }
     assert not (live_ids & set(removed))
 
@@ -199,7 +195,6 @@ def test_cdc_soft_delete_reaches_ivf_index(spark, tmp_path):
         [(1, "2024-01-02 00:00:00", "D", 7, None)],
         "seq_no long, event_ts string, op string, vec_id long, embedding array<float>",
     ).withColumn("event_ts", F.col("event_ts").cast("timestamp_ntz"))
-    eng.append_journal("embeddings", ev)
     eng.merge_batch(spark, "embeddings", ev)
 
     out = sync_soft_deletes(

@@ -181,7 +181,7 @@ def test_ivf_pq_search_and_add(spark, tmp_path):
     )
     rows = lambda p: {  # noqa: E731
         (r["vec_id"], r["cell"], tuple(r["codes"]))
-        for r in spark.read.parquet(p + "/index").collect()
+        for r in IvfIndex(p).tables().read(spark, "cells").collect()
     }
     assert rows(str(tmp_path / "inc")) == rows(str(tmp_path / "full"))
     assert res(
@@ -218,9 +218,9 @@ def test_ivf_pq_reopened_handle_keeps_encoding(spark, tmp_path):
     IvfIndex(path, n_cells=16, n_probe=4, pq_m=8).build(spark, base)
 
     reopened = IvfIndex(path, n_cells=16, n_probe=4)  # no pq_m given
-    assert reopened.pq_m == 8  # inferred from pq_codebooks.json
+    assert reopened.pq_m == 8  # inferred from the committed codebooks
     reopened.add(spark, delta)
-    rows = spark.read.parquet(path + "/index")
+    rows = reopened.tables().read(spark, "cells")
     assert "codes" in rows.columns
     assert rows.filter(F.col("codes").isNull()).count() == 0
 
