@@ -345,3 +345,50 @@ def test_a_long_log_is_read_without_a_listing_job(spark, tmp_path):
         return len(sc.statusTracker().getJobIdsForGroup(group))
 
     assert jobs(40) == jobs(1)
+
+
+def test_a_replica_of_the_plain_journal_layout_is_refused_at_open(tmp_path):
+    """A layout-2 pointer kept its journal in a plain-append directory
+    outside the table set: reading it as layout 3 would show no journal."""
+    from sfguide_getting_started_openflow_postgresql_cdc_spark.streaming.cdc import (
+        ReplicaStore,
+    )
+
+    store = ReplicaStore(str(tmp_path / "w"))
+    tdir = tmp_path / "w" / "tables" / "t"
+    tdir.mkdir(parents=True)
+    (tdir / "_POINTER.json").write_text(
+        '{"version": 0, "watermark": 3, "n_buckets": 1, "layout": 2,'
+        ' "tables": {".": 0}, "watermarks": {"0": 3}}'
+    )
+    with pytest.raises(ValueError, match="storage layout 2, this code reads layout 3"):
+        store.watermark("t")
+
+
+def test_a_batch_of_malformed_events_journals_without_a_replica_version(spark, tmp_path):
+    """Only malformed events: the commit publishes their journal segment
+    (the quarantine lists them) and adds no time-travel target."""
+    from sfguide_getting_started_openflow_postgresql_cdc_spark.streaming.cdc import (
+        ENVELOPE,
+        CdcEngine,
+        ReplicaStore,
+    )
+
+    eng = CdcEngine(
+        ReplicaStore(str(tmp_path / "w")),
+        tables={"t": spark.createDataFrame([], "id long, v string").schema},
+        primary_keys={"t": "id"},
+        write_partitions=1,
+    )
+    eng.bootstrap(spark, {"t": spark.createDataFrame([(1, "a")], "id long, v string")},
+                  "2024-01-01 00:00:00", journal_snapshot=False)
+    bad = spark.createDataFrame(
+        [(1, "2024-01-01 00:01:00", "t", "U", {"id": "x", "v": "b"}),
+         (2, "2024-01-01 00:02:00", "t", "Z", {"id": "1", "v": "c"})],
+        ENVELOPE,
+    )
+    eng.merge_batch(spark, "t", bad)
+    assert sorted(r["seq_no"] for r in eng.quarantine(spark, "t").collect()) == [1, 2]
+    assert eng.store.versions("t") == [0] and eng.store.version("t") == 0
+    assert eng.store.watermark("t") == -1
+    assert [tuple(r) for r in eng.store.read(spark, "t").select("id", "v").collect()] == [(1, "a")]
