@@ -30,6 +30,7 @@ candidate both paths consider.
 from __future__ import annotations
 
 import json
+import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -95,7 +96,18 @@ class IvfIndex:
     # -- artifacts ----------------------------------------------------------
     def tables(self) -> state.TableSet:
         """The index's table set (the committed document holds the
-        quantizer, the codebooks and the rows' schema)."""
+        quantizer, the codebooks and the rows' schema). An index of the
+        older layout, which kept its quantizer in ``centroids.json`` and
+        its rows under ``index/``, is refused: it would open as unbuilt."""
+        if not os.path.exists(os.path.join(self.path, "manifest.json")) and any(
+            os.path.exists(os.path.join(self.path, old))
+            for old in ("centroids.json", "index")
+        ):
+            raise ValueError(
+                f"{self.path} holds an IVF index of the older layout "
+                "(centroids.json, index/cell=*) and no manifest.json; this "
+                "code reads the table-set layout; rebuild the index to migrate"
+            )
         return state.TableSet(
             self.path,
             "manifest.json",

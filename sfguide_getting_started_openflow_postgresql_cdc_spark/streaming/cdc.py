@@ -282,14 +282,14 @@ class ReplicaStore:
         changed_df: DataFrame,
         changed_buckets: list[int],
         watermark: int,
-        ts: state.TableSet | None = None,
+        ts: state.TableSet,
     ) -> None:
-        """Write a new version into ``ts`` (default: the table's set) that
+        """Write a new version into the merge's open set ``ts`` that
         materializes ``changed_df`` (which must cover exactly
         ``changed_buckets`` and carry ``_CDC_BUCKET``) and hard-links
         every other bucket directory from the current version — the
-        copy-on-write path a 1-minute sync interval takes — and commit it."""
-        ts = ts or self.open(table)
+        copy-on-write path a 1-minute sync interval takes — and commit it
+        with the journal segment ``ts`` holds."""
         ts.write(".", changed_df, touched=changed_buckets)
         # never backwards: the version guard applies none of a late batch
         self.publish(ts, max(int(ts.doc["watermark"]), watermark))
@@ -841,7 +841,10 @@ class CdcEngine:
         journal is a complete source of truth when the engine was
         bootstrapped with ``journal_snapshot=True`` (snapshot rows are
         seq-0 'I' events). This is the disaster-recovery / migration
-        path: lose every replica file, keep the journal, rebuild.
+        path: the journal is read through the table's pointer, so while
+        the pointer and the journal segments survive, lost or damaged
+        replica files are rebuilt from them (``into``: into another
+        store).
 
         State (source columns, soft-delete flag, per-row ``_CDC_SEQ``
         guard) is reconstructed EXACTLY — verified against the
@@ -859,12 +862,7 @@ class CdcEngine:
         j = self.store.read_journal(spark, table, pk=pk)
         j = j.filter(F.col(pk).isNotNull() & F.col("op").isin("I", "U", "D"))
         src_fields = [f.name for f in self.tables[table].fields]
-        # the replica's pinned count; a lost replica is sized from its journal
-        n_buckets = (
-            self.n_buckets
-            or self.store.n_buckets(table)
-            or state.bucket_count(state.size_estimate(j))
-        )
+        n_buckets = self.n_buckets or self.store.n_buckets(table)
 
         w = Window.partitionBy(pk).orderBy(F.col("seq_no").desc())
         last = (

@@ -365,6 +365,26 @@ def test_a_replica_of_the_plain_journal_layout_is_refused_at_open(tmp_path):
         store.watermark("t")
 
 
+def test_an_ivf_index_of_the_older_layout_is_refused_at_open(tmp_path):
+    """An IVF index that kept its quantizer in centroids.json and its rows
+    under index/ has no manifest.json: opened as a table set it would read
+    as unbuilt (no PQ inferred, removals tombstoning nothing)."""
+    from sfguide_getting_started_openflow_postgresql_cdc_spark.operators.ann_index import (
+        IvfIndex,
+    )
+
+    for old in ("centroids.json", "index/cell=0/part-0.parquet"):
+        root = tmp_path / old.split("/")[0].split(".")[0]
+        _mkfile(str(root / old), b"[]")
+        with pytest.raises(ValueError, match="older layout"):
+            IvfIndex(str(root))
+        with pytest.raises(ValueError, match="older layout"):
+            IvfIndex(str(root), pq_m=0).tables()
+    # an empty directory is an unbuilt index of the current layout
+    (tmp_path / "new").mkdir()
+    assert IvfIndex(str(tmp_path / "new")).pq_m is None
+
+
 def test_a_batch_of_malformed_events_journals_without_a_replica_version(spark, tmp_path):
     """Only malformed events: the commit publishes their journal segment
     (the quarantine lists them) and adds no time-travel target."""
