@@ -588,6 +588,12 @@ class CdcEngine:
         # quarantined-not-applied: treating a corrupt op byte as an
         # upsert would materialize garbage state.
         good = F.col(pk).isNotNull() & F.col("op").isin("I", "U", "D")
+        # The segment is the batch's first action: its write job fills a
+        # caller's persisted events, where an aggregate first would cost
+        # AQE one more job to build the cache. An empty batch's segment
+        # stays uncommitted; the next commit at that version replaces or
+        # removes it.
+        self.append_journal(ts, events)
         stats = events.agg(
             F.count("*").alias("n"),
             F.count(F.when(good, 1)).alias("n_good"),
@@ -597,7 +603,6 @@ class CdcEngine:
         ).collect()[0]
         if stats["n"] == 0:
             return
-        self.append_journal(ts, events)
         if stats["n_good"] == 0:
             self.store.publish(ts)  # the journal segment alone
             return
